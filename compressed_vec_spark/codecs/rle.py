@@ -75,18 +75,3 @@ def count_in_range(blob: bytes, lo: int, hi: int) -> int:
     sel = (v >= lo_u) & (v <= hi_u)
     return int(l[sel].sum())
 
-
-def sum_in_range(blob: bytes, lo: int, hi: int) -> int:
-    """SUM(x WHERE lo <= x <= hi) off the runs; exact for any u64
-    values up to 2^31 total elements per blob (hi/lo 32-bit split
-    partials each fit uint64, recombined in Python ints)."""
-    v, l = runs(blob)
-    lo_u = np.uint64(max(lo, 0))
-    hi_u = np.uint64(min(max(hi, 0), (1 << 64) - 1))
-    if hi < 0:
-        return 0
-    sel = (v >= lo_u) & (v <= hi_u)
-    vs, ls = v[sel], l[sel]
-    lo_part = int(((vs & np.uint64(0xFFFFFFFF)) * ls).sum(dtype=np.uint64))
-    hi_part = int(((vs >> np.uint64(32)) * ls).sum(dtype=np.uint64))
-    return lo_part + (hi_part << 32)

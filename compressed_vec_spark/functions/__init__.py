@@ -24,12 +24,6 @@ def url_host(col: Column | str) -> Column:
     return F.expr(f"parse_url({name}, 'HOST')")
 
 
-def content_hash(col: Column) -> Column:
-    """Canonical 256-bit content hash used for exact dedup and the
-    bit-identity verifier."""
-    return F.sha2(F.to_json(F.struct(col)).cast("binary"), 256)
-
-
 def cosine_similarity(a: Column, b: Column) -> Column:
     """Cosine similarity of two array<float/double> columns using only
     built-in higher-order functions (zip_with + aggregate) — stays

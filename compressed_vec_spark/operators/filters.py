@@ -137,6 +137,7 @@ def one_of_mask(buf: bytes, kind: str, values) -> np.ndarray:
 
 
 def range_mask(buf: bytes, kind: str, lo: int, hi: int,
+               skip_sections: np.ndarray | None = None,
                return_stats: bool = False):
     """Per-section masks for `lo <= element <= hi` over a compressed
     int vector (an extension beyond the reference, which has only
@@ -150,6 +151,10 @@ def range_mask(buf: bytes, kind: str, lo: int, hi: int,
                [base, base + 2^numbits - 1] (reference
                src/section.rs:624-627 delta_range), so disjoint ranges
                skip decode entirely.
+
+    `skip_sections` works as in `section_masks`: sections already
+    known dead are left all-False and never decoded.  The stats count
+    every section left undecoded as `skipped_without_decode`.
     """
     assert kind in ("u32", "u64")
     body, offs, n, width = _section_layout(buf, kind)
@@ -160,21 +165,19 @@ def range_mask(buf: bytes, kind: str, lo: int, hi: int,
     _U64MAX = (1 << 64) - 1
     lo_u = np.uint64(min(max(lo, 0), _U64MAX))
     hi_u = np.uint64(min(max(hi, 0), _U64MAX))
-    skipped = 0
+    active = np.ones(S, dtype=bool) if skip_sections is None else ~skip_sections
 
     if lo <= 0 <= hi:
-        masks[types == sect.SECT_NULL] = True
-    skipped += int((types == sect.SECT_NULL).sum())
+        masks[(types == sect.SECT_NULL) & active] = True
 
-    c_idx = np.nonzero(types == sect.SECT_CONST)[0]
+    c_idx = np.nonzero((types == sect.SECT_CONST) & active)[0]
     if len(c_idx):
         cv = _const_values(body, starts[c_idx], width)
         hit = (cv >= lo_u) & (cv <= hi_u)
         masks[c_idx[hit]] = True
-        skipped += len(c_idx)
 
-    is_np = types == sect.SECT_NP_MED
-    is_delta = types == sect.SECT_DELTA_NP_MED
+    is_np = (types == sect.SECT_NP_MED) & active
+    is_delta = (types == sect.SECT_DELTA_NP_MED) & active
 
     # Delta header bound check: skip sections whose possible value range
     # cannot intersect [lo, hi]
@@ -197,7 +200,6 @@ def range_mask(buf: bytes, kind: str, lo: int, hi: int,
         span[small] = (np.uint64(1) << numbits[small]) - np.uint64(1)
         overlap = (base <= hi_u) & ((lo_u <= base) | (lo_u - base <= span))
         decode_delta[d_idx[overlap]] = True
-        skipped += int((~overlap).sum())
 
     need = is_np | decode_delta
     p_idx = np.nonzero(need)[0]
@@ -208,7 +210,7 @@ def range_mask(buf: bytes, kind: str, lo: int, hi: int,
     if S * FIXED_LEN > n:
         masks.reshape(-1)[n:] = False
     if return_stats:
-        return masks, {"sections": S, "skipped_without_decode": skipped}
+        return masks, {"sections": S, "skipped_without_decode": S - len(p_idx)}
     return masks
 
 

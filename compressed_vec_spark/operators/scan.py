@@ -1,5 +1,5 @@
-"""Distributed order-dependent scans: global row ordinals and running
-totals without a single-partition bottleneck.
+"""Distributed order-dependent scans: running totals without a
+single-partition bottleneck.
 
 Pattern (the classic two-pass prefix sum, Spark-shaped):
   1. pick explicit range boundaries for the order key (approxQuantile,
@@ -8,7 +8,7 @@ Pattern (the classic two-pass prefix sum, Spark-shaped):
   2. pass 1: tiny per-bucket aggregate (count / sum) -> exclusive
      prefix offsets on the driver (B rows),
   3. pass 2: per-bucket applyInPandas adds the bucket offset to the
-     within-bucket rank / cumsum.
+     within-bucket cumsum.
 
 Scales as one shuffle on the bucket key + a B-row collect; B ~ number
 of partitions, so a 1000-executor run uses B=4096 buckets and the
@@ -17,6 +17,7 @@ driver never sees more than that.
 
 from __future__ import annotations
 
+import os
 from functools import reduce
 
 import numpy as np
@@ -24,62 +25,54 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 
-def parquet_col_minmax(path: str, col: str) -> tuple[int, int] | None:
-    """(min, max) of an integer column from parquet ROW-GROUP FOOTER
-    statistics — no Spark job, no data read (the Iceberg-metadata
-    pattern _schema_rows/_log_rows already use for store metadata).
-    Returns None when any row group lacks stats or the path is not a
-    local file/dir — callers fall back to an aggregate.  Footer stats
-    are exact bounds per the parquet spec, and bucket bounds only need
-    to COVER the data (offsets always come from actual counts)."""
+def _footers(path: str):
+    """pyarrow ParquetFile handles for a local parquet file or
+    directory of part files, for metadata-only reads (the
+    Iceberg-metadata pattern _schema_rows/_log_rows already use for
+    store metadata).  None for non-local paths or an empty directory —
+    callers fall back to a Spark job."""
+    import pyarrow.parquet as pq
     local = path[7:] if path.startswith("file://") else path
     if "://" in local:
         return None
+    files = (sorted(os.path.join(local, f) for f in os.listdir(local)
+                    if f.endswith(".parquet"))
+             if os.path.isdir(local) else [local])
+    return [pq.ParquetFile(f) for f in files] or None
+
+
+def parquet_col_minmax(path: str, col: str) -> tuple[int, int] | None:
+    """(min, max) of an integer column from parquet ROW-GROUP FOOTER
+    statistics — no Spark job, no data read.  Returns None when any
+    row group lacks stats, the column is absent or the path is not
+    local — callers fall back to an aggregate.  Footer stats are exact
+    bounds per the parquet spec, and bucket bounds only need to COVER
+    the data (offsets always come from actual counts)."""
     try:
-        import os
-        import pyarrow.parquet as pq
-        files = (sorted(os.path.join(local, f) for f in os.listdir(local)
-                        if f.endswith(".parquet"))
-                 if os.path.isdir(local) else [local])
-        if not files:
-            return None
         mn = mx = None
-        for f in files:
-            pf = pq.ParquetFile(f)
-            try:
-                ci = pf.schema_arrow.names.index(col)
-            except ValueError:
+        for pf in _footers(path) or ():
+            if col not in pf.schema_arrow.names:
                 return None
+            ci = pf.schema_arrow.names.index(col)
             for rg in range(pf.metadata.num_row_groups):
                 st = pf.metadata.row_group(rg).column(ci).statistics
                 if st is None or not st.has_min_max:
                     return None
                 mn = st.min if mn is None else min(mn, st.min)
                 mx = st.max if mx is None else max(mx, st.max)
-        if mn is None:
-            return None
-        return int(mn), int(mx)
+        return None if mn is None else (int(mn), int(mx))
     except Exception:
         return None
 
 
 def parquet_num_rows(path: str) -> int | None:
     """Total row count from parquet file footers — no Spark job, no
-    data read (same metadata-only pattern as parquet_col_minmax).
-    Returns None for non-local paths or on any metadata error; callers
-    fall back to a default."""
-    local = path[7:] if path.startswith("file://") else path
-    if "://" in local:
-        return None
+    data read.  Returns None for non-local paths or on any metadata
+    error; callers fall back to a default."""
     try:
-        import os
-        import pyarrow.parquet as pq
-        files = (sorted(os.path.join(local, f) for f in os.listdir(local)
-                        if f.endswith(".parquet"))
-                 if os.path.isdir(local) else [local])
-        if not files:
-            return None
-        return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
+        pfs = _footers(path)
+        return None if pfs is None else sum(pf.metadata.num_rows
+                                            for pf in pfs)
     except Exception:
         return None
 
@@ -121,33 +114,6 @@ def _bucket_col(df: DataFrame, order_col: str, n_buckets: int,
     bucket = reduce(lambda acc, ib: acc + (col > F.lit(ib[1])).cast("int"),
                     enumerate(bounds), F.lit(0))
     return bucket.alias("__bucket"), len(bounds) + 1
-
-
-def global_positions(df: DataFrame, order_cols: list[str],
-                     n_buckets: int = 64,
-                     bounds: tuple[int, int] | None = None) -> DataFrame:
-    """Adds `pos`: the 0-based global ordinal of each row in
-    (order_cols) order.  order_cols[0] must be numeric (range-bucketed);
-    remaining columns break ties within a bucket."""
-    bucket, _ = _bucket_col(df, order_cols[0], n_buckets, bounds=bounds)
-    d = df.withColumn("__bucket", bucket)
-    counts = {r["__bucket"]: r["n"] for r in
-              d.groupBy("__bucket").agg(F.count("*").alias("n")).collect()}
-    offsets = {}
-    acc = 0
-    for b in sorted(counts):
-        offsets[b] = acc
-        acc += counts[b]
-
-    out_schema = ", ".join(f"{f.name} {f.dataType.simpleString()}"
-                           for f in df.schema.fields) + ", pos long"
-
-    def fn(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order_cols, kind="mergesort").drop(columns="__bucket")
-        pdf["pos"] = np.arange(len(pdf), dtype=np.int64) + offsets[key[0]]
-        return pdf
-
-    return d.groupBy("__bucket").applyInPandas(fn, out_schema)
 
 
 def global_cumsum(df: DataFrame, order_cols: list[str], value_col: str,

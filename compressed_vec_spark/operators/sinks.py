@@ -25,7 +25,3 @@ def delta_cumsum(buf: bytes, kind: str) -> np.ndarray:
     (reference src/nibblepacking.rs:239-279)."""
     return np.cumsum(vec.decode_vector(buf, kind))
 
-
-def widen_u32_to_u64(vals: np.ndarray) -> np.ndarray:
-    """U32ToU64Sink (reference src/nibblepacking.rs:330-353)."""
-    return vals.astype(np.uint64)

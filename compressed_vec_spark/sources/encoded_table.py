@@ -12,14 +12,17 @@ selective predicate touches only the matching chunks' blobs.
 from __future__ import annotations
 
 import os
-from typing import Iterator
+from dataclasses import dataclass
+from typing import Callable, Iterator, NamedTuple
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from .. import vector as vec
 from ..codecs import chunk as chunk_codec
 from ..operators import filters
+from ..sections import FIXED_LEN
 
 
 _I64MAX = (1 << 63) - 1
@@ -82,23 +85,6 @@ def _keep_bools(packed: bytes, n: int) -> np.ndarray:
     return _keep_mask(packed, n)
 
 
-def _prune_counts(manifest: DataFrame, column: str, pred,
-                  extra: dict | None = None) -> tuple[int, int, dict]:
-    """(total_chunks, scanned_chunks, extra_counts) for one column's
-    manifest rows in a SINGLE aggregate job — the separate
-    `.count()` round-trips each kernel used to make are folded into
-    one manifest pass.  `extra` maps name -> predicate column for any
-    additional conditional counts the caller wants from the same pass
-    (e.g. the bloom-probe survivor count)."""
-    aggs = [F.count(F.lit(1)).alias("__t"),
-            F.count(F.when(pred, 1)).alias("__s")]
-    for name, p in (extra or {}).items():
-        aggs.append(F.count(F.when(p, 1)).alias(name))
-    row = manifest.where(F.col("column") == column).agg(*aggs).collect()[0]
-    return (int(row["__t"]), int(row["__s"]),
-            {k: int(row[k]) for k in (extra or {})})
-
-
 def chunk_stats_for(series: pd.Series) \
         -> tuple[int | None, int | None, int | None, int]:
     """(min, max, sum, null_count) for numeric/timestamp chunks
@@ -149,754 +135,423 @@ def float_chunk_stats(series: pd.Series) -> tuple[float | None, float | None]:
     return float(v.min()), float(v.max())
 
 
-def pruned_float_range_count(spark: SparkSession, out_dir: str,
-                             column: str, lo: float, hi: float) \
-        -> tuple[int, dict]:
-    """count(column BETWEEN lo AND hi) for a FLOAT column over the
-    persisted store: manifest [min_f64, max_f64] interval-intersection
-    pruning (a chunk whose range misses [lo, hi] is never read), then
-    surviving chunks decode and compare.  XOR-packed float sections
-    carry no per-section min/max (the XOR chain is order-dependent), so
-    unlike the int path there is no second, section-level skip — the
-    chunk-level prune is the whole win, which is why the store sorts on
-    the column when float range queries matter."""
-    from ..codecs import chunk as chunk_codec
-
-    def kernel(blob: bytes, codec: str) -> tuple[int, bool]:
-        v = np.asarray(chunk_codec.decode_column(blob), dtype=np.float64)
-        # NaN (decoded nulls or payload NaN) compares False
-        return int(((v >= lo) & (v <= hi)).sum()), False
-
-    return _pruned_count_scan(
-        spark, out_dir, column,
-        (F.col("max_f64") >= lo) & (F.col("min_f64") <= hi), kernel,
-        track_fallback=False,
-        decode_pred=lambda s: ((np.asarray(s, dtype=np.float64) >= lo)
-                               & (np.asarray(s, dtype=np.float64) <= hi)))
+_U64MAX = (1 << 64) - 1
+_VEC_KIND = {"vec_u64": "u64", "vec_u32": "u32"}
+_LEAF_OPS = {"int64": ("range", "in"), "double": ("range",),
+             "float": ("range",), "string": ("range", "in", "prefix")}
 
 
-def pruned_equals_count(spark: SparkSession, out_dir: str, column: str,
-                        value: int) -> tuple[int, dict]:
-    """count(column == value) over an encoded table: manifest [min,max]
-    stats prune chunks, and surviving chunks answer on the COMPRESSED
-    bytes — EqualsSink section masks for vec codecs (Null/Const
-    sections from their headers), run-level counting for RLE chunks —
-    decoding only when the compressed domain can't answer (zigzag,
-    delete-affected chunks, a 0-probe against a nullable chunk whose
-    null placeholders ride as payload zeros).  Returns (count, stats
-    on chunks pruned / answered compressed / decoded)."""
-    manifest = spark.read.parquet(os.path.join(out_dir, "manifest"))
-    zone_pred = (F.col("min_val") <= value) & (F.col("max_val") >= value)
-    # the candidate ids stay distributed: a broadcast join prunes the
-    # chunk scan instead of collecting ids into a driver-side isin()
-    # (which would put millions of literals in the plan at scale)
-    cand_ids = (manifest.where((F.col("column") == column) & zone_pred)
-                .select("chunk_id"))
-
-    chunks = _join_keep(
-        (spark.read.parquet(os.path.join(out_dir, "chunks"))
-         .where(F.col("column") == column)
-         .join(F.broadcast(cand_ids), "chunk_id")),
-        _keep_mask_df(spark, out_dir))
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..codecs import rle as rle_codec
-        n = fast = dec = 0
-        for pdf in batches:
-            for blob, codec, km in zip(pdf["blob"], pdf["codec"],
-                                       pdf["keep_mask"]):
-                km = None if km is None else bytes(km)
-                b = bytes(blob)
-                nulm = b[:4] == b"NULM"
-                if (km is not None
-                        or codec not in ("vec_u64", "vec_u32", "rle")
-                        or (nulm and value == 0)):
-                    # decode_column without a target dtype yields int
-                    # carriers for every numeric codec (timestamps as
-                    # raw epoch-µs uint64), so one int compare covers
-                    # all of them
-                    s = pd.Series(chunk_codec.decode_column(b))
-                    m = (s == value).fillna(False).to_numpy(dtype=bool)
-                    if km is not None:
-                        m &= _keep_bools(km, len(s))
-                    n += int(m.sum())
-                    dec += 1
-                    continue
-                # value != 0 here whenever nulls exist, so null
-                # placeholders (zeros) can never be counted as hits
-                fast += 1
-                if codec == "rle":
-                    n += rle_codec.count_in_range(_unwrap_vec(b),
-                                                  value, value)
-                    continue
-                kind = "u64" if codec == "vec_u64" else "u32"
-                n += filters.count_hits(filters.equals_mask(
-                    _unwrap_vec(b), kind, value))
-        yield pd.DataFrame({"hits": [n], "fast": [fast], "dec": [dec]})
-
-    # the prune accounting and the chunk scan share no state: overlap
-    (total_chunks, scanned_chunks, _), agg = _overlap(
-        lambda: _prune_counts(manifest, column, zone_pred),
-        lambda: (chunks.select("blob", "codec", "keep_mask")
-                 .mapInPandas(fn, "hits long, fast long, dec long")
-                 .agg(F.sum("hits").alias("h"), F.sum("fast").alias("f"),
-                      F.sum("dec").alias("d")).collect()[0]))
-    return int(agg["h"] or 0), {
-        "total_chunks": total_chunks,
-        "scanned_chunks": scanned_chunks,
-        "pruned_chunks": total_chunks - scanned_chunks,
-        "compressed_kernel_chunks": int(agg["f"] or 0),
-        "decoded_chunks": int(agg["d"] or 0),
-    }
+def _sections(flat: np.ndarray) -> np.ndarray:
+    """A flat row mask in `operators.filters`' per-section shape
+    (S, 256), the tail past the last row padded False."""
+    out = np.zeros(-(-len(flat) // FIXED_LEN) * FIXED_LEN, dtype=bool)
+    out[:len(flat)] = flat
+    return out.reshape(-1, FIXED_LEN)
 
 
-def pruned_range_count(spark: SparkSession, out_dir: str, column: str,
-                       lo: int, hi: int,
-                       as_of: str | None = None) -> tuple[int, dict]:
-    """count(lo <= column <= hi) over an encoded table with BOTH prune
-    levels the format provides: manifest [min,max] stats skip whole
-    chunks (broadcast-joined, like pruned_equals_count), and inside each
-    surviving chunk `filters.range_mask` skips Null/Const/Delta sections
-    straight from their headers — the filter runs on the compressed
-    bytes, the column is never materialized.
-
-    `as_of` composes this with snapshot reads (sources/snapshot.py):
-    the part_id cutoff filters BOTH the manifest and the chunks scan,
-    so the count runs against the table as of that append batch with
-    the identical pushdown machinery — post-snapshot chunk files are
-    partition-pruned away, never listed."""
-    from .. import vector as vec_mod
-
-    manifest = spark.read.parquet(os.path.join(out_dir, "manifest"))
-    chunks_src = spark.read.parquet(os.path.join(out_dir, "chunks"))
-    if as_of is not None:
-        from .snapshot import _snapshot_bounds
-        cutoff = _snapshot_bounds(spark, out_dir, as_of)["part_hi"]
-        manifest = manifest.where(F.col("part_id") < cutoff)
-        chunks_src = chunks_src.where(F.col("part_id") < cutoff)
-    zone_pred = (F.col("min_val") <= hi) & (F.col("max_val") >= lo)
-    cand_ids = (manifest.where((F.col("column") == column) & zone_pred)
-                .select("chunk_id"))
-
-    # snapshot reads predate deletes by contract (delete_job docstring);
-    # current-table reads subtract them via the distributed mask join
-    chunks = _join_keep(
-        (chunks_src
-         .where(F.col("column") == column)
-         .join(F.broadcast(cand_ids), "chunk_id")),
-        None if as_of is not None else _keep_mask_df(spark, out_dir))
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..codecs import rle as rle_codec
-        hits = skipped = sections = 0
-        for pdf in batches:
-            for blob, codec, km in zip(pdf["blob"], pdf["codec"],
-                                       pdf["keep_mask"]):
-                km = None if km is None else bytes(km)
-                nulm = bytes(blob[:4]) == b"NULM"
-                if km is not None or codec not in (
-                        "vec_u64", "vec_u32", "rle"):
-                    # delete-affected chunks (section counts can't be
-                    # masked) and codecs with no order-preserving
-                    # compressed domain (zigzag interleaves negatives):
-                    # decode positionally — never silently dropped
-                    s = pd.Series(chunk_codec.decode_column(bytes(blob)))
-                    m = ((s >= lo) & (s <= hi)).fillna(False) \
-                        .to_numpy(dtype=bool)
-                    if km is not None:
-                        m &= _keep_bools(km, len(s))
-                    hits += int(m.sum())
-                    continue
-                if codec == "rle":
-                    if nulm and lo <= 0 <= hi:
-                        # nulls ride as run zeros; a 0-admitting range
-                        # would count them — decode restores NULL
-                        s = pd.Series(chunk_codec.decode_column(bytes(blob)))
-                        hits += int(((s >= lo) & (s <= hi))
-                                    .fillna(False).sum())
-                        continue
-                    # run-level count: R runs touched, never n rows —
-                    # the natural fast path of a clustered/sorted store
-                    hits += rle_codec.count_in_range(
-                        _unwrap_vec(blob), lo, hi)
-                    continue
-                kind = "u64" if codec == "vec_u64" else "u32"
-                b = bytes(blob)
-                null_hits = 0
-                if b[:4] == b"NULM":  # null-mask wrapper: nulls ride the
-                    n = int.from_bytes(b[4:8], "little")  # payload as 0s
-                    nbytes = (n + 7) // 8
-                    if lo <= 0 <= hi:
-                        # a range admitting 0 counts every null's zero
-                        # placeholder exactly once — subtract them (SQL:
-                        # NULL never matches); real zeros stay counted
-                        null_hits = int(np.unpackbits(
-                            np.frombuffer(b[8:8 + nbytes], np.uint8),
-                            count=n).sum())
-                    b = b[8 + nbytes:]
-                payload = b[4:]  # strip the chunk codec tag
-                masks, st = filters.range_mask(payload, kind, lo, hi,
-                                               return_stats=True)
-                hits += filters.count_hits(masks) - null_hits
-                skipped += st["skipped_without_decode"]
-                sections += st["sections"]
-        yield pd.DataFrame({"hits": [hits], "skipped": [skipped],
-                            "sections": [sections]})
-
-    # prune accounting overlapped with the chunk scan (independent jobs)
-    (total_chunks, scanned_chunks, _), agg = _overlap(
-        lambda: _prune_counts(manifest, column, zone_pred),
-        lambda: (chunks.select("blob", "codec", "keep_mask").mapInPandas(
-            fn, "hits long, skipped long, sections long")
-            .agg(F.sum("hits").alias("h"), F.sum("skipped").alias("sk"),
-                 F.sum("sections").alias("se")).collect()[0]))
-    return int(agg["h"] or 0), {
-        "total_chunks": total_chunks,
-        "scanned_chunks": scanned_chunks,
-        "pruned_chunks": total_chunks - scanned_chunks,
-        "sections_skipped_without_decode": int(agg["sk"] or 0),
-        "sections_total": int(agg["se"] or 0),
-    }
+def _section_filter(vector: bytes, kind: str, skip: np.ndarray | None,
+                    values: list | None = None,
+                    bounds: tuple | None = None) -> tuple[np.ndarray, int]:
+    """(per-section masks, sections not unpacked) of `element IN
+    values` or `lo <= element <= hi` over a compressed u32/u64 vector,
+    leaving the `skip` sections dead and undecoded.  An empty IN-list
+    or range decodes nothing."""
+    if values == [] or (bounds is not None and bounds[0] > bounds[1]):
+        m = _sections(np.zeros(vec.read_header(vector)["num_elements"],
+                               dtype=bool))
+        return m, len(m)
+    if values is not None:
+        return (filters.section_masks(vector, kind, values,
+                                      skip_sections=skip),
+                0 if skip is None else int(skip.sum()))
+    m, st = filters.range_mask(vector, kind, *bounds, skip_sections=skip,
+                               return_stats=True)
+    return m, st["skipped_without_decode"]
 
 
-def _pruned_count_scan(spark: SparkSession, out_dir: str, column: str,
-                       manifest_pred, chunk_fn,
-                       track_fallback: bool = True,
-                       bloom_value: str | list[str] | None = None,
-                       decode_pred=None) -> tuple[int, dict]:
-    """Shared skeleton of every chunk-pruned count over the store:
-    manifest-stat prune -> broadcast surviving chunk ids -> per-chunk
-    kernel inside mapInPandas -> one-row aggregate.  `chunk_fn(blob,
-    codec) -> (hits, used_fast_path)` supplies the predicate-specific
-    kernel; everything else (the prune accounting, the join shape, the
-    stats dict) is identical across predicate shapes by construction.
+@dataclass(frozen=True)
+class Leaf:
+    """One predicate over one stored column: the unit every store
+    count, select, delete and grouped WHERE takes, AND-ed in a list
+    (the reference's SectFilterSink, src/filter.rs:21-27).  It is the
+    only code that knows how a predicate prunes a chunk from the
+    manifest (`zone`, `probe`) and how it masks a chunk's rows
+    (`mask`, per codec).
 
-    `bloom_value` (equality/IN probes only; a str or a list of str)
-    adds a second prune level AFTER the zone maps: chunks whose
-    manifest Bloom filter proves every probed value absent are dropped
-    before any blob read — the level that matters when the store isn't
-    sorted on the probed column and every chunk's [min_str, max_str]
-    admits the value (codecs/bloom.py).  Stores older than format v5
-    have no bloom column; the probe then degrades to zone-map pruning
-    alone (bloom_pruned_chunks = 0).
+    op "range": lo <= col <= hi, a None bound is open (numbers only);
+    op "in":    col IN values (equality is a one-value IN);
+    op "prefix": col LIKE values[0] || '%'.
+    `dtype` is the stored decode dtype (`stored_schema`).  NULL never
+    matches, and NULL IN-list elements are dropped (SQL semantics)."""
+    col: str
+    dtype: str
+    op: str
+    lo: object = None
+    hi: object = None
+    values: tuple = ()
 
-    `decode_pred(series) -> bool ndarray` (positional, null-safe) is
-    the predicate's decoded form, used ONLY for delete-affected chunks:
-    their rows must be ANDed with the keep mask, so the compressed
-    kernel (whose counts cannot be masked) is bypassed for exactly
-    those chunks."""
-    manifest = spark.read.parquet(os.path.join(out_dir, "manifest"))
-    candidates = manifest.where((F.col("column") == column) & manifest_pred)
-    if bloom_value is not None and "bloom" in manifest.columns:
+    def __post_init__(self):
+        if (self.op not in _LEAF_OPS.get(self.dtype, ())
+                or (self.dtype == "string" and self.op == "range"
+                    and None in (self.lo, self.hi))):
+            raise ValueError(f"no {self.op!r} predicate over {self.col!r} "
+                             f"of dtype {self.dtype!r}")
+        # sorted, so values[0] / values[-1] bound the zone-map test
+        object.__setattr__(self, "values", tuple(sorted(
+            {v for v in self.values if v is not None})))
+
+    def zone(self):
+        """Manifest condition a chunk must meet to hold any match."""
+        mn, mx = {"int64": ("min_val", "max_val"),
+                  "string": ("min_str", "max_str")}.get(
+                      self.dtype, ("min_f64", "max_f64"))
+        mn, mx = F.col(mn), F.col(mx)
+        if self.op == "prefix":
+            # truncation is monotone in lexicographic order: exact
+            p = self.values[0]
+            return ((F.substring(mn, 1, len(p)) <= p)
+                    & (F.substring(mx, 1, len(p)) >= p))
+        if self.op == "in":
+            if not self.values:
+                return F.lit(False)
+            # one interval, not a per-value OR: the Bloom probe behind
+            # it prunes per value
+            lo, hi = self.values[0], self.values[-1]
+        else:
+            lo, hi = self.lo, self.hi
+        cond = mx.isNotNull()
+        if lo is not None:
+            cond = cond & (mx >= lo)
+        if hi is not None:
+            cond = cond & (mn <= hi)
+        return cond
+
+    def probe(self):
+        """Bloom-probe Column over the manifest `bloom` column (string
+        IN-lists only, else None): False proves every value absent."""
+        if self.op != "in" or self.dtype != "string":
+            return None
         import pyarrow as pa
         from ..codecs import bloom as bloom_codec
-        probe_vals = ([bloom_value] if isinstance(bloom_value, str)
-                      else list(bloom_value))
         hashes = bloom_codec.hash_values(
-            pa.array(probe_vals, type=pa.large_utf8()))
+            pa.array(list(self.values), type=pa.large_utf8()))
 
         @F.pandas_udf("boolean")
         def _probe(blooms: pd.Series) -> pd.Series:
             return pd.Series([bool(bloom_codec.contains_many(
                 bytes(b) if b is not None else None, hashes).any())
                 for b in blooms])
+        return _probe(F.col("bloom"))
 
-        # total / zone-survivor / bloom-survivor counts in ONE pass
-        prune_thunk = lambda: _prune_counts(  # noqa: E731
-            manifest, column, manifest_pred,
-            extra={"__b": manifest_pred & _probe(F.col("bloom"))})
-        candidates = candidates.where(_probe(F.col("bloom")))
-    else:
-        prune_thunk = lambda: _prune_counts(  # noqa: E731
-            manifest, column, manifest_pred)
-    cand_ids = candidates.select("chunk_id")
+    def mask(self, blob: bytes, codec: str,
+             skip: np.ndarray | None = None) -> tuple[np.ndarray, bool, int]:
+        """(per-section masks, answered compressed, sections not
+        unpacked) for one chunk.  The compressed paths: dict codes for
+        strings (`code_of` / `code_range` / `prefix_range`), section
+        masks with header skips for vec ints, run-level for rle; any
+        other codec decodes.  `skip` marks sections already dead under
+        earlier leaves; they are not unpacked (MultiVectorFilter,
+        reference src/filter.rs:239-286).  The one null rule: a NULM
+        chunk's payload carries nulls as zeros, so its validity bits
+        are AND-ed in."""
+        b = bytes(blob)
+        nulls = None
+        if b[:4] == b"NULM":
+            n = int.from_bytes(b[4:8], "little")
+            nulls = np.unpackbits(np.frombuffer(b, np.uint8, (n + 7) // 8, 8),
+                                  count=n).astype(bool)
+            b = b[8 + (n + 7) // 8:]
+        payload = b[4:]  # strip the chunk codec tag
+        if codec == "dict" and self.dtype == "string":
+            m, skipped = self._dict_mask(payload, skip)
+        elif codec in _VEC_KIND and self.dtype == "int64":
+            m, skipped = self._vec_mask(payload, _VEC_KIND[codec], skip)
+        elif codec == "rle" and self.dtype == "int64":
+            from ..codecs import rle
+            run_vals, run_lens = rle.runs(payload)
+            m = _sections(np.repeat(self._int_match(run_vals),
+                                    run_lens.astype(np.int64)))
+            skipped = 0
+        else:
+            return _sections(self.decoded(blob)), False, 0
+        if nulls is not None:
+            m &= _sections(~nulls)
+        return m, True, skipped
 
-    chunks = _join_keep(
-        (spark.read.parquet(os.path.join(out_dir, "chunks"))
-         .where(F.col("column") == column)
-         .join(F.broadcast(cand_ids), "chunk_id")),
-        _keep_mask_df(spark, out_dir))
+    def _int_bounds(self) -> tuple[int, int]:
+        return (self.lo if self.lo is not None else 0,
+                self.hi if self.hi is not None else _U64MAX)
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        hits = fast = decoded = 0
-        for pdf in batches:
-            for blob, codec, km in zip(pdf["blob"], pdf["codec"],
-                                       pdf["keep_mask"]):
-                km = None if km is None else bytes(km)
-                if km is not None:
-                    if decode_pred is None:
-                        raise ValueError(
-                            "store has live position deletes but this "
-                            "reader supplied no decoded predicate form")
-                    s = pd.Series(chunk_codec.decode_column(bytes(blob)))
-                    m = np.asarray(decode_pred(s), dtype=bool)
-                    m &= _keep_bools(km, len(s))
-                    hits += int(m.sum())
-                    decoded += 1
-                    continue
-                h, was_fast = chunk_fn(bytes(blob), codec)
-                hits += h
-                if was_fast:
-                    fast += 1
-                else:
-                    decoded += 1
-        yield pd.DataFrame({"hits": [hits], "fast": [fast], "dec": [decoded]})
+    def _u64_values(self) -> list[int]:
+        """IN values a u64-coded chunk can hold: the zone test keeps a
+        chunk only when some value is in its (non-negative) range, but
+        a negative value may ride along in the list."""
+        return [x for x in self.values if x >= 0]
 
-    # prune accounting overlapped with the chunk scan (independent jobs)
-    (total_chunks, zone_survivors, ex), agg = _overlap(
-        prune_thunk,
-        lambda: (chunks.select("blob", "codec", "keep_mask")
-                 .mapInPandas(fn, "hits long, fast long, dec long")
-                 .agg(F.sum("hits").alias("h"), F.sum("fast").alias("f"),
-                      F.sum("dec").alias("d")).collect()[0]))
-    scanned_chunks = ex["__b"] if "__b" in ex else zone_survivors
-    stats = {
-        "total_chunks": total_chunks,
-        "scanned_chunks": scanned_chunks,
-        "pruned_chunks": total_chunks - scanned_chunks,
-    }
-    if bloom_value is not None:
-        stats["bloom_pruned_chunks"] = zone_survivors - scanned_chunks
-    if track_fallback:
-        stats["dict_fast_chunks"] = int(agg["f"] or 0)
-        stats["decoded_fallback_chunks"] = int(agg["d"] or 0)
-    return int(agg["h"] or 0), stats
+    def _int_match(self, v: np.ndarray) -> np.ndarray:
+        """Match vector over u64 values (rle run values)."""
+        if self.op == "in":
+            return np.isin(v, self._u64_values())
+        lo, hi = self._int_bounds()
+        return (v >= np.uint64(max(lo, 0))) & (v <= np.uint64(hi))
 
+    def _vec_mask(self, payload: bytes, kind: str, skip):
+        if self.op == "in":
+            return _section_filter(payload, kind, skip,
+                                   values=self._u64_values())
+        return _section_filter(payload, kind, skip,
+                               bounds=self._int_bounds())
 
-def _decoded_strings(blob: bytes) -> pd.Series:
-    """Fallback decode of a non-dict string chunk to a non-null Series.
-    Values are str for utf8-coded chunks (fsst) and bytes for
-    binary-coded ones (binary_fsst / deflate, or overrides)."""
-    from ..codecs import chunk as chunk_codec
-    return pd.Series(chunk_codec.decode_column(blob)).dropna()
+    def _dict_mask(self, payload: bytes, skip):
+        from ..codecs import dictionary
+        codes = dictionary.codes_vector(payload)
+        if self.op == "in":  # absent values have no code (code_of -> 0)
+            return _section_filter(codes, "u32", skip, values=[
+                c for c in (dictionary.code_of(payload, v)
+                            for v in self.values) if c])
+        return _section_filter(codes, "u32", skip, bounds=(
+            dictionary.prefix_range(payload, self.values[0])
+            if self.op == "prefix" else
+            dictionary.code_range(payload, self.lo, self.hi)))
 
-
-def _align_bounds(s: pd.Series, *bounds: str) -> tuple:
-    """Encode str bounds to UTF-8 when the chunk decoded to bytes —
-    UTF-8 bytewise order equals code-point order, so every comparison
-    agrees with the str form (a mixed comparison would raise)."""
-    if len(s) and isinstance(s.iloc[0], bytes):
-        return tuple(b.encode("utf-8") for b in bounds)
-    return bounds
-
-
-def _string_pred(op, *bounds: str):
-    """Positional, null-safe decoded form of a string predicate for
-    delete-affected chunks: `op(non_null_values, *aligned_bounds) ->
-    bool array` evaluated only on non-null rows, nulls never match
-    (SQL semantics), bounds aligned str/bytes per `_align_bounds`."""
-    def pred(s: pd.Series) -> np.ndarray:
+    def decoded(self, blob: bytes) -> np.ndarray:
+        """Positional, null-safe match vector from a full decode.
+        Binary codecs decode strings to bytes: the bounds are encoded
+        to UTF-8, whose bytewise order equals code-point order."""
+        s = pd.Series(chunk_codec.decode_column(bytes(blob)))
         out = np.zeros(len(s), dtype=bool)
         nn = s.notna().to_numpy(dtype=bool)
-        if not nn.any():
+        v = s[nn]
+        if not len(v):
             return out
-        vals = s[nn]
-        out[nn] = np.asarray(op(vals, *_align_bounds(vals, *bounds)),
-                             dtype=bool)
+        lo, hi, vals = self.lo, self.hi, self.values
+        if isinstance(v.iloc[0], bytes):
+            lo, hi, vals = (None if lo is None else lo.encode("utf-8"),
+                            None if hi is None else hi.encode("utf-8"),
+                            tuple(x.encode("utf-8") for x in vals))
+        if self.op == "in":
+            m = v.isin(set(vals)).to_numpy(dtype=bool)
+        elif self.op == "prefix":
+            m = np.fromiter((x.startswith(vals[0]) for x in v), bool, len(v))
+        else:
+            m = np.ones(len(v), dtype=bool)
+            if lo is not None:
+                m &= (v >= lo).to_numpy(dtype=bool)
+            if hi is not None:
+                m &= (v <= hi).to_numpy(dtype=bool)
+        out[nn] = m
         return out
-    return pred
 
 
-def pruned_string_equals_count(spark: SparkSession, out_dir: str,
-                               column: str, value: str) -> tuple[int, dict]:
-    """count(column == value) for a STRING column over the persisted
-    store — the reference's headline design goal, filtering over
-    dictionary codes without decompression (reference README.md:77-78,
-    EqualsSink src/filter.rs:112-139), applied at the storage layer:
-
-      1. manifest [min_str, max_str] stats (UTF-8 bytewise order, the
-         same order Spark and the sorted dictionary use) prune chunks
-         whose range cannot hold the value — never read;
-      2. surviving dict-codec chunks binary-search the value in the
-         sorted dictionary heap (`code_of`) and run the equality on the
-         COMPRESSED u32 code vector (`equals_mask`) — the strings are
-         never materialized; an absent value costs one heap search;
-      3. non-dict string chunks (fsst/deflate) fall back to a full
-         decode + compare, counted in the stats.
-    """
-    from ..codecs import dictionary
-
-    def kernel(blob: bytes, codec: str) -> tuple[int, bool]:
-        if codec == "dict":  # dict stores nulls natively: no NULM
-            payload = blob[4:]
-            code = dictionary.code_of(payload, value)
-            if not code:
-                return 0, True
-            return filters.count_hits(filters.equals_mask(
-                dictionary.codes_vector(payload), "u32", code)), True
-        s = _decoded_strings(blob)
-        v, = _align_bounds(s, value)
-        return int((s == v).sum()), False
-
-    return _pruned_count_scan(
-        spark, out_dir, column,
-        (F.col("min_str") <= value) & (F.col("max_str") >= value), kernel,
-        bloom_value=value,
-        decode_pred=_string_pred(lambda v, b: v == b, value))
+def _chunk_mask(leaves: list[tuple[Leaf, int]],
+                row) -> tuple[np.ndarray | None, bool, int]:
+    """AND of the leaves' masks over one chunk of a `_front` scan row;
+    `leaves` pairs each leaf with the index i of its column's blob
+    `b<i>` / codec `c<i>` in the row, as `_front` returns them.
+    Returns (per-section masks, or None when no row survives;
+    answered compressed; sections not unpacked).  Each leaf skips the
+    sections dead under the leaves before it, and a dead chunk stops
+    the AND.  A delete-affected chunk (non-NULL keep_mask) decodes its
+    leaves and AND-s the keep mask in."""
+    km = row.keep_mask
+    acc, compressed, skipped = None, km is None, 0
+    for leaf, i in leaves:
+        blob, codec = getattr(row, "b%d" % i), getattr(row, "c%d" % i)
+        if km is None:
+            m, comp, sk = leaf.mask(blob, codec, None if acc is None
+                                    else ~acc.any(axis=1))
+            compressed, skipped = compressed and comp, skipped + sk
+        else:
+            m = leaf.decoded(blob)
+        acc = m if acc is None else acc & m
+        if not acc.any():
+            return None, compressed, skipped
+    if km is not None:
+        acc = _sections(acc & _keep_bools(bytes(km), len(acc)))
+        if not acc.any():
+            return None, compressed, skipped
+    return acc, compressed, skipped
 
 
-def pruned_string_in_count(spark: SparkSession, out_dir: str,
-                           column: str, values: list[str]) \
-        -> tuple[int, dict]:
-    """count(column IN (values)) for a STRING column over the persisted
-    store — the reference's OneOfSink (src/filter.rs:143-177) at the
-    storage layer.  Pruning layers:
-
-      1. manifest zone maps: a chunk survives only if its
-         [min_str, max_str] admits at least one of the values;
-      2. the chunk's Bloom filter: ALL values hashed once, one
-         `contains_many` pass per chunk — a chunk where every value is
-         provably absent is never read (the level that matters when the
-         store isn't sorted on the probed column);
-      3. surviving dict chunks map the values to codes via the sorted
-         heap (`code_of`, absent values drop out free) and run OneOf on
-         the COMPRESSED u32 code vector (`one_of_mask`); non-dict
-         chunks decode once and compare against the value set.
-    """
-    from ..codecs import dictionary
-
-    # SQL IN semantics: a NULL element never matches anything
-    values = [v for v in values if v is not None]
-    if not values:  # SQL: x IN () is a syntax error; treat as no match
-        return 0, {"total_chunks": 0, "scanned_chunks": 0,
-                   "pruned_chunks": 0, "bloom_pruned_chunks": 0}
-
-    def kernel(blob: bytes, codec: str) -> tuple[int, bool]:
-        if codec == "dict":
-            payload = blob[4:]
-            codes = [c for c in (dictionary.code_of(payload, v)
-                                 for v in values) if c]
-            if not codes:
-                return 0, True
-            return filters.count_hits(filters.one_of_mask(
-                dictionary.codes_vector(payload), "u32", codes)), True
-        s = _decoded_strings(blob)
-        vset = set(_align_bounds(s, *values))
-        return int(s.isin(vset).sum()), False
-
-    # one [min(values), max(values)] interval instead of a per-value OR:
-    # a thousand-value list would otherwise put 2N expressions in the
-    # manifest filter (Catalyst analysis cost), and the Bloom probe
-    # right behind it already prunes per-value exactly
-    return _pruned_count_scan(
-        spark, out_dir, column,
-        (F.col("min_str") <= max(values)) & (F.col("max_str") >= min(values)),
-        kernel, bloom_value=values,
-        decode_pred=_string_pred(lambda v, *bs: v.isin(set(bs)), *values))
+def _stats(total: int, zone: int, scanned: int, compressed=None,
+           decoded=None, skipped=None) -> dict:
+    """The one stats record of a pruned read.  total/zone/scanned are
+    chunk counts before pruning, after the zone maps and after the
+    Bloom probe.  The per-chunk kernel counters are None where the
+    chunk pass is not the terminal's own aggregate (a select's rows
+    are read later; a delete writes them)."""
+    return {"total_chunks": total, "scanned_chunks": scanned,
+            "pruned_chunks": total - scanned,
+            "bloom_pruned_chunks": zone - scanned,
+            "compressed_chunks": compressed, "decoded_chunks": decoded,
+            "sections_skipped": skipped}
 
 
-def pruned_string_prefix_count(spark: SparkSession, out_dir: str,
-                               column: str, prefix: str) -> tuple[int, dict]:
-    """count(column LIKE 'prefix%') over the persisted store.  The
-    manifest prune truncates [min_str, max_str] to len(prefix): prefix
-    truncation is monotone in lexicographic order, so a chunk holding a
-    match must satisfy trunc(min) <= prefix <= trunc(max) — an exact
-    prune with no sentinel-suffix edge cases.  Surviving dict chunks map
-    the predicate to an inclusive code range on the sorted dictionary
-    (`prefix_range`) and scan the compressed code vector with
-    `range_mask` (Null/Const/Delta sections skipped from headers);
-    non-dict chunks decode and compare."""
-    from ..codecs import dictionary
-
-    L = len(prefix)
-
-    def kernel(blob: bytes, codec: str) -> tuple[int, bool]:
-        if codec == "dict":
-            payload = blob[4:]
-            lo, hi = dictionary.prefix_range(payload, prefix)
-            if lo > hi:
-                return 0, True
-            return filters.count_hits(filters.range_mask(
-                dictionary.codes_vector(payload), "u32", lo, hi)), True
-        s = _decoded_strings(blob)
-        p, = _align_bounds(s, prefix)
-        return int(sum(1 for x in s if x.startswith(p))), False
-
-    return _pruned_count_scan(
-        spark, out_dir, column,
-        (F.substring(F.col("min_str"), 1, L) <= prefix)
-        & (F.substring(F.col("max_str"), 1, L) >= prefix), kernel,
-        decode_pred=_string_pred(
-            lambda v, p: np.fromiter((x.startswith(p) for x in v),
-                                     bool, len(v)), prefix))
+class _Front(NamedTuple):
+    leaves: list          # (Leaf, index of its column in the scan)
+    scan: DataFrame
+    counts: Callable[[], tuple[int, int, int]]
+    census: Callable[[], dict[str, tuple[int, int]]]
 
 
-def pruned_string_range_count(spark: SparkSession, out_dir: str,
-                              column: str, lo: str, hi: str) -> tuple[int, dict]:
-    """count(column BETWEEN lo AND hi) over the persisted store — the
-    third string predicate shape (equality and LIKE-prefix above), and
-    the one BI tools emit for string dimensions.  Layers:
+def _front(spark: SparkSession, out_dir: str, leaves: list[Leaf],
+           cols: list[str], masks: DataFrame | None, parts=None):
+    """The pruning front of every leaf reader.  Candidate chunks are
+    those where every leaf column's manifest row passes its leaves'
+    zone maps and Bloom probes (the ids stay distributed and are
+    broadcast into the first column's chunk scan, never collected).
+    The scan pairs each candidate's blobs of `cols` (blob b<i>, codec
+    c<i>, with the first column's part_id / chunk_seq / num_elements)
+    and left-joins `masks` as keep_mask.  `parts` (a part_id condition) restricts
+    manifest and chunks alike.
 
-      1. manifest prune: a chunk can hold a match only if its
-         [min_str, max_str] interval intersects [lo, hi]
-         (max_str >= lo AND min_str <= hi) — never read otherwise;
-      2. surviving dict chunks map [lo, hi] to an inclusive CODE range
-         on the lexicographically-sorted dictionary (`code_range`,
-         order-preserving codes) and scan the compressed u32 code
-         vector with `range_mask` — Null/Const/Delta sections are
-         skipped from their headers, strings never materialize;
-      3. non-dict string chunks (fsst/deflate) decode and compare.
-    """
-    from ..codecs import dictionary
-
-    def kernel(blob: bytes, codec: str) -> tuple[int, bool]:
-        if codec == "dict":
-            payload = blob[4:]
-            c_lo, c_hi = dictionary.code_range(payload, lo, hi)
-            if c_lo > c_hi:
-                return 0, True
-            return filters.count_hits(filters.range_mask(
-                dictionary.codes_vector(payload), "u32", c_lo, c_hi)), True
-        s = _decoded_strings(blob)
-        lo_v, hi_v = _align_bounds(s, lo, hi)
-        return int(((s >= lo_v) & (s <= hi_v)).sum()), False
-
-    return _pruned_count_scan(
-        spark, out_dir, column,
-        (F.col("max_str") >= lo) & (F.col("min_str") <= hi), kernel,
-        decode_pred=_string_pred(
-            lambda v, lo_v, hi_v: (v >= lo_v) & (v <= hi_v), lo, hi))
-
-
-def _pruned_select(spark: SparkSession, out_dir: str, filter_col: str,
-                   manifest_pred, mask_fn, project_cols: list[str],
-                   dtypes: dict | None = None,
-                   with_stats: bool = False):
-    """Shared skeleton of every row-returning filtered read over the
-    store: manifest-stat prune -> broadcast candidate chunk ids ->
-    chunk_id join pairing the filter blob with its projection blobs ->
-    per-chunk `mask_fn(blob, codec) -> bool ndarray | None` -> only
-    masked rows decoded for the projection and shipped out of the task.
-    Column pruning and predicate pushdown meet at the chunk level, like
-    Parquet row-group skipping but over this engine's own format.
-    With with_stats=True returns (df, prune-counter stats) — one extra
-    manifest aggregate, no chunk reads."""
-    from ..codecs import chunk as chunk_codec
-
-    if dtypes is None:
-        _, dtypes = stored_schema(spark, out_dir)
+    Returns a `_Front`: the leaves paired with their column's index in
+    `cols`, the scan, counts() — the one manifest aggregate (total,
+    zone survivors, Bloom survivors) — and census() — {column:
+    (chunks, dict-coded chunks)}, which shows a column schema
+    evolution left out of older chunks.  Both thunks reuse the
+    manifest read (each parquet read costs a schema job)."""
     manifest = spark.read.parquet(os.path.join(out_dir, "manifest"))
-    candidates = manifest.where(
-        (F.col("column") == filter_col) & manifest_pred)
-    cand_ids = candidates.select("chunk_id")
-
     chunks = spark.read.parquet(os.path.join(out_dir, "chunks"))
-    fb = (chunks.where(F.col("column") == filter_col)
-          .join(F.broadcast(cand_ids), "chunk_id")
-          .select("chunk_id", F.col("codec").alias("f_codec"),
-                  F.col("blob").alias("f_blob")))
-    paired = fb
-    for i, col in enumerate(project_cols):
-        pb = (chunks.where(F.col("column") == col)
-              .select("chunk_id", F.col("blob").alias(f"p{i}")))
-        paired = paired.join(pb, "chunk_id")
+    if parts is not None:
+        manifest, chunks = manifest.where(parts), chunks.where(parts)
+    has_bloom = "bloom" in manifest.columns
+    by_col: dict[str, tuple] = {}
+    for leaf in leaves:
+        z, b = by_col.get(leaf.col, (F.lit(True), F.lit(True)))
+        probe = leaf.probe() if has_bloom else None
+        by_col[leaf.col] = (z & leaf.zone(),
+                            b if probe is None else b & probe)
+    flags = None
+    if len(by_col) == 1:
+        (c, (z, b)), = by_col.items()
+        flags = (manifest.where(F.col("column") == c)
+                 .select("chunk_id", z.alias("z"), (z & b).alias("b")))
+    elif by_col:
+        # several columns: a chunk survives when all of its leaf
+        # columns' manifest rows do
+        zc = bc = None
+        for c, (z, b) in by_col.items():
+            hit = F.col("column") == c
+            zc = F.when(hit, z) if zc is None else zc.when(hit, z)
+            bc = F.when(hit, z & b) if bc is None else bc.when(hit, z & b)
+        flags = (manifest.where(F.col("column").isin(list(by_col)))
+                 .groupBy("chunk_id")
+                 .agg((F.count(F.when(zc, 1)) == len(by_col)).alias("z"),
+                      (F.count(F.when(bc, 1)) == len(by_col)).alias("b")))
+    cand = (None if flags is None
+            else F.broadcast(flags.where("b").select("chunk_id")))
 
-    out_schema = ", ".join(
-        f"{c} {dtypes.get(c, 'string').replace('int64', 'long')}"
-        for c in project_cols)
+    scan = None
+    for i, c in enumerate(cols):
+        side = chunks.where(F.col("column") == c).select(
+            "chunk_id", *(("part_id", "chunk_seq", "num_elements")
+                          if i == 0 else ()),
+            F.col("codec").alias("c%d" % i), F.col("blob").alias("b%d" % i))
+        if scan is None:
+            scan = side if cand is None else side.join(cand, "chunk_id")
+        else:
+            scan = scan.join(side, "chunk_id")
 
-    paired = _join_keep(paired, _keep_mask_df(spark, out_dir))
+    def counts() -> tuple[int, int, int]:
+        r = flags.agg(F.count(F.lit(1)).alias("t"),
+                      F.count(F.when(F.col("z"), 1)).alias("z"),
+                      F.count(F.when(F.col("b"), 1)).alias("b")).collect()[0]
+        return int(r["t"]), int(r["z"]), int(r["b"])
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for row in pdf.itertuples(index=False):
-                mask = mask_fn(bytes(row.f_blob), row.f_codec)
-                if mask is None or not mask.any():
-                    continue
-                km = row.keep_mask
-                if km is not None:
-                    mask = mask & _keep_bools(bytes(km), len(mask))
-                    if not mask.any():
-                        continue
-                cols = {}
-                for i, c in enumerate(project_cols):
-                    dec = chunk_codec.decode_column(
-                        bytes(getattr(row, f"p{i}")), dtypes.get(c))
-                    vals = dec[mask]
-                    cols[c] = (vals.reset_index(drop=True)
-                               if isinstance(vals, pd.Series)
-                               else pd.Series(vals))
-                yield pd.DataFrame(cols)
+    def census() -> dict[str, tuple[int, int]]:
+        return {r["column"]: (int(r["n"]), int(r["n_dict"])) for r in (
+            manifest.groupBy("column")
+            .agg(F.count(F.lit(1)).alias("n"),
+                 F.sum((F.col("codec") == "dict").cast("int"))
+                 .alias("n_dict")).collect())}
 
-    res = paired.mapInPandas(fn, out_schema)
-    if not with_stats:
-        return res
-    total, scanned, _ = _prune_counts(manifest, filter_col, manifest_pred)
-    return res, {"total_chunks": total, "scanned_chunks": scanned,
-                 "pruned_chunks": total - scanned, "select_kernel": True}
-
-
-def _where_cand_df(manifest: DataFrame, where: list[dict]) -> DataFrame:
-    """Lazy chunk-id DataFrame of the chunks surviving EVERY spec's
-    manifest-stat predicate — the shared pruning front of the
-    WHERE-spec kernels (grouped_dict_agg, pruned_select_where)."""
-    cand = None
-    for w in where:
-        ids = (manifest.where((F.col("column") == w["col"])
-                              & w["manifest_pred"])
-               .select("chunk_id"))
-        cand = ids if cand is None else cand.join(ids, "chunk_id")
-    return cand
-
-
-def pruned_select_where(spark: SparkSession, out_dir: str,
-                        where: list[dict], project_cols: list[str]) \
-        -> tuple[DataFrame, dict] | None:
-    """Row-returning filtered projection under an AND of predicate
-    specs — the multi-predicate generalization of `_pruned_select`.
-    Each spec is {"col", "manifest_pred", "mask_fn"} (the same shape
-    `grouped_dict_agg`'s WHERE takes): chunk candidates are the
-    INTERSECTION of every spec's manifest survivors, each surviving
-    chunk evaluates all row masks on its filter vectors (mask_fn ->
-    None = provably no match, chunk skipped), and projection columns
-    decode only where the combined mask (ANDed with live-delete keeps)
-    passes.  Returns None when a column is missing from some chunk
-    (schema evolution) — callers fall back."""
-    from ..codecs import chunk as chunk_codec
-
-    if not where:
-        return None
-    _, dtypes = stored_schema(spark, out_dir)
-    manifest = spark.read.parquet(os.path.join(out_dir, "manifest"))
-    cand = _where_cand_df(manifest, where)
-    # the column census and the survivor count are independent jobs
-    # (the count is wasted work only on the rare fallback-return path)
-    counts, scanned = _overlap(
-        lambda: (manifest.groupBy("column")
-                 .agg(F.count(F.lit(1)).alias("n")).collect()),
-        lambda: cand.count())
-    by_col = {r["column"]: int(r["n"]) for r in counts}
-    n_chunks = max(by_col.values(), default=0)
-    need = {w["col"] for w in where} | set(project_cols)
-    if any(by_col.get(c) != n_chunks for c in need):
-        return None
-
-    chunks = spark.read.parquet(os.path.join(out_dir, "chunks"))
-    # broadcast the (tiny) surviving-id set into the big chunk scan,
-    # then pair filter blobs with projection blobs on chunk_id
-    paired = F.broadcast(cand)
-    for i, w in enumerate(where):
-        paired = paired.join(
-            chunks.where(F.col("column") == w["col"])
-            .select("chunk_id", F.col("codec").alias("wc%d" % i),
-                    F.col("blob").alias("w%d" % i)),
-            "chunk_id")
-    for i, col in enumerate(project_cols):
-        paired = paired.join(
-            chunks.where(F.col("column") == col)
-            .select("chunk_id", F.col("blob").alias("p%d" % i)),
-            "chunk_id")
-    paired = _join_keep(paired, _keep_mask_df(spark, out_dir))
-    out_schema = ", ".join(
-        f"{c} {dtypes.get(c, 'string').replace('int64', 'long')}"
-        for c in project_cols)
-    where_fns = [w["mask_fn"] for w in where]
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for row in pdf.itertuples(index=False):
-                mask, dead = None, False
-                for i, mfn in enumerate(where_fns):
-                    m = mfn(bytes(getattr(row, "w%d" % i)),
-                            getattr(row, "wc%d" % i))
-                    if m is None:
-                        dead = True
-                        break
-                    mask = m if mask is None else mask & m
-                if dead or not mask.any():
-                    continue
-                km = row.keep_mask
-                if km is not None:
-                    mask &= _keep_bools(bytes(km), len(mask))
-                    if not mask.any():
-                        continue
-                cols = {}
-                for i, c in enumerate(project_cols):
-                    dec = chunk_codec.decode_column(
-                        bytes(getattr(row, "p%d" % i)), dtypes.get(c))
-                    vals = dec[mask]
-                    cols[c] = (vals.reset_index(drop=True)
-                               if isinstance(vals, pd.Series)
-                               else pd.Series(vals))
-                yield pd.DataFrame(cols)
-
-    return (paired.mapInPandas(fn, out_schema),
-            {"total_chunks": n_chunks, "scanned_chunks": scanned,
-             "pruned_chunks": n_chunks - scanned,
-             "where_specs": len(where), "select_kernel": True})
+    return _Front([(leaf, cols.index(leaf.col)) for leaf in leaves],
+                  _join_keep(scan, masks), counts, census)
 
 
-def pruned_filter_select(spark: SparkSession, out_dir: str,
-                         filter_col: str, value: str,
-                         project_cols: list[str],
-                         with_stats: bool = False):
-    """SELECT project_cols WHERE filter_col == value over the persisted
-    store, returning decoded ROWS — the drop-in query shape a user
-    migrating a SQL workload runs constantly.  Pushdown layers:
-
-      1. manifest [min_str, max_str] prunes chunks before any blob read
-         (only the filter column's stats are consulted);
-      2. a surviving chunk's filter mask comes from the compressed dict
-         code vector (code_of + equality on u32 codes; decode fallback
-         for non-dict chunks, str- or bytes-valued);
-      3. projection columns decode ONLY in surviving chunks, and only
-         the masked rows ship out of the task.
-
-    Scale shape: one broadcast of candidate chunk ids, one chunk_id
-    join to pair the filter blob with its projection blobs, no shuffle
-    of decoded rows beyond the matching output."""
-    from ..codecs import dictionary
-
-    def mask_fn(blob: bytes, codec: str):
-        if codec == "dict":
-            payload = blob[4:]
-            code = dictionary.code_of(payload, value)
-            if not code:
-                return None
-            return dictionary.codes(payload) == np.uint64(code)
-        s = pd.Series(chunk_codec.decode_column(blob))
-        v, = _align_bounds(s.dropna(), value)
-        return (s == v).fillna(False).to_numpy(dtype=bool)
-
-    return _pruned_select(
-        spark, out_dir, filter_col,
-        (F.col("min_str") <= value) & (F.col("max_str") >= value),
-        mask_fn, project_cols, with_stats=with_stats)
-
-
-def pruned_range_select(spark: SparkSession, out_dir: str,
-                        filter_col: str, lo, hi,
-                        project_cols: list[str],
-                        with_stats: bool = False):
-    """SELECT project_cols WHERE filter_col BETWEEN lo AND hi for a
-    NUMERIC filter column — the numeric sibling of
-    `pruned_filter_select`: manifest interval pruning on the stats
-    columns matching the filter column's TYPE (int columns carry
-    [min_val, max_val], float columns [min_f64, max_f64] — consulting
-    the wrong pair would NULL-prune every chunk and silently return
-    nothing), the range evaluated on the decoded filter vector of
-    surviving chunks only, projections decoded only where the mask
-    passes."""
-    _, dtypes = stored_schema(spark, out_dir)
-    dt = dtypes.get(filter_col)
-    if dt == "int64":
-        pred = (F.col("max_val") >= lo) & (F.col("min_val") <= hi)
-    elif dt in ("double", "float"):
-        pred = (F.col("max_f64") >= lo) & (F.col("min_f64") <= hi)
+def pruned_count(spark: SparkSession, out_dir: str, leaves: list[Leaf],
+                 as_of: str | None = None) -> tuple[int, dict]:
+    """count(*) WHERE AND(leaves) over the persisted store: the pruning
+    front drops chunks from the manifest alone, surviving chunks
+    answer on their compressed bytes (`Leaf.mask`), and live deletes
+    are subtracted.  `as_of` counts the table as of that append batch
+    (sources/snapshot.py): the part_id cutoff restricts manifest and
+    chunks, and deletes, which postdate snapshots by contract, are not
+    applied.  The manifest aggregate overlaps the chunk scan."""
+    if as_of is None:
+        parts, masks = None, _keep_mask_df(spark, out_dir)
     else:
-        raise ValueError(
-            f"pruned_range_select: filter column {filter_col!r} has "
-            f"dtype {dt!r}; int and float columns are supported (use "
-            "pruned_string_range_count / pruned_filter_select for "
-            "string predicates)")
+        from .snapshot import _snapshot_bounds
+        cutoff = _snapshot_bounds(spark, out_dir, as_of)["part_hi"]
+        parts, masks = F.col("part_id") < cutoff, None
+    cols = list(dict.fromkeys(leaf.col for leaf in leaves))
+    front = _front(spark, out_dir, leaves, cols, masks, parts)
+    paired = front.leaves  # task closures must not capture DataFrames
 
-    def mask_fn(blob: bytes, codec: str):
-        s = pd.Series(chunk_codec.decode_column(blob))
-        return ((s >= lo) & (s <= hi)).fillna(False).to_numpy(dtype=bool)
+    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        hits = comp = dec = skipped = 0
+        for pdf in batches:
+            for row in pdf.itertuples(index=False):
+                m, compressed, sk = _chunk_mask(paired, row)
+                hits += 0 if m is None else filters.count_hits(m)
+                comp += compressed
+                dec += not compressed
+                skipped += sk
+        yield pd.DataFrame({"h": [hits], "c": [comp], "d": [dec],
+                            "s": [skipped]})
 
-    return _pruned_select(spark, out_dir, filter_col, pred,
-                          mask_fn, project_cols, dtypes=dtypes,
-                          with_stats=with_stats)
+    (total, zone, scanned), agg = _overlap(
+        front.counts,
+        lambda: (front.scan.mapInPandas(fn, "h long, c long, d long, s long")
+                 .agg(*[F.sum(k).alias(k) for k in "hcds"]).collect()[0]))
+    return int(agg["h"] or 0), _stats(
+        total, zone, scanned, int(agg["c"] or 0), int(agg["d"] or 0),
+        int(agg["s"] or 0))
+
+
+def pruned_select(spark: SparkSession, out_dir: str, leaves: list[Leaf],
+                  project: list[str]) -> tuple[DataFrame, dict] | None:
+    """SELECT project WHERE AND(leaves) over the persisted store,
+    returning decoded rows: the pruning front drops chunks, each
+    surviving chunk masks its rows on the compressed leaf columns, and
+    the projection decodes only there, shipping only matching rows out
+    of the task.  Returns None when a needed column is missing from
+    some chunk (schema evolution: an inner join would drop those
+    chunks' NULL-backfilled rows) — callers fall back."""
+    _, dtypes = stored_schema(spark, out_dir)
+    cols = list(dict.fromkeys([leaf.col for leaf in leaves] + list(project)))
+    front = _front(spark, out_dir, leaves, cols,
+                   _keep_mask_df(spark, out_dir))
+    paired = front.leaves  # task closures must not capture DataFrames
+    # the column census and the prune counts are independent jobs
+    census, (total, zone, scanned) = _overlap(front.census, front.counts)
+    n_chunks = max((n for n, _ in census.values()), default=0)
+    if any(census.get(c, (0,))[0] != n_chunks for c in cols):
+        return None
+    out_schema = ", ".join(
+        f"{c} {dtypes.get(c, 'string').replace('int64', 'long')}"
+        for c in project)
+    proj = [(c, cols.index(c)) for c in project]
+
+    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            for row in pdf.itertuples(index=False):
+                m = _chunk_mask(paired, row)[0]
+                if m is None:
+                    continue
+                out = {}
+                for c, i in proj:
+                    dec = chunk_codec.decode_column(
+                        bytes(getattr(row, "b%d" % i)), dtypes.get(c))
+                    vals = dec[m.reshape(-1)[:len(dec)]]
+                    out[c] = (vals.reset_index(drop=True)
+                              if isinstance(vals, pd.Series)
+                              else pd.Series(vals))
+                yield pd.DataFrame(out)
+
+    return (front.scan.mapInPandas(fn, out_schema),
+            _stats(total, zone, scanned))
 
 
 def store_membership(spark: SparkSession, out_dir: str, column: str,
@@ -1127,99 +782,6 @@ def _unwrap_vec(blob: bytes) -> bytes:
     return b[4:]
 
 
-def pruned_multi_and_count(spark: SparkSession, out_dir: str,
-                           range_col: str, lo: int, hi: int,
-                           eq_col: str, value: int) -> tuple[int, dict]:
-    """count(lo <= range_col <= hi AND eq_col == value) over an encoded
-    table — the reference's MultiVectorFilter (src/filter.rs:239-286)
-    running on the PERSISTED store:
-
-      1. manifest [min,max] stats prune chunks per column; a chunk
-         survives only if BOTH predicates admit it (candidate id sets
-         intersected before any blob is read),
-      2. the two columns' blobs of one chunk_id pair up with one join
-         (chunks are row-aligned by construction),
-      3. inside a chunk, range_mask runs first and its all-zero sections
-         short-circuit the equality column's decode
-         (section_masks(skip_sections=...)), exactly the reference's
-         sparse-first ordering."""
-    manifest = spark.read.parquet(os.path.join(out_dir, "manifest"))
-    cand_r = manifest.where(
-        (F.col("column") == range_col)
-        & (F.col("min_val") <= hi) & (F.col("max_val") >= lo))
-    cand_e = manifest.where(
-        (F.col("column") == eq_col)
-        & (F.col("min_val") <= value) & (F.col("max_val") >= value))
-    cand = (cand_r.select("chunk_id")
-            .join(cand_e.select("chunk_id"), "chunk_id"))
-
-    chunks = spark.read.parquet(os.path.join(out_dir, "chunks"))
-    vec_codecs = ["vec_u64", "vec_u32"]
-    a = (chunks.where(F.col("column") == range_col)
-         .select("chunk_id", F.col("blob").alias("blob_r"),
-                 F.col("codec").alias("codec_r")))
-    b = (chunks.where(F.col("column") == eq_col)
-         .select("chunk_id", F.col("blob").alias("blob_e"),
-                 F.col("codec").alias("codec_e")))
-    paired = _join_keep((a.join(F.broadcast(cand), "chunk_id")
-                         .join(b, "chunk_id")),
-                        _keep_mask_df(spark, out_dir))
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        hits = skipped_sections = 0
-        for pdf in batches:
-            for br, cr, be, ce, km in zip(pdf["blob_r"], pdf["codec_r"],
-                                          pdf["blob_e"], pdf["codec_e"],
-                                          pdf["keep_mask"]):
-                km = None if km is None else bytes(km)
-                br_b, be_b = bytes(br), bytes(be)
-                # the compressed kernels see nulls as payload zeros: a
-                # range admitting 0 or an equality against 0 on a
-                # nullable chunk would count NULL rows — decode instead
-                null_hazard = ((br_b[:4] == b"NULM" and lo <= 0 <= hi)
-                               or (be_b[:4] == b"NULM" and value == 0))
-                # non-vec codecs (rle / zigzag) take the decoded path
-                # instead of being silently dropped from the join
-                if (km is not None or null_hazard
-                        or cr not in vec_codecs or ce not in vec_codecs):
-                    # positional decode of both columns; keep mask
-                    # ANDed in for delete-affected chunks
-                    rv = pd.Series(chunk_codec.decode_column(br_b))
-                    ev = pd.Series(chunk_codec.decode_column(be_b))
-                    m = (((rv >= lo) & (rv <= hi)).fillna(False)
-                         .to_numpy(dtype=bool))
-                    m &= (ev == value).fillna(False).to_numpy(dtype=bool)
-                    if km is not None:
-                        m &= _keep_bools(km, len(rv))
-                    hits += int(m.sum())
-                    continue
-                kr = "u64" if cr == "vec_u64" else "u32"
-                ke = "u64" if ce == "vec_u64" else "u32"
-                m1 = filters.range_mask(_unwrap_vec(br), kr, lo, hi)
-                dead = ~m1.any(axis=1)
-                skipped_sections += int(dead.sum())
-                m2 = filters.section_masks(_unwrap_vec(be), ke, [value],
-                                           skip_sections=dead)
-                hits += filters.count_hits(m1 & m2)
-        yield pd.DataFrame({"hits": [hits], "skipped": [skipped_sections]})
-
-    # the two metadata counts and the chunk scan are independent jobs
-    total_chunks, scanned, agg = _overlap(
-        lambda: manifest.where(F.col("column") == range_col).count(),
-        lambda: cand.count(),
-        lambda: (paired.select("blob_r", "codec_r", "blob_e",
-                               "codec_e", "keep_mask")
-                 .mapInPandas(fn, "hits long, skipped long")
-                 .agg(F.sum("hits").alias("h"), F.sum("skipped").alias("s"))
-                 .collect()[0]))
-    return int(agg["h"] or 0), {
-        "total_chunks": total_chunks,
-        "scanned_chunks": scanned,
-        "pruned_chunks": total_chunks - scanned,
-        "eq_sections_short_circuited": int(agg["s"] or 0),
-    }
-
-
 def pruned_filtered_sum(spark: SparkSession, out_dir: str,
                         filter_col: str, lo: int, hi: int,
                         sum_col: str) -> tuple[int, dict]:
@@ -1340,7 +902,7 @@ def pruned_topk(spark: SparkSession, out_dir: str, column: str,
     if dtypes.get(column) != "int64":
         # float columns have NULL int zone maps (empty threshold =>
         # silent []), and the int64 partials below would truncate —
-        # refuse loudly like pruned_range_select does
+        # refuse loudly
         raise ValueError(
             f"pruned_topk: column {column!r} has dtype "
             f"{dtypes.get(column)!r}; integer columns only")
@@ -1450,12 +1012,9 @@ def grouped_dict_agg(spark: SparkSession, out_dir: str, group_col: str,
     masks zero out deleted rows before any bincount.  Cross-chunk SUM
     accumulates in decimal(38,0) (no int64 wrap across chunks).
 
-    `where` composes predicate pushdown under the group kernel: each
-    spec is {"col", "manifest_pred", "mask_fn"} — the manifest_pred
-    (a Column over that column's manifest stats row) prunes whole
-    chunks before any blob read, and mask_fn(blob, codec) -> bool
-    ndarray | None row-masks surviving chunks (None = provably no
-    match, e.g. an absent dict code) before the bincounts — so
+    `where` (AND-ed `Leaf`s) composes predicate pushdown under the
+    group kernel: the pruning front drops chunks before any blob read
+    and the leaves row-mask surviving chunks before the bincounts — so
     `SELECT g, aggs FROM t WHERE p GROUP BY g` keeps both the chunk
     pruning of the count kernels and the no-row-strings property of
     the group kernel.  Groups emptied by the WHERE are not emitted.
@@ -1467,70 +1026,38 @@ def grouped_dict_agg(spark: SparkSession, out_dir: str, group_col: str,
     from ..codecs import dictionary
 
     where = list(where or [])
-    manifest = spark.read.parquet(os.path.join(out_dir, "manifest"))
-    pairs_thunk = lambda: (  # noqa: E731
-        manifest.groupBy("column")
-        .agg(F.count(F.lit(1)).alias("n"),
-             F.sum(F.when(F.col("codec") == "dict", 1).otherwise(0))
-             .alias("n_dict")).collect())
-    if where:
-        # overlap the column census with the WHERE survivor count (the
-        # count is wasted work only on the rare fallback-return path)
-        w_cand = _where_cand_df(manifest, where)
-        pairs, w_scanned = _overlap(pairs_thunk, lambda: w_cand.count())
-    else:
-        pairs = pairs_thunk()
-    by_col = {r["column"]: r for r in pairs}
-    if group_col not in by_col:
-        return None
-    g = by_col[group_col]
-    n_chunks = int(g["n"])
-    if int(g["n_dict"]) != n_chunks:
-        return None  # mixed/non-dict group encodings: fallback
     extra_cols = []
     for a in aggs:
         if a["fn"] not in ("count", "count_col", "sum", "min", "max"):
             return None
         if a["fn"] in ("min", "max") and a["col"] == group_col:
             return None  # string MIN/MAX of the key: decoded view's job
-        if a["fn"] == "count" or a["col"] == group_col:
-            continue
-        c = a["col"]
-        if c not in by_col or int(by_col[c]["n"]) != n_chunks:
-            return None  # column absent for some chunks (evolution)
-        if c not in extra_cols:
-            extra_cols.append(c)
-    for w in where:
-        c = w["col"]
-        if c not in by_col or int(by_col[c]["n"]) != n_chunks:
-            return None  # predicate column absent for some chunks
-
-    chunks = spark.read.parquet(os.path.join(out_dir, "chunks"))
-    scan = (chunks.where(F.col("column") == group_col)
-            .select("chunk_id", F.col("blob").alias("blob_g")))
-    scanned = n_chunks
+        if a["fn"] != "count" and a["col"] != group_col:
+            extra_cols.append(a["col"])
+    cols = list(dict.fromkeys([group_col] + extra_cols
+                              + [leaf.col for leaf in where]))
+    front = _front(spark, out_dir, where, cols,
+                   _keep_mask_df(spark, out_dir))
+    paired = front.leaves  # task closures must not capture DataFrames
     if where:
-        scanned = w_scanned
-        scan = scan.join(F.broadcast(w_cand), "chunk_id")
-    for i, c in enumerate(extra_cols):
-        scan = scan.join(
-            chunks.where(F.col("column") == c)
-            .select("chunk_id", F.col("blob").alias("blob_%d" % i)),
-            "chunk_id")
-    for i, w in enumerate(where):
-        scan = scan.join(
-            chunks.where(F.col("column") == w["col"])
-            .select("chunk_id", F.col("codec").alias("wc%d" % i),
-                    F.col("blob").alias("w%d" % i)),
-            "chunk_id")
-    scan = _join_keep(scan, _keep_mask_df(spark, out_dir))
-    col_ix = {c: i for i, c in enumerate(extra_cols)}
-    where_fns = [w["mask_fn"] for w in where]
+        # overlap the column census with the prune counts (the counts
+        # are wasted work only on the rare fallback-return path)
+        census, (_, zone, scanned) = _overlap(front.census, front.counts)
+    else:
+        census = front.census()
+    n_chunks, n_dict = census.get(group_col, (0, -1))
+    if n_dict != n_chunks:
+        return None  # absent or mixed/non-dict group encodings: fallback
+    if any(census.get(c, (0,))[0] != n_chunks for c in cols):
+        return None  # column absent for some chunks (evolution)
+    if not where:
+        zone = scanned = n_chunks
+    col_ix = {c: cols.index(c) for c in extra_cols}
 
     # per-agg partial columns: count -> 1 long; count_col -> 1 long;
     # sum -> value (string: decimal-exact across chunks) + nonnull long;
     # min/max -> 1 nullable long (NULL partial = group all-null here)
-    out_fields, agg_specs = ["g string"], []
+    out_fields = ["g string"]
     for i, a in enumerate(aggs):
         if a["fn"] == "sum":
             out_fields += ["s%d string" % i, "nn%d long" % i]
@@ -1538,29 +1065,23 @@ def grouped_dict_agg(spark: SparkSession, out_dir: str, group_col: str,
             out_fields.append("m%d long" % i)
         else:
             out_fields.append("c%d long" % i)
-        agg_specs.append((a["fn"], None if a["fn"] == "count"
-                          else col_ix.get(a["col"])))
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             for row in pdf.itertuples(index=False):
-                payload = bytes(row.blob_g)[4:]  # strip chunk codec tag
+                payload = bytes(row.b0)[4:]  # strip chunk codec tag
                 codes = dictionary.codes(payload).astype(np.int64)
                 vals = dictionary.dictionary(payload)
                 width = len(vals) + 1  # + the code-0 null sentinel
-                km = row.keep_mask
-                keep = (None if km is None
-                        else _keep_bools(bytes(km), len(codes)))
-                dead = False
-                for i, mfn in enumerate(where_fns):
-                    m = mfn(bytes(getattr(row, "w%d" % i)),
-                            getattr(row, "wc%d" % i))
-                    if m is None:  # provably no match in this chunk
-                        dead = True
-                        break
-                    keep = m if keep is None else keep & m
-                if dead or (where_fns and not keep.any()):
-                    continue
+                if paired:
+                    m = _chunk_mask(paired, row)[0]
+                    if m is None:  # no row of this chunk matches
+                        continue
+                    keep = m.reshape(-1)[:len(codes)]
+                else:
+                    km = row.keep_mask
+                    keep = (None if km is None
+                            else _keep_bools(bytes(km), len(codes)))
                 ck = codes if keep is None else codes[keep]
                 counts = np.bincount(ck, minlength=width)
                 live = np.flatnonzero(counts)
@@ -1569,7 +1090,7 @@ def grouped_dict_agg(spark: SparkSession, out_dir: str, group_col: str,
                 decoded = {}
                 for c, i in col_ix.items():
                     d = chunk_codec.decode_column(
-                        bytes(getattr(row, "blob_%d" % i)))
+                        bytes(getattr(row, "b%d" % i)))
                     if keep is not None:
                         d = (d[keep] if isinstance(d, np.ndarray)
                              else d[keep].reset_index(drop=True))
@@ -1577,8 +1098,8 @@ def grouped_dict_agg(spark: SparkSession, out_dir: str, group_col: str,
                 cols = {"g": pd.Series(
                     [None if code == 0 else vals[code - 1]
                      for code in live], dtype=object)}
-                for i, (a, (fn_name, cix)) in enumerate(
-                        zip(aggs, agg_specs)):
+                for i, a in enumerate(aggs):
+                    fn_name = a["fn"]
                     if fn_name in ("min", "max"):
                         d = decoded[a["col"]]
                         if isinstance(d, pd.Series):
@@ -1633,7 +1154,7 @@ def grouped_dict_agg(spark: SparkSession, out_dir: str, group_col: str,
                             part[live].astype(np.int64))
                 yield pd.DataFrame(cols)
 
-    part = scan.mapInPandas(fn, ", ".join(out_fields))
+    part = front.scan.mapInPandas(fn, ", ".join(out_fields))
     final = []
     for i, a in enumerate(aggs):
         if a["fn"] in ("min", "max"):
@@ -1652,9 +1173,8 @@ def grouped_dict_agg(spark: SparkSession, out_dir: str, group_col: str,
             final.append(F.sum("c%d" % i).cast("long").alias(a["alias"]))
     res = (part.groupBy("g").agg(*final)
            .withColumnRenamed("g", group_col))
-    return res, {"total_chunks": n_chunks, "scanned_chunks": scanned,
-                 "pruned_chunks": n_chunks - scanned,
-                 "dict_fast_chunks": scanned,
+    # the group codes are bincounted compressed in every scanned chunk
+    return res, {**_stats(n_chunks, zone, scanned, compressed=scanned),
                  "where_specs": len(where), "group_kernel": True}
 
 
@@ -1711,8 +1231,7 @@ def dict_distinct(spark: SparkSession, out_dir: str,
     if nulls > 0:
         df = df.unionAll(spark.range(0, 1, 1, 1).select(
             F.lit(None).cast("string").alias(column)))
-    return df, {"total_chunks": n_chunks, "scanned_chunks": n_chunks,
-                "pruned_chunks": 0, "dict_fast_chunks": n_chunks,
+    return df, {**_stats(n_chunks, n_chunks, n_chunks, compressed=n_chunks),
                 "distinct_kernel": True}
 
 

@@ -6,20 +6,18 @@ view gets the full-decode plan — every chunk decoded, every predicate
 evaluated on materialized rows.  This module closes that gap for the
 predicate shapes the storage layer can answer from compressed bytes:
 
-    SELECT count(*) AS alias FROM <view>
-    WHERE  col = lit
-         | col BETWEEN lo AND hi   (or >= / > / <= / < bounds)
-         | col IN (lit, ...)
-         | col LIKE 'prefix%'
-         | col IS [NOT] NULL            (manifest null counts)
-         | int_range AND int_equality   (two-column AND)
+    SELECT count(*) AS alias FROM <view> WHERE <AND of leaves>
+      leaf := col = lit | col IN (lit, ...) | col LIKE 'prefix%'
+            | col BETWEEN lo AND hi     (or >= / > / <= / < bounds)
+    SELECT count(*) AS alias FROM <view> WHERE col IS [NOT] NULL
+                                        (manifest null counts)
 
     SELECT sum(col) AS a FROM <view> [WHERE lo <= f AND f <= hi]
     SELECT count(*)|count(col)|sum(col)|min(col)|max(col) AS a, ...
       FROM <view>                       (metadata-only aggregates)
     SELECT g, count(*)|count(col)|sum|min|max(int col) AS a, ...
       FROM <view>
-      [WHERE int eq/range | float range | str eq/IN, AND-combined]
+      [WHERE <AND of leaves>]
       GROUP BY g [HAVING output-col/aggregate cmp literal, AND-comb.]
       [ORDER BY output cols] [LIMIT n] (dict-code bincount kernel
       with manifest chunk-prune + compressed-domain row masks for the
@@ -32,9 +30,9 @@ predicate shapes the storage layer can answer from compressed bytes:
 
     SELECT col, ... | * FROM <view> WHERE <AND of routable leaves>
       [ORDER BY projected cols] [LIMIT n]
-      (row-returning: the WHERE-spec select kernel — intersected
-      manifest chunk candidates, ANDed row masks, projections decoded
-      only where the mask passes; route_sql entry)
+      (row-returning: the pruned select — intersected manifest chunk
+      candidates, ANDed row masks, projections decoded only where the
+      mask passes; route_sql entry)
 
     SELECT d.attr, aggs FROM <view> JOIN dim ON key = key [WHERE p]
       GROUP BY d.attr [ORDER BY output cols] [LIMIT n]
@@ -45,10 +43,11 @@ predicate shapes the storage layer can answer from compressed bytes:
 
 `route_sql_count` parses the SQL with Spark's OWN parser (so quoting,
 case, comments, literal syntax all behave exactly like spark.sql),
-pattern-matches the unresolved logical plan, and dispatches to the
-matching pruned_* kernel in sources/encoded_table.py — manifest
-zone-map/Bloom pruning plus compressed-domain evaluation, the same
-fast path the Python API gets.  Anything outside the grammar falls
+pattern-matches the unresolved logical plan, turns the WHERE into
+AND-ed `encoded_table.Leaf`s and runs the store's pruned readers
+(sources/encoded_table.py) — manifest zone-map/Bloom pruning plus
+compressed-domain evaluation, the same fast path the Python API
+gets.  Anything outside the grammar falls
 back to `spark.sql(sql)` over the registered decoded view, so the
 router is never LESS capable than the view: same answer, slower plan,
 `stats["routed"] = False` says which path ran.
@@ -64,8 +63,6 @@ from __future__ import annotations
 
 import json
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import encoded_table
@@ -74,7 +71,6 @@ from . import encoded_table
 _CMP = {"EqualTo": "eq", "GreaterThanOrEqual": "ge", "GreaterThan": "gt",
         "LessThanOrEqual": "le", "LessThan": "lt"}
 _FLIP = {"ge": "le", "gt": "lt", "le": "ge", "lt": "gt", "eq": "eq"}
-_MAX_IN_INT = 16  # int IN fans out to per-value equals scans; cap it
 
 
 def _cls(node: dict) -> str:
@@ -293,9 +289,10 @@ def _parse(nodes: list | None):
 
 
 def _merge_single_col(preds: list[dict]) -> list[dict]:
-    """Fuse ge/gt/le/lt bounds on one column into a closed int range
-    (BETWEEN desugars to ge+le; strict bounds tighten by 1 — exact for
-    integer columns, the only dtype routed through this path)."""
+    """Fuse ge/gt/le/lt bounds on one column into one range (BETWEEN
+    desugars to ge+le).  Strict int bounds tighten by 1 (exact for
+    integer columns; `strict_adj` records it), strict non-int bounds
+    stay as they are."""
     by_col: dict[str, dict] = {}
     out = []
     for p in preds:
@@ -540,93 +537,39 @@ def _parse_group(nodes: list | None):
     return out_spec, gcol, view, sort, preds, having, limit
 
 
-def _num_range_mask(lo, hi):
-    """Row mask for lo <= col <= hi on a decoded numeric chunk; either
-    bound may be None (one-sided).  NULL/NaN rows never match."""
-    from ..codecs import chunk as chunk_codec
-
-    def mask_fn(blob: bytes, codec: str):
-        s = pd.Series(chunk_codec.decode_column(blob))
-        m = pd.Series(True, index=s.index)
-        if lo is not None:
-            m &= s >= lo
-        if hi is not None:
-            m &= s <= hi
-        return m.fillna(False).to_numpy(dtype=bool)
-    return mask_fn
-
-
-def _string_in_mask(values: list[str]):
-    """Row mask for col IN (values) — dict chunks compare u32 codes
-    (values map to codes via the sorted heap; all-absent -> None, the
-    chunk is provably matchless), non-dict chunks decode and isin."""
-    from ..codecs import chunk as chunk_codec, dictionary
-
-    def mask_fn(blob: bytes, codec: str):
-        if codec == "dict":
-            payload = blob[4:]
-            cs = [c for c in (dictionary.code_of(payload, v)
-                              for v in values) if c]
-            if not cs:
-                return None
-            codes = dictionary.codes(payload)
-            if len(cs) == 1:
-                return codes == codes.dtype.type(cs[0])
-            return np.isin(codes, np.asarray(cs, dtype=codes.dtype))
-        s = pd.Series(chunk_codec.decode_column(blob))
-        vset = set(encoded_table._align_bounds(s.dropna(), *values))
-        return s.isin(vset).fillna(False).to_numpy(dtype=bool)
-    return mask_fn
-
-
-def _group_where_specs(dtypes: dict, preds: list[dict]) \
-        -> list[dict] | None:
-    """Map merged predicates to grouped_dict_agg `where` specs —
-    {col, manifest_pred, mask_fn} — or None when any leaf is outside
-    the mask kernels (callers fall back to the decoded view).
-    Covered: int eq / int range (incl. one-sided), float range
-    (two-sided, non-strict), string eq / IN."""
-    specs = []
+def _to_leaves(dtypes: dict, preds: list[dict]) -> list | None:
+    """Merged predicates (`_merge_single_col`) as AND-ed store leaves
+    (`encoded_table.Leaf`), or None when any is outside them — the
+    caller then falls back.  Strict bounds were tightened by one for
+    ints only, so a strict non-int bound stays unrouted; a float range
+    must be closed on both sides (Spark orders NaN above every number,
+    so an open upper bound would admit it)."""
+    Leaf = encoded_table.Leaf
+    leaves = []
     for p in preds:
-        c, dt = p["col"], dtypes.get(p["col"])
-        if p["op"] == "eq" and dt == "int64" and isinstance(p["val"], int):
-            p = {"col": c, "op": "range", "lo": p["val"], "hi": p["val"]}
-        if p["op"] == "range" and dt == "int64":
-            lo, hi = p["lo"], p["hi"]
-            if not all(isinstance(v, int) for v in (lo, hi)
-                       if v is not None):
-                return None
-            mp = None
-            if lo is not None:
-                mp = F.col("max_val") >= lo
-            if hi is not None:
-                hp = F.col("min_val") <= hi
-                mp = hp if mp is None else mp & hp
-            specs.append({"col": c, "manifest_pred": mp,
-                          "mask_fn": _num_range_mask(lo, hi)})
-        elif (p["op"] == "range" and dt == "double"
-              and not p.get("strict_adj")
-              and p["lo"] is not None and p["hi"] is not None):
-            specs.append({"col": c,
-                          "manifest_pred": (F.col("max_f64") >= p["lo"])
-                          & (F.col("min_f64") <= p["hi"]),
-                          "mask_fn": _num_range_mask(p["lo"], p["hi"])})
-        elif p["op"] == "eq" and dt == "string" \
-                and isinstance(p["val"], str):
-            specs.append({"col": c,
-                          "manifest_pred": (F.col("min_str") <= p["val"])
-                          & (F.col("max_str") >= p["val"]),
-                          "mask_fn": _string_in_mask([p["val"]])})
-        elif p["op"] == "in" and dt == "string" \
-                and all(isinstance(v, str) for v in p["vals"]):
-            vals = sorted(set(p["vals"]))
-            specs.append({"col": c,
-                          "manifest_pred": (F.col("min_str") <= vals[-1])
-                          & (F.col("max_str") >= vals[0]),
-                          "mask_fn": _string_in_mask(vals)})
+        c, dt, op = p["col"], dtypes.get(p["col"]), p["op"]
+        vals = [p["val"]] if op == "eq" else p.get("vals")
+        typ = {"int64": int, "string": str}.get(dt)
+        if op in ("eq", "in") and typ and all(isinstance(v, typ)
+                                              for v in vals):
+            leaves.append(Leaf(c, dt, "in", values=tuple(vals)))
+        elif op == "prefix" and dt == "string":
+            leaves.append(Leaf(c, dt, "prefix", values=(p["val"],)))
+        elif op != "range":
+            return None
+        elif dt == "int64" and all(isinstance(v, int)
+                                   for v in (p["lo"], p["hi"])
+                                   if v is not None):
+            leaves.append(Leaf(c, dt, "range", p["lo"], p["hi"]))
+        elif dt == "string" and all(isinstance(v, str)
+                                    for v in (p["lo"], p["hi"])):
+            leaves.append(Leaf(c, dt, "range", p["lo"], p["hi"]))
+        elif dt == "double" and not p["strict_adj"] and all(
+                isinstance(v, (int, float)) for v in (p["lo"], p["hi"])):
+            leaves.append(Leaf(c, dt, "range", p["lo"], p["hi"]))
         else:
             return None
-    return specs
+    return leaves
 
 
 def _parse_join(nodes: list | None):
@@ -801,7 +744,7 @@ def _route_join(spark, out_dir, parsed, view):
         return None
     if any(side(p["col"]) != "store" for p in preds):
         return None  # dim-side predicates: fallback
-    where = _group_where_specs(dtypes, _merge_single_col(preds))
+    where = _to_leaves(dtypes, _merge_single_col(preds))
     if where is None:
         return None
     routed = encoded_table.grouped_dict_agg(spark, out_dir, store_key,
@@ -839,15 +782,13 @@ def _route_join(spark, out_dir, parsed, view):
 
 
 def _dispatch_select(spark, out_dir, cols, preds, sort, limit):
-    """(rows-DataFrame, stats) through the WHERE-spec select kernel
-    (`pruned_select_where`: intersected chunk candidates, ANDed row
+    """(rows-DataFrame, stats) through the pruned select
+    (`encoded_table.pruned_select`: one pruning front, AND-ed leaf
     masks, mask-gated projection decode), or None when outside the
-    routable shapes.  One kernel serves 1..n predicate leaves, so the
-    schema-evolution guard (a column absent from some chunks refuses
-    to route rather than dropping those chunks' rows) applies
-    uniformly."""
-    et = encoded_table
-    _, dtypes = et.stored_schema(spark, out_dir)
+    routable shapes — including a column absent from some chunks
+    (schema evolution), which refuses to route rather than dropping
+    those chunks' rows."""
+    _, dtypes = encoded_table.stored_schema(spark, out_dir)
     if cols is _STAR:
         cols = list(dtypes)
     if any(c not in dtypes for c in cols):
@@ -858,13 +799,9 @@ def _dispatch_select(spark, out_dir, cols, preds, sort, limit):
         return None
     if limit is not None and not sort:
         return None  # arbitrary-k rows: Spark's call
-    specs = _group_where_specs(dtypes, _merge_single_col(preds))
-    if not specs:
-        return None
-    routed = et.pruned_select_where(spark, out_dir, specs, cols)
-    return _finish_select(routed, sort, limit)
-
-def _finish_select(routed, sort, limit):
+    leaves = _to_leaves(dtypes, _merge_single_col(preds))
+    routed = (encoded_table.pruned_select(spark, out_dir, leaves, cols)
+              if leaves else None)
     if routed is None:
         return None
     df, stats = routed
@@ -872,9 +809,7 @@ def _finish_select(routed, sort, limit):
         df = df.orderBy(*[_sort_expr(*o) for o in sort])
     if limit is not None:
         df = df.limit(limit)
-    stats = dict(stats)
-    stats["routed"] = True
-    return df, stats
+    return df, {**stats, "routed": True, "select_kernel": True}
 
 
 def route_sql(spark: SparkSession, out_dir: str, sql: str,
@@ -966,7 +901,7 @@ def route_sql(spark: SparkSession, out_dir: str, sql: str,
             or (a["fn"] in ("sum", "min", "max")
                 and dtypes.get(a["col"]) == "int64")
             for a in kernel_aggs)
-        where = (_group_where_specs(dtypes, _merge_single_col(preds))
+        where = (_to_leaves(dtypes, _merge_single_col(preds))
                  if ok else None)
         routed = (encoded_table.grouped_dict_agg(spark, out_dir, gcol,
                                                  kernel_aggs,
@@ -1044,81 +979,11 @@ def route_sql_count(spark: SparkSession, out_dir: str, sql: str,
 
 
 def _dispatch(spark, out_dir, dtypes, preds):
-    """(hits, stats) via the matching pruned kernel, or None when no
-    kernel covers this predicate set."""
-    et = encoded_table
-
-    def is_int(c):
-        return dtypes.get(c) == "int64"
-
-    def is_str(c):
-        return dtypes.get(c) == "string"
-
-    def is_float(c):
-        return dtypes.get(c) == "double"
-
-    if len(preds) == 1:
-        p = preds[0]
-        c = p["col"]
-        if p["op"] == "eq" and is_int(c) and isinstance(p["val"], int):
-            return et.pruned_equals_count(spark, out_dir, c, p["val"])
-        if p["op"] == "eq" and is_str(c) and isinstance(p["val"], str):
-            return et.pruned_string_equals_count(spark, out_dir, c,
-                                                 p["val"])
-        if p["op"] == "range" and not is_int(c) and p.get("strict_adj"):
-            return None  # +1/-1 strict-bound tightening is int-only
-        if p["op"] == "range" and is_int(c):
-            lo, hi = p["lo"], p["hi"]
-            if lo is None or hi is None:  # one-sided: manifest bound
-                mn, mx = et.manifest_min_max(spark, out_dir, c)
-                if mn is None:
-                    return 0, {"total_chunks": 0, "scanned_chunks": 0,
-                               "pruned_chunks": 0}
-                lo, hi = (mn if lo is None else lo,
-                          mx if hi is None else hi)
-            if not (isinstance(lo, int) and isinstance(hi, int)):
-                return None  # float bound on int column: fallback
-            return et.pruned_range_count(spark, out_dir, c, lo, hi)
-        if (p["op"] == "range" and is_str(c)
-                and isinstance(p["lo"], str) and isinstance(p["hi"], str)):
-            return et.pruned_string_range_count(spark, out_dir, c,
-                                                p["lo"], p["hi"])
-        if p["op"] == "range" and is_float(c):
-            if p["lo"] is None or p["hi"] is None:
-                return None  # float bounds came +1/-1-adjusted: int only
-            return et.pruned_float_range_count(spark, out_dir, c,
-                                               p["lo"], p["hi"])
-        if (p["op"] == "in" and is_str(c)
-                and all(isinstance(v, str) for v in p["vals"])):
-            return et.pruned_string_in_count(spark, out_dir, c,
-                                             list(p["vals"]))
-        if (p["op"] == "in" and is_int(c)
-                and len(p["vals"]) <= _MAX_IN_INT
-                and all(isinstance(v, int) for v in p["vals"])):
-            hits, agg = 0, None
-            for v in sorted(set(p["vals"])):  # distinct: counts add
-                h, st = et.pruned_equals_count(spark, out_dir, c, v)
-                hits += h
-                if agg is None:
-                    agg = dict(st)
-                else:
-                    for k in ("scanned_chunks", "pruned_chunks"):
-                        agg[k] += st[k]
-            return hits, agg
-        if p["op"] == "prefix" and is_str(c):
-            return et.pruned_string_prefix_count(spark, out_dir, c,
-                                                 p["val"])
-        return None
-    if len(preds) == 2:  # the MultiVectorFilter shape: int range AND eq
-        rng = [p for p in preds if p["op"] == "range" and is_int(p["col"])
-               and isinstance(p["lo"], int) and isinstance(p["hi"], int)]
-        eq = [p for p in preds if p["op"] == "eq" and is_int(p["col"])
-              and isinstance(p["val"], int)]
-        if len(rng) == 1 and len(eq) == 1 and rng[0]["col"] != eq[0]["col"]:
-            return et.pruned_multi_and_count(
-                spark, out_dir, rng[0]["col"], rng[0]["lo"], rng[0]["hi"],
-                eq[0]["col"], eq[0]["val"])
-    return None
+    """(hits, stats) through the one pruned count, or None when some
+    predicate is outside the store leaves."""
+    leaves = _to_leaves(dtypes, preds)
+    return (encoded_table.pruned_count(spark, out_dir, leaves)
+            if leaves else None)
 
 
 def _dispatch_aggs(spark, out_dir, dtypes, aggs, preds):

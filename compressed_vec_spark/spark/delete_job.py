@@ -38,6 +38,7 @@ Consistency contract (mirrors append_table's):
 
 from __future__ import annotations
 
+import math
 import os
 from typing import Iterator
 
@@ -117,103 +118,68 @@ def _keep_mask(mask_bytes: bytes, n_rows: int) -> np.ndarray:
     return ~dele
 
 
-def delete_rows(spark: SparkSession, out_dir: str, filter_col: str,
-                manifest_pred, mask_fn, delete_id: str,
-                bloom_value=None) -> dict:
-    """Generic core of every DELETE: manifest-stat (+ optional Bloom)
-    prune -> per-chunk `mask_fn(blob, codec) -> bool ndarray | None`
-    on surviving chunks only -> packed-bit sidecar rows, one per chunk
-    that actually lost rows.  Returns the scan/prune stats plus
+def delete_rows(spark: SparkSession, out_dir: str, leaves: list,
+                delete_id: str,
+                exclude_parts: tuple[int, int] | None = None) -> dict:
+    """Core of every DELETE: the store's pruning front (zone maps and
+    Bloom probes drop chunks before any blob read) and its leaf masks
+    on the surviving chunks (`encoded_table.Leaf`, AND-ed) -> packed-bit
+    sidecar rows, one per chunk that actually lost rows.
+    `exclude_parts` (lo, hi exclusive) leaves that part range alone.
+    Returns the pruned-read stats record plus affected_chunks and
     rows_deleted."""
-    manifest = spark.read.parquet(os.path.join(out_dir, "manifest"))
-    total_chunks = manifest.where(F.col("column") == filter_col).count()
-    candidates = manifest.where(
-        (F.col("column") == filter_col) & manifest_pred)
-    bloom_pruned = 0
-    if bloom_value is not None and "bloom" in manifest.columns:
-        zone_survivors = candidates.count()
-        import pyarrow as pa
-        from ..codecs import bloom as bloom_codec
-        probe_vals = ([bloom_value] if isinstance(bloom_value, str)
-                      else list(bloom_value))
-        hashes = bloom_codec.hash_values(
-            pa.array(probe_vals, type=pa.large_utf8()))
-
-        @F.pandas_udf("boolean")
-        def _probe(blooms: pd.Series) -> pd.Series:
-            return pd.Series([bool(bloom_codec.contains_many(
-                bytes(b) if b is not None else None, hashes).any())
-                for b in blooms])
-
-        candidates = candidates.where(_probe(F.col("bloom")))
-        scanned_chunks = candidates.count()
-        bloom_pruned = zone_survivors - scanned_chunks
-    else:
-        scanned_chunks = candidates.count()
-    cand_ids = candidates.select("chunk_id")
-
-    src = (spark.read.parquet(os.path.join(out_dir, "chunks"))
-           .where(F.col("column") == filter_col)
-           .join(F.broadcast(cand_ids), "chunk_id")
-           .select("chunk_id", "part_id", "chunk_seq", "codec",
-                   "num_elements", "blob"))
-    # exclude rows other batches already deleted, so sum(n_deleted)
-    # across the sidecar is exact under overlapping predicates; the
-    # CURRENT delete_id is excluded from the prior view so a retry
-    # recomputes the identical result it then overwrites
-    prior = merged_masks(spark, out_dir, exclude_delete_id=delete_id)
-    if prior is not None:
-        src = src.join(prior.select("chunk_id",
-                                    F.col("mask").alias("prior_mask")),
-                       "chunk_id", "left")
-    else:
-        src = src.withColumn("prior_mask", F.lit(None).cast("binary"))
+    from ..sources import encoded_table
+    parts = None
+    if exclude_parts is not None:
+        lo, hi = exclude_parts
+        parts = (F.col("part_id") < lo) | (F.col("part_id") >= hi)
+    # rows other batches already deleted are the scan's keep mask, so
+    # sum(n_deleted) across the sidecar is exact under overlapping
+    # predicates; the CURRENT delete_id is left out of that view so a
+    # retry recomputes the identical result it then overwrites
+    prior = merged_masks(spark, out_dir, exclude_delete_id=delete_id,
+                         check_empty=False)
+    cols = list(dict.fromkeys(leaf.col for leaf in leaves))
+    front = encoded_table._front(
+        spark, out_dir, leaves, cols,
+        None if prior is None
+        else prior.select("chunk_id", F.col("mask").alias("keep_mask")),
+        parts)
+    paired = front.leaves  # task closures must not capture DataFrames
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = []
             for row in pdf.itertuples(index=False):
-                mask = mask_fn(bytes(row.blob), row.codec)
-                if mask is None:
+                m = encoded_table._chunk_mask(paired, row)[0]
+                if m is None:
                     continue
                 n = int(row.num_elements)
-                mask = np.asarray(mask, dtype=bool)[:n]
-                if row.prior_mask is not None:
-                    mask &= ~np.unpackbits(
-                        np.frombuffer(bytes(row.prior_mask), np.uint8),
-                        count=n).astype(bool)
-                nd = int(mask.sum())
-                if nd == 0:
-                    continue
+                m = m.reshape(-1)[:n]
                 out.append((delete_id, int(row.part_id),
-                            int(row.chunk_seq), row.chunk_id, n, nd,
-                            np.packbits(mask).tobytes()))
+                            int(row.chunk_seq), row.chunk_id, n,
+                            int(m.sum()), np.packbits(m).tobytes()))
             if out:
                 yield pd.DataFrame(out, columns=[
                     "delete_id", "part_id", "chunk_seq", "chunk_id",
                     "n_rows", "n_deleted", "mask"])
 
-    new = src.mapInPandas(fn, DELETE_SCHEMA)
-    # dynamic partition overwrite: this delete_id's partition is
-    # replaced wholesale (idempotent retry), other batches untouched
-    (new.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("delete_id").parquet(_deletes_path(out_dir)))
+    def write():
+        # dynamic partition overwrite: this delete_id's partition is
+        # replaced wholesale (idempotent retry), other batches untouched
+        (front.scan.mapInPandas(fn, DELETE_SCHEMA).write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("delete_id").parquet(_deletes_path(out_dir)))
 
+    # the prune counts and the mask write are independent jobs
+    (total, zone, scanned), _ = encoded_table._overlap(front.counts, write)
     written = (_read_deletes(spark, out_dir)
                .where(F.col("delete_id") == delete_id)
                .agg(F.count("*").alias("chunks"),
                     F.sum("n_deleted").alias("rows")).collect()[0])
-    stats = {
-        "total_chunks": total_chunks,
-        "scanned_chunks": scanned_chunks,
-        "pruned_chunks": total_chunks - scanned_chunks,
-        "affected_chunks": int(written["chunks"] or 0),
-        "rows_deleted": int(written["rows"] or 0),
-    }
-    if bloom_value is not None:
-        stats["bloom_pruned_chunks"] = bloom_pruned
-    return stats
+    return {**encoded_table._stats(total, zone, scanned),
+            "affected_chunks": int(written["chunks"] or 0),
+            "rows_deleted": int(written["rows"] or 0)}
 
 
 def delete_where_equals(spark: SparkSession, out_dir: str, column: str,
@@ -223,26 +189,11 @@ def delete_where_equals(spark: SparkSession, out_dir: str, column: str,
     dict chunks mask on the compressed u32 code vector (code_of — the
     string is never materialized); non-dict chunks decode and compare.
     NULL values never match (SQL equality semantics)."""
-    from ..codecs import dictionary
-    from ..sources.encoded_table import _align_bounds
+    from ..sources.encoded_table import Leaf
     _require_string_column(spark, out_dir, column, "delete_where_equals")
-
-    def mask_fn(blob: bytes, codec: str):
-        if codec == "dict":
-            payload = blob[4:]
-            code = dictionary.code_of(payload, value)
-            if not code:
-                return None
-            return dictionary.codes(payload) == np.uint64(code)
-        s = pd.Series(chunk_codec.decode_column(blob))
-        nn = s.dropna()
-        v, = _align_bounds(nn, value)
-        return (s == v).fillna(False).to_numpy(dtype=bool)
-
-    return delete_rows(
-        spark, out_dir, column,
-        (F.col("min_str") <= value) & (F.col("max_str") >= value),
-        mask_fn, delete_id, bloom_value=value)
+    return delete_rows(spark, out_dir,
+                       [Leaf(column, "string", "in", values=(value,))],
+                       delete_id)
 
 
 def _require_string_column(spark: SparkSession, out_dir: str,
@@ -268,43 +219,18 @@ def delete_where_in(spark: SparkSession, out_dir: str, column: str,
     [min_str, max_str] overlaps [min(values), max(values)] — per-value
     OR predicates would not scale to an upsert batch's key list), the
     Bloom probe then prunes precisely (all values hashed once, one
-    contains_many pass per chunk), and surviving dict chunks mask with
-    np.isin on the compressed u32 code vector (absent values drop out
-    free at the heap search)."""
-    from ..codecs import dictionary
-    from ..sources.encoded_table import _align_bounds
-
-    if not values:
-        return {"total_chunks": 0, "scanned_chunks": 0,
-                "pruned_chunks": 0, "affected_chunks": 0,
-                "rows_deleted": 0, "bloom_pruned_chunks": 0}
-    vals = sorted(v for v in values if v is not None)
+    contains_many pass per chunk), and surviving dict chunks mask on
+    the compressed u32 code vector (absent values drop out free at the
+    heap search).  An empty or all-NULL list deletes nothing and
+    touches nothing."""
+    from ..sources.encoded_table import Leaf, _stats
+    vals = [v for v in values if v is not None]
     if not vals:
-        return {"total_chunks": 0, "scanned_chunks": 0,
-                "pruned_chunks": 0, "affected_chunks": 0,
-                "rows_deleted": 0, "bloom_pruned_chunks": 0}
+        return {**_stats(0, 0, 0), "affected_chunks": 0, "rows_deleted": 0}
     _require_string_column(spark, out_dir, column, "delete_where_in")
-
-    def mask_fn(blob: bytes, codec: str):
-        if codec == "dict":
-            payload = blob[4:]
-            codes = np.array([c for c in (dictionary.code_of(payload, v)
-                                          for v in vals) if c],
-                             dtype=np.uint64)
-            if not len(codes):
-                return None
-            return np.isin(dictionary.codes(payload), codes)
-        s = pd.Series(chunk_codec.decode_column(blob))
-        nn = s.dropna()
-        vset = set(_align_bounds(nn, *vals))
-        return s.isin(vset).fillna(False).to_numpy(dtype=bool)
-
-    pred = (F.col("min_str") <= vals[-1]) & (F.col("max_str") >= vals[0])
-    if exclude_parts is not None:
-        lo, hi = exclude_parts  # hi exclusive
-        pred = pred & ((F.col("part_id") < lo) | (F.col("part_id") >= hi))
-    return delete_rows(spark, out_dir, column, pred,
-                       mask_fn, delete_id, bloom_value=vals)
+    return delete_rows(spark, out_dir,
+                       [Leaf(column, "string", "in", values=tuple(vals))],
+                       delete_id, exclude_parts)
 
 
 def upsert_table(spark: SparkSession, df, out_dir: str, key_col: str,
@@ -354,24 +280,18 @@ def delete_where_range(spark: SparkSession, out_dir: str, column: str,
     """DELETE WHERE column BETWEEN lo AND hi for a NUMERIC column;
     manifest interval stats matched to the column's type prune chunks
     wholly outside [lo, hi].  NULLs never match."""
-    from ..sources.encoded_table import stored_schema
+    from ..sources.encoded_table import Leaf, stored_schema
     _, dtypes = stored_schema(spark, out_dir)
     dt = dtypes.get(column)
-    if dt == "int64":
-        pred = (F.col("max_val") >= lo) & (F.col("min_val") <= hi)
-    elif dt in ("double", "float"):
-        pred = (F.col("max_f64") >= lo) & (F.col("min_f64") <= hi)
-    else:
+    if dt not in ("int64", "double", "float"):
         raise ValueError(
             f"delete_where_range: column {column!r} has dtype {dt!r}; "
             "int and float columns are supported (delete_where_equals "
             "for string predicates)")
-
-    def mask_fn(blob: bytes, codec: str):
-        s = pd.Series(chunk_codec.decode_column(blob, dt))
-        return ((s >= lo) & (s <= hi)).fillna(False).to_numpy(dtype=bool)
-
-    return delete_rows(spark, out_dir, column, pred, mask_fn, delete_id)
+    if dt == "int64":  # fractional bounds select the same integers
+        lo, hi = math.ceil(lo), math.floor(hi)
+    return delete_rows(spark, out_dir, [Leaf(column, dt, "range", lo, hi)],
+                       delete_id)
 
 
 def delete_stats(spark: SparkSession, out_dir: str) -> dict:

@@ -193,10 +193,10 @@ def encoded_table_pruned_count(spark, sf_dir) -> DataFrame:
     an encoded-chunk store (salting off, sorted keys), then answer an
     equality count through manifest min/max chunk pruning — only the
     chunks whose [min,max] admits the value are decoded."""
-    from ..sources import encoded_table
+    from ..sources.encoded_table import Leaf, pruned_count
     out = _orders_store(spark, sf_dir)
-    hits, stats = encoded_table.pruned_equals_count(
-        spark, out, "o_orderkey", 1)
+    hits, stats = pruned_count(
+        spark, out, [Leaf("o_orderkey", "int64", "in", values=(1,))])
     assert stats["pruned_chunks"] >= 0
     return spark.createDataFrame(
         pd.DataFrame({"hits": [hits]})).select(F.col("hits").cast("long"))
@@ -227,12 +227,12 @@ def encoded_table_range_count(spark, sf_dir) -> DataFrame:
     levels: manifest [min,max] chunk pruning (broadcast join), then
     range_mask's header-only section skipping inside surviving chunks —
     the compressed-domain range filter applied to the storage layer."""
-    from ..sources import encoded_table
+    from ..sources.encoded_table import Leaf, pruned_count
     out = _orders_store(spark, sf_dir)
-    hits, stats = encoded_table.pruned_range_count(
-        spark, out, "o_orderkey", 1000, 5000)
+    hits, stats = pruned_count(
+        spark, out, [Leaf("o_orderkey", "int64", "range", 1000, 5000)])
     assert stats["pruned_chunks"] >= 0
-    assert stats["sections_skipped_without_decode"] >= 0
+    assert stats["sections_skipped"] >= 0
     return spark.createDataFrame(
         pd.DataFrame({"hits": [hits]})).select(F.col("hits").cast("long"))
 
@@ -244,11 +244,11 @@ def encoded_table_cluster_layout(spark, sf_dir) -> DataFrame:
     spans nearly the whole domain and a custkey range prunes ~nothing;
     clustering on o_custkey (range-exchange + sort + the same encode
     pipeline) gives each chunk a narrow custkey slice and the SAME
-    pruned_range_count machinery skips most chunks — the Iceberg
+    pruned_count machinery skips most chunks — the Iceberg
     rewrite_data_files(sort_order) / Delta OPTIMIZE ZORDER step of a
     100-TB layout lifecycle, verified in-query by comparing prune
     counts across the two layouts of identical rows."""
-    from ..sources import encoded_table
+    from ..sources.encoded_table import Leaf, pruned_count
     from . import compact_job
     src = _orders_store(spark, sf_dir)
     key = (id(spark.sparkContext), sf_dir, "orders_by_custkey")
@@ -257,14 +257,12 @@ def encoded_table_cluster_layout(spark, sf_dir) -> DataFrame:
         compact_job.cluster_store(spark, src, dst, "o_custkey", num_parts=8)
         _STORE_CACHE[key] = dst
     dst = _STORE_CACHE[key]
-    lo, hi = 100, 160
+    leaves = [Leaf("o_custkey", "int64", "range", 100, 160)]
     # the two layouts' counts are independent reads: overlap them
     from concurrent.futures import ThreadPoolExecutor
     with ThreadPoolExecutor(max_workers=2) as pool:
-        f_src = pool.submit(encoded_table.pruned_range_count,
-                            spark, src, "o_custkey", lo, hi)
-        f_dst = pool.submit(encoded_table.pruned_range_count,
-                            spark, dst, "o_custkey", lo, hi)
+        f_src = pool.submit(pruned_count, spark, src, leaves)
+        f_dst = pool.submit(pruned_count, spark, dst, leaves)
         hits_src, st_src = f_src.result()
         hits, st = f_dst.result()
     # identical answer from both layouts; the clustered one must prune
@@ -281,10 +279,11 @@ def encoded_table_multi_and_count(spark, sf_dir) -> DataFrame:
     across two columns' chunks with manifest pruning intersected across
     BOTH predicates and per-section short-circuit of the second column
     (reference src/filter.rs:239-286 applied to storage)."""
-    from ..sources import encoded_table
+    from ..sources.encoded_table import Leaf, pruned_count
     out = _orders_store(spark, sf_dir)
-    hits, stats = encoded_table.pruned_multi_and_count(
-        spark, out, "o_orderkey", 1000, 20000, "o_custkey", 605)
+    hits, stats = pruned_count(
+        spark, out, [Leaf("o_orderkey", "int64", "range", 1000, 20000),
+                     Leaf("o_custkey", "int64", "in", values=(605,))])
     assert stats["pruned_chunks"] >= 0
     return spark.createDataFrame(
         pd.DataFrame({"hits": [hits]})).select(F.col("hits").cast("long"))
@@ -334,20 +333,20 @@ def encoded_table_string_filter_count(spark, sf_dir) -> DataFrame:
     prefix_range + range_mask on the compressed u32 code vector — no
     string is ever materialized on the fast path."""
     from concurrent.futures import ThreadPoolExecutor
-    from ..sources import encoded_table
+    from ..sources.encoded_table import Leaf, pruned_count
     out = _documents_by_source_store(spark, sf_dir)
     # two independent kernels over one store: overlap them (guide §2.6)
     with ThreadPoolExecutor(max_workers=2) as pool:
-        f_eq = pool.submit(encoded_table.pruned_string_equals_count,
-                           spark, out, "source", "src12")
-        f_pre = pool.submit(encoded_table.pruned_string_prefix_count,
-                            spark, out, "source", "src1")
+        f_eq = pool.submit(pruned_count, spark, out, [
+            Leaf("source", "string", "in", values=("src12",))])
+        f_pre = pool.submit(pruned_count, spark, out, [
+            Leaf("source", "string", "prefix", values=("src1",))])
         eq_hits, st_eq = f_eq.result()
         pre_hits, st_pre = f_pre.result()
     # the source-sorted layout must actually prune: with 8 range
     # partitions over 20 source values most chunks exclude 'src12'
     assert st_eq["pruned_chunks"] > 0, st_eq
-    assert st_eq["dict_fast_chunks"] == st_eq["scanned_chunks"], st_eq
+    assert st_eq["compressed_chunks"] == st_eq["scanned_chunks"], st_eq
     assert st_pre["pruned_chunks"] >= 0, st_pre
     return spark.createDataFrame(
         pd.DataFrame({"eq_hits": [eq_hits], "prefix_hits": [pre_hits]})) \
@@ -364,13 +363,13 @@ def encoded_table_string_range_count(spark, sf_dir) -> DataFrame:
     compressed u32 vector with `range_mask`'s header-only section
     skipping (reference EqualsSink src/filter.rs:112-139 generalized
     to ranges at the storage layer)."""
-    from ..sources import encoded_table
+    from ..sources.encoded_table import Leaf, pruned_count
     out = _documents_by_source_store(spark, sf_dir)
-    hits, st = encoded_table.pruned_string_range_count(
-        spark, out, "source", "src12", "src17")
+    hits, st = pruned_count(
+        spark, out, [Leaf("source", "string", "range", "src12", "src17")])
     # the source-sorted layout must prune chunks outside [src12, src17]
     assert st["pruned_chunks"] > 0, st
-    assert st["dict_fast_chunks"] == st["scanned_chunks"], st
+    assert st["compressed_chunks"] == st["scanned_chunks"], st
     return spark.createDataFrame(
         pd.DataFrame({"range_hits": [hits]})) \
         .select(F.col("range_hits").cast("long"))
@@ -426,7 +425,7 @@ def encoded_table_sql_pushdown(spark, sf_dir) -> DataFrame:
         c_df, c_st = f_c.result()
     assert r_st["routed"] and r_st["pruned_chunks"] > 0, r_st
     assert e_st["routed"] and e_st["pruned_chunks"] > 0, e_st
-    assert e_st["dict_fast_chunks"] == e_st["scanned_chunks"], e_st
+    assert e_st["compressed_chunks"] == e_st["scanned_chunks"], e_st
     assert i_st["routed"], i_st
     assert s_st["routed"], s_st
     assert c_st["routed"] and c_st["metadata_only"], c_st
@@ -476,7 +475,7 @@ def encoded_table_sql_group(spark, sf_dir) -> DataFrame:
         " FROM cvx_sqlg_docs GROUP BY source ORDER BY source",
         view="cvx_sqlg_docs")
     assert st["routed"] and st.get("group_kernel"), st
-    assert st["dict_fast_chunks"] == st["total_chunks"], st
+    assert st["compressed_chunks"] == st["total_chunks"], st
     return df
 
 
@@ -626,12 +625,12 @@ def encoded_table_point_lookup(spark, sf_dir) -> DataFrame:
     I/O, never wrong counts.  The probed value is doc 42's text, so
     hits >= 1 by construction and the planted exact duplicates keep
     the count interesting."""
-    from ..sources import encoded_table
+    from ..sources.encoded_table import Leaf, pruned_count
     probe = (_read(spark, sf_dir, "documents")
              .where(F.col("doc_id") == 42).select("text").first()[0])
     out = _documents_text_store(spark, sf_dir)
-    hits, st = encoded_table.pruned_string_equals_count(
-        spark, out, "text", probe)
+    hits, st = pruned_count(
+        spark, out, [Leaf("text", "string", "in", values=(probe,))])
     # zone maps admit everything (doc_id-sorted layout) — the Bloom
     # level must be doing the pruning
     if st["total_chunks"] > 1:
@@ -690,15 +689,15 @@ def encoded_table_string_in_count(spark, sf_dir) -> DataFrame:
     filters hash all three values once and drop every chunk where all
     three are provably absent; surviving dict chunks run OneOf on the
     compressed code vector, fsst chunks decode once against the set."""
-    from ..sources import encoded_table
+    from ..sources.encoded_table import Leaf, pruned_count
     texts = {r["doc_id"]: r["text"]
              for r in (_read(spark, sf_dir, "documents")
                        .where(F.col("doc_id").isin([7, 101]))
                        .select("doc_id", "text").collect())}
     values = [texts[7], texts[101], texts[7] + "#ABSENT#"]
     out = _documents_text_store(spark, sf_dir)
-    hits, st = encoded_table.pruned_string_in_count(
-        spark, out, "text", values)
+    hits, st = pruned_count(
+        spark, out, [Leaf("text", "string", "in", values=tuple(values))])
     if st["total_chunks"] > 2:
         assert st["bloom_pruned_chunks"] > 0, st
     return spark.createDataFrame(
@@ -730,10 +729,10 @@ def encoded_table_float_range_count(spark, sf_dir) -> DataFrame:
     decoded and compared.  Completes the predicate-pushdown family over
     the store's own format: int (range/equality/IN), string
     (equality/prefix/range), and now float range."""
-    from ..sources import encoded_table
+    from ..sources.encoded_table import Leaf, pruned_count
     out = _events_by_value_store(spark, sf_dir)
-    hits, st = encoded_table.pruned_float_range_count(
-        spark, out, "value", 10.0, 20.0)
+    hits, st = pruned_count(
+        spark, out, [Leaf("value", "double", "range", 10.0, 20.0)])
     # the value-sorted layout must prune chunks outside [10, 20]
     assert st["pruned_chunks"] > 0, st
     return spark.createDataFrame(
@@ -818,7 +817,7 @@ def encoded_table_filter_select(spark, sf_dir) -> DataFrame:
     source = 'src12' with manifest string-stats chunk pruning, the
     filter evaluated on compressed dict codes, and the projection
     columns decoded only in surviving chunks (sources/encoded_table
-    pruned_filter_select) — predicate pushdown + column pruning over
+    pruned_select) — predicate pushdown + column pruning over
     this engine's own format.  Since r5 the statement enters as plain
     SQL TEXT through sql_router (row-returning shapes route to the
     same kernel; in-query asserts prove it)."""
@@ -838,7 +837,7 @@ def encoded_table_range_select(spark, sf_dir) -> DataFrame:
     """Row-returning NUMERIC range read over the persisted store:
     SELECT o_orderkey, o_custkey WHERE o_orderkey BETWEEN 1000 AND 3000
     — manifest [min_val, max_val] chunk pruning, the range evaluated on
-    decoded filter vectors of surviving chunks only, projections
+    compressed filter vectors of surviving chunks only, projections
     decoded only where the mask passes (the numeric sibling of
     `encoded_table_filter_select`).  Since r5 the statement enters as
     plain SQL TEXT through sql_router."""
@@ -2684,15 +2683,14 @@ def snapshot_pruned_range_count(spark, sf_dir) -> DataFrame:
     query a living-corpus consumer runs to reproduce yesterday's
     numbers after today's crawl landed."""
     from concurrent.futures import ThreadPoolExecutor
-    from ..sources import encoded_table
+    from ..sources.encoded_table import Leaf, pruned_count
     out = _snapshot_store(spark, sf_dir)
+    leaves = [Leaf("n_chars", "int64", "range", 100, 400)]
     # the as-of and current-table counts are independent reads of one
     # immutable store: overlap them (guide §2.6)
     with ThreadPoolExecutor(max_workers=2) as pool:
-        f_asof = pool.submit(encoded_table.pruned_range_count,
-                             spark, out, "n_chars", 100, 400, as_of="b1")
-        f_full = pool.submit(encoded_table.pruned_range_count,
-                             spark, out, "n_chars", 100, 400)
+        f_asof = pool.submit(pruned_count, spark, out, leaves, as_of="b1")
+        f_full = pool.submit(pruned_count, spark, out, leaves)
         hits, stats = f_asof.result()
         full_hits, _ = f_full.result()
     assert stats["pruned_chunks"] >= 0
@@ -2832,16 +2830,17 @@ def encoded_table_delete_pushdown(spark, sf_dir) -> DataFrame:
     and the threshold-pruned top-k all equal the oracle's live view."""
     from concurrent.futures import ThreadPoolExecutor
     from ..sources import encoded_table
+    from ..sources.encoded_table import Leaf
     out = _deleted_store(spark, sf_dir)
     # the four kernels are independent reads of one store: submit them
     # from a small thread pool so each kernel's straggler tail
     # backfills with the next kernel's tasks instead of serializing
     # four job round-trips (guide §2.6 "overlap independent jobs")
     with ThreadPoolExecutor(max_workers=4) as pool:
-        f_eq = pool.submit(encoded_table.pruned_string_equals_count,
-                           spark, out, "lang", "de")
-        f_rng = pool.submit(encoded_table.pruned_range_count,
-                            spark, out, "n_chars", 200, 400)
+        f_eq = pool.submit(encoded_table.pruned_count, spark, out, [
+            Leaf("lang", "string", "in", values=("de",))])
+        f_rng = pool.submit(encoded_table.pruned_count, spark, out, [
+            Leaf("n_chars", "int64", "range", 200, 400)])
         f_sum = pool.submit(encoded_table.pruned_filtered_sum,
                             spark, out, "n_chars", 200, 400, "doc_id")
         f_top = pool.submit(encoded_table.pruned_topk,

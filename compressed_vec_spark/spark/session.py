@@ -49,16 +49,3 @@ def get_spark(app: str = "compressed-vec-spark", cores: int | None = None,
     )
     return builder.getOrCreate()
 
-
-def load_tables(spark: SparkSession, sf_dir: str, names=None):
-    """Register the driver's parquet tables as temp views; returns dict."""
-    names = names or ["region", "nation", "customer", "supplier", "part",
-                      "orders", "lineitem", "events", "documents", "embeddings"]
-    out = {}
-    for name in names:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.exists(path):
-            df = spark.read.parquet(path)
-            df.createOrReplaceTempView(name)
-            out[name] = df
-    return out

@@ -13,6 +13,7 @@ from compressed_vec_spark.codecs import bloom
 from compressed_vec_spark.spark import encode_job
 from compressed_vec_spark.spark.session import get_spark
 from compressed_vec_spark.sources import encoded_table
+from compressed_vec_spark.sources.encoded_table import Leaf
 
 
 def _rand_strings(n, seed, lo=4, hi=40):
@@ -110,15 +111,15 @@ def test_bloom_prunes_where_zone_maps_cannot(spark, tmp_path):
 
     # present exactly once (vals are random 12-24 char: collisions nil)
     probe = vals[5000]
-    count, st = encoded_table.pruned_string_equals_count(
-        spark, out, "s", probe)
+    count, st = encoded_table.pruned_count(
+        spark, out, [Leaf("s", "string", "in", values=(probe,))])
     assert count == 1
     assert st["bloom_pruned_chunks"] > 0, st
     assert st["scanned_chunks"] < st["total_chunks"]
 
     # absent value: every chunk pruned from the manifest alone
-    count, st = encoded_table.pruned_string_equals_count(
-        spark, out, "s", "\x01definitely-not-present\x7f")
+    count, st = encoded_table.pruned_count(spark, out, [Leaf(
+        "s", "string", "in", values=("\x01definitely-not-present\x7f",))])
     assert count == 0
     assert st["scanned_chunks"] == 0, st
 
@@ -139,8 +140,8 @@ def test_store_without_bloom_column_degrades(spark, tmp_path):
     man = spark.read.parquet(man_path).drop("bloom").toPandas()
     spark.createDataFrame(man).write.mode("overwrite").parquet(man_path)
 
-    count, st = encoded_table.pruned_string_equals_count(
-        spark, out, "s", "v001234")
+    count, st = encoded_table.pruned_count(
+        spark, out, [Leaf("s", "string", "in", values=("v001234",))])
     assert count == 1
     assert st["bloom_pruned_chunks"] == 0
 
@@ -210,13 +211,14 @@ def test_pruned_string_in_count(spark, tmp_path):
     # not crash the dict heap search
     probe = [vals[100], vals[4000], vals[8000], "no-such-value-1",
              None]
-    count, st = encoded_table.pruned_string_in_count(spark, out, "s", probe)
+    count, st = encoded_table.pruned_count(
+        spark, out, [Leaf("s", "string", "in", values=tuple(probe))])
     assert count == 3
     assert st["bloom_pruned_chunks"] > 0, st
     assert st["scanned_chunks"] < st["total_chunks"]
 
-    count, st = encoded_table.pruned_string_in_count(
-        spark, out, "s", ["\x01absent-a", "\x01absent-b"])
+    count, st = encoded_table.pruned_count(spark, out, [Leaf(
+        "s", "string", "in", values=("\x01absent-a", "\x01absent-b"))])
     assert count == 0
     assert st["scanned_chunks"] == 0, st
 

@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from compressed_vec_spark.sources import encoded_table
+from compressed_vec_spark.sources.encoded_table import Leaf
 from compressed_vec_spark.spark import compact_job, decode_job, encode_job
 from compressed_vec_spark.spark.session import get_spark
 
@@ -139,14 +140,15 @@ def test_compact_store_end_to_end(spark, tmp_path):
     pd.testing.assert_frame_equal(src_rows, dst_rows)
 
     # recomputed stats still answer pruned queries exactly
-    cnt, st = encoded_table.pruned_range_count(spark, dst, "k", 100, 300)
+    cnt, st = encoded_table.pruned_count(
+        spark, dst, [Leaf("k", "int64", "range", 100, 300)])
     assert cnt == 201
-    cnt, _ = encoded_table.pruned_string_equals_count(
-        spark, dst, "host", "h05")
+    cnt, _ = encoded_table.pruned_count(
+        spark, dst, [Leaf("host", "string", "in", values=("h05",))])
     assert cnt == 200
     expect = sum(1 for k in range(400, 801) if k % 50 != 3)
-    cnt, _ = encoded_table.pruned_float_range_count(
-        spark, dst, "v", 100.0, 200.0)
+    cnt, _ = encoded_table.pruned_count(
+        spark, dst, [Leaf("v", "double", "range", 100.0, 200.0)])
     assert cnt == expect
 
 
@@ -199,8 +201,8 @@ def test_compact_keeps_string_stats_on_binary_codec_chunks(spark, tmp_path):
     m = spark.read.parquet(os.path.join(dst, "manifest"))
     s_rows = m.where(F.col("column") == "s").collect()
     assert all(r["min_str"] is not None for r in s_rows), s_rows
-    cnt, st = encoded_table.pruned_string_equals_count(
-        spark, dst, "s", "val-01")
+    cnt, st = encoded_table.pruned_count(
+        spark, dst, [Leaf("s", "string", "in", values=("val-01",))])
     assert cnt == 1000, st
 
 
@@ -242,16 +244,15 @@ def test_cluster_store_tightens_zone_maps(spark, tmp_path):
     # every chunk's [min, max], so the manifest prune skips ~nothing
     # (repartitionByRange samples with a random seed, so a tiny tail
     # chunk can occasionally dodge the slice — allow one)
-    cnt_src, st_src = encoded_table.pruned_range_count(
-        spark, src, "v2", 100, 300)
+    v2_slice = [Leaf("v2", "int64", "range", 100, 300)]
+    cnt_src, st_src = encoded_table.pruned_count(spark, src, v2_slice)
     assert st_src["pruned_chunks"] <= 1, st_src
 
     stats = compact_job.cluster_store(spark, src, dst, "v2", num_parts=4,
                                       codec_overrides={"host": "dict"})
     assert stats == {"rows": 4000, "parts": 4, "cluster_by": ["v2"]}
 
-    cnt_dst, st_dst = encoded_table.pruned_range_count(
-        spark, dst, "v2", 100, 300)
+    cnt_dst, st_dst = encoded_table.pruned_count(spark, dst, v2_slice)
     expect = sum(1 for k in range(4000)
                  if 100 <= (k * 2654435761) % 4000 <= 300)
     assert cnt_src == cnt_dst == expect

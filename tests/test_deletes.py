@@ -11,6 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from compressed_vec_spark.sources import encoded_table
+from compressed_vec_spark.sources.encoded_table import Leaf
 from compressed_vec_spark.spark import (compact_job, delete_job,
                                         encode_job)
 from compressed_vec_spark.spark.session import get_spark
@@ -33,18 +34,38 @@ def _pdf(n=4000):
     return pdf
 
 
-@pytest.fixture(scope="module")
-def store(spark, tmp_path_factory):
+def _lang_sorted_store(spark, out):
     """Store SORTED on lang so equality deletes get real chunk
     pruning, with a dict-coded lang column (the compressed-code mask
     path)."""
-    out = str(tmp_path_factory.mktemp("delstore"))
     pdf = _pdf()
     df = (spark.createDataFrame(pdf)
           .repartitionByRange(4, "lang", "k")
           .sortWithinPartitions("lang", "k"))
     encode_job.encode_table(spark, df, out, url_col=None, resume=False,
                             codec_overrides={"lang": "dict"})
+    return out, pdf
+
+
+@pytest.fixture(scope="module")
+def store(spark, tmp_path_factory):
+    """The lang-sorted store after delete d1 (lang = 'en').  Tests that
+    re-issue d1 take the idempotent retry path, so the store reads the
+    same whichever tests ran before."""
+    out, pdf = _lang_sorted_store(
+        spark, str(tmp_path_factory.mktemp("delstore")))
+    delete_job.delete_where_equals(spark, out, "lang", "en", "d1")
+    return out, pdf
+
+
+@pytest.fixture(scope="module")
+def store2(spark, tmp_path_factory):
+    """A second lang-sorted store after d1 and then d2 (nch in
+    [0, 2500]) — the `_live2` view."""
+    out, pdf = _lang_sorted_store(
+        spark, str(tmp_path_factory.mktemp("delstore2")))
+    delete_job.delete_where_equals(spark, out, "lang", "en", "d1")
+    delete_job.delete_where_range(spark, out, "nch", 0, 2500, "d2")
     return out, pdf
 
 
@@ -91,8 +112,8 @@ def test_retry_is_idempotent(spark, store):
     assert delete_job.delete_stats(spark, out) == before
 
 
-def test_overlapping_delete_counts_exact(spark, store):
-    out, pdf = store
+def test_overlapping_delete_counts_exact(spark, store2):
+    out, pdf = store2
     # range predicate overlapping many already-deleted 'en' rows
     stats = delete_job.delete_where_range(spark, out, "nch", 0, 2500, "d2")
     live = _live_pdf(pdf)
@@ -251,42 +272,40 @@ def _live2(pdf):
     return pdf[~en & ~rng]
 
 
-def test_pruned_counts_subtract_deletes(spark, store):
+def test_pruned_counts_subtract_deletes(spark, store2):
     """Every pruned fast-path count reflects committed deletes: clean
     chunks keep the compressed kernel, affected chunks decode + mask."""
-    out, pdf = store
+    out, pdf = store2
     live = _live2(pdf)
 
-    hits, stats = encoded_table.pruned_string_equals_count(
-        spark, out, "lang", "de")
-    assert hits == int((live["lang"] == "de").sum())
-    assert stats["decoded_fallback_chunks"] >= 1  # affected chunks left
-    # the dict fast path; clean chunks stayed on it
-    assert stats["dict_fast_chunks"] >= 0
+    def count(*args, **kw):
+        return encoded_table.pruned_count(spark, out, [Leaf(*args, **kw)])
 
-    hits, _ = encoded_table.pruned_string_in_count(
-        spark, out, "lang", ["de", "fr"])
+    hits, stats = count("lang", "string", "in", values=("de",))
+    assert hits == int((live["lang"] == "de").sum())
+    assert stats["decoded_chunks"] >= 1  # affected chunks left
+    # the dict fast path; clean chunks stayed on it
+    assert stats["compressed_chunks"] >= 0
+
+    hits, _ = count("lang", "string", "in", values=("de", "fr"))
     assert hits == int(live["lang"].isin(["de", "fr"]).sum())
 
-    hits, _ = encoded_table.pruned_string_prefix_count(
-        spark, out, "lang", "d")
+    hits, _ = count("lang", "string", "prefix", values=("d",))
     assert hits == int(live["lang"].fillna("").str.startswith("d").sum())
 
-    hits, _ = encoded_table.pruned_string_range_count(
-        spark, out, "lang", "de", "fr")
+    hits, _ = count("lang", "string", "range", "de", "fr")
     assert hits == int(live["lang"].between("de", "fr").sum())
 
-    hits, _ = encoded_table.pruned_range_count(spark, out, "nch",
-                                               3000, 4000)
+    hits, _ = count("nch", "int64", "range", 3000, 4000)
     assert hits == int(live["nch"].between(3000, 4000).sum())
 
     v = int(live["nch"].iloc[0])
-    hits, _ = encoded_table.pruned_equals_count(spark, out, "nch", v)
+    hits, _ = count("nch", "int64", "in", values=(v,))
     assert hits == int((live["nch"] == v).sum())
 
 
-def test_pruned_sum_topk_select_subtract_deletes(spark, store):
-    out, pdf = store
+def test_pruned_sum_topk_select_subtract_deletes(spark, store2):
+    out, pdf = store2
     live = _live2(pdf)
 
     total, st = encoded_table.pruned_filtered_sum(
@@ -298,23 +317,25 @@ def test_pruned_sum_topk_select_subtract_deletes(spark, store):
     want = sorted(live["nch"].nlargest(3).tolist(), reverse=True)
     assert top == want
 
-    rows = encoded_table.pruned_filter_select(
-        spark, out, "lang", "de", ["k"]).toPandas()
+    rows = encoded_table.pruned_select(
+        spark, out, [Leaf("lang", "string", "in", values=("de",))],
+        ["k"])[0].toPandas()
     assert sorted(rows["k"]) == sorted(
         live.loc[live["lang"] == "de", "k"].tolist())
 
     k_dead = int(pdf.loc[(pdf["lang"] == "en").fillna(False), "k"].iloc[0])
     k_live = int(live["k"].iloc[0])
-    hits, _ = encoded_table.pruned_multi_and_count(
-        spark, out, "nch", 0, 10**9, "k", k_dead)
+    nch_any = Leaf("nch", "int64", "range", 0, 10**9)
+    hits, _ = encoded_table.pruned_count(
+        spark, out, [nch_any, Leaf("k", "int64", "in", values=(k_dead,))])
     assert hits == 0  # the row exists in storage but is deleted
-    hits, _ = encoded_table.pruned_multi_and_count(
-        spark, out, "nch", 0, 10**9, "k", k_live)
+    hits, _ = encoded_table.pruned_count(
+        spark, out, [nch_any, Leaf("k", "int64", "in", values=(k_live,))])
     assert hits == 1
 
 
-def test_membership_and_null_count_subtract_deletes(spark, store):
-    out, pdf = store
+def test_membership_and_null_count_subtract_deletes(spark, store2):
+    out, pdf = store2
     live = _live2(pdf)
 
     # 'en' rows all deleted (d1): membership over the live view is
@@ -381,13 +402,9 @@ def test_wide_delete_every_chunk_distributed_masks(spark, tmp_path):
     df = spark.createDataFrame(pdf).coalesce(2)
     encode_job.encode_table(spark, df, out, url_col=None, resume=False)
 
-    def mask_fn(blob, codec):
-        from compressed_vec_spark.codecs import chunk as chunk_codec
-        vals = np.asarray(chunk_codec.decode_column(blob))
-        return (vals % 3) == 0  # hits every 500-row chunk
-
-    stats = delete_job.delete_rows(spark, out, "k", F.lit(True),
-                                   mask_fn, "wd1")
+    # k % 3 == 0 hits every 500-row chunk
+    every_third = Leaf("k", "int64", "in", values=tuple(range(0, n, 3)))
+    stats = delete_job.delete_rows(spark, out, [every_third], "wd1")
     assert stats["rows_deleted"] == int(((pdf["k"] % 3) == 0).sum())
 
     manifest = spark.read.parquet(os.path.join(out, "manifest"))
@@ -396,10 +413,12 @@ def test_wide_delete_every_chunk_distributed_masks(spark, tmp_path):
     assert masks is not None and masks.count() == k_chunks  # all wide
 
     live = pdf[(pdf["k"] % 3) != 0]
-    hits, _ = encoded_table.pruned_range_count(spark, out, "k", 0, n)
+    hits, _ = encoded_table.pruned_count(
+        spark, out, [Leaf("k", "int64", "range", 0, n)])
     assert hits == len(live)
-    hits, _ = encoded_table.pruned_equals_count(spark, out, "v",
-                                               int(live["v"].iloc[0]))
+    hits, _ = encoded_table.pruned_count(
+        spark, out, [Leaf("v", "int64", "in",
+                          values=(int(live["v"].iloc[0]),))])
     assert hits == int((live["v"] == live["v"].iloc[0]).sum())
 
     # masks stay distributed: the reader-side mask plumbing has no
@@ -429,13 +448,9 @@ def test_wide_delete_null_count_no_driver_masks(spark, tmp_path, monkeypatch):
     df = spark.createDataFrame(pdf).coalesce(2)
     encode_job.encode_table(spark, df, out, url_col=None, resume=False)
 
-    def mask_fn(blob, codec):
-        from compressed_vec_spark.codecs import chunk as chunk_codec
-        kv = np.asarray(chunk_codec.decode_column(blob))
-        return (kv % 3) == 0  # hits every 500-row chunk
-
-    stats = delete_job.delete_rows(spark, out, "k", F.lit(True),
-                                   mask_fn, "wdn1")
+    # k % 3 == 0 hits every 500-row chunk
+    every_third = Leaf("k", "int64", "in", values=tuple(range(0, n, 3)))
+    stats = delete_job.delete_rows(spark, out, [every_third], "wdn1")
     assert stats["rows_deleted"] == int(((pdf["k"] % 3) == 0).sum())
     masks = encoded_table._keep_mask_df(spark, out)
     k_chunks = (spark.read.parquet(os.path.join(out, "manifest"))

@@ -91,6 +91,13 @@ def test_range_mask_with_delta_skip():
     masks, stats = filters.range_mask(buf, "u64", 0, 10, return_stats=True)
     assert filters.count_hits(masks) == 0
     assert stats["skipped_without_decode"] == stats["sections"]
+    # a section already dead under an earlier AND leaf is not decoded
+    masks, stats = filters.range_mask(
+        buf, "u64", 1_000_100, 1_000_199,
+        skip_sections=np.array([True, False, False, False]),
+        return_stats=True)
+    assert filters.count_hits(masks) == 0
+    assert stats["skipped_without_decode"] == stats["sections"]
 
 
 def test_range_mask_u64_wrap_near_max():

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 from compressed_vec_spark.spark import encode_job
 from compressed_vec_spark.spark.session import get_spark
 from compressed_vec_spark.sources import encoded_table
+from compressed_vec_spark.sources.encoded_table import Leaf
 
 
 @pytest.fixture(scope="module")
@@ -26,13 +27,15 @@ def test_pruned_equals_count(spark, tmp_path):
         (F.col("id") % 7).alias("v"))
     encode_job.encode_table(spark, df, out, url_col=None, num_partitions=8)
 
-    count, stats = encoded_table.pruned_equals_count(spark, out, "k", 12345)
+    count, stats = encoded_table.pruned_count(
+        spark, out, [Leaf("k", "int64", "in", values=(12345,))])
     assert count == 1
     assert stats["pruned_chunks"] > 0
     assert stats["scanned_chunks"] < stats["total_chunks"]
 
     # value outside every chunk range: zero chunks touched
-    count, stats = encoded_table.pruned_equals_count(spark, out, "k", 10**12)
+    count, stats = encoded_table.pruned_count(
+        spark, out, [Leaf("k", "int64", "in", values=(10**12,))])
     assert count == 0
     assert stats["scanned_chunks"] == 0
 
@@ -51,14 +54,14 @@ def test_pruned_range_count_two_levels(spark, tmp_path):
     # range strictly inside one 1024-row chunk: manifest prunes all the
     # other chunks, and inside the survivor only the one overlapping
     # 256-section decodes — the rest skip on their Delta headers
-    count, stats = encoded_table.pruned_range_count(spark, out, "k",
-                                                    10400, 10499)
+    count, stats = encoded_table.pruned_count(
+        spark, out, [Leaf("k", "int64", "range", 10400, 10499)])
     assert count == 100
     assert stats["pruned_chunks"] > 0  # manifest-level skip
-    assert stats["sections_skipped_without_decode"] > 0
+    assert stats["sections_skipped"] > 0
 
-    count, stats = encoded_table.pruned_range_count(spark, out, "k",
-                                                    10**12, 10**12 + 5)
+    count, stats = encoded_table.pruned_count(
+        spark, out, [Leaf("k", "int64", "range", 10**12, 10**12 + 5)])
     assert count == 0 and stats["scanned_chunks"] == 0
 
 
@@ -71,12 +74,13 @@ def test_pruned_multi_and_short_circuits(spark, tmp_path):
         F.col("id").alias("k"), (F.col("id") % 7).alias("v"))
     encode_job.encode_table(spark, df, out, url_col=None)
 
-    count, stats = encoded_table.pruned_multi_and_count(
-        spark, out, "k", 10400, 10499, "v", 3)
+    count, stats = encoded_table.pruned_count(
+        spark, out, [Leaf("k", "int64", "range", 10400, 10499),
+                     Leaf("v", "int64", "in", values=(3,))])
     want = sum(1 for i in range(10400, 10500) if i % 7 == 3)
     assert count == want
     assert stats["pruned_chunks"] > 0
-    assert stats["eq_sections_short_circuited"] > 0
+    assert stats["sections_skipped"] > 0
 
 
 def test_register_encoded_table_sql(spark, tmp_path):
@@ -125,48 +129,44 @@ def test_pruned_string_equals_and_prefix(spark, tmp_path):
     encode_job.encode_table(spark, df, out, url_col=None,
                             codec_overrides={"host": "dict"})
 
-    cnt, st = encoded_table.pruned_string_equals_count(
-        spark, out, "host", "host-007")
+    def count(op, *args, **kw):
+        return encoded_table.pruned_count(
+            spark, out, [Leaf("host", "string", op, *args, **kw)])
+
+    cnt, st = count("in", values=("host-007",))
     assert cnt == 500
     assert st["pruned_chunks"] > 0
-    assert st["decoded_fallback_chunks"] == 0  # all dict fast path
+    assert st["decoded_chunks"] == 0  # all dict fast path
 
     # absent value inside some chunk's range: zero hits, cheap heap probe
-    cnt, st = encoded_table.pruned_string_equals_count(
-        spark, out, "host", "host-007x")
+    cnt, st = count("in", values=("host-007x",))
     assert cnt == 0
 
     # value outside every chunk's range: no chunk read at all
-    cnt, st = encoded_table.pruned_string_equals_count(
-        spark, out, "host", "zzz")
+    cnt, st = count("in", values=("zzz",))
     assert cnt == 0 and st["scanned_chunks"] == 0
 
-    cnt, st = encoded_table.pruned_string_prefix_count(
-        spark, out, "host", "host-01")
+    cnt, st = count("prefix", values=("host-01",))
     assert cnt == 5000  # host-010..host-019
     assert st["pruned_chunks"] > 0
-    assert st["decoded_fallback_chunks"] == 0
+    assert st["decoded_chunks"] == 0
 
-    cnt, st = encoded_table.pruned_string_prefix_count(
-        spark, out, "host", "nomatch")
+    cnt, st = count("prefix", values=("nomatch",))
     assert cnt == 0 and st["scanned_chunks"] == 0
 
     # BETWEEN over the store: code_range on the sorted dictionary +
     # range_mask on the compressed codes
-    cnt, st = encoded_table.pruned_string_range_count(
-        spark, out, "host", "host-003", "host-005")
+    cnt, st = count("range", "host-003", "host-005")
     assert cnt == 1500  # host-003, host-004, host-005
     assert st["pruned_chunks"] > 0
-    assert st["decoded_fallback_chunks"] == 0
+    assert st["decoded_chunks"] == 0
 
     # bounds that are not dictionary members still bracket correctly
-    cnt, st = encoded_table.pruned_string_range_count(
-        spark, out, "host", "host-003a", "host-005a")
+    cnt, st = count("range", "host-003a", "host-005a")
     assert cnt == 1000  # host-004, host-005
 
     # disjoint range: pruned to zero chunk reads
-    cnt, st = encoded_table.pruned_string_range_count(
-        spark, out, "host", "zz-a", "zz-b")
+    cnt, st = count("range", "zz-a", "zz-b")
     assert cnt == 0 and st["scanned_chunks"] == 0
 
 
@@ -188,21 +188,21 @@ def test_pruned_float_range_count(spark, tmp_path):
     # [100.0, 150.0] covers k in 1000..1500 minus the null/NaN slots
     expect = sum(1 for k in range(1000, 1501)
                  if k % 100 != 7 and k % 100 != 13)
-    cnt, st = encoded_table.pruned_float_range_count(
-        spark, out, "v", 100.0, 150.0)
+    in_range = [Leaf("v", "double", "range", 100.0, 150.0)]
+    cnt, st = encoded_table.pruned_count(spark, out, in_range)
     assert cnt == expect
     assert st["pruned_chunks"] > 0
 
     # range beyond every chunk's stats: zero reads
-    cnt, st = encoded_table.pruned_float_range_count(
-        spark, out, "v", 5000.0, 6000.0)
+    cnt, st = encoded_table.pruned_count(
+        spark, out, [Leaf("v", "double", "range", 5000.0, 6000.0)])
     assert cnt == 0 and st["scanned_chunks"] == 0
 
     # row-returning select on a FLOAT filter column must route through
     # the min_f64/max_f64 stats (the int stats are NULL for float
     # chunks and would silently prune everything)
-    got = encoded_table.pruned_range_select(
-        spark, out, "v", 100.0, 150.0, ["k"]).toPandas()
+    got = encoded_table.pruned_select(
+        spark, out, in_range, ["k"])[0].toPandas()
     assert sorted(got["k"]) == [k for k in range(1000, 1501)
                                 if k % 100 != 7 and k % 100 != 13]
 
@@ -220,17 +220,17 @@ def test_pruned_string_fallback_fsst_chunks(spark, tmp_path):
     df = df.repartitionByRange(4, "s", "k").sortWithinPartitions("s", "k")
     encode_job.encode_table(spark, df, out, url_col=None,
                             codec_overrides={"s": "fsst"})
-    cnt, st = encoded_table.pruned_string_equals_count(
-        spark, out, "s", "prefix the quick brown fox jumps 02")
+    cnt, st = encoded_table.pruned_count(spark, out, [Leaf(
+        "s", "string", "in", values=("prefix the quick brown fox jumps 02",))])
     assert cnt == 1000
-    assert st["dict_fast_chunks"] == 0 and st["decoded_fallback_chunks"] > 0
+    assert st["compressed_chunks"] == 0 and st["decoded_chunks"] > 0
     assert st["pruned_chunks"] > 0
 
     # string range through the same str-decoding fallback
-    cnt, st = encoded_table.pruned_string_range_count(
-        spark, out, "s", "prefix the quick brown fox jumps 01",
-        "prefix the quick brown fox jumps 02")
-    assert cnt == 2000 and st["decoded_fallback_chunks"] > 0
+    cnt, st = encoded_table.pruned_count(spark, out, [Leaf(
+        "s", "string", "range", "prefix the quick brown fox jumps 01",
+        "prefix the quick brown fox jumps 02")])
+    assert cnt == 2000 and st["decoded_chunks"] > 0
 
 
 def test_pruned_string_predicates_bytes_chunks(spark, tmp_path):
@@ -248,15 +248,17 @@ def test_pruned_string_predicates_bytes_chunks(spark, tmp_path):
     encode_job.encode_table(spark, df, out, url_col=None,
                             codec_overrides={"s": "deflate"})
 
-    cnt, st = encoded_table.pruned_string_equals_count(
-        spark, out, "s", "val-01")
-    assert cnt == 1000 and st["decoded_fallback_chunks"] > 0
+    def count(op, *args, **kw):
+        return encoded_table.pruned_count(
+            spark, out, [Leaf("s", "string", op, *args, **kw)])
 
-    cnt, _ = encoded_table.pruned_string_prefix_count(spark, out, "s", "val-0")
+    cnt, st = count("in", values=("val-01",))
+    assert cnt == 1000 and st["decoded_chunks"] > 0
+
+    cnt, _ = count("prefix", values=("val-0",))
     assert cnt == 3000
 
-    cnt, _ = encoded_table.pruned_string_range_count(
-        spark, out, "s", "val-00", "val-01")
+    cnt, _ = count("range", "val-00", "val-01")
     assert cnt == 2000
 
 
@@ -272,33 +274,37 @@ def test_pruned_filter_select_rows(spark, tmp_path):
     df = df.repartitionByRange(4, "host", "k").sortWithinPartitions("host", "k")
     encode_job.encode_table(spark, df, out, url_col=None,
                             codec_overrides={"host": "dict"})
-    got = encoded_table.pruned_filter_select(
-        spark, out, "host", "h07", ["k", "v"]).toPandas()
+    def select(leaf, project):
+        return encoded_table.pruned_select(spark, out, [leaf], project)[0]
+
+    got = select(Leaf("host", "string", "in", values=("h07",)),
+                 ["k", "v"]).toPandas()
     got = got.sort_values("k").reset_index(drop=True)
     assert len(got) == 400
     assert got["k"].tolist() == list(range(2800, 3200))
     assert got["v"].tolist() == [3 * k for k in range(2800, 3200)]
     # absent value: empty result, schema intact
-    empty = encoded_table.pruned_filter_select(
-        spark, out, "host", "zzz", ["k", "v"])
+    empty = select(Leaf("host", "string", "in", values=("zzz",)),
+                   ["k", "v"])
     assert empty.count() == 0
     assert [f.name for f in empty.schema.fields] == ["k", "v"]
 
     # numeric-range sibling over the same store
-    got = encoded_table.pruned_range_select(
-        spark, out, "k", 3000, 3099, ["k", "host", "v"]).toPandas()
+    got = select(Leaf("k", "int64", "range", 3000, 3099),
+                 ["k", "host", "v"]).toPandas()
     got = got.sort_values("k").reset_index(drop=True)
     assert got["k"].tolist() == list(range(3000, 3100))
     assert set(got["host"]) == {"h07"}
     assert got["v"].tolist() == [3 * k for k in range(3000, 3100)]
-    empty = encoded_table.pruned_range_select(
-        spark, out, "k", 10**7, 2 * 10**7, ["k", "v"])
+    empty = select(Leaf("k", "int64", "range", 10**7, 2 * 10**7),
+                   ["k", "v"])
     assert empty.count() == 0
 
-    # string filter columns are rejected loudly, not silently pruned
-    import pytest as _pytest
-    with _pytest.raises(ValueError, match="string"):
-        encoded_table.pruned_range_select(spark, out, "host", "a", "b", ["k"])
+    # a string range prunes on the string stats, never the int pair
+    # (whose NULLs would prune every chunk to an empty answer)
+    got = select(Leaf("host", "string", "range", "h05", "h06"),
+                 ["k"]).toPandas()
+    assert sorted(got["k"]) == list(range(2000, 2800))
 
 
 def test_nullable_int_column_stays_integer(spark, tmp_path):
@@ -331,17 +337,20 @@ def test_nullable_int_column_stays_integer(spark, tmp_path):
     assert dec.where(F.col("a").isNull()).count() == 100
 
     # range admitting 0: nulls (payload zeros) must not count
-    hits, _ = encoded_table.pruned_range_count(spark, out, "a", 0, 10)
+    def count(*leaves):
+        return encoded_table.pruned_count(spark, out, list(leaves))[0]
+
+    hits = count(Leaf("a", "int64", "range", 0, 10))
     assert hits == int(pdf["a"].between(0, 10).sum())
-    hits, _ = encoded_table.pruned_range_count(spark, out, "a", 1, 10)
+    hits = count(Leaf("a", "int64", "range", 1, 10))
     assert hits == int(pdf["a"].between(1, 10).sum())
 
     # equality against 0 on the nullable column inside multi-AND
-    h, _ = encoded_table.pruned_multi_and_count(
-        spark, out, "b", 0, 10**6, "a", 0)
+    h = count(Leaf("b", "int64", "range", 0, 10**6),
+              Leaf("a", "int64", "in", values=(0,)))
     assert h == int((pdf["a"] == 0).sum())
-    h, _ = encoded_table.pruned_multi_and_count(
-        spark, out, "a", 0, 10, "b", 8)
+    h = count(Leaf("a", "int64", "range", 0, 10),
+              Leaf("b", "int64", "in", values=(8,)))
     assert h == 1
 
 
@@ -363,13 +372,14 @@ def test_pruned_counts_on_rle_coded_store(spark, tmp_path):
     assert codecs == {"rle"}
 
     # run-level range count over the rle column (was silently 0)
-    cnt, st = encoded_table.pruned_range_count(spark, out, "k", 17, 23)
+    k_range = Leaf("k", "int64", "range", 17, 23)
+    cnt, st = encoded_table.pruned_count(spark, out, [k_range])
     assert cnt == 700, st
     assert st["pruned_chunks"] > 0, st
 
-    # AND across (rle range col, vec equality col): decoded fallback
-    cnt, st = encoded_table.pruned_multi_and_count(
-        spark, out, "k", 17, 23, "v", 1750)
+    # AND across (rle range col, vec equality col)
+    cnt, st = encoded_table.pruned_count(
+        spark, out, [k_range, Leaf("v", "int64", "in", values=(1750,))])
     assert cnt == 1, st
 
     # rle under NULM with a 0-admitting range: nulls must not count
@@ -380,7 +390,8 @@ def test_pruned_counts_on_rle_coded_store(spark, tmp_path):
     df2 = spark.createDataFrame(pdf2).coalesce(1)
     encode_job.encode_table(spark, df2, out2, url_col=None,
                             codec_overrides={"n": "rle"})
-    cnt, _ = encoded_table.pruned_range_count(spark, out2, "n", 0, 3)
+    cnt, _ = encoded_table.pruned_count(
+        spark, out2, [Leaf("n", "int64", "range", 0, 3)])
     expect = sum(1 for i in range(2000)
                  if i % 10 != 0 and 0 <= i // 50 <= 3)
     assert cnt == expect
@@ -403,26 +414,31 @@ def test_pruned_equals_count_compressed_kernels(spark, tmp_path):
     encode_job.encode_table(spark, df, out, url_col=None,
                             codec_overrides={"k": "rle"})
 
+    def count(col, value):
+        return encoded_table.pruned_count(
+            spark, out, [Leaf(col, "int64", "in", values=(value,))])
+
     # vec column: compressed kernel, no decode
-    cnt, st = encoded_table.pruned_equals_count(spark, out, "v", 4321)
+    cnt, st = count("v", 4321)
     assert cnt == 1, st
-    assert st["compressed_kernel_chunks"] >= 1, st
+    assert st["compressed_chunks"] >= 1, st
     assert st["decoded_chunks"] == 0, st
 
     # rle column: run-level equality
-    cnt, st = encoded_table.pruned_equals_count(spark, out, "k", 17)
+    cnt, st = count("k", 17)
     assert cnt == 100, st
     assert st["decoded_chunks"] == 0, st
 
     # 0-probe against the nullable column: nulls ride as payload zeros,
-    # so those chunks must decode — and NULLs never count as hits
-    cnt, st = encoded_table.pruned_equals_count(spark, out, "n", 0)
+    # and the chunk's NULM validity bits mask them out without a
+    # decode — NULLs never count as hits
+    cnt, st = count("n", 0)
     expect = sum(1 for i in range(8000)
                  if i % 20 != 5 and (i % 10 == 0 or i == 0))
     assert cnt == expect, (cnt, expect, st)
-    assert st["decoded_chunks"] >= 1, st
+    assert st["decoded_chunks"] == 0, st
 
     # non-zero probe on the same nullable column stays compressed
-    cnt, st = encoded_table.pruned_equals_count(spark, out, "n", 4321)
+    cnt, st = count("n", 4321)
     assert cnt == 1, st
     assert st["decoded_chunks"] == 0, st

@@ -70,7 +70,7 @@ def test_bucket_col_skips_aggregate_when_bounds_given(spark, monkeypatch):
 
 def test_footer_num_rows_matches_count(spark):
     from compressed_vec_spark.operators.scan import parquet_num_rows
-    path = "/root/testdata/sf0.01/orders.parquet"
+    path = os.path.join(SF_DIR, "orders.parquet")
     got = parquet_num_rows(path)
     assert got == spark.read.parquet(path).count()
     assert parquet_num_rows("s3://nowhere/x.parquet") is None

@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from compressed_vec_spark.sources import encoded_table, snapshot
+from compressed_vec_spark.sources.encoded_table import Leaf
 from compressed_vec_spark.spark import compact_job, encode_job, webtable
 from compressed_vec_spark.spark.session import get_spark
 
@@ -120,16 +121,17 @@ def test_pruned_range_count_as_of(spark, tmp_path):
                             url_col=None, num_partitions=2)
     encode_job.append_table(spark, mk(250, 400), out, batch_id="b2",
                             url_col=None, num_partitions=2)
-    count = lambda **kw: encoded_table.pruned_range_count(
-        spark, out, "k", 0, 10**6, **kw)[0]
+    every_k = [Leaf("k", "int64", "range", 0, 10**6)]
+    count = lambda **kw: encoded_table.pruned_count(
+        spark, out, every_k, **kw)[0]
     assert count(as_of=snapshot.BASE_SNAPSHOT) == 100
     assert count(as_of="b1") == 250
     assert count(as_of="b2") == 400
     assert count() == 400
     # the cutoff reaches the manifest prune too: total_chunks shrinks
-    _, st_asof = encoded_table.pruned_range_count(
-        spark, out, "k", 0, 10**6, as_of=snapshot.BASE_SNAPSHOT)
-    _, st_full = encoded_table.pruned_range_count(spark, out, "k", 0, 10**6)
+    _, st_asof = encoded_table.pruned_count(
+        spark, out, every_k, as_of=snapshot.BASE_SNAPSHOT)
+    _, st_full = encoded_table.pruned_count(spark, out, every_k)
     assert st_asof["total_chunks"] < st_full["total_chunks"]
     with pytest.raises(ValueError, match="unknown batch_id"):
         count(as_of="nope")
@@ -165,8 +167,8 @@ def test_schema_evolution_on_append(spark, tmp_path):
     assert got == {k: k * 10 for k in range(200, 350)}
 
     # pruned range count on the evolved column: only batch rows match
-    hits, stats = encoded_table.pruned_range_count(
-        spark, out, "score", 2000, 2490)
+    hits, stats = encoded_table.pruned_count(
+        spark, out, [Leaf("score", "int64", "range", 2000, 2490)])
     assert hits == 50  # k in [200, 249]
     assert stats["total_chunks"] >= 1
 

@@ -54,6 +54,10 @@ ROUTED = [
     "SELECT count(*) AS c FROM enc_t WHERE k BETWEEN 500 AND 600 AND grp = 4",
     "SELECT count(*) AS c FROM enc_t WHERE lang BETWEEN 'de' AND 'fr'",
     "select COUNT(*) as c from enc_t where 100 <= k and k <= 900",
+    "SELECT count(*) AS c FROM enc_t WHERE k IN ("
+    + ", ".join(str(v) for v in range(7, 4000, 200)) + ")",
+    "SELECT count(*) AS c FROM enc_t WHERE lang = 'de' AND k > 100",
+    "SELECT count(*) AS c FROM enc_t WHERE k >= 3500",
 ]
 FALLBACK = [
     "SELECT count(*) AS c FROM enc_t WHERE k % 2 = 0",
@@ -487,6 +491,10 @@ def test_grammar_fuzz_routed_or_fallback_always_matches(spark, store):
                     f" AND 0.{rng.randrange(5, 9)}",
             lambda: "k % 7 = 0",                 # never routable
             lambda: "lang LIKE 'd%'",
+            lambda: f"lang BETWEEN '{rng.choice(['de', 'en'])}'"
+                    f" AND '{rng.choice(['fr', 'zh'])}'",
+            lambda: "k IN (" + ", ".join(
+                str(rng.randrange(4000)) for _ in range(20)) + ")",
         ])()
 
     def where():

@@ -59,7 +59,9 @@ def _decode_subset_int(body, starts, types, width) -> np.ndarray:
     return out
 
 
-def section_masks(buf: bytes, kind: str, pred_values, skip_sections: np.ndarray | None = None) -> np.ndarray:
+def section_masks(buf: bytes, kind: str, pred_values,
+                  skip_sections: np.ndarray | None = None,
+                  return_stats: bool = False):
     """Per-section 256-bit match masks for `element IN pred_values`.
 
     Null sections answer via pred(0), Constant via pred(const) — no
@@ -69,7 +71,9 @@ def section_masks(buf: bytes, kind: str, pred_values, skip_sections: np.ndarray 
     those are not decoded (MultiVectorFilter short-circuit,
     src/filter.rs:260-284).
 
-    Returns (S, 256) bool.
+    Returns (S, 256) bool; with `return_stats`, also the stats dict
+    `range_mask` returns (every section left undecoded counts as
+    `skipped_without_decode`).
     """
     body, offs, n, width = _section_layout(buf, kind)
     starts = offs[:-1]
@@ -123,6 +127,8 @@ def section_masks(buf: bytes, kind: str, pred_values, skip_sections: np.ndarray 
     if S * FIXED_LEN > n:
         flat = masks.reshape(-1)
         flat[n:] = False
+    if return_stats:
+        return masks, {"sections": S, "skipped_without_decode": S - len(p_idx)}
     return masks
 
 

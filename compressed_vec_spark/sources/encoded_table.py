@@ -161,11 +161,11 @@ def _section_filter(vector: bytes, kind: str, skip: np.ndarray | None,
                                dtype=bool))
         return m, len(m)
     if values is not None:
-        return (filters.section_masks(vector, kind, values,
-                                      skip_sections=skip),
-                0 if skip is None else int(skip.sum()))
-    m, st = filters.range_mask(vector, kind, *bounds, skip_sections=skip,
-                               return_stats=True)
+        m, st = filters.section_masks(vector, kind, values,
+                                      skip_sections=skip, return_stats=True)
+    else:
+        m, st = filters.range_mask(vector, kind, *bounds,
+                                   skip_sections=skip, return_stats=True)
     return m, st["skipped_without_decode"]
 
 
@@ -352,7 +352,8 @@ def _chunk_mask(leaves: list[tuple[Leaf, int]],
     answered compressed; sections not unpacked).  Each leaf skips the
     sections dead under the leaves before it, and a dead chunk stops
     the AND.  A delete-affected chunk (non-NULL keep_mask) decodes its
-    leaves and AND-s the keep mask in."""
+    leaves and AND-s the keep mask in.  With no leaves every live row
+    matches."""
     km = row.keep_mask
     acc, compressed, skipped = None, km is None, 0
     for leaf, i in leaves:
@@ -366,10 +367,14 @@ def _chunk_mask(leaves: list[tuple[Leaf, int]],
         acc = m if acc is None else acc & m
         if not acc.any():
             return None, compressed, skipped
+    n = int(row.num_elements)
     if km is not None:
-        acc = _sections(acc & _keep_bools(bytes(km), len(acc)))
+        acc = _sections((np.ones(n, dtype=bool) if acc is None else acc)
+                        & _keep_bools(bytes(km), n))
         if not acc.any():
             return None, compressed, skipped
+    elif acc is None:
+        acc = _sections(np.ones(n, dtype=bool))
     return acc, compressed, skipped
 
 
@@ -377,9 +382,11 @@ def _stats(total: int, zone: int, scanned: int, compressed=None,
            decoded=None, skipped=None) -> dict:
     """The one stats record of a pruned read.  total/zone/scanned are
     chunk counts before pruning, after the zone maps and after the
-    Bloom probe.  The per-chunk kernel counters are None where the
-    chunk pass is not the terminal's own aggregate (a select's rows
-    are read later; a delete writes them)."""
+    Bloom probe.  sections_skipped sums each leaf's sections left
+    unpacked (header-answered, or dead under earlier leaves).  The
+    per-chunk kernel counters are None where the chunk pass is not
+    the terminal's own aggregate (a select's rows are read later; a
+    delete writes them)."""
     return {"total_chunks": total, "scanned_chunks": scanned,
             "pruned_chunks": total - scanned,
             "bloom_pruned_chunks": zone - scanned,
@@ -1073,16 +1080,11 @@ def grouped_dict_agg(spark: SparkSession, out_dir: str, group_col: str,
                 codes = dictionary.codes(payload).astype(np.int64)
                 vals = dictionary.dictionary(payload)
                 width = len(vals) + 1  # + the code-0 null sentinel
-                if paired:
-                    m = _chunk_mask(paired, row)[0]
-                    if m is None:  # no row of this chunk matches
-                        continue
-                    keep = m.reshape(-1)[:len(codes)]
-                else:
-                    km = row.keep_mask
-                    keep = (None if km is None
-                            else _keep_bools(bytes(km), len(codes)))
-                ck = codes if keep is None else codes[keep]
+                m = _chunk_mask(paired, row)[0]
+                if m is None:  # no live row of this chunk matches
+                    continue
+                keep = m.reshape(-1)[:len(codes)]
+                ck = codes[keep]
                 counts = np.bincount(ck, minlength=width)
                 live = np.flatnonzero(counts)
                 if not len(live):
@@ -1091,10 +1093,8 @@ def grouped_dict_agg(spark: SparkSession, out_dir: str, group_col: str,
                 for c, i in col_ix.items():
                     d = chunk_codec.decode_column(
                         bytes(getattr(row, "b%d" % i)))
-                    if keep is not None:
-                        d = (d[keep] if isinstance(d, np.ndarray)
-                             else d[keep].reset_index(drop=True))
-                    decoded[c] = d
+                    decoded[c] = (d[keep] if isinstance(d, np.ndarray)
+                                  else d[keep].reset_index(drop=True))
                 cols = {"g": pd.Series(
                     [None if code == 0 else vals[code - 1]
                      for code in live], dtype=object)}

@@ -189,11 +189,7 @@ def delete_where_equals(spark: SparkSession, out_dir: str, column: str,
     dict chunks mask on the compressed u32 code vector (code_of — the
     string is never materialized); non-dict chunks decode and compare.
     NULL values never match (SQL equality semantics)."""
-    from ..sources.encoded_table import Leaf
-    _require_string_column(spark, out_dir, column, "delete_where_equals")
-    return delete_rows(spark, out_dir,
-                       [Leaf(column, "string", "in", values=(value,))],
-                       delete_id)
+    return delete_where_in(spark, out_dir, column, [value], delete_id)
 
 
 def _require_string_column(spark: SparkSession, out_dir: str,

@@ -36,6 +36,26 @@ def test_one_of():
     assert filters.count_hits(masks) == 300
 
 
+def test_section_masks_stats_count_header_answered_sections():
+    # Const, Const, Null, Null, NP, Delta: IN answers the four
+    # Const/Null sections from their headers, like range_mask's stats
+    data = np.concatenate([np.full(512, 7, dtype=np.uint64),
+                           np.zeros(512, dtype=np.uint64),
+                           np.arange(512, dtype=np.uint64)])
+    buf = vec.encode_vector(data, "u64")
+    masks, stats = filters.section_masks(buf, "u64", [3, 7],
+                                         return_stats=True)
+    assert filters.count_hits(masks) == 514
+    assert stats == {"sections": 6, "skipped_without_decode": 4}
+    # a section dead under an earlier AND leaf is not decoded either
+    skip = np.array([False, False, False, False, True, False])
+    masks, stats = filters.section_masks(buf, "u64", [3, 7],
+                                         skip_sections=skip,
+                                         return_stats=True)
+    assert filters.count_hits(masks) == 512
+    assert stats["skipped_without_decode"] == 5
+
+
 def test_match_positions():
     data = np.zeros(600, dtype=np.uint64)
     hits = [5, 255, 256, 300, 599]

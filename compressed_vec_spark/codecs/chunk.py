@@ -37,6 +37,26 @@ _TAGS = {
 _BY_TAG = {v: k for k, v in _TAGS.items()}
 
 
+def wrap_nulls(mask: np.ndarray, blob: bytes) -> bytes:
+    """A codec blob wrapped with its chunk's null mask (the NULM format
+    of the module docstring; `split_nulls` reads it back)."""
+    return (b"NULM" + len(mask).to_bytes(4, "little")
+            + np.packbits(mask).tobytes() + blob)
+
+
+def split_nulls(blob: bytes) -> tuple[np.ndarray | None, bytes]:
+    """(null mask, or None for an unwrapped blob; inner codec blob) of a
+    chunk blob: the one reader of the NULM wrapper."""
+    blob = bytes(blob)
+    if blob[:4] != b"NULM":
+        return None, blob
+    n = int.from_bytes(blob[4:8], "little")
+    nbytes = (n + 7) // 8
+    mask = np.unpackbits(np.frombuffer(blob, dtype=np.uint8, count=nbytes,
+                                       offset=8), count=n).astype(bool)
+    return mask, blob[8 + nbytes:]
+
+
 def _zigzag(vals: np.ndarray) -> np.ndarray:
     v = vals.astype(np.int64)
     return ((v << 1) ^ (v >> 63)).astype(np.uint64)
@@ -112,9 +132,7 @@ def encode_column(series: pd.Series, codec: str | None = None) -> tuple[str, byt
 
     blob = _TAGS[codec] + payload
     if codec != "dict" and len(series) and series.isna().any():
-        mask = series.isna().to_numpy(dtype=bool)
-        blob = (b"NULM" + len(series).to_bytes(4, "little")
-                + np.packbits(mask).tobytes() + blob)
+        blob = wrap_nulls(series.isna().to_numpy(dtype=bool), blob)
     meta = {
         "codec": codec,
         "num_elements": len(series),
@@ -217,10 +235,43 @@ def encode_column_arrow(arr, codec: str | None = None) -> tuple[str, bytes, dict
 
     blob = _TAGS[codec] + payload
     if null_mask is not None and null_mask.any():
-        blob = (b"NULM" + len(null_mask).to_bytes(4, "little")
-                + np.packbits(null_mask).tobytes() + blob)
+        blob = wrap_nulls(null_mask, blob)
     return codec, blob, {"codec": codec, "num_elements": len(arr),
                          "encoded_bytes": len(blob), "stats": st}
+
+
+def _numeric(codec: str, payload: bytes) -> np.ndarray:
+    """Values of a numeric codec payload: u64/u32 as stored, zigzag
+    codecs mapped back to int64, floats as floats."""
+    if codec in ("vec_u64", "zz_u64"):
+        out = vec.decode_vector(payload, "u64")
+    elif codec == "vec_u32":
+        out = vec.decode_vector(payload, "u32")
+    elif codec in ("rle", "zz_rle"):
+        out = rle.decode(payload)
+    elif codec == "vec_f32":
+        return vec.decode_vector(payload, "f32")
+    elif codec == "xor_f64":
+        n = int.from_bytes(payload[:4], "little")
+        return (npk.unpack_f64_xor(
+            np.frombuffer(payload, dtype=np.uint8, offset=4), n)
+            if n else np.empty(0, dtype=np.float64))
+    else:
+        raise ValueError(codec)
+    return _unzigzag(out) if codec.startswith("zz_") else out
+
+
+def _deflate_arrow(payload: bytes):
+    """large_binary arrow array of a 'deflate' payload."""
+    import pyarrow as pa
+    n = int.from_bytes(payload[:4], "little")
+    lv_len = int.from_bytes(payload[4:8], "little")
+    lens = vec.decode_vector(payload[8:8 + lv_len], "u64").astype(np.int64)[:n]
+    data = _entropy_decompress(payload[8 + lv_len:], int(lens.sum()))
+    offs = np.concatenate(([0], np.cumsum(lens)))
+    return pa.LargeBinaryArray.from_buffers(
+        pa.large_binary(), n,
+        [None, pa.py_buffer(offs.astype(np.int64).tobytes()), pa.py_buffer(data)])
 
 
 def _restore_nulls(out, mask: np.ndarray, target_dtype: str | None):
@@ -251,54 +302,23 @@ def decode_column_arrow(blob: bytes, pa_type, session_tz: str | None = None):
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    blob = bytes(blob)
-    null_mask = None
-    if blob[:4] == b"NULM":
-        n = int.from_bytes(blob[4:8], "little")
-        nbytes = (n + 7) // 8
-        null_mask = np.unpackbits(
-            np.frombuffer(blob, dtype=np.uint8, count=nbytes, offset=8)
-        )[:n].astype(bool)
-        blob = blob[8 + nbytes:]
+    null_mask, blob = split_nulls(blob)
     codec = _BY_TAG[bytes(blob[:4])]
     payload = blob[4:]
 
     if codec in ("fsst", "binary_fsst"):
         arr = fsst.decode(payload)                     # large_binary
     elif codec == "deflate":
-        n = int.from_bytes(payload[:4], "little")
-        lv_len = int.from_bytes(payload[4:8], "little")
-        lens = vec.decode_vector(payload[8:8 + lv_len], "u64").astype(np.int64)[:n]
-        data = _entropy_decompress(payload[8 + lv_len:], int(lens.sum()))
-        offs = np.concatenate(([0], np.cumsum(lens)))
-        arr = pa.LargeBinaryArray.from_buffers(
-            pa.large_binary(), n,
-            [None, pa.py_buffer(offs.astype(np.int64).tobytes()), pa.py_buffer(data)])
+        arr = _deflate_arrow(payload)
     elif codec == "dict":
         d = dictionary.dictionary(payload)
         c = dictionary.codes(payload).astype(np.int64) - 1   # code 0 = null
         arr = pc.take(pa.array(d, type=pa.string()),
                       pa.array(c, mask=c < 0))
     else:
-        if codec == "vec_u64":
-            vals = vec.decode_vector(payload, "u64").astype(np.int64)
-        elif codec == "vec_u32":
-            vals = vec.decode_vector(payload, "u32").astype(np.int64)
-        elif codec == "zz_u64":
-            vals = _unzigzag(vec.decode_vector(payload, "u64"))
-        elif codec == "rle":
-            vals = rle.decode(payload).astype(np.int64)
-        elif codec == "zz_rle":
-            vals = _unzigzag(rle.decode(payload))
-        elif codec == "vec_f32":
-            vals = vec.decode_vector(payload, "f32")
-        elif codec == "xor_f64":
-            n = int.from_bytes(payload[:4], "little")
-            vals = (npk.unpack_f64_xor(
-                np.frombuffer(payload, dtype=np.uint8, offset=4), n)
-                if n else np.empty(0, dtype=np.float64))
-        else:
-            raise ValueError(codec)
+        vals = _numeric(codec, payload)
+        if vals.dtype.kind == "u":
+            vals = vals.astype(np.int64)
         if pa.types.is_timestamp(pa_type):
             # stored as wall-clock epoch-µs in the session timezone
             naive = pa.array(vals.astype("datetime64[us]"), type=pa.timestamp("us"))
@@ -318,52 +338,19 @@ def decode_column(blob: bytes, target_dtype: str | None = None):
     """Decode a chunk blob. Returns a numpy array / pandas Series whose
     values are bit-identical to what was encoded (NA restored from the
     NULM wrapper for nullable chunks)."""
-    blob = bytes(blob)
-    null_mask = None
-    if blob[:4] == b"NULM":
-        n = int.from_bytes(blob[4:8], "little")
-        nbytes = (n + 7) // 8
-        null_mask = np.unpackbits(
-            np.frombuffer(blob, dtype=np.uint8, count=nbytes, offset=8)
-        )[:n].astype(bool)
-        blob = blob[8 + nbytes:]
+    null_mask, blob = split_nulls(blob)
     codec = _BY_TAG[bytes(blob[:4])]
     payload = blob[4:]
-    if codec == "vec_u64":
-        out = vec.decode_vector(payload, "u64")
-    elif codec == "vec_u32":
-        out = vec.decode_vector(payload, "u32")
-    elif codec == "zz_u64":
-        out = _unzigzag(vec.decode_vector(payload, "u64"))
-    elif codec == "rle":
-        out = rle.decode(payload)
-    elif codec == "zz_rle":
-        out = _unzigzag(rle.decode(payload))
-    elif codec == "vec_f32":
-        out = vec.decode_vector(payload, "f32")
-    elif codec == "xor_f64":
-        n = int.from_bytes(payload[:4], "little")
-        out = npk.unpack_f64_xor(np.frombuffer(payload, dtype=np.uint8, offset=4), n) \
-            if n else np.empty(0, dtype=np.float64)
-    elif codec == "dict":
+    if codec == "dict":
         out = dictionary.decode(payload)
     elif codec == "fsst":
         out = pd.Series(fsst.decode_strings(payload).to_pandas())
     elif codec == "binary_fsst":
         out = pd.Series(fsst.decode(payload).to_pandas())
     elif codec == "deflate":
-        import pyarrow as pa
-        n = int.from_bytes(payload[:4], "little")
-        lv_len = int.from_bytes(payload[4:8], "little")
-        lens = vec.decode_vector(payload[8:8 + lv_len], "u64").astype(np.int64)[:n]
-        data = _entropy_decompress(payload[8 + lv_len:], int(lens.sum()))
-        offs = np.concatenate(([0], np.cumsum(lens)))
-        arr = pa.LargeBinaryArray.from_buffers(
-            pa.large_binary(), n,
-            [None, pa.py_buffer(offs.astype(np.int64).tobytes()), pa.py_buffer(data)])
-        out = pd.Series(arr.to_pandas())
+        out = pd.Series(_deflate_arrow(payload).to_pandas())
     else:
-        raise ValueError(codec)
+        out = _numeric(codec, payload)
 
     if null_mask is not None and null_mask.any():
         return _restore_nulls(out, null_mask, target_dtype)

@@ -89,7 +89,7 @@ def chunk_stats_for(series: pd.Series) \
         -> tuple[int | None, int | None, int | None, int]:
     """(min, max, sum, null_count) for numeric/timestamp chunks
     ((None, None, None, nulls) otherwise).  The sum enables manifest-only
-    aggregation pushdown (`pruned_filtered_sum`): a chunk fully covered
+    aggregation pushdown (`pruned_sum`): a chunk fully covered
     by the predicate contributes its manifest sum with zero blob reads —
     the storage-layer analog of the reference's header-only section
     short-circuits (reference src/filter.rs:53-107).  Sum is over
@@ -226,6 +226,19 @@ class Leaf:
             cond = cond & (mn <= hi)
         return cond
 
+    def covers(self):
+        """Manifest condition under which every row of a chunk matches.
+        Only an int64 range can prove it from the zone maps (NaN and
+        dict codes cannot): min/max inside the bounds and no nulls."""
+        if (self.dtype, self.op) != ("int64", "range"):
+            return F.lit(False)
+        cond = F.col("null_count") == 0
+        if self.lo is not None:
+            cond = cond & (F.col("min_val") >= self.lo)
+        if self.hi is not None:
+            cond = cond & (F.col("max_val") <= self.hi)
+        return cond
+
     def probe(self):
         """Bloom-probe Column over the manifest `bloom` column (string
         IN-lists only, else None): False proves every value absent."""
@@ -254,14 +267,8 @@ class Leaf:
         reference src/filter.rs:239-286).  The one null rule: a NULM
         chunk's payload carries nulls as zeros, so its validity bits
         are AND-ed in."""
-        b = bytes(blob)
-        nulls = None
-        if b[:4] == b"NULM":
-            n = int.from_bytes(b[4:8], "little")
-            nulls = np.unpackbits(np.frombuffer(b, np.uint8, (n + 7) // 8, 8),
-                                  count=n).astype(bool)
-            b = b[8 + (n + 7) // 8:]
-        payload = b[4:]  # strip the chunk codec tag
+        nulls, inner = chunk_codec.split_nulls(blob)
+        payload = inner[4:]  # strip the chunk codec tag
         if codec == "dict" and self.dtype == "string":
             m, skipped = self._dict_mask(payload, skip)
         elif codec in _VEC_KIND and self.dtype == "int64":
@@ -378,31 +385,35 @@ def _chunk_mask(leaves: list[tuple[Leaf, int]],
     return acc, compressed, skipped
 
 
-def _stats(total: int, zone: int, scanned: int, compressed=None,
-           decoded=None, skipped=None) -> dict:
-    """The one stats record of a pruned read.  total/zone/scanned are
+def _stats(total: int, zone: int, kept: int, compressed=None,
+           decoded=None, skipped=None, covered=None) -> dict:
+    """The one stats record of a pruned read.  total/zone/kept are
     chunk counts before pruning, after the zone maps and after the
-    Bloom probe.  sections_skipped sums each leaf's sections left
-    unpacked (header-answered, or dead under earlier leaves).  The
-    per-chunk kernel counters are None where the chunk pass is not
-    the terminal's own aggregate (a select's rows are read later; a
-    delete writes them)."""
-    return {"total_chunks": total, "scanned_chunks": scanned,
-            "pruned_chunks": total - scanned,
-            "bloom_pruned_chunks": zone - scanned,
-            "compressed_chunks": compressed, "decoded_chunks": decoded,
-            "sections_skipped": skipped}
+    Bloom probe; a sum terminal answers `covered` of the kept chunks
+    from the manifest and scans the rest.  sections_skipped sums each
+    leaf's sections left unpacked (header-answered, or dead under
+    earlier leaves).  The per-chunk kernel counters are None where the
+    chunk pass is not the terminal's own aggregate (a select's rows
+    are read later; a delete writes them)."""
+    st = {"total_chunks": total, "scanned_chunks": kept - (covered or 0),
+          "pruned_chunks": total - kept, "bloom_pruned_chunks": zone - kept,
+          "compressed_chunks": compressed, "decoded_chunks": decoded,
+          "sections_skipped": skipped}
+    if covered is not None:
+        st["covered_chunks"] = covered
+    return st
 
 
 class _Front(NamedTuple):
     leaves: list          # (Leaf, index of its column in the scan)
     scan: DataFrame
-    counts: Callable[[], tuple[int, int, int]]
+    counts: Callable[[], tuple[int, ...]]
     census: Callable[[], dict[str, tuple[int, int]]]
 
 
 def _front(spark: SparkSession, out_dir: str, leaves: list[Leaf],
-           cols: list[str], masks: DataFrame | None, parts=None):
+           cols: list[str], masks: DataFrame | None, parts=None,
+           answer: str | None = None):
     """The pruning front of every leaf reader.  Candidate chunks are
     those where every leaf column's manifest row passes its leaves'
     zone maps and Bloom probes (the ids stay distributed and are
@@ -412,42 +423,71 @@ def _front(spark: SparkSession, out_dir: str, leaves: list[Leaf],
     and left-joins `masks` as keep_mask.  `parts` (a part_id condition) restricts
     manifest and chunks alike.
 
+    `answer` names a column whose manifest `sum_val` answers a chunk
+    outright when every leaf covers it (`Leaf.covers`), no keep mask
+    touches it and the sum is known: such a chunk leaves the scan.  A
+    chunk with no row for `answer` is pruned (it holds only NULLs
+    there).
+
     Returns a `_Front`: the leaves paired with their column's index in
     `cols`, the scan, counts() — the one manifest aggregate (total,
-    zone survivors, Bloom survivors) — and census() — {column:
-    (chunks, dict-coded chunks)}, which shows a column schema
-    evolution left out of older chunks.  Both thunks reuse the
-    manifest read (each parquet read costs a schema job)."""
+    zone survivors, Bloom survivors; with `answer`, also the answered
+    chunks, their summed sum_val and their non-null rows) — and
+    census() — {column: (chunks, dict-coded chunks)}, which shows a
+    column schema evolution left out of older chunks.  Both thunks
+    reuse the manifest read (each parquet read costs a schema job)."""
     manifest = spark.read.parquet(os.path.join(out_dir, "manifest"))
     chunks = spark.read.parquet(os.path.join(out_dir, "chunks"))
     if parts is not None:
         manifest, chunks = manifest.where(parts), chunks.where(parts)
     has_bloom = "bloom" in manifest.columns
+    yes = F.lit(True)
     by_col: dict[str, tuple] = {}
     for leaf in leaves:
-        z, b = by_col.get(leaf.col, (F.lit(True), F.lit(True)))
+        z, b, a = by_col.get(leaf.col, (yes, yes, yes))
         probe = leaf.probe() if has_bloom else None
         by_col[leaf.col] = (z & leaf.zone(),
-                            b if probe is None else b & probe)
+                            b if probe is None else b & probe,
+                            a & leaf.covers())
+    ans = {}
+    if answer is not None:
+        z, b, a = by_col.get(answer, (yes, yes, yes))
+        by_col[answer] = (z, b, a & F.col("sum_val").isNotNull())
+        ans = {"s": F.col("sum_val"),
+               "nn": F.col("num_elements") - F.col("null_count")}
+    # per chunk: z passes the zone maps, b the Bloom probes too, a is
+    # covered; s / nn are the answer column's manifest sum and rows
     flags = None
     if len(by_col) == 1:
-        (c, (z, b)), = by_col.items()
+        (c, (z, b, a)), = by_col.items()
         flags = (manifest.where(F.col("column") == c)
-                 .select("chunk_id", z.alias("z"), (z & b).alias("b")))
+                 .select("chunk_id", z.alias("z"), (z & b).alias("b"),
+                         F.coalesce(z & b & a, F.lit(False)).alias("a"),
+                         *[e.alias(k) for k, e in ans.items()]))
     elif by_col:
         # several columns: a chunk survives when all of its leaf
         # columns' manifest rows do
-        zc = bc = None
-        for c, (z, b) in by_col.items():
+        conds = [None] * 3
+        for c, (z, b, a) in by_col.items():
             hit = F.col("column") == c
-            zc = F.when(hit, z) if zc is None else zc.when(hit, z)
-            bc = F.when(hit, z & b) if bc is None else bc.when(hit, z & b)
+            conds = [F.when(hit, e) if w is None else w.when(hit, e)
+                     for w, e in zip(conds, (z, z & b, z & b & a))]
         flags = (manifest.where(F.col("column").isin(list(by_col)))
                  .groupBy("chunk_id")
-                 .agg((F.count(F.when(zc, 1)) == len(by_col)).alias("z"),
-                      (F.count(F.when(bc, 1)) == len(by_col)).alias("b")))
+                 .agg(*[(F.count(F.when(w, 1)) == len(by_col)).alias(k)
+                        for k, w in zip("zba", conds)],
+                      *[F.max(F.when(F.col("column") == answer, e)).alias(k)
+                        for k, e in ans.items()]))
+    keep = F.col("b")
+    if answer is not None:
+        if masks is not None:
+            # a delete-affected chunk's manifest sum counts deleted rows
+            flags = (flags.join(masks.select(
+                "chunk_id", F.lit(True).alias("km")), "chunk_id", "left")
+                .withColumn("a", F.col("a") & F.col("km").isNull()))
+        keep = keep & ~F.col("a")
     cand = (None if flags is None
-            else F.broadcast(flags.where("b").select("chunk_id")))
+            else F.broadcast(flags.where(keep).select("chunk_id")))
 
     scan = None
     for i, c in enumerate(cols):
@@ -460,11 +500,15 @@ def _front(spark: SparkSession, out_dir: str, leaves: list[Leaf],
         else:
             scan = scan.join(side, "chunk_id")
 
-    def counts() -> tuple[int, int, int]:
-        r = flags.agg(F.count(F.lit(1)).alias("t"),
-                      F.count(F.when(F.col("z"), 1)).alias("z"),
-                      F.count(F.when(F.col("b"), 1)).alias("b")).collect()[0]
-        return int(r["t"]), int(r["z"]), int(r["b"])
+    def counts() -> tuple[int, ...]:
+        a = F.col("a")
+        r = flags.agg(
+            F.count(F.lit(1)), F.count(F.when(F.col("z"), 1)),
+            F.count(F.when(F.col("b"), 1)),
+            *([F.count(F.when(a, 1)),
+               F.sum(F.when(a, F.col("s")).cast("decimal(38,0)")),
+               F.sum(F.when(a, F.col("nn")))] if ans else [])).collect()[0]
+        return tuple(int(v or 0) for v in r)
 
     def census() -> dict[str, tuple[int, int]]:
         return {r["column"]: (int(r["n"]), int(r["n_dict"])) for r in (
@@ -559,6 +603,63 @@ def pruned_select(spark: SparkSession, out_dir: str, leaves: list[Leaf],
 
     return (front.scan.mapInPandas(fn, out_schema),
             _stats(total, zone, scanned))
+
+
+def pruned_sum(spark: SparkSession, out_dir: str, leaves: list[Leaf],
+               col: str) -> tuple[int | None, dict]:
+    """SUM(col) WHERE AND(leaves) over the persisted store, `col` an
+    int64 column, in three levels: the pruning front drops chunks from
+    the manifest; a chunk every leaf covers (`Leaf.covers`) with no
+    live deletes is answered by its manifest `sum_val`, with no blob
+    read; the other candidates mask their rows on the compressed
+    leaves (`_chunk_mask`) and sum a vec-coded `col` through
+    `filters.masked_sum` (Const/Null sections from the header; nulls
+    ride the payload as zeros), any other codec decoding.  Totals
+    cross chunks in decimal(38,0), so nothing wraps.  Returns (None
+    when no non-null value matched, as SQL's SUM; the stats record
+    with covered_chunks)."""
+    cols = list(dict.fromkeys([leaf.col for leaf in leaves] + [col]))
+    front = _front(spark, out_dir, leaves, cols,
+                   _keep_mask_df(spark, out_dir), answer=col)
+    paired = front.leaves  # task closures must not capture DataFrames
+    j = cols.index(col)
+
+    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        total = nn = comp = dec = skipped = 0
+        for pdf in batches:
+            for row in pdf.itertuples(index=False):
+                m, compressed, sk = _chunk_mask(paired, row)
+                skipped += sk
+                if m is not None:
+                    nulls, inner = chunk_codec.split_nulls(
+                        getattr(row, "b%d" % j))
+                    live = m.reshape(-1)[:int(row.num_elements)]
+                    nn += int((live if nulls is None
+                               else live & ~nulls).sum())
+                    kind = _VEC_KIND.get(getattr(row, "c%d" % j))
+                    if kind:
+                        total += filters.masked_sum(inner[4:], kind, m)
+                    else:
+                        compressed = False
+                        total += int(np.asarray(chunk_codec.decode_column(
+                            inner))[live].astype(object).sum())
+                comp += compressed
+                dec += not compressed
+        # the Python-int partial rides as a string; Spark finishes the
+        # total in decimal(38,0)
+        yield pd.DataFrame({"s": [str(total)], "n": [nn], "c": [comp],
+                            "d": [dec], "k": [skipped]})
+
+    (total, zone, kept, covered, m_sum, m_nn), agg = _overlap(
+        front.counts,
+        lambda: (front.scan.mapInPandas(
+            fn, "s string, n long, c long, d long, k long")
+            .agg(F.sum(F.col("s").cast("decimal(38,0)")).alias("s"),
+                 *[F.sum(k).alias(k) for k in "ncdk"]).collect()[0]))
+    found = m_nn + int(agg["n"] or 0)
+    return (m_sum + int(agg["s"] or 0) if found else None), _stats(
+        total, zone, kept, int(agg["c"] or 0), int(agg["d"] or 0),
+        int(agg["k"] or 0), covered=covered)
 
 
 def store_membership(spark: SparkSession, out_dir: str, column: str,
@@ -777,122 +878,6 @@ def stored_schema(spark: SparkSession, out_dir: str) -> tuple[str, dict]:
         return sql_type
 
     return ddl, {r["name"]: decode_dtype(r["dtype"]) for r in rows}
-
-
-def _unwrap_vec(blob: bytes) -> bytes:
-    """Strip the optional NULM wrapper + chunk codec tag, returning the
-    raw BinaryVector payload (nulls ride as zeros)."""
-    b = bytes(blob)
-    if b[:4] == b"NULM":
-        n = int.from_bytes(b[4:8], "little")
-        b = b[8 + (n + 7) // 8:]
-    return b[4:]
-
-
-def pruned_filtered_sum(spark: SparkSession, out_dir: str,
-                        filter_col: str, lo: int, hi: int,
-                        sum_col: str) -> tuple[int, dict]:
-    """SUM(sum_col) WHERE lo <= filter_col <= hi with THREE pushdown
-    levels, cheapest first:
-
-      1. manifest prune: chunks whose filter-col [min,max] is disjoint
-         from [lo,hi] contribute nothing — never read;
-      2. manifest ANSWER: chunks fully covered (min >= lo, max <= hi,
-         no nulls) contribute their manifest `sum_val` — zero blob
-         reads, the aggregation analog of Parquet row-group stats;
-      3. partially-overlapping chunks decode only the sections the
-         range mask needs (`filters.range_mask` header skips) and sum
-         via `filters.masked_sum` (Const/Null sections summed from
-         their header byte).
-
-    Cross-chunk accumulation runs in decimal(38,0) so no int64 overflow
-    regardless of chunk count.  Chunks with nulls or non-vec codecs in
-    either column fall back to a full decode of that chunk (SQL null
-    semantics: null filter values never match, null sum values add 0).
-    """
-    manifest = spark.read.parquet(os.path.join(out_dir, "manifest"))
-    f_man = manifest.where(F.col("column") == filter_col)
-    overlap = f_man.where((F.col("min_val") <= hi) & (F.col("max_val") >= lo))
-
-    s_man = (manifest.where(F.col("column") == sum_col)
-             .select("chunk_id", F.col("sum_val").alias("s_sum"),
-                     F.col("null_count").alias("s_nulls"),
-                     F.col("codec").alias("s_codec")))
-    masks = _keep_mask_df(spark, out_dir)
-    j = _join_keep(overlap.join(s_man, "chunk_id"), masks)
-    # a delete-affected chunk's manifest sum includes deleted rows: it
-    # must take the decoded path whatever its stats say (keep_mask is
-    # non-NULL exactly for affected chunks after the left join)
-    covered = ((F.col("min_val") >= lo) & (F.col("max_val") <= hi)
-               & (F.col("null_count") == 0) & F.col("s_sum").isNotNull()
-               & F.col("keep_mask").isNull())
-    partial_ids = j.where(~covered).select(
-        "chunk_id", "null_count", "s_nulls", "codec", "s_codec")
-    chunks = spark.read.parquet(os.path.join(out_dir, "chunks"))
-    fb = (chunks.where(F.col("column") == filter_col)
-          .select("chunk_id", F.col("blob").alias("blob_f")))
-    sb = (chunks.where(F.col("column") == sum_col)
-          .select("chunk_id", F.col("blob").alias("blob_s")))
-    paired = _join_keep(
-        fb.join(F.broadcast(partial_ids), "chunk_id").join(sb, "chunk_id"),
-        masks)
-
-    vec_codecs = ("vec_u64", "vec_u32")
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        task_sum, fast_sections = 0, 0
-        for pdf in batches:
-            for bf, cf, nf, bs, cs, ns, km in zip(
-                    pdf["blob_f"], pdf["codec"], pdf["null_count"],
-                    pdf["blob_s"], pdf["s_codec"], pdf["s_nulls"],
-                    pdf["keep_mask"]):
-                km = None if km is None else bytes(km)
-                if (km is None and cf in vec_codecs and cs in vec_codecs
-                        and not nf and not ns):
-                    kf = "u64" if cf == "vec_u64" else "u32"
-                    ks = "u64" if cs == "vec_u64" else "u32"
-                    masks = filters.range_mask(_unwrap_vec(bf), kf, lo, hi)
-                    t, st = filters.masked_sum(_unwrap_vec(bs), ks, masks,
-                                               return_stats=True)
-                    fast_sections += st["summed_without_decode"]
-                else:  # nullable, non-vec codec, or delete-affected:
-                    fv = pd.Series(chunk_codec.decode_column(bytes(bf)))
-                    sv = pd.Series(chunk_codec.decode_column(bytes(bs)))
-                    m = (fv >= lo) & (fv <= hi)
-                    m = m.fillna(False).to_numpy(dtype=bool)
-                    if km is not None:
-                        m &= _keep_bools(km, len(fv))
-                    t = int(sv[m].dropna().astype(object).sum())
-                task_sum += t
-        # exact cross-chunk accumulation: the Python-int partial rides as
-        # a string, Spark finishes in decimal(38,0) — no float, no wrap
-        yield pd.DataFrame({"part_sum": [str(task_sum)],
-                            "fast_sections": [fast_sections]})
-
-    # metadata count, covered-chunk aggregate and the partial-chunk
-    # scan are three independent jobs: overlap them
-    total_chunks, agg, part = _overlap(
-        lambda: f_man.count(),
-        lambda: j.agg(
-            F.sum(F.when(covered, F.col("s_sum")).otherwise(F.lit(0))
-                  .cast("decimal(38,0)")).alias("manifest_sum"),
-            F.sum(F.when(covered, 1).otherwise(0)).alias("covered"),
-            F.count("*").alias("scanned")).collect()[0],
-        lambda: (paired.mapInPandas(fn, "part_sum string, fast_sections long")
-                 .agg(F.sum(F.col("part_sum").cast("decimal(38,0)"))
-                      .alias("s"),
-                      F.sum("fast_sections").alias("fs")).collect()[0]))
-    manifest_sum = int(agg["manifest_sum"] or 0)
-    covered_chunks = int(agg["covered"] or 0)
-    scanned = int(agg["scanned"] or 0)
-    partial_sum = int(part["s"] or 0)
-    return manifest_sum + partial_sum, {
-        "total_chunks": total_chunks,
-        "pruned_chunks": total_chunks - scanned,
-        "covered_from_manifest": covered_chunks,
-        "partial_chunks": scanned - covered_chunks,
-        "sections_summed_without_decode": int(part["fs"] or 0),
-    }
 
 
 def pruned_topk(spark: SparkSession, out_dir: str, column: str,
@@ -1193,25 +1178,17 @@ def dict_distinct(spark: SparkSession, out_dir: str,
     is not 100% dict-coded (callers fall back)."""
     from ..codecs import dictionary
 
-    manifest = spark.read.parquet(os.path.join(out_dir, "manifest"))
-    agg = (manifest.where(F.col("column") == column)
-           .agg(F.count(F.lit(1)).alias("n"),
-                F.sum(F.when(F.col("codec") == "dict", 1).otherwise(0))
-                .alias("n_dict")).collect()[0])
-    n_chunks = int(agg["n"])
-    if n_chunks == 0 or int(agg["n_dict"] or 0) != n_chunks:
+    front = _front(spark, out_dir, [], [column],
+                   _keep_mask_df(spark, out_dir))
+    n_chunks, n_dict = front.census().get(column, (0, 0))
+    if n_chunks == 0 or n_dict != n_chunks:
         return None
-
-    chunks = (spark.read.parquet(os.path.join(out_dir, "chunks"))
-              .where(F.col("column") == column)
-              .select("chunk_id", "blob"))
-    joined = _join_keep(chunks, _keep_mask_df(spark, out_dir))
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         vals: set[str] = set()
         for pdf in batches:
             for row in pdf.itertuples(index=False):
-                payload = bytes(row.blob)[4:]  # strip chunk codec tag
+                payload = bytes(row.b0)[4:]  # strip chunk codec tag
                 heap = dictionary.dictionary(payload)
                 km = row.keep_mask
                 if km is None:
@@ -1225,7 +1202,7 @@ def dict_distinct(spark: SparkSession, out_dir: str,
                             if counts[c] > 0)
         yield pd.DataFrame({"v": pd.Series(sorted(vals), dtype=object)})
 
-    df = (joined.mapInPandas(fn, "v string").distinct()
+    df = (front.scan.mapInPandas(fn, "v string").distinct()
           .withColumnRenamed("v", column))
     nulls, _ = manifest_null_count(spark, out_dir, column)
     if nulls > 0:

@@ -988,22 +988,22 @@ def _dispatch(spark, out_dir, dtypes, preds):
 
 def _dispatch_aggs(spark, out_dir, dtypes, aggs, preds):
     """Aggregate pushdown beyond the count kernels: answer the
-    supported shapes from the manifest (and, for SUM, the three-level
-    manifest-sum/partial-decode kernel).  Returns ([values...], stats)
-    or None when this set is not metadata-answerable.
+    supported shapes from the manifest (and, for SUM, the pruned sum
+    terminal, which reads only the chunks its manifest cannot answer).
+    Returns ([values...], stats) or None when this set is not
+    answerable.
 
     Shapes:
       no WHERE:  count(*)            -> manifest_row_count
                  count(col)          -> manifest_null_count (exact
                                         under deletes and evolution)
-                 sum(int col)        -> pruned_filtered_sum over the
-                                        column's own manifest range
+                 sum(int col)        -> pruned_sum with no leaves
                  min/max(int col)    -> manifest_min_max — but ONLY on
                                         stores without live deletes
                                         (under deletes the manifest is
                                         a bound, not the live extreme)
       WHERE col IS [NOT] NULL: count(*) -> manifest_null_count
-      WHERE lo <= f <= hi: sum(int col) -> pruned_filtered_sum
+      WHERE AND(leaves): sum(int col)   -> pruned_sum
     """
     from ..spark import delete_job
     et = encoded_table
@@ -1018,31 +1018,16 @@ def _dispatch_aggs(spark, out_dir, dtypes, aggs, preds):
         nulls, non_nulls = et.manifest_null_count(spark, out_dir, c)
         return [nulls if preds[0]["op"] == "isnull" else non_nulls], stats
 
-    if len(preds) == 1 and preds[0]["op"] == "range":
-        p = preds[0]
-        if (len(aggs) != 1 or aggs[0]["fn"] != "sum"
-                or dtypes.get(aggs[0]["col"]) != "int64"
-                or dtypes.get(p["col"]) != "int64"):
-            return None
-        lo, hi = p["lo"], p["hi"]
-        if lo is None or hi is None:
-            mn, mx = et.manifest_min_max(spark, out_dir, p["col"])
-            if mn is None:
-                return [None], stats
-            lo, hi = (mn if lo is None else lo), (mx if hi is None else hi)
-        if not (isinstance(lo, int) and isinstance(hi, int)):
-            return None
-        total, st = et.pruned_filtered_sum(spark, out_dir, p["col"],
-                                           lo, hi, aggs[0]["col"])
-        st = dict(st)
-        st["metadata_only"] = False
-        return [total], st
-
     if preds:
-        return None
+        leaves = _to_leaves(dtypes, preds)
+        if (leaves is None or len(aggs) != 1 or aggs[0]["fn"] != "sum"
+                or dtypes.get(aggs[0]["col"]) != "int64"):
+            return None
+        total, st = et.pruned_sum(spark, out_dir, leaves, aggs[0]["col"])
+        return [total], {**st, "metadata_only": False}
 
-    # WHERE-less aggregates: every item must be metadata-answerable,
-    # else the whole statement falls back (no partial routing)
+    # WHERE-less aggregates: every item must be answerable, else the
+    # whole statement falls back (no partial routing)
     minmax_ok = not delete_job.has_deletes(spark, out_dir)
     mm_cache: dict[str, tuple] = {}
     vals = []
@@ -1064,16 +1049,9 @@ def _dispatch_aggs(spark, out_dir, dtypes, aggs, preds):
         elif a["fn"] == "sum":
             if dtypes.get(a["col"]) != "int64":
                 return None
-            mn, mx = mm_cache.get(a["col"]) or et.manifest_min_max(
-                spark, out_dir, a["col"])
-            mm_cache[a["col"]] = (mn, mx)
-            if mn is None:
-                vals.append(None)
-                continue
-            total, st = et.pruned_filtered_sum(spark, out_dir, a["col"],
-                                               mn, mx, a["col"])
+            total, st = et.pruned_sum(spark, out_dir, [], a["col"])
             stats["metadata_only"] = (stats["metadata_only"]
-                                      and st.get("partial_chunks") == 0)
+                                      and st["scanned_chunks"] == 0)
             vals.append(total)
         elif a["fn"] == "count_distinct":
             # COUNT(DISTINCT dict col) from the dictionary heaps —

@@ -583,22 +583,3 @@ def store_stats(spark: SparkSession, out_dir: str) -> dict:
         "snapshots": len(snap.list_snapshots(spark, out_dir)),
         **delete_job.delete_stats(spark, out_dir),
     }
-
-
-def manifest_summary(spark: SparkSession, out_dir: str) -> dict:
-    m = spark.read.parquet(os.path.join(out_dir, "manifest"))
-    agg = (m.groupBy("column", "codec")
-           .agg(F.sum("raw_bytes").alias("raw"),
-                F.sum("encoded_bytes").alias("enc"),
-                F.sum("num_elements").alias("elems"),
-                F.count("*").alias("chunks"))
-           .collect())
-    per_col = {f"{r['column']}[{r['codec']}]":
-               {"raw": r["raw"], "encoded": r["enc"],
-                "ratio": (r["raw"] / r["enc"]) if r["enc"] else None,
-                "chunks": r["chunks"]}
-               for r in agg}
-    raw = sum(r["raw"] for r in agg)
-    enc = sum(r["enc"] for r in agg)
-    return {"columns": per_col, "raw_bytes": raw, "encoded_bytes": enc,
-            "ratio": raw / enc if enc else None}

@@ -985,11 +985,13 @@ def encoded_table_sum_pushdown(spark, sf_dir) -> DataFrame:
     covered chunks (zero blob reads), and header-skipping masked_sum
     for the boundary chunks."""
     from ..sources import encoded_table
+    from ..sources.encoded_table import Leaf
     out = _orders_store(spark, sf_dir)
-    total, stats = encoded_table.pruned_filtered_sum(
-        spark, out, "o_orderkey", 1000, 20000, "o_custkey")
-    assert (stats["pruned_chunks"] + stats["covered_from_manifest"]
-            + stats["partial_chunks"]) == stats["total_chunks"]
+    total, stats = encoded_table.pruned_sum(
+        spark, out, [Leaf("o_orderkey", "int64", "range", 1000, 20000)],
+        "o_custkey")
+    assert (stats["pruned_chunks"] + stats["covered_chunks"]
+            + stats["scanned_chunks"]) == stats["total_chunks"]
     return spark.createDataFrame(
         pd.DataFrame({"sum_custkey": [total]})) \
         .select(F.col("sum_custkey").cast("long"))
@@ -2841,8 +2843,8 @@ def encoded_table_delete_pushdown(spark, sf_dir) -> DataFrame:
             Leaf("lang", "string", "in", values=("de",))])
         f_rng = pool.submit(encoded_table.pruned_count, spark, out, [
             Leaf("n_chars", "int64", "range", 200, 400)])
-        f_sum = pool.submit(encoded_table.pruned_filtered_sum,
-                            spark, out, "n_chars", 200, 400, "doc_id")
+        f_sum = pool.submit(encoded_table.pruned_sum, spark, out, [
+            Leaf("n_chars", "int64", "range", 200, 400)], "doc_id")
         f_top = pool.submit(encoded_table.pruned_topk,
                             spark, out, "n_chars", 5)
         cnt_de, st_eq = f_eq.result()
@@ -2851,7 +2853,7 @@ def encoded_table_delete_pushdown(spark, sf_dir) -> DataFrame:
         top5, _ = f_top.result()
     # the delete-affected chunks must NOT have taken the manifest
     # shortcut: their stats describe pre-delete rows
-    assert st_sum["covered_from_manifest"] + st_sum["partial_chunks"] \
+    assert st_sum["covered_chunks"] + st_sum["scanned_chunks"] \
         <= st_sum["total_chunks"]
     return spark.createDataFrame(
         pd.DataFrame({"cnt_lang_de": [int(cnt_de)],

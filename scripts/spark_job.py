@@ -190,7 +190,7 @@ def main(argv: list[str] | None = None) -> int:
                                 url_col=args.url_col,
                                 num_partitions=args.partitions,
                                 resume=not args.no_resume)
-        print(json.dumps(encode_job.manifest_summary(spark, args.output)))
+        print(json.dumps(encode_job.store_stats(spark, args.output)))
     elif args.cmd == "append":
         if args.synthetic:
             df = webtable.webpages(spark, args.synthetic)
@@ -201,7 +201,7 @@ def main(argv: list[str] | None = None) -> int:
                                 url_col=args.url_col,
                                 num_partitions=args.partitions,
                                 allow_new_columns=args.allow_new_columns)
-        print(json.dumps(encode_job.manifest_summary(spark, args.output)))
+        print(json.dumps(encode_job.store_stats(spark, args.output)))
     elif args.cmd == "decode":
         from compressed_vec_spark.sources import encoded_table, snapshot
         # the store is self-describing (table_schema parquet); --schema
@@ -228,8 +228,9 @@ def main(argv: list[str] | None = None) -> int:
             return 1
     elif args.cmd == "sum":
         from compressed_vec_spark.sources import encoded_table
-        total, stats = encoded_table.pruned_filtered_sum(
-            spark, args.encoded, args.filter_col, args.lo, args.hi,
+        total, stats = encoded_table.pruned_sum(
+            spark, args.encoded, [encoded_table.Leaf(
+                args.filter_col, "int64", "range", args.lo, args.hi)],
             args.sum_col)
         print(json.dumps({"sum": total, **stats}))
     elif args.cmd == "compact":

@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 from compressed_vec_spark import vector as vec
 from compressed_vec_spark.operators import filters
 from compressed_vec_spark.sources import encoded_table
-from compressed_vec_spark.sources.encoded_table import chunk_stats_for
+from compressed_vec_spark.sources.encoded_table import Leaf, chunk_stats_for
 from compressed_vec_spark.spark import encode_job
 from compressed_vec_spark.spark.session import get_spark
 
@@ -59,7 +59,7 @@ def test_chunk_stats_sum_and_nulls():
     assert chunk_stats_for(pd.Series(["a", None]))[3] == 1
 
 
-def test_pruned_filtered_sum_three_levels(spark, tmp_path):
+def test_pruned_sum_three_levels(spark, tmp_path):
     out = str(tmp_path / "enc")
     n = 20000
     df = (spark.range(0, n, 1, 8).select(
@@ -69,25 +69,26 @@ def test_pruned_filtered_sum_three_levels(spark, tmp_path):
     encode_job.encode_table(spark, df, out, url_col=None)
 
     lo, hi = 2500, 17000
-    total, stats = encoded_table.pruned_filtered_sum(spark, out, "k", lo, hi, "v")
+    total, stats = encoded_table.pruned_sum(
+        spark, out, [Leaf("k", "int64", "range", lo, hi)], "v")
     expect = sum(i * 3 % 1000 for i in range(lo, hi + 1))
     assert total == expect
     # all three levels engaged on a sorted id column
     assert stats["pruned_chunks"] > 0
-    assert stats["covered_from_manifest"] > 0
-    assert stats["partial_chunks"] > 0
-    assert (stats["pruned_chunks"] + stats["covered_from_manifest"]
-            + stats["partial_chunks"]) == stats["total_chunks"]
+    assert stats["covered_chunks"] > 0
+    assert stats["scanned_chunks"] > 0
+    assert (stats["pruned_chunks"] + stats["covered_chunks"]
+            + stats["scanned_chunks"]) == stats["total_chunks"]
 
-    # disjoint range: nothing read at all
-    total, stats = encoded_table.pruned_filtered_sum(
-        spark, out, "k", 10**9, 2 * 10**9, "v")
-    assert total == 0
-    assert stats["covered_from_manifest"] == 0
-    assert stats["partial_chunks"] == 0
+    # disjoint range: nothing read at all, and SQL's SUM of no rows
+    total, stats = encoded_table.pruned_sum(
+        spark, out, [Leaf("k", "int64", "range", 10**9, 2 * 10**9)], "v")
+    assert total is None
+    assert stats["covered_chunks"] == 0
+    assert stats["scanned_chunks"] == 0
 
 
-def test_pruned_filtered_sum_nullable_fallback(spark, tmp_path):
+def test_pruned_sum_nullable(spark, tmp_path):
     out = str(tmp_path / "encn")
     n = 5000
     df = spark.range(0, n, 1, 4).select(
@@ -96,7 +97,8 @@ def test_pruned_filtered_sum_nullable_fallback(spark, tmp_path):
         .otherwise(F.col("id") % 100).alias("v"))
     encode_job.encode_table(spark, df, out, url_col=None, num_partitions=4)
     lo, hi = 1000, 4000
-    total, _ = encoded_table.pruned_filtered_sum(spark, out, "k", lo, hi, "v")
+    total, _ = encoded_table.pruned_sum(
+        spark, out, [Leaf("k", "int64", "range", lo, hi)], "v")
     expect = sum(i % 100 for i in range(lo, hi + 1) if i % 10 != 0)
     assert total == expect  # SQL SUM semantics: nulls contribute nothing
 

@@ -308,8 +308,8 @@ def test_pruned_sum_topk_select_subtract_deletes(spark, store2):
     out, pdf = store2
     live = _live2(pdf)
 
-    total, st = encoded_table.pruned_filtered_sum(
-        spark, out, "nch", 3000, 4000, "k")
+    total, st = encoded_table.pruned_sum(
+        spark, out, [Leaf("nch", "int64", "range", 3000, 4000)], "k")
     m = live["nch"].between(3000, 4000)
     assert total == int(live.loc[m, "k"].sum())
 

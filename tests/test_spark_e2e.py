@@ -36,7 +36,7 @@ def test_encode_decode_bit_identical(spark, tmp_path):
     chunks = encode_job.encode_table(spark, web, out, num_partitions=4)
     assert chunks.count() > 0
 
-    summary = encode_job.manifest_summary(spark, out)
+    summary = encode_job.store_stats(spark, out)
     assert summary["ratio"] is not None and summary["ratio"] > 1.0
 
     decoded = decode_job.decode_chunks(

@@ -887,8 +887,10 @@ def pruned_topk(spark: SparkSession, out_dir: str, column: str,
     Every chunk contributes at least its max, so the k-th largest
     per-chunk max_val (M_k) lower-bounds the k-th largest value — chunks
     with max_val < M_k cannot hold a top-k element (ties at M_k are
-    kept: the prune is strict-less-than).  Surviving chunks emit only a
-    k-row partial top-k each, so the final shuffle is k x chunks rows.
+    kept: the prune is strict-less-than).  M_k becomes one int64 range
+    `Leaf` (open when fewer than k chunk maxima exist) on the pruning
+    front, and each surviving chunk emits only the k largest of the
+    values its leaf mask keeps, so the final shuffle is k x chunks rows.
     """
     _, dtypes = stored_schema(spark, out_dir)
     if dtypes.get(column) != "int64":
@@ -898,8 +900,8 @@ def pruned_topk(spark: SparkSession, out_dir: str, column: str,
         raise ValueError(
             f"pruned_topk: column {column!r} has dtype "
             f"{dtypes.get(column)!r}; integer columns only")
-    manifest = spark.read.parquet(os.path.join(out_dir, "manifest"))
-    col_man = manifest.where(F.col("column") == column)
+    col_man = (spark.read.parquet(os.path.join(out_dir, "manifest"))
+               .where(F.col("column") == column))
     masks = _keep_mask_df(spark, out_dir)
     # metadata-only job: the k largest chunk maxima.  The threshold is
     # sound only if each contributing max is a LIVE value, so delete-
@@ -909,46 +911,33 @@ def pruned_topk(spark: SparkSession, out_dir: str, column: str,
     thr_man = (col_man.join(masks.select("chunk_id"),
                             "chunk_id", "left_anti")
                if masks is not None else col_man)
-    # the total count and the threshold derivation are independent jobs
-    total_chunks, thr_rows = _overlap(
-        lambda: col_man.count(),
-        lambda: thr_man.orderBy(F.desc("max_val")).limit(k).collect())
-    maxes = [r["max_val"] for r in thr_rows if r["max_val"] is not None]
-    if not maxes and masks is None:
-        return [], {"total_chunks": total_chunks, "scanned_chunks": 0,
-                    "pruned_chunks": total_chunks}
+    maxes = [r["max_val"] for r in
+             thr_man.orderBy(F.desc("max_val")).limit(k).collect()
+             if r["max_val"] is not None]
     threshold = min(maxes) if len(maxes) >= k else None
-    cand = col_man if threshold is None else \
-        col_man.where(F.col("max_val") >= threshold)
-
-    chunks = _join_keep(
-        (spark.read.parquet(os.path.join(out_dir, "chunks"))
-         .where(F.col("column") == column)
-         .join(F.broadcast(cand.select("chunk_id")), "chunk_id")),
-        masks)
+    front = _front(spark, out_dir,
+                   [Leaf(column, "int64", "range", lo=threshold)],
+                   [column], masks)
+    if not maxes and masks is None:
+        return [], _stats(*front.counts())
+    paired = front.leaves  # task closures must not capture DataFrames
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            for blob, km in zip(pdf["blob"], pdf["keep_mask"]):
-                v = np.asarray(chunk_codec.decode_column(bytes(blob)))
-                if km is not None:
-                    v = v[_keep_bools(bytes(km), len(v))]
-                v = pd.Series(v).dropna().to_numpy()
-                if not len(v):
+            for row in pdf.itertuples(index=False):
+                m = _chunk_mask(paired, row)[0]
+                if m is None:
                     continue
-                part = np.sort(v)[-k:]  # chunk-local top-k only
-                yield pd.DataFrame({"v": part.astype(np.int64)})
+                v = np.asarray(chunk_codec.decode_column(bytes(row.b0)))
+                part = np.sort(v[m.reshape(-1)[:len(v)]].astype(np.int64))
+                yield pd.DataFrame({"v": part[-k:]})  # chunk-local top-k
 
-    # the survivor count and the data top-k are independent jobs
-    scanned, top = _overlap(
-        lambda: cand.count(),
-        lambda: (chunks.select("blob", "keep_mask").mapInPandas(fn, "v long")
+    # the prune counts and the data top-k are independent jobs
+    counts, top = _overlap(
+        front.counts,
+        lambda: (front.scan.mapInPandas(fn, "v long")
                  .orderBy(F.desc("v")).limit(k).collect()))
-    return [int(r["v"]) for r in top], {
-        "total_chunks": total_chunks,
-        "scanned_chunks": scanned,
-        "pruned_chunks": total_chunks - scanned,
-    }
+    return [int(r["v"]) for r in top], _stats(*counts)
 
 
 def exact_weighted_bincount(codes: np.ndarray, weights) -> np.ndarray:
@@ -1259,20 +1248,12 @@ def register_encoded_table(spark: SparkSession, out_dir: str,
 
 
 def manifest_row_count(spark: SparkSession, out_dir: str) -> int:
-    """Total LIVE row count answered from metadata alone: sum of
-    num_elements over the store's position-0 column (every part has
-    it — columns are only ever added) minus the delete sidecar's
-    per-chunk n_deleted (exact: masks are OR-merged before counting).
-    No chunk blob is read."""
-    m = spark.read.parquet(os.path.join(out_dir, "manifest"))
-    first_col = _schema_rows(spark, out_dir)[0]["name"]
-    total = (m.where(F.col("column") == first_col)
-             .agg(F.sum("num_elements")).collect()[0][0]) or 0
+    """Total LIVE row count answered from metadata alone
+    (`delete_job.delete_stats`): the manifest's row total minus the
+    sidecar's n_deleted, exact because each delete excludes the rows
+    earlier deletes already removed.  No chunk blob is read."""
     from ..spark import delete_job
-    mm = delete_job.merged_masks(spark, out_dir, check_empty=False)
-    deleted = (0 if mm is None
-               else mm.agg(F.sum("n_deleted")).collect()[0][0] or 0)
-    return int(total) - int(deleted)
+    return delete_job.delete_stats(spark, out_dir)["live_rows"]
 
 
 def manifest_null_count(spark: SparkSession, out_dir: str,

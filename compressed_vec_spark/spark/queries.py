@@ -397,25 +397,25 @@ def encoded_table_sql_pushdown(spark, sf_dir) -> DataFrame:
     # independent jobs"); results and asserts are unchanged
     with ThreadPoolExecutor(max_workers=5) as pool:
         f_r = pool.submit(
-            sql_router.route_sql_count, spark, out_o,
+            sql_router.route_sql, spark, out_o,
             "SELECT count(*) AS range_hits FROM cvx_sql_orders "
             "WHERE o_orderkey BETWEEN 1 AND 1000", view="cvx_sql_orders")
         f_e = pool.submit(
-            sql_router.route_sql_count, spark, out_d,
+            sql_router.route_sql, spark, out_d,
             "SELECT count(*) AS eq_hits FROM cvx_sql_docs "
             "WHERE source = 'src12'", view="cvx_sql_docs")
         f_i = pool.submit(
-            sql_router.route_sql_count, spark, out_d,
+            sql_router.route_sql, spark, out_d,
             "SELECT count(*) AS in_hits FROM cvx_sql_docs "
             "WHERE source IN ('src3', 'src17')", view="cvx_sql_docs")
         # aggregate pushdown from SQL text: SUM routed through the
         # three-level manifest-sum kernel, count(*) metadata-only
         f_s = pool.submit(
-            sql_router.route_sql_count, spark, out_o,
+            sql_router.route_sql, spark, out_o,
             "SELECT sum(o_custkey) AS sum_cust FROM cvx_sql_orders "
             "WHERE o_orderkey BETWEEN 1 AND 20000", view="cvx_sql_orders")
         f_c = pool.submit(
-            sql_router.route_sql_count, spark, out_o,
+            sql_router.route_sql, spark, out_o,
             "SELECT count(*) AS n_rows FROM cvx_sql_orders",
             view="cvx_sql_orders")
         r_df, r_st = f_r.result()

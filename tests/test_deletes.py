@@ -123,6 +123,7 @@ def test_overlapping_delete_counts_exact(spark, store2):
     got = delete_job.delete_stats(spark, out)
     want_live = len(live) - expect_new
     assert got["live_rows"] == want_live
+    assert encoded_table.manifest_row_count(spark, out) == want_live
     assert encoded_table.read_decoded(spark, out).count() == want_live
 
 

@@ -72,7 +72,7 @@ FALLBACK = [
 @pytest.mark.parametrize("sql", ROUTED)
 def test_routed_shapes_match_sparksql(spark, store, sql):
     out, _ = store
-    got, st = sql_router.route_sql_count(spark, out, sql, view="enc_t")
+    got, st = sql_router.route_sql(spark, out, sql, view="enc_t")
     assert st["routed"] is True, st
     assert "pruned_chunks" in st or "scanned_chunks" in st
     assert got.collect()[0][0] == spark.sql(sql).collect()[0][0]
@@ -82,7 +82,7 @@ def test_routed_shapes_match_sparksql(spark, store, sql):
 @pytest.mark.parametrize("sql", FALLBACK[:-1])
 def test_fallback_shapes_match_sparksql(spark, store, sql):
     out, _ = store
-    got, st = sql_router.route_sql_count(spark, out, sql, view="enc_t")
+    got, st = sql_router.route_sql(spark, out, sql, view="enc_t")
     assert st["routed"] is False
     assert got.collect()[0][0] == spark.sql(sql).collect()[0][0]
 
@@ -90,13 +90,13 @@ def test_fallback_shapes_match_sparksql(spark, store, sql):
 def test_no_where_routes_or_falls_back_consistently(spark, store):
     out, _ = store
     sql = FALLBACK[-1]
-    got, _ = sql_router.route_sql_count(spark, out, sql, view="enc_t")
+    got, _ = sql_router.route_sql(spark, out, sql, view="enc_t")
     assert got.collect()[0][0] == 4000
 
 
 def test_sorted_layout_actually_prunes(spark, store):
     out, _ = store
-    _, st = sql_router.route_sql_count(
+    _, st = sql_router.route_sql(
         spark, out, "SELECT count(*) AS c FROM enc_t WHERE k BETWEEN 100"
         " AND 900", view="enc_t")
     assert st["routed"] and st["pruned_chunks"] > 0, st
@@ -105,7 +105,7 @@ def test_sorted_layout_actually_prunes(spark, store):
 def test_view_mismatch_falls_back(spark, store):
     out, _ = store
     spark.sql("SELECT 1").collect()
-    _, st = sql_router.route_sql_count(
+    _, st = sql_router.route_sql(
         spark, out, "SELECT count(*) AS c FROM enc_t WHERE k = 5",
         view="some_other_view")
     assert st["routed"] is False
@@ -139,7 +139,7 @@ AGG_FALLBACK = [
 @pytest.mark.parametrize("sql", AGG_ROUTED)
 def test_aggregate_pushdown_matches_sparksql(spark, store, sql):
     out, _ = store
-    got, st = sql_router.route_sql_count(spark, out, sql, view="enc_t")
+    got, st = sql_router.route_sql(spark, out, sql, view="enc_t")
     assert st["routed"] is True, (sql, st)
 
     def ints(row):  # SUM over no rows is NULL on both paths
@@ -151,7 +151,7 @@ def test_aggregate_pushdown_matches_sparksql(spark, store, sql):
 @pytest.mark.parametrize("sql", AGG_FALLBACK)
 def test_aggregate_fallback_matches_sparksql(spark, store, sql):
     out, _ = store
-    got, st = sql_router.route_sql_count(spark, out, sql, view="enc_t")
+    got, st = sql_router.route_sql(spark, out, sql, view="enc_t")
     assert st["routed"] is False
     assert [str(x) for x in got.collect()[0]] \
         == [str(x) for x in spark.sql(sql).collect()[0]]
@@ -169,7 +169,7 @@ def test_routed_respects_deletes(spark, store):
                 "SELECT count(*) AS c FROM enc_t",
                 "SELECT count(lang) AS c FROM enc_t",
                 "SELECT sum(grp) AS s FROM enc_t"):
-        got, st = sql_router.route_sql_count(spark, out, sql, view="enc_t")
+        got, st = sql_router.route_sql(spark, out, sql, view="enc_t")
         assert st["routed"] is True
         # re-register: the old temp view captured the pre-delete scan
         encoded_table.register_encoded_table(spark, out, "enc_t_live")
@@ -177,7 +177,7 @@ def test_routed_respects_deletes(spark, store):
         assert got.collect()[0][0] == want, sql
     # manifest min/max is only a BOUND under live deletes: refuse the
     # metadata answer and fall back to the (correct) decoded view
-    got, st = sql_router.route_sql_count(
+    got, st = sql_router.route_sql(
         spark, out, "SELECT min(k) AS mn FROM enc_t", view="enc_t")
     assert st["routed"] is False
     assert got.collect()[0][0] == 0
@@ -356,6 +356,7 @@ DISTINCT_FALLBACK = [
     "SELECT DISTINCT grp FROM enc_t ORDER BY grp",     # int column
     "SELECT DISTINCT lang, grp FROM enc_t",            # two columns
     "SELECT DISTINCT lang FROM enc_t LIMIT 2",         # limit, no order
+    "SELECT DISTINCT lang FROM enc_t WHERE k < 100",   # WHERE
 ]
 GROUP_LIMIT_ROUTED = [
     "SELECT lang, count(*) AS c FROM enc_t GROUP BY lang"
@@ -711,6 +712,27 @@ def test_join_fallback_matches_sparksql(spark, store, sql):
     assert sorted((tuple(r) for r in got.collect()), key=str) \
         == sorted((tuple(r) for r in spark.sql(sql).collect()),
                   key=str), sql
+
+
+# LIMIT without ORDER BY picks arbitrary rows: Spark's call for every
+# shape, so only the row counts compare
+LIMIT_FALLBACK = [
+    "SELECT lang, count(*) AS c FROM enc_t GROUP BY lang LIMIT 2",
+    "SELECT region, count(*) AS c FROM enc_t JOIN jdim"
+    " ON enc_t.lang = jdim.lang GROUP BY region LIMIT 2",
+]
+
+
+@pytest.mark.parametrize("sql", LIMIT_FALLBACK)
+def test_limit_without_order_falls_back(spark, store, sql):
+    out, _ = store
+    encoded_table.register_encoded_table(spark, out, "enc_t")
+    _join_dims(spark)
+    got, st = sql_router.route_sql(spark, out, sql, view="enc_t")
+    assert not any(st.get(f) for f in (
+        "routed", "select_kernel", "group_kernel", "join_pushdown",
+        "distinct_kernel", "metadata_only")), (sql, st)
+    assert got.count() == spark.sql(sql).count(), sql
 
 
 @pytest.mark.parametrize("sql", [

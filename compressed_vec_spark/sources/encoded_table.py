@@ -4,9 +4,11 @@ The scale analog of the reference's section-skip short-circuits
 (reference src/filter.rs:218-224 null-section skip, README.md:79-81):
 per-chunk min/max recorded at encode time let a predicate skip whole
 chunks before any blob is fetched or decoded — the same idea as Parquet
-row-group stats, applied to our compressed vectors.  Catalyst pushes the
-stats filter into the parquet scan of the manifest (PushedFilters), so a
-selective predicate touches only the matching chunks' blobs.
+row-group stats, applied to our compressed vectors.  One level up, the
+part summary (one row per part and column, Iceberg's manifest list) lets
+the driver drop whole parts with no Spark job, so a selective predicate
+reads only the surviving parts' manifest rows and chunk directories, and
+only the matching chunks' blobs.
 """
 
 from __future__ import annotations
@@ -141,6 +143,14 @@ _LEAF_OPS = {"int64": ("range", "in"), "double": ("range",),
              "float": ("range",), "string": ("range", "in", "prefix")}
 
 
+def _order(v) -> tuple:
+    """Sort key of a zone-map bound in Spark's order, which puts NaN
+    above every number (any Python or numpy comparison with NaN is
+    False)."""
+    nan = isinstance(v, float) and v != v
+    return nan, 0 if nan else v
+
+
 def _sections(flat: np.ndarray) -> np.ndarray:
     """A flat row mask in `operators.filters`' per-section shape
     (S, 256), the tail past the last row padded False."""
@@ -200,31 +210,57 @@ class Leaf:
         object.__setattr__(self, "values", tuple(sorted(
             {v for v in self.values if v is not None})))
 
-    def zone(self):
-        """Manifest condition a chunk must meet to hold any match."""
-        mn, mx = {"int64": ("min_val", "max_val"),
-                  "string": ("min_str", "max_str")}.get(
-                      self.dtype, ("min_f64", "max_f64"))
-        mn, mx = F.col(mn), F.col(mx)
+    def _bounds(self) -> tuple[str, str]:
+        """The zone-map (min, max) pair of the dtype, named alike in
+        the manifest and the part summary."""
+        return {"int64": ("min_val", "max_val"),
+                "string": ("min_str", "max_str")}.get(
+                    self.dtype, ("min_f64", "max_f64"))
+
+    def _interval(self) -> tuple | None:
+        """(lo, hi, n) of the zone test `lo <= max and min <= hi`, both
+        bounds first cut to n characters when n is not None; a None lo
+        or hi is open.  None when no value can match."""
         if self.op == "prefix":
             # truncation is monotone in lexicographic order: exact
             p = self.values[0]
-            return ((F.substring(mn, 1, len(p)) <= p)
-                    & (F.substring(mx, 1, len(p)) >= p))
+            return p, p, len(p)
         if self.op == "in":
-            if not self.values:
-                return F.lit(False)
             # one interval, not a per-value OR: the Bloom probe behind
             # it prunes per value
-            lo, hi = self.values[0], self.values[-1]
-        else:
-            lo, hi = self.lo, self.hi
+            return ((self.values[0], self.values[-1], None)
+                    if self.values else None)
+        return self.lo, self.hi, None
+
+    def zone(self):
+        """Manifest condition a chunk must meet to hold any match."""
+        iv = self._interval()
+        if iv is None:
+            return F.lit(False)
+        lo, hi, n = iv
+        mn, mx = (F.col(c) for c in self._bounds())
+        if n is not None:
+            mn, mx = F.substring(mn, 1, n), F.substring(mx, 1, n)
         cond = mx.isNotNull()
         if lo is not None:
             cond = cond & (mx >= lo)
         if hi is not None:
             cond = cond & (mn <= hi)
         return cond
+
+    def admits(self, summary: dict) -> bool:
+        """`zone` over a part summary row: False proves no chunk of
+        the part can match, since a part's bounds contain its chunks'.
+        Compares in Spark's order (`_order`), as `zone` does."""
+        iv = self._interval()
+        mn, mx = (summary[c] for c in self._bounds())
+        if iv is None or mn is None or mx is None:
+            return False
+        lo, hi, n = iv
+        if n is not None:
+            mn, mx = mn[:n], mx[:n]
+        return ((lo is None or _order(lo) <= _order(mx))
+                and (hi is None or _order(mn) <= _order(hi)))
 
     def covers(self):
         """Manifest condition under which every row of a chunk matches.
@@ -386,11 +422,14 @@ def _chunk_mask(leaves: list[tuple[Leaf, int]],
 
 
 def _stats(total: int, zone: int, kept: int, compressed=None,
-           decoded=None, skipped=None, covered=None) -> dict:
+           decoded=None, skipped=None, covered=None, *,
+           parts: tuple[int, int]) -> dict:
     """The one stats record of a pruned read.  total/zone/kept are
     chunk counts before pruning, after the zone maps and after the
-    Bloom probe; a sum terminal answers `covered` of the kept chunks
-    from the manifest and scans the rest.  sections_skipped sums each
+    Bloom probe (a chunk of a part the part summary pruned fails the
+    zone maps); a sum terminal answers `covered` of the kept chunks
+    from the manifest and scans the rest.  `parts` is (parts in scope,
+    parts whose chunks were read).  sections_skipped sums each
     leaf's sections left unpacked (header-answered, or dead under
     earlier leaves).  The per-chunk kernel counters are None where the
     chunk pass is not the terminal's own aggregate (a select's rows
@@ -398,7 +437,8 @@ def _stats(total: int, zone: int, kept: int, compressed=None,
     st = {"total_chunks": total, "scanned_chunks": kept - (covered or 0),
           "pruned_chunks": total - kept, "bloom_pruned_chunks": zone - kept,
           "compressed_chunks": compressed, "decoded_chunks": decoded,
-          "sections_skipped": skipped}
+          "sections_skipped": skipped,
+          "total_parts": parts[0], "scanned_parts": parts[1]}
     if covered is not None:
         st["covered_chunks"] = covered
     return st
@@ -408,20 +448,27 @@ class _Front(NamedTuple):
     leaves: list          # (Leaf, index of its column in the scan)
     scan: DataFrame
     counts: Callable[[], tuple[int, ...]]
-    census: Callable[[], dict[str, tuple[int, int]]]
+    census: dict[str, tuple[int, int]]
+    parts: tuple[int, int]  # (parts in scope, parts read)
 
 
 def _front(spark: SparkSession, out_dir: str, leaves: list[Leaf],
-           cols: list[str], masks: DataFrame | None, parts=None,
+           cols: list[str], masks: DataFrame | None,
+           parts: Callable[[int], bool] | None = None,
            answer: str | None = None):
-    """The pruning front of every leaf reader.  Candidate chunks are
-    those where every leaf column's manifest row passes its leaves'
-    zone maps and Bloom probes (the ids stay distributed and are
-    broadcast into the first column's chunk scan, never collected).
-    The scan pairs each candidate's blobs of `cols` (blob b<i>, codec
-    c<i>, with the first column's part_id / chunk_seq / num_elements)
-    and left-joins `masks` as keep_mask.  `parts` (a part_id condition) restricts
-    manifest and chunks alike.
+    """The pruning front of every leaf reader, in two levels.  The
+    driver first keeps the parts in scope (`parts`, a part_id test;
+    every part when None) whose part summary (`part_summary`, read
+    with no Spark job) has a row for every leaf column, `answer` and
+    the first of `cols`, and that every leaf `admits`.  Only those
+    parts' manifest rows and chunks/part_id=N directories are read,
+    with declared schemas.  Candidate chunks are then those where
+    every leaf column's manifest row passes its leaves' zone maps and
+    Bloom probes (the ids stay distributed and are broadcast into the
+    first column's chunk scan, never collected).  The scan pairs each
+    candidate's blobs of `cols` (blob b<i>, codec c<i>, with the first
+    column's part_id / chunk_seq / num_elements) and left-joins
+    `masks` as keep_mask.
 
     `answer` names a column whose manifest `sum_val` answers a chunk
     outright when every leaf covers it (`Leaf.covers`), no keep mask
@@ -430,22 +477,20 @@ def _front(spark: SparkSession, out_dir: str, leaves: list[Leaf],
     there).
 
     Returns a `_Front`: the leaves paired with their column's index in
-    `cols`, the scan, counts() — the one manifest aggregate (total,
-    zone survivors, Bloom survivors; with `answer`, also the answered
-    chunks, their summed sum_val and their non-null rows) — and
-    census() — {column: (chunks, dict-coded chunks)}, which shows a
-    column schema evolution left out of older chunks.  Both thunks
-    reuse the manifest read (each parquet read costs a schema job)."""
-    manifest = spark.read.parquet(os.path.join(out_dir, "manifest"))
-    chunks = spark.read.parquet(os.path.join(out_dir, "chunks"))
-    if parts is not None:
-        manifest, chunks = manifest.where(parts), chunks.where(parts)
-    has_bloom = "bloom" in manifest.columns
+    `cols`, the scan, counts() — (total chunks in scope, zone
+    survivors, Bloom survivors; with `answer`, also the answered
+    chunks, their summed sum_val and their non-null rows), one
+    manifest aggregate — the census {column: (chunks, dict-coded
+    chunks)} in scope, which shows a column schema evolution left out
+    of older chunks, and (parts in scope, parts read)."""
+    from ..spark import encode_job
+    summ = part_summary(spark, out_dir)
+    scope = sorted({p for p, _ in summ if parts is None or parts(p)})
     yes = F.lit(True)
     by_col: dict[str, tuple] = {}
     for leaf in leaves:
         z, b, a = by_col.get(leaf.col, (yes, yes, yes))
-        probe = leaf.probe() if has_bloom else None
+        probe = leaf.probe()
         by_col[leaf.col] = (z & leaf.zone(),
                             b if probe is None else b & probe,
                             a & leaf.covers())
@@ -455,6 +500,30 @@ def _front(spark: SparkSession, out_dir: str, leaves: list[Leaf],
         by_col[answer] = (z, b, a & F.col("sum_val").isNotNull())
         ans = {"s": F.col("sum_val"),
                "nn": F.col("num_elements") - F.col("null_count")}
+    need = set(by_col) | set(cols[:1])
+    kept = [p for p in scope
+            if all((p, c) in summ for c in need)
+            and all(leaf.admits(summ[p, leaf.col]) for leaf in leaves)]
+    # a part's leaf-column chunks: every column a part holds has one
+    # row per chunk of that part
+    total = sum(max((summ[p, c]["chunks"] for c in by_col
+                     if (p, c) in summ), default=0) for p in scope)
+    census: dict[str, tuple[int, int]] = {}
+    for (p, c), r in summ.items():
+        if parts is None or parts(p):
+            n, d = census.get(c, (0, 0))
+            census[c] = (n + r["chunks"], d + r["dict_chunks"])
+
+    manifest = (spark.read.schema(encode_job.MANIFEST_SCHEMA)
+                .parquet(os.path.join(out_dir, "manifest"))
+                .where(F.col("part_id").isin(kept)))
+    root = os.path.join(out_dir, "chunks")
+    chunks = spark.read.schema(encode_job.CHUNK_SCHEMA)
+    if kept and encode_job._fs_exists(spark, f"{root}/part_id={kept[0]}"):
+        chunks = chunks.option("basePath", root).parquet(
+            *[f"{root}/part_id={p}" for p in kept])
+    else:  # no part survives, or a pre-v6 stream store's flat layout
+        chunks = chunks.parquet(root).where(F.col("part_id").isin(kept))
     # per chunk: z passes the zone maps, b the Bloom probes too, a is
     # covered; s / nn are the answer column's manifest sum and rows
     flags = None
@@ -501,24 +570,19 @@ def _front(spark: SparkSession, out_dir: str, leaves: list[Leaf],
             scan = scan.join(side, "chunk_id")
 
     def counts() -> tuple[int, ...]:
+        if not kept:
+            return (total, 0, 0) + ((0, 0, 0) if ans else ())
         a = F.col("a")
         r = flags.agg(
-            F.count(F.lit(1)), F.count(F.when(F.col("z"), 1)),
-            F.count(F.when(F.col("b"), 1)),
+            F.count(F.when(F.col("z"), 1)), F.count(F.when(F.col("b"), 1)),
             *([F.count(F.when(a, 1)),
                F.sum(F.when(a, F.col("s")).cast("decimal(38,0)")),
                F.sum(F.when(a, F.col("nn")))] if ans else [])).collect()[0]
-        return tuple(int(v or 0) for v in r)
-
-    def census() -> dict[str, tuple[int, int]]:
-        return {r["column"]: (int(r["n"]), int(r["n_dict"])) for r in (
-            manifest.groupBy("column")
-            .agg(F.count(F.lit(1)).alias("n"),
-                 F.sum((F.col("codec") == "dict").cast("int"))
-                 .alias("n_dict")).collect())}
+        return (total,) + tuple(int(v or 0) for v in r)
 
     return _Front([(leaf, cols.index(leaf.col)) for leaf in leaves],
-                  _join_keep(scan, masks), counts, census)
+                  _join_keep(scan, masks), counts, census,
+                  (len(scope), len(kept)))
 
 
 def pruned_count(spark: SparkSession, out_dir: str, leaves: list[Leaf],
@@ -535,7 +599,7 @@ def pruned_count(spark: SparkSession, out_dir: str, leaves: list[Leaf],
     else:
         from .snapshot import _snapshot_bounds
         cutoff = _snapshot_bounds(spark, out_dir, as_of)["part_hi"]
-        parts, masks = F.col("part_id") < cutoff, None
+        parts, masks = (lambda p: p < cutoff), None
     cols = list(dict.fromkeys(leaf.col for leaf in leaves))
     front = _front(spark, out_dir, leaves, cols, masks, parts)
     paired = front.leaves  # task closures must not capture DataFrames
@@ -558,7 +622,7 @@ def pruned_count(spark: SparkSession, out_dir: str, leaves: list[Leaf],
                  .agg(*[F.sum(k).alias(k) for k in "hcds"]).collect()[0]))
     return int(agg["h"] or 0), _stats(
         total, zone, scanned, int(agg["c"] or 0), int(agg["d"] or 0),
-        int(agg["s"] or 0))
+        int(agg["s"] or 0), parts=front.parts)
 
 
 def pruned_select(spark: SparkSession, out_dir: str, leaves: list[Leaf],
@@ -575,11 +639,11 @@ def pruned_select(spark: SparkSession, out_dir: str, leaves: list[Leaf],
     front = _front(spark, out_dir, leaves, cols,
                    _keep_mask_df(spark, out_dir))
     paired = front.leaves  # task closures must not capture DataFrames
-    # the column census and the prune counts are independent jobs
-    census, (total, zone, scanned) = _overlap(front.census, front.counts)
+    census = front.census
     n_chunks = max((n for n, _ in census.values()), default=0)
     if any(census.get(c, (0,))[0] != n_chunks for c in cols):
         return None
+    total, zone, scanned = front.counts()
     out_schema = ", ".join(
         f"{c} {dtypes.get(c, 'string').replace('int64', 'long')}"
         for c in project)
@@ -602,7 +666,7 @@ def pruned_select(spark: SparkSession, out_dir: str, leaves: list[Leaf],
                 yield pd.DataFrame(out)
 
     return (front.scan.mapInPandas(fn, out_schema),
-            _stats(total, zone, scanned))
+            _stats(total, zone, scanned, parts=front.parts))
 
 
 def pruned_sum(spark: SparkSession, out_dir: str, leaves: list[Leaf],
@@ -659,7 +723,7 @@ def pruned_sum(spark: SparkSession, out_dir: str, leaves: list[Leaf],
     found = m_nn + int(agg["n"] or 0)
     return (m_sum + int(agg["s"] or 0) if found else None), _stats(
         total, zone, kept, int(agg["c"] or 0), int(agg["d"] or 0),
-        int(agg["k"] or 0), covered=covered)
+        int(agg["k"] or 0), covered=covered, parts=front.parts)
 
 
 def store_membership(spark: SparkSession, out_dir: str, column: str,
@@ -844,24 +908,69 @@ def store_membership(spark: SparkSession, out_dir: str, column: str,
     return result, stats
 
 
-def _schema_rows(spark: SparkSession, out_dir: str) -> list[dict]:
-    """Rows of the store's table_schema parquet, position-ordered.
-
-    table_schema is store METADATA — a handful of rows regardless of
-    table size — so the driver reads it directly with pyarrow (the
+def _small_table(spark: SparkSession, path: str,
+                 schema: str | None = None) -> list[dict]:
+    """Rows of a store METADATA table (table_schema, part_summary,
+    append_log): a handful of rows per column, part or batch whatever
+    the table size, so the driver reads it directly with pyarrow (the
     Iceberg-metadata pattern: no Spark job for a KB-sized file).
     Non-local URIs fall back to a Spark read, which works everywhere."""
-    path = os.path.join(out_dir, "table_schema")
     local = path[7:] if path.startswith("file://") else path
     if "://" not in local:
         try:
             import pyarrow.parquet as pq
-            rows = pq.read_table(local).to_pylist()
-            return sorted(rows, key=lambda r: r["position"])
+            return pq.read_table(local).to_pylist()
         except Exception:
             pass  # racing rewrite / exotic layout: Spark read below
-    return [r.asDict() for r in
-            spark.read.parquet(path).orderBy("position").collect()]
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return [r.asDict() for r in reader.parquet(path).collect()]
+
+
+def _schema_rows(spark: SparkSession, out_dir: str) -> list[dict]:
+    """Rows of the store's table_schema parquet, position-ordered."""
+    return sorted(_small_table(spark, os.path.join(out_dir, "table_schema")),
+                  key=lambda r: r["position"])
+
+
+def _pick(fn, a, b):
+    """fn (min or max) of two nullable zone-map bounds, nulls
+    ignored, in Spark's order."""
+    return a if b is None else b if a is None else fn(a, b, key=_order)
+
+
+def _combine(a: dict, b: dict) -> dict:
+    """Two part summary rows of one (part_id, column) as one row."""
+    out = {**a, **{k: a[k] + b[k]
+                   for k in ("chunks", "dict_chunks", "rows", "nulls")}}
+    for k in ("min_val", "max_val", "min_str", "max_str",
+              "min_f64", "max_f64"):
+        out[k] = _pick(min if k.startswith("min") else max, a[k], b[k])
+    sm = (None if None in (a["sum_val"], b["sum_val"])
+          else a["sum_val"] + b["sum_val"])
+    out["sum_val"] = sm if sm is None or _I64MIN <= sm <= _I64MAX else None
+    return out
+
+
+def part_summary(spark: SparkSession, out_dir: str) \
+        -> dict[tuple[int, str], dict]:
+    """{(part_id, column): row} of the store's part summary
+    (`encode_job.PART_SUMMARY_SCHEMA`), read on the driver with no
+    Spark job (`_small_table`).  A stream store appends rows per
+    micro-batch under the same part ids; they combine here.  A store
+    older than format v6 has no part summary, and its rows come from
+    the manifest (one job)."""
+    from ..spark import encode_job
+    path = os.path.join(out_dir, "part_summary")
+    if encode_job._fs_exists(spark, path):
+        rows = _small_table(spark, path, encode_job.PART_SUMMARY_SCHEMA)
+    else:
+        rows = [r.asDict() for r in encode_job.summarize_parts(
+            spark.read.parquet(os.path.join(out_dir, "manifest"))).collect()]
+    out: dict[tuple[int, str], dict] = {}
+    for r in rows:
+        key = (r["part_id"], r["column"])
+        out[key] = r if key not in out else _combine(out[key], r)
+    return out
 
 
 def stored_schema(spark: SparkSession, out_dir: str) -> tuple[str, dict]:
@@ -919,7 +1028,7 @@ def pruned_topk(spark: SparkSession, out_dir: str, column: str,
                    [Leaf(column, "int64", "range", lo=threshold)],
                    [column], masks)
     if not maxes and masks is None:
-        return [], _stats(*front.counts())
+        return [], _stats(*front.counts(), parts=front.parts)
     paired = front.leaves  # task closures must not capture DataFrames
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -937,7 +1046,7 @@ def pruned_topk(spark: SparkSession, out_dir: str, column: str,
         front.counts,
         lambda: (front.scan.mapInPandas(fn, "v long")
                  .orderBy(F.desc("v")).limit(k).collect()))
-    return [int(r["v"]) for r in top], _stats(*counts)
+    return [int(r["v"]) for r in top], _stats(*counts, parts=front.parts)
 
 
 def exact_weighted_bincount(codes: np.ndarray, weights) -> np.ndarray:
@@ -1020,19 +1129,14 @@ def grouped_dict_agg(spark: SparkSession, out_dir: str, group_col: str,
     front = _front(spark, out_dir, where, cols,
                    _keep_mask_df(spark, out_dir))
     paired = front.leaves  # task closures must not capture DataFrames
-    if where:
-        # overlap the column census with the prune counts (the counts
-        # are wasted work only on the rare fallback-return path)
-        census, (_, zone, scanned) = _overlap(front.census, front.counts)
-    else:
-        census = front.census()
+    census = front.census
     n_chunks, n_dict = census.get(group_col, (0, -1))
     if n_dict != n_chunks:
         return None  # absent or mixed/non-dict group encodings: fallback
     if any(census.get(c, (0,))[0] != n_chunks for c in cols):
         return None  # column absent for some chunks (evolution)
-    if not where:
-        zone = scanned = n_chunks
+    _, zone, scanned = (front.counts() if where
+                        else (n_chunks, n_chunks, n_chunks))
     col_ix = {c: cols.index(c) for c in extra_cols}
 
     # per-agg partial columns: count -> 1 long; count_col -> 1 long;
@@ -1148,7 +1252,8 @@ def grouped_dict_agg(spark: SparkSession, out_dir: str, group_col: str,
     res = (part.groupBy("g").agg(*final)
            .withColumnRenamed("g", group_col))
     # the group codes are bincounted compressed in every scanned chunk
-    return res, {**_stats(n_chunks, zone, scanned, compressed=scanned),
+    return res, {**_stats(n_chunks, zone, scanned, compressed=scanned,
+                          parts=front.parts),
                  "where_specs": len(where), "group_kernel": True}
 
 
@@ -1169,7 +1274,7 @@ def dict_distinct(spark: SparkSession, out_dir: str,
 
     front = _front(spark, out_dir, [], [column],
                    _keep_mask_df(spark, out_dir))
-    n_chunks, n_dict = front.census().get(column, (0, 0))
+    n_chunks, n_dict = front.census.get(column, (0, 0))
     if n_chunks == 0 or n_dict != n_chunks:
         return None
 
@@ -1197,25 +1302,27 @@ def dict_distinct(spark: SparkSession, out_dir: str,
     if nulls > 0:
         df = df.unionAll(spark.range(0, 1, 1, 1).select(
             F.lit(None).cast("string").alias(column)))
-    return df, {**_stats(n_chunks, n_chunks, n_chunks, compressed=n_chunks),
+    return df, {**_stats(n_chunks, n_chunks, n_chunks, compressed=n_chunks,
+                         parts=front.parts),
                 "distinct_kernel": True}
 
 
 def manifest_min_max(spark: SparkSession, out_dir: str,
                      column: str) -> tuple[int | None, int | None]:
-    """Global MIN/MAX of a column answered from the manifest ALONE —
-    no chunk blob is ever read (min of chunk mins / max of chunk maxes;
-    SQL semantics: nulls ignored, all-null table yields (None, None)).
+    """Global MIN/MAX of a column answered from the part summary
+    ALONE, with no Spark job — no chunk blob is ever read (min of part
+    mins / max of part maxes; SQL semantics: nulls ignored, all-null
+    table yields (None, None)).
     On a store with live position deletes the result is a BOUND, not
     an exact live min/max (a deleted row may carry the extreme) — the
     same contract Iceberg's file stats keep under positional deletes;
     use read_decoded(...).agg(min, max) for the exact live answer."""
-    m = (spark.read.parquet(os.path.join(out_dir, "manifest"))
-         .where(F.col("column") == column)
-         .agg(F.min("min_val").alias("mn"), F.max("max_val").alias("mx"))
-         .collect()[0])
-    return (None if m["mn"] is None else int(m["mn"]),
-            None if m["mx"] is None else int(m["mx"]))
+    mn = mx = None
+    for (_, c), r in part_summary(spark, out_dir).items():
+        if c == column:
+            mn = _pick(min, mn, r["min_val"])
+            mx = _pick(max, mx, r["max_val"])
+    return mn, mx
 
 
 def read_decoded(spark: SparkSession, out_dir: str, schema: str | None = None,
@@ -1258,12 +1365,13 @@ def manifest_row_count(spark: SparkSession, out_dir: str) -> int:
 
 def manifest_null_count(spark: SparkSession, out_dir: str,
                         column: str) -> tuple[int, int]:
-    """(null_rows, non_null_rows) for a column answered from the
-    manifest ALONE, exact on SCHEMA-EVOLVED stores too: parts encoded
-    before the column existed carry no manifest rows for it, and every
-    one of their rows decodes as a back-filled NULL — those are counted
-    via the store's position-0 column, which every part has (columns
-    are only ever added, never removed).
+    """(null_rows, non_null_rows) for a column answered from metadata
+    ALONE, exact on SCHEMA-EVOLVED stores too: parts encoded before the
+    column existed carry no manifest rows for it, and every one of
+    their rows decodes as a back-filled NULL — those are counted via
+    the store's position-0 column, which every part has (columns are
+    only ever added, never removed).  A store with no live deletes
+    answers from the part summary with no Spark job.
 
     On a store with live position deletes the answer stays exact and
     stays CHEAP: clean chunks still come from the manifest; only the
@@ -1271,28 +1379,30 @@ def manifest_null_count(spark: SparkSession, out_dir: str,
     decode to intersect their null mask with the keep mask, and
     evolved parts' virtual nulls subtract the part's deleted-row count
     from the sidecar metadata."""
-    m = spark.read.parquet(os.path.join(out_dir, "manifest"))
     first_col = _schema_rows(spark, out_dir)[0]["name"]
-    rows = (m.where(F.col("column") == first_col)
-            .groupBy("part_id")
-            .agg(F.sum("num_elements").alias("part_rows")))
-    col_man = m.where(F.col("column") == column)
     from ..spark import delete_job
     # check_empty=False: skips the one-job zero-row probe; an
     # empty-but-present sidecar then flows through the delete path,
     # where empty joins yield the same answer
     mm = delete_job.merged_masks(spark, out_dir, check_empty=False)
     if mm is None:
-        col_stats = (col_man.groupBy("part_id")
-                     .agg(F.sum("null_count").alias("nulls"),
-                          F.sum("num_elements").alias("elems")))
-        agg = (rows.join(col_stats, "part_id", "left")
-               .agg(F.sum(F.coalesce(F.col("nulls"),
-                                     F.col("part_rows"))).alias("n"),
-                    F.sum(F.coalesce(F.col("elems") - F.col("nulls"),
-                                     F.lit(0))).alias("nn"))
-               .collect()[0])
-        return int(agg["n"] or 0), int(agg["nn"] or 0)
+        summ = part_summary(spark, out_dir)
+        n = nn = 0
+        for (p, c), r in summ.items():
+            if c != first_col:
+                continue
+            own = summ.get((p, column))
+            if own is None:  # an evolved part: all rows virtual NULLs
+                n += r["rows"]
+            else:
+                n, nn = n + own["nulls"], nn + own["rows"] - own["nulls"]
+        return n, nn
+
+    m = spark.read.parquet(os.path.join(out_dir, "manifest"))
+    rows = (m.where(F.col("column") == first_col)
+            .groupBy("part_id")
+            .agg(F.sum("num_elements").alias("part_rows")))
+    col_man = m.where(F.col("column") == column)
 
     # masks stay DISTRIBUTED (the same _keep_mask_df join every pruned
     # reader uses): the former driver-side mask collect put

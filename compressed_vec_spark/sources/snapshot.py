@@ -44,26 +44,15 @@ def _log_rows(spark: SparkSession, out_dir: str) -> list[dict]:
     new batch reserves strictly above every earlier reservation).
 
     The log is store METADATA — one row per append batch — so the
-    driver reads it directly with pyarrow (the same Iceberg-metadata
-    pattern as encoded_table._schema_rows: no Spark job for a KB-sized
-    file).  Non-local URIs fall back to a Spark read."""
+    driver reads it with no Spark job (encoded_table._small_table)."""
     from ..spark.encode_job import _fs_exists
+    from .encoded_table import _small_table
     path = os.path.join(out_dir, "append_log")
     if not _fs_exists(spark, path):
         return []
-    local = path[7:] if path.startswith("file://") else path
-    rows = None
-    if "://" not in local:
-        try:
-            import pyarrow.parquet as pq
-            rows = pq.read_table(local).to_pylist()
-        except Exception:
-            rows = None  # racing rewrite / exotic layout: Spark below
-    if rows is None:
-        rows = [r.asDict() for r in spark.read.parquet(path).collect()]
     return sorted(
         ({"batch_id": r["batch_id"], "part_offset": int(r["part_offset"]),
-          "n_parts": int(r["n_parts"])} for r in rows),
+          "n_parts": int(r["n_parts"])} for r in _small_table(spark, path)),
         key=lambda d: d["part_offset"])
 
 

@@ -208,9 +208,8 @@ def compact_store(spark: SparkSession, src_dir: str, dst_dir: str,
     (out.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("part_id").parquet(os.path.join(dst_dir, "chunks")))
-    written = spark.read.parquet(os.path.join(dst_dir, "chunks"))
-    (written.select(*encode_job.MANIFEST_COLS)
-        .write.mode("overwrite").parquet(os.path.join(dst_dir, "manifest")))
+    encode_job.write_manifest(
+        spark, dst_dir, spark.read.parquet(os.path.join(dst_dir, "chunks")))
 
     sizes = mapping_pdf.groupby(["part_id", "new_seq"]).size()
     return {

@@ -88,9 +88,7 @@ def merged_masks(spark: SparkSession, out_dir: str,
         return None
     if exclude_delete_id is not None:
         d = d.where(F.col("delete_id") != exclude_delete_id)
-    if not check_empty:
-        pass
-    elif not d.take(1):
+    if check_empty and not d.take(1):
         return None
 
     def _or(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
@@ -129,10 +127,7 @@ def delete_rows(spark: SparkSession, out_dir: str, leaves: list,
     Returns the pruned-read stats record plus affected_chunks and
     rows_deleted."""
     from ..sources import encoded_table
-    parts = None
-    if exclude_parts is not None:
-        lo, hi = exclude_parts
-        parts = (F.col("part_id") < lo) | (F.col("part_id") >= hi)
+    lo, hi = exclude_parts or (0, 0)
     # rows other batches already deleted are the scan's keep mask, so
     # sum(n_deleted) across the sidecar is exact under overlapping
     # predicates; the CURRENT delete_id is left out of that view so a
@@ -144,7 +139,7 @@ def delete_rows(spark: SparkSession, out_dir: str, leaves: list,
         spark, out_dir, leaves, cols,
         None if prior is None
         else prior.select("chunk_id", F.col("mask").alias("keep_mask")),
-        parts)
+        lambda p: not lo <= p < hi)
     paired = front.leaves  # task closures must not capture DataFrames
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -177,7 +172,7 @@ def delete_rows(spark: SparkSession, out_dir: str, leaves: list,
                .where(F.col("delete_id") == delete_id)
                .agg(F.count("*").alias("chunks"),
                     F.sum("n_deleted").alias("rows")).collect()[0])
-    return {**encoded_table._stats(total, zone, scanned),
+    return {**encoded_table._stats(total, zone, scanned, parts=front.parts),
             "affected_chunks": int(written["chunks"] or 0),
             "rows_deleted": int(written["rows"] or 0)}
 
@@ -222,7 +217,8 @@ def delete_where_in(spark: SparkSession, out_dir: str, column: str,
     from ..sources.encoded_table import Leaf, _stats
     vals = [v for v in values if v is not None]
     if not vals:
-        return {**_stats(0, 0, 0), "affected_chunks": 0, "rows_deleted": 0}
+        return {**_stats(0, 0, 0, parts=(0, 0)), "affected_chunks": 0,
+                "rows_deleted": 0}
     _require_string_column(spark, out_dir, column, "delete_where_in")
     return delete_rows(spark, out_dir,
                        [Leaf(column, "string", "in", values=tuple(vals))],
@@ -291,20 +287,18 @@ def delete_where_range(spark: SparkSession, out_dir: str, column: str,
 
 
 def delete_stats(spark: SparkSession, out_dir: str) -> dict:
-    """{total_rows, deleted_rows, live_rows} from manifest + sidecar
-    METADATA alone — no chunk blob is read at any store size.  Row
-    totals come from the store's position-0 column, which every part
-    carries (schema evolution only ever adds columns)."""
-    from ..sources.encoded_table import _overlap, _schema_rows
-    m = spark.read.parquet(os.path.join(out_dir, "manifest"))
+    """{total_rows, deleted_rows, live_rows} from part summary +
+    sidecar METADATA alone — no chunk blob is read at any store size,
+    and a store with no deletes runs no Spark job.  Row totals come
+    from the store's position-0 column, which every part carries
+    (schema evolution only ever adds columns)."""
+    from ..sources.encoded_table import _schema_rows, part_summary
     first_col = _schema_rows(spark, out_dir)[0]["name"]
+    total = sum(r["rows"] for (_, c), r in
+                part_summary(spark, out_dir).items() if c == first_col)
     d = _read_deletes(spark, out_dir)
-    # the manifest total and the sidecar sum are independent jobs
-    total, deleted = _overlap(
-        lambda: int(m.where(F.col("column") == first_col)
-                    .agg(F.sum("num_elements")).collect()[0][0] or 0),
-        lambda: (0 if d is None
-                 else int(d.agg(F.sum("n_deleted")).collect()[0][0] or 0)))
+    deleted = (0 if d is None
+               else int(d.agg(F.sum("n_deleted")).collect()[0][0] or 0))
     return {"total_rows": total, "deleted_rows": deleted,
             "live_rows": total - deleted}
 
@@ -382,8 +376,7 @@ def materialize_deletes(spark: SparkSession, src_dir: str, dst_dir: str,
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("part_id").parquet(os.path.join(dst_dir, "chunks")))
     written = spark.read.parquet(os.path.join(dst_dir, "chunks"))
-    (written.select(*encode_job.MANIFEST_COLS)
-        .write.mode("overwrite").parquet(os.path.join(dst_dir, "manifest")))
+    encode_job.write_manifest(spark, dst_dir, written)
 
     n_aff = masks.count()
     return {"affected_chunk_groups": int(n_aff),

@@ -59,16 +59,68 @@ MANIFEST_COLS = ["part_id", "chunk_seq", "chunk_id", "column", "codec",
                  "min_str", "max_str", "min_f64", "max_f64", "bloom",
                  "encode_sec"]
 
+MANIFEST_SCHEMA = ", ".join(f for f in CHUNK_SCHEMA.split(", ")
+                            if f.split()[0] in MANIFEST_COLS)
+
+# The part-level zone maps and counts the driver reads with no Spark job
+# (encoded_table.part_summary): each manifest write adds one row per
+# (part_id, column) it wrote (write_manifest).  sum_val is NULL when some
+# chunk's is, or when the total leaves int64.
+PART_SUMMARY_SCHEMA = (
+    "part_id int, column string, chunks long, dict_chunks long, "
+    "rows long, nulls long, min_val long, max_val long, "
+    "min_str string, max_str string, min_f64 double, max_f64 double, "
+    "sum_val long"
+)
+
 # Bumped whenever CHUNK_SCHEMA / MANIFEST_COLS change shape.  v2 added
 # sum_val + null_count; v3 added min_str/max_str (string-column chunk
 # stats enabling string-predicate chunk pruning over the store); v4
 # added min_f64/max_f64 (float-column chunk stats — range predicates
 # over xor_f64/vec_f32 columns prune at the manifest level); v5 added
 # bloom (per-chunk Bloom filters on key-like string/binary columns —
-# point-lookup pruning where zone maps can't help, codecs/bloom.py).
+# point-lookup pruning where zone maps can't help, codecs/bloom.py); v6
+# added part_summary (PART_SUMMARY_SCHEMA) and partitions every chunks
+# dataset, streamed ones too, by part_id.
 # Stores written before versioning existed have no store_meta directory
 # and read as None.
-STORE_FORMAT_VERSION = 5
+STORE_FORMAT_VERSION = 6
+
+_I64 = (1 << 63) - 1
+
+
+def summarize_parts(manifest: DataFrame) -> DataFrame:
+    """PART_SUMMARY_SCHEMA rows of a manifest DataFrame: per (part_id,
+    column) the chunk and dict-chunk counts, rows, nulls, the bounds of
+    every zone-map pair and the sum.  The rows are metadata (one per
+    chunk and column), so one task folds them: a single partition
+    already meets the grouping, and the aggregate runs with no shuffle."""
+    total = F.sum(F.col("sum_val").cast("decimal(38,0)"))
+    return manifest.coalesce(1).groupBy("part_id", "column").agg(
+        F.count(F.lit(1)).alias("chunks"),
+        F.count(F.when(F.col("codec") == "dict", 1)).alias("dict_chunks"),
+        F.sum("num_elements").alias("rows"),
+        F.sum("null_count").alias("nulls"),
+        *[(F.min if c.startswith("min") else F.max)(c).alias(c)
+          for c in ("min_val", "max_val", "min_str", "max_str",
+                    "min_f64", "max_f64")],
+        F.when((F.count("sum_val") == F.count(F.lit(1)))
+               & total.between(-_I64 - 1, _I64),
+               total.cast("long")).alias("sum_val"))
+
+
+def write_manifest(spark: SparkSession, out_dir: str, chunks_df: DataFrame,
+                   mode: str = "overwrite") -> None:
+    """The one manifest writer: `chunks_df`'s manifest rows to
+    {out_dir}/manifest and their per-part summary to
+    {out_dir}/part_summary, both in `mode` ("overwrite" re-derives the
+    whole store's metadata from its chunks; "append" adds a stream
+    micro-batch's, whose part ids repeat earlier batches' — readers
+    combine summary rows per (part_id, column))."""
+    man = chunks_df.select(*MANIFEST_COLS)
+    man.write.mode(mode).parquet(os.path.join(out_dir, "manifest"))
+    (summarize_parts(man).write.mode(mode)
+        .parquet(os.path.join(out_dir, "part_summary")))
 
 
 def _store_version(spark: SparkSession, out_dir: str) -> int | None:
@@ -278,7 +330,6 @@ def encode_table(spark: SparkSession, df: DataFrame, out_dir: str,
 
     skip_parts: set[int] = set()
     chunks_path = os.path.join(out_dir, "chunks")
-    manifest_path = os.path.join(out_dir, "manifest")
     if resume and write and _fs_exists(spark, chunks_path):
         # a resume APPENDS to the existing chunks dataset, so the
         # on-disk format must match what this build writes — mixing
@@ -336,9 +387,7 @@ def encode_table(spark: SparkSession, df: DataFrame, out_dir: str,
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("part_id").parquet(chunks_path))
     # manifest derived from the written chunks (no double encode)
-    written = spark.read.parquet(chunks_path)
-    (written.select(*MANIFEST_COLS)
-            .write.mode("overwrite").parquet(manifest_path))
+    write_manifest(spark, out_dir, spark.read.parquet(chunks_path))
     from ..sources.snapshot import BASE_SNAPSHOT
     _write_commit_marker(spark, out_dir, BASE_SNAPSHOT)
     return spark.read.parquet(chunks_path)
@@ -464,8 +513,7 @@ def append_table(spark: SparkSession, df: DataFrame, out_dir: str,
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("part_id").parquet(chunks_path))
     written = spark.read.parquet(chunks_path)
-    (written.select(*MANIFEST_COLS)
-            .write.mode("overwrite").parquet(os.path.join(out_dir, "manifest")))
+    write_manifest(spark, out_dir, written)
     _write_commit_marker(spark, out_dir, batch_id)
     return written
 
@@ -515,14 +563,16 @@ def store_stats(spark: SparkSession, out_dir: str) -> dict:
     """DESCRIBE/ANALYZE for an encoded store from METADATA alone — no
     chunk blob is read at any store size.  Per column: declared type,
     codecs in use, chunk count, raw/encoded bytes + ratio, rows, null
-    count, and the type-matched global [min, max] bounds (int columns
-    min_val/max_val, strings min_str/max_str, floats min_f64/max_f64 —
+    count, encode seconds summed over its chunks (encode_s; the
+    manifest keeps each chunk's), and the type-matched global [min,
+    max] bounds (int columns min_val/max_val, strings
+    min_str/max_str, floats min_f64/max_f64 —
     the same zone-map columns the pruned readers consult, so the output
     doubles as a pruning-health check: a scattered column shows
     domain-wide bounds on every chunk).  Plus store format version,
     part and snapshot counts, and live-delete totals."""
     from ..sources import snapshot as snap
-    from ..sources.encoded_table import stored_schema
+    from ..sources.encoded_table import part_summary, stored_schema
     from . import delete_job
     ver = _store_version(spark, out_dir)
     if ver != STORE_FORMAT_VERSION:
@@ -539,6 +589,7 @@ def store_stats(spark: SparkSession, out_dir: str) -> dict:
                  F.sum("encoded_bytes").alias("enc"),
                  F.sum("num_elements").alias("rows"),
                  F.sum("null_count").alias("nulls"),
+                 F.sum("encode_sec").alias("encode_s"),
                  F.min("min_val").alias("mn_i"), F.max("max_val").alias("mx_i"),
                  F.min("min_str").alias("mn_s"), F.max("max_str").alias("mx_s"),
                  F.min("min_f64").alias("mn_f"), F.max("max_f64").alias("mx_f"))
@@ -559,7 +610,7 @@ def store_stats(spark: SparkSession, out_dir: str) -> dict:
             "raw_bytes": int(r["raw"]), "encoded_bytes": int(r["enc"]),
             "ratio": (r["raw"] / r["enc"]) if r["enc"] else None,
             "rows": int(r["rows"]), "nulls": int(r["nulls"] or 0),
-            "min": mn, "max": mx,
+            "min": mn, "max": mx, "encode_s": float(r["encode_s"] or 0.0),
         }
     # schema-evolved columns: parts encoded before a column existed
     # carry no manifest rows for it, yet every one of their rows
@@ -579,7 +630,7 @@ def store_stats(spark: SparkSession, out_dir: str) -> dict:
         "columns": cols,
         "raw_bytes": raw, "encoded_bytes": enc,
         "ratio": raw / enc if enc else None,
-        "parts": m.select("part_id").distinct().count(),
+        "parts": len({p for p, _ in part_summary(spark, out_dir)}),
         "snapshots": len(snap.list_snapshots(spark, out_dir)),
         **delete_job.delete_stats(spark, out_dir),
     }

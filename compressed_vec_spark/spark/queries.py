@@ -1078,14 +1078,16 @@ def analytics_over_encoded(spark, sf_dir) -> DataFrame:
             "l_returnflag", "l_linestatus",
             F.col("l_quantity").cast("long").alias("qty"))
         # chunk count is a property of the DATA, not the worker grid:
-        # one chunk per 64k-row encode batch (footer row count, no
+        # one chunk per Arrow encode batch (footer row count, no
         # job), bounded by 4x the grid so huge tables don't explode
         # the chunk table.  A fixed 8 capped the TIMED decode at
         # 8-way: 1.9 -> 1.4 s at the 6M-row replica, unchanged at
         # sf0.1 (600k rows -> 9 chunks).
         rows = parquet_num_rows(
             os.path.join(sf_dir, "lineitem.parquet")) or 0
-        parts = int(min(max(rows // 65536, 8),
+        batch = int(spark.conf.get(
+            "spark.sql.execution.arrow.maxRecordsPerBatch", "65536"))
+        parts = int(min(max(rows // batch, 8),
                         4 * spark.sparkContext.defaultParallelism))
         encode_job.encode_table(spark, df, out, url_col=None,
                                 num_partitions=parts, resume=False)

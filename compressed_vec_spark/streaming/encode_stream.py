@@ -28,7 +28,6 @@ def start_encode_stream(spark: SparkSession, source: DataFrame, out_dir: str,
     """source: a streaming DataFrame with web-table schema.  Returns the
     StreamingQuery; encoded chunks land under {out_dir}/chunks."""
     chunks_path = os.path.join(out_dir, "chunks")
-    manifest_path = os.path.join(out_dir, "manifest")
 
     # same guard as the batch resume path: appending this build's chunk
     # schema onto a store written by a different format version would
@@ -54,23 +53,38 @@ def start_encode_stream(spark: SparkSession, source: DataFrame, out_dir: str,
             .parquet(os.path.join(out_dir, "store_meta")))
 
     def process_batch(batch_df: DataFrame, batch_id: int):
-        if batch_df.isEmpty():
-            return
-        enc = encode_job.encode_table(
-            spark, batch_df, out_dir="", write=False, columns=columns,
-            num_partitions=max(spark.sparkContext.defaultParallelism, 2))
-        # prefix chunk ids with the micro-batch id => idempotent replay
-        enc = enc.withColumn(
-            "chunk_id", F.concat(F.lit(f"b{batch_id:08d}-"), F.col("chunk_id")))
-        enc.write.mode("append").parquet(chunks_path)
-        (enc.select(*encode_job.MANIFEST_COLS)
-            .write.mode("append").parquet(manifest_path))
+        encode_micro_batch(spark, batch_df, batch_id, out_dir, columns)
 
     return (source.writeStream
             .foreachBatch(process_batch)
             .option("checkpointLocation", os.path.join(out_dir, "_checkpoint"))
             .trigger(processingTime=f"{trigger_seconds} seconds")
             .start())
+
+
+def encode_micro_batch(spark: SparkSession, batch_df: DataFrame,
+                       batch_id: int, out_dir: str,
+                       columns: list[str] | None = None) -> None:
+    """Encode one micro-batch and append its chunks (under the store's
+    chunks/part_id=N directories), manifest rows and part summary rows.
+    Every batch restarts part ids at 0, so chunk ids carry the batch id
+    (idempotent replay), and readers combine a part's summary rows.
+    The encoded batch is persisted for its three writes, so it is
+    encoded once."""
+    if batch_df.isEmpty():
+        return
+    enc = encode_job.encode_table(
+        spark, batch_df, out_dir="", write=False, columns=columns,
+        num_partitions=max(spark.sparkContext.defaultParallelism, 2))
+    enc = enc.withColumn(
+        "chunk_id", F.concat(F.lit(f"b{batch_id:08d}-"), F.col("chunk_id"))
+    ).persist()
+    try:
+        (enc.write.mode("append").partitionBy("part_id")
+            .parquet(os.path.join(out_dir, "chunks")))
+        encode_job.write_manifest(spark, out_dir, enc, mode="append")
+    finally:
+        enc.unpersist()
 
 
 def streaming_dedup(source: DataFrame, hash_col: str = "text") -> DataFrame:

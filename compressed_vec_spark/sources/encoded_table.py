@@ -44,47 +44,16 @@ def _overlap(*thunks):
         return [f.result() for f in futures]
 
 
-def _keep_mask_df(spark: SparkSession, out_dir: str) -> DataFrame | None:
-    """(chunk_id, keep_mask) DataFrame of OR-merged DELETE bitmasks for
-    every delete-affected chunk; None for a store with no live deletes.
-
-    The masks stay DISTRIBUTED: every pruned_* reader left-joins this on
-    chunk_id into its chunk scan (mirroring the write path,
-    spark/delete_job.py delete_rows), so each task sees only its own
-    chunks' masks.  The earlier driver-collected dict put
-    O(affected_chunks x rows/8) bytes on the driver and in every task
-    closure — ~125 GB for a corpus-wide delete at 10^12 rows; the join
-    is AQE-planned (broadcast when small, shuffle when wide) and has no
-    driver ceiling.
-
-    Chunks with no deletes keep their compressed fast path untouched
-    (keep_mask is NULL after the left join); only affected chunks fall
-    back to a positional decode ANDed with the keep mask.  Snapshot
-    (as_of) reads skip the join by design — deletes apply to the
-    current table only (spark/delete_job.py contract)."""
-    from ..spark import delete_job
-    m = delete_job.merged_masks(spark, out_dir, check_empty=False)
-    if m is None:
-        return None
-    return m.select("chunk_id", F.col("mask").alias("keep_mask"))
-
-
 def _join_keep(chunks_df: DataFrame, masks: DataFrame | None) -> DataFrame:
-    """Attach the `keep_mask` column to a chunk scan: left join when the
-    store has live deletes, a NULL literal otherwise (so kernels read
-    one uniform column either way)."""
+    """Attach the `keep_mask` column of `delete_job.live_masks` to a
+    chunk scan: a left join when the store has live deletes (each task
+    sees only its own chunks' masks; none reach the driver), a NULL
+    literal otherwise, so kernels read one uniform column either way."""
     if masks is None:
         return chunks_df.withColumn("keep_mask",
                                     F.lit(None).cast("binary"))
+    masks = masks.select("chunk_id", "keep_mask")
     return chunks_df.join(masks, "chunk_id", "left")
-
-
-def _keep_bools(packed: bytes, n: int) -> np.ndarray:
-    """Packed delete mask -> boolean KEEP vector of length n (the
-    sidecar's single mask decoding, owned by delete_job so the two
-    layers can never drift)."""
-    from ..spark.delete_job import _keep_mask
-    return _keep_mask(packed, n)
 
 
 def chunk_stats_for(series: pd.Series) \
@@ -392,33 +361,26 @@ def _chunk_mask(leaves: list[tuple[Leaf, int]],
     `leaves` pairs each leaf with the index i of its column's blob
     `b<i>` / codec `c<i>` in the row, as `_front` returns them.
     Returns (per-section masks, or None when no row survives;
-    answered compressed; sections not unpacked).  Each leaf skips the
-    sections dead under the leaves before it, and a dead chunk stops
-    the AND.  A delete-affected chunk (non-NULL keep_mask) decodes its
-    leaves and AND-s the keep mask in.  With no leaves every live row
-    matches."""
-    km = row.keep_mask
-    acc, compressed, skipped = None, km is None, 0
-    for leaf, i in leaves:
-        blob, codec = getattr(row, "b%d" % i), getattr(row, "c%d" % i)
-        if km is None:
-            m, comp, sk = leaf.mask(blob, codec, None if acc is None
-                                    else ~acc.any(axis=1))
-            compressed, skipped = compressed and comp, skipped + sk
-        else:
-            m = leaf.decoded(blob)
-        acc = m if acc is None else acc & m
-        if not acc.any():
-            return None, compressed, skipped
+    answered compressed; sections not unpacked).  A delete-affected
+    chunk (non-NULL keep_mask) starts from its live rows.  Each leaf
+    skips the sections dead under what came before it, and a dead
+    chunk stops the AND.  With no leaves every live row matches."""
     n = int(row.num_elements)
-    if km is not None:
-        acc = _sections((np.ones(n, dtype=bool) if acc is None else acc)
-                        & _keep_bools(bytes(km), n))
-        if not acc.any():
+    acc, compressed, skipped = None, True, 0
+    if row.keep_mask is not None:
+        from ..spark.delete_job import _keep_mask
+        acc = _sections(_keep_mask(bytes(row.keep_mask), n))
+    for leaf, i in leaves:
+        if acc is not None and not acc.any():
             return None, compressed, skipped
-    elif acc is None:
-        acc = _sections(np.ones(n, dtype=bool))
-    return acc, compressed, skipped
+        m, comp, sk = leaf.mask(getattr(row, "b%d" % i),
+                                getattr(row, "c%d" % i),
+                                None if acc is None else ~acc.any(axis=1))
+        compressed, skipped = compressed and comp, skipped + sk
+        acc = m if acc is None else acc & m
+    if acc is None:
+        return _sections(np.ones(n, dtype=bool)), compressed, skipped
+    return (acc if acc.any() else None), compressed, skipped
 
 
 def _stats(total: int, zone: int, kept: int, compressed=None,
@@ -447,6 +409,7 @@ def _stats(total: int, zone: int, kept: int, compressed=None,
 class _Front(NamedTuple):
     leaves: list          # (Leaf, index of its column in the scan)
     scan: DataFrame
+    ids: DataFrame        # chunk_id of every scanned chunk, from the manifest
     counts: Callable[[], tuple[int, ...]]
     census: dict[str, tuple[int, int]]
     parts: tuple[int, int]  # (parts in scope, parts read)
@@ -477,7 +440,8 @@ def _front(spark: SparkSession, out_dir: str, leaves: list[Leaf],
     there).
 
     Returns a `_Front`: the leaves paired with their column's index in
-    `cols`, the scan, counts() — (total chunks in scope, zone
+    `cols`, the scan, the scanned chunk ids (manifest rows only),
+    counts() — (total chunks in scope, zone
     survivors, Bloom survivors; with `answer`, also the answered
     chunks, their summed sum_val and their non-null rows), one
     manifest aggregate — the census {column: (chunks, dict-coded
@@ -557,6 +521,8 @@ def _front(spark: SparkSession, out_dir: str, leaves: list[Leaf],
         keep = keep & ~F.col("a")
     cand = (None if flags is None
             else F.broadcast(flags.where(keep).select("chunk_id")))
+    ids = (manifest.where(F.col("column") == cols[0]).select("chunk_id")
+           if cand is None else cand)
 
     scan = None
     for i, c in enumerate(cols):
@@ -581,7 +547,7 @@ def _front(spark: SparkSession, out_dir: str, leaves: list[Leaf],
         return (total,) + tuple(int(v or 0) for v in r)
 
     return _Front([(leaf, cols.index(leaf.col)) for leaf in leaves],
-                  _join_keep(scan, masks), counts, census,
+                  _join_keep(scan, masks), ids, counts, census,
                   (len(scope), len(kept)))
 
 
@@ -594,8 +560,9 @@ def pruned_count(spark: SparkSession, out_dir: str, leaves: list[Leaf],
     (sources/snapshot.py): the part_id cutoff restricts manifest and
     chunks, and deletes, which postdate snapshots by contract, are not
     applied.  The manifest aggregate overlaps the chunk scan."""
+    from ..spark import delete_job
     if as_of is None:
-        parts, masks = None, _keep_mask_df(spark, out_dir)
+        parts, masks = None, delete_job.live_masks(spark, out_dir)
     else:
         from .snapshot import _snapshot_bounds
         cutoff = _snapshot_bounds(spark, out_dir, as_of)["part_hi"]
@@ -634,10 +601,11 @@ def pruned_select(spark: SparkSession, out_dir: str, leaves: list[Leaf],
     of the task.  Returns None when a needed column is missing from
     some chunk (schema evolution: an inner join would drop those
     chunks' NULL-backfilled rows) — callers fall back."""
+    from ..spark import delete_job
     _, dtypes = stored_schema(spark, out_dir)
     cols = list(dict.fromkeys([leaf.col for leaf in leaves] + list(project)))
     front = _front(spark, out_dir, leaves, cols,
-                   _keep_mask_df(spark, out_dir))
+                   delete_job.live_masks(spark, out_dir))
     paired = front.leaves  # task closures must not capture DataFrames
     census = front.census
     n_chunks = max((n for n, _ in census.values()), default=0)
@@ -682,9 +650,10 @@ def pruned_sum(spark: SparkSession, out_dir: str, leaves: list[Leaf],
     cross chunks in decimal(38,0), so nothing wraps.  Returns (None
     when no non-null value matched, as SQL's SUM; the stats record
     with covered_chunks)."""
+    from ..spark import delete_job
     cols = list(dict.fromkeys([leaf.col for leaf in leaves] + [col]))
     front = _front(spark, out_dir, leaves, cols,
-                   _keep_mask_df(spark, out_dir), answer=col)
+                   delete_job.live_masks(spark, out_dir), answer=col)
     paired = front.leaves  # task closures must not capture DataFrames
     j = cols.index(col)
 
@@ -761,6 +730,8 @@ def store_membership(spark: SparkSession, out_dir: str, column: str,
     NULL probe values are never equal to anything (SQL semantics):
     present = false without probing."""
     from ..codecs import bloom as bloom_codec, dictionary
+    from ..spark import delete_job
+    keep = delete_job._keep_mask
 
     nn = probes.where(F.col(value_col).isNotNull())
 
@@ -825,7 +796,7 @@ def store_membership(spark: SparkSession, out_dir: str, column: str,
          .where(F.col("column") == column)
          .select("chunk_id", "codec", "blob")
          .join(grouped, "chunk_id")),
-        _keep_mask_df(spark, out_dir))
+        delete_job.live_masks(spark, out_dir))
 
     def verify_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -849,8 +820,7 @@ def store_membership(spark: SparkSession, out_dir: str, column: str,
                 elif codec == "dict":
                     payload = bytes(blob)[4:]
                     codes = dictionary.codes(payload)
-                    live = set(codes[_keep_bools(km, len(codes))]
-                               .tolist())
+                    live = set(codes[keep(km, len(codes))].tolist())
                     found = np.array(
                         [(lambda c: bool(c) and c in live)(
                             dictionary.code_of(payload, v))
@@ -859,7 +829,7 @@ def store_membership(spark: SparkSession, out_dir: str, column: str,
                     s = pd.Series(
                         chunk_codec.decode_column(bytes(blob)))
                     if km is not None:
-                        s = s[_keep_bools(km, len(s))]
+                        s = s[keep(km, len(s))]
                     s = s.dropna()
                     present = set(s)
                     if len(s) and isinstance(s.iloc[0], bytes):
@@ -1009,9 +979,10 @@ def pruned_topk(spark: SparkSession, out_dir: str, column: str,
         raise ValueError(
             f"pruned_topk: column {column!r} has dtype "
             f"{dtypes.get(column)!r}; integer columns only")
+    from ..spark import delete_job
     col_man = (spark.read.parquet(os.path.join(out_dir, "manifest"))
                .where(F.col("column") == column))
-    masks = _keep_mask_df(spark, out_dir)
+    masks = delete_job.live_masks(spark, out_dir)
     # metadata-only job: the k largest chunk maxima.  The threshold is
     # sound only if each contributing max is a LIVE value, so delete-
     # affected chunks (whose manifest max may be a deleted row) are
@@ -1114,6 +1085,7 @@ def grouped_dict_agg(spark: SparkSession, out_dir: str, group_col: str,
     chunk missing either column — e.g. pre-evolution chunks) — callers
     fall back to the decoded view."""
     from ..codecs import dictionary
+    from ..spark import delete_job
 
     where = list(where or [])
     extra_cols = []
@@ -1127,7 +1099,7 @@ def grouped_dict_agg(spark: SparkSession, out_dir: str, group_col: str,
     cols = list(dict.fromkeys([group_col] + extra_cols
                               + [leaf.col for leaf in where]))
     front = _front(spark, out_dir, where, cols,
-                   _keep_mask_df(spark, out_dir))
+                   delete_job.live_masks(spark, out_dir))
     paired = front.leaves  # task closures must not capture DataFrames
     census = front.census
     n_chunks, n_dict = census.get(group_col, (0, -1))
@@ -1271,9 +1243,11 @@ def dict_distinct(spark: SparkSession, out_dir: str,
     |dict|) tiny rows — never N rows.  Returns None when the column
     is not 100% dict-coded (callers fall back)."""
     from ..codecs import dictionary
+    from ..spark import delete_job
+    keep = delete_job._keep_mask
 
     front = _front(spark, out_dir, [], [column],
-                   _keep_mask_df(spark, out_dir))
+                   delete_job.live_masks(spark, out_dir))
     n_chunks, n_dict = front.census.get(column, (0, 0))
     if n_chunks == 0 or n_dict != n_chunks:
         return None
@@ -1289,7 +1263,7 @@ def dict_distinct(spark: SparkSession, out_dir: str,
                     vals.update(heap)
                     continue
                 codes = dictionary.codes(payload)
-                kb = _keep_bools(bytes(km), len(codes))
+                kb = keep(bytes(km), len(codes))
                 counts = np.bincount(codes[kb].astype(np.int64),
                                      minlength=len(heap) + 1)
                 vals.update(v for c, v in enumerate(heap, 1)
@@ -1329,17 +1303,18 @@ def read_decoded(spark: SparkSession, out_dir: str, schema: str | None = None,
                  dtypes: dict[str, str] | None = None,
                  apply_deletes: bool = True) -> DataFrame:
     """Full decoded view of an encoded table (see decode_job for the
-    chunk-zip mechanics).  With schema=None the store describes itself
-    via its table_schema file.  Position deletes (spark/delete_job.py)
-    are subtracted by default — apply_deletes=False reads the raw
+    chunk-zip mechanics), its chunks read with the declared schema.
+    With schema=None the store describes itself via its table_schema
+    file.  The live deletion vectors (`delete_job.live_masks`) are
+    subtracted by default — apply_deletes=False reads the raw
     pre-delete rows (the view a snapshot read also sees)."""
-    from ..spark import decode_job, delete_job
+    from ..spark import decode_job, delete_job, encode_job
     if schema is None:
         schema, auto_dtypes = stored_schema(spark, out_dir)
         dtypes = dtypes or auto_dtypes
-    chunks = spark.read.parquet(os.path.join(out_dir, "chunks"))
-    masks = (delete_job.merged_masks(spark, out_dir)
-             if apply_deletes else None)
+    chunks = (spark.read.schema(encode_job.CHUNK_SCHEMA)
+              .parquet(os.path.join(out_dir, "chunks")))
+    masks = delete_job.live_masks(spark, out_dir) if apply_deletes else None
     return decode_job.decode_chunks(chunks, schema, dtypes,
                                     delete_masks=masks)
 
@@ -1356,9 +1331,8 @@ def register_encoded_table(spark: SparkSession, out_dir: str,
 
 def manifest_row_count(spark: SparkSession, out_dir: str) -> int:
     """Total LIVE row count answered from metadata alone
-    (`delete_job.delete_stats`): the manifest's row total minus the
-    sidecar's n_deleted, exact because each delete excludes the rows
-    earlier deletes already removed.  No chunk blob is read."""
+    (`delete_job.delete_stats`): the part summary's row total minus
+    the live delete_log row's deleted_rows, with no Spark job."""
     from ..spark import delete_job
     return delete_job.delete_stats(spark, out_dir)["live_rows"]
 
@@ -1378,13 +1352,10 @@ def manifest_null_count(spark: SparkSession, out_dir: str,
     delete-affected chunks of this column (O(affected) blob reads)
     decode to intersect their null mask with the keep mask, and
     evolved parts' virtual nulls subtract the part's deleted-row count
-    from the sidecar metadata."""
-    first_col = _schema_rows(spark, out_dir)[0]["name"]
+    from the live deletion vectors."""
     from ..spark import delete_job
-    # check_empty=False: skips the one-job zero-row probe; an
-    # empty-but-present sidecar then flows through the delete path,
-    # where empty joins yield the same answer
-    mm = delete_job.merged_masks(spark, out_dir, check_empty=False)
+    first_col = _schema_rows(spark, out_dir)[0]["name"]
+    mm = delete_job.live_masks(spark, out_dir)
     if mm is None:
         summ = part_summary(spark, out_dir)
         n = nn = 0
@@ -1404,7 +1375,7 @@ def manifest_null_count(spark: SparkSession, out_dir: str,
             .agg(F.sum("num_elements").alias("part_rows")))
     col_man = m.where(F.col("column") == column)
 
-    # masks stay DISTRIBUTED (the same _keep_mask_df join every pruned
+    # masks stay DISTRIBUTED (the same chunk_id join every pruned
     # reader uses): the former driver-side mask collect put
     # O(affected_chunks x rows/8) bytes on the driver and in every task
     # closure — a corpus-wide delete at 10^12 rows is ~125 GB
@@ -1418,15 +1389,17 @@ def manifest_null_count(spark: SparkSession, out_dir: str,
     # each task reads only its own chunks' masks via the join
     aff = (spark.read.parquet(os.path.join(out_dir, "chunks"))
            .where(F.col("column") == column)
-           .join(mm.select("chunk_id", "mask"), "chunk_id")
-           .select("chunk_id", "blob", "mask"))
+           .join(mm.select("chunk_id", "keep_mask"), "chunk_id")
+           .select("chunk_id", "blob", "keep_mask"))
+
+    keep = delete_job._keep_mask
 
     def live_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             a = b = 0
-            for blob, mask in zip(pdf["blob"], pdf["mask"]):
+            for blob, mask in zip(pdf["blob"], pdf["keep_mask"]):
                 s = pd.Series(chunk_codec.decode_column(bytes(blob)))
-                kb = _keep_bools(bytes(mask), len(s))
+                kb = keep(bytes(mask), len(s))
                 isna = s.isna().to_numpy(dtype=bool)
                 a += int((isna & kb).sum())
                 b += int((~isna & kb).sum())

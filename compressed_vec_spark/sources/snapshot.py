@@ -45,14 +45,15 @@ def _log_rows(spark: SparkSession, out_dir: str) -> list[dict]:
 
     The log is store METADATA — one row per append batch — so the
     driver reads it with no Spark job (encoded_table._small_table)."""
-    from ..spark.encode_job import _fs_exists
+    from ..spark.encode_job import APPEND_LOG_SCHEMA, _fs_exists
     from .encoded_table import _small_table
     path = os.path.join(out_dir, "append_log")
     if not _fs_exists(spark, path):
         return []
     return sorted(
         ({"batch_id": r["batch_id"], "part_offset": int(r["part_offset"]),
-          "n_parts": int(r["n_parts"])} for r in _small_table(spark, path)),
+          "n_parts": int(r["n_parts"])}
+         for r in _small_table(spark, path, APPEND_LOG_SCHEMA)),
         key=lambda d: d["part_offset"])
 
 

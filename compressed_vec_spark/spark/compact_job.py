@@ -134,11 +134,7 @@ def compact_store(spark: SparkSession, src_dir: str, dst_dir: str,
     over the larger merged sample).  Returns {'chunks_before',
     'chunks_after', 'merged_groups', 'passthrough_chunks'} per the
     executed plan."""
-    ver = encode_job._store_version(spark, src_dir)
-    if ver != encode_job.STORE_FORMAT_VERSION:
-        raise ValueError(
-            f"compact_store: {src_dir} has store format v{ver}; this build "
-            f"handles v{encode_job.STORE_FORMAT_VERSION} only")
+    encode_job.require_current(spark, src_dir, "compact_store")
     # compaction has no resume, so dst must be fresh: dynamic partition
     # overwrite only replaces part_ids present in THIS run — stale
     # partitions from previous contents would survive and be re-listed
@@ -252,11 +248,7 @@ def cluster_store(spark: SparkSession, src_dir: str, dst_dir: str,
 
     Returns {'rows', 'parts', 'cluster_by'}."""
     import math
-    ver = encode_job._store_version(spark, src_dir)
-    if ver != encode_job.STORE_FORMAT_VERSION:
-        raise ValueError(
-            f"cluster_store: {src_dir} has store format v{ver}; this build "
-            f"handles v{encode_job.STORE_FORMAT_VERSION} only")
+    encode_job.require_current(spark, src_dir, "cluster_store")
     if encode_job._fs_exists(spark, os.path.join(dst_dir, "chunks")):
         raise ValueError(
             f"cluster_store: {dst_dir} already has chunks; clustering "

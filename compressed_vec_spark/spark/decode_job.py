@@ -12,7 +12,6 @@ from __future__ import annotations
 
 from typing import Iterator
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -53,16 +52,17 @@ def decode_chunks(chunks: DataFrame, schema: str,
     # table moves 2 columns' bytes, not 5
     chunks = chunks.where(F.col("column").isin([n for n, _ in fields]))
 
-    # position deletes (spark/delete_job.py): the OR-merged mask for a
-    # chunk rides along the chunk_id join and the rebuilt rows are
-    # filtered before leaving the task — deleted rows never ship.  The
-    # join key is the same chunk_id the groupBy below shuffles on, and
-    # the mask side is bytes-per-affected-chunk, so AQE broadcasts it
-    # whenever it is small (the common case).
+    # position deletes (spark/delete_job.py live_masks): a chunk's live
+    # deletion vector rides along the chunk_id join and the rebuilt rows
+    # are filtered before leaving the task — deleted rows never ship.
+    # The join key is the same chunk_id the groupBy below shuffles on,
+    # and the mask side is bytes-per-affected-chunk, so AQE broadcasts
+    # it whenever it is small (the common case).
     if delete_masks is not None:
+        from .delete_job import _keep_mask
         chunks = chunks.join(
             delete_masks.select("chunk_id",
-                                F.col("mask").alias("__del_mask")),
+                                F.col("keep_mask").alias("__del_mask")),
             "chunk_id", "left")
 
     def rebuild(key: tuple, table: pa.Table) -> pa.Table:
@@ -82,9 +82,7 @@ def decode_chunks(chunks: DataFrame, schema: str,
         if "__del_mask" in table.column_names:
             m = table.column("__del_mask")[0].as_py()
             if m is not None:
-                keep = ~np.unpackbits(np.frombuffer(m, np.uint8),
-                                      count=n_rows).astype(bool)
-                out = out.filter(pa.array(keep))
+                out = out.filter(pa.array(_keep_mask(m, n_rows)))
         return out
 
     return chunks.groupBy("chunk_id").applyInArrow(rebuild, schema=schema)

@@ -1,39 +1,37 @@
-"""Row-level DELETE over an encoded store: position deletion vectors.
+"""Row-level DELETE over an encoded store: one live deletion vector per
+chunk (Iceberg v3's rule, on this engine's own format).
 
-A DELETE never rewrites a chunk.  It writes a tiny sidecar dataset
-{out_dir}/deletes — one packed bitmask per affected chunk, partitioned
-by delete_id — and reads subtract the OR of the masks:
+A DELETE never rewrites a chunk.  It writes the next sidecar generation
+and commits it with one log row:
 
   chunks/                          immutable encoded blobs (data of record)
   deletes/delete_id=<id>/*.parquet (chunk_id, n_rows, n_deleted, mask)
+  delete_log/*.parquet             (delete_id, seq, rows_deleted,
+                                    affected_chunks, deleted_rows)
 
-This is Iceberg-v2 position-delete semantics (Iceberg spec, "Position
-Delete Files" / deletion vectors) applied to this engine's own format.
-The reference has no mutation story at all — its vectors are write-once
-appenders (reference src/vector.rs:238-246) — so the design derives
-from the public Iceberg/Delta deletion-vector model, not from a
-reference operator.
+Partition <id> holds the WHOLE live set after that delete: one row per
+chunk with any deleted row, its packed mask the OR of every delete so
+far.  The highest-seq log row names the live partition, so readers read
+one generation with no merge (`live_masks`, unpacked by `_keep_mask`;
+no other module knows the format) and live counts come from that row
+alone (`delete_stats`).  The reference's vectors are write-once
+(reference src/vector.rs:238-246), so the design follows the public
+Iceberg/Delta deletion-vector model, not a reference operator.
 
-Scale shape (100 TB): the predicate scan reuses the same manifest-prune
--> compressed-code kernel path as every pruned_* read (zone maps +
-Bloom drop chunks before any blob I/O; dict columns mask on u32 codes
-without materializing a string).  The sidecar is O(affected chunks)
-bytes (ceil(n/8) per chunk); live-row counts come from manifest +
-sidecar metadata alone — no chunk is ever read for them.
-
-Consistency contract (mirrors append_table's):
-  * idempotent by delete_id — a retry recomputes its masks
-    deterministically and REPLACES its own partition via dynamic
-    partition overwrite, so replay never double-counts;
-  * a new delete's masks EXCLUDE positions already deleted by OTHER
-    batches, so sum(n_deleted) is exact under overlapping predicates;
-  * retry a failed delete before issuing the next one (a later batch
-    subtracts whatever the failed batch managed to commit);
+Consistency contract:
+  * the log row is the commit point: a delete that crashes before it
+    leaves the parent generation live, and its retry recomputes from
+    that generation, replacing its own partition (dynamic overwrite);
+  * a delete_id already in the log writes nothing and returns its
+    logged counts;
+  * rows_deleted counts only rows no earlier delete removed, so the
+    log's deleted_rows is exact under overlapping predicates;
   * deletes apply to the CURRENT table — snapshot (time-travel) reads
-    predate them by design; materialize_deletes() rewrites only the
-    affected chunks when a clean store is needed;
-  * compact_store refuses a store with live deletes (merged chunk ids
-    would orphan the sidecar): materialize first.
+    predate them; materialize_deletes() rewrites only the affected
+    chunks when a clean store is needed, and compact_store refuses a
+    store with live deletes (merged chunk ids would orphan the masks);
+  * sidecars of stores before format v7 (one mask per delete batch)
+    are refused, not read.
 """
 
 from __future__ import annotations
@@ -44,69 +42,70 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from ..codecs import chunk as chunk_codec
 from . import encode_job
 
 DELETE_SCHEMA = ("delete_id string, part_id int, chunk_seq int, "
                  "chunk_id string, n_rows long, n_deleted long, mask binary")
+LOG_SCHEMA = ("delete_id string, seq int, rows_deleted long, "
+              "affected_chunks long, deleted_rows long")
 
 
 def _deletes_path(out_dir: str) -> str:
     return os.path.join(out_dir, "deletes")
 
 
+def _log_path(out_dir: str) -> str:
+    return os.path.join(out_dir, "delete_log")
+
+
+def _log(spark: SparkSession, out_dir: str) -> list[dict]:
+    """The committed delete_log rows, read with no Spark job.  A sidecar
+    with no log is a crashed first delete (nothing committed) or a
+    pre-v7 store's per-batch masks, which are refused: ignoring them
+    would bring deleted rows back."""
+    from ..sources.encoded_table import _small_table
+    if encode_job._fs_exists(spark, _log_path(out_dir)):
+        return _small_table(spark, _log_path(out_dir), LOG_SCHEMA)
+    if encode_job._fs_exists(spark, _deletes_path(out_dir)):
+        encode_job.require_current(spark, out_dir, "delete sidecar")
+    return []
+
+
+def _live(spark: SparkSession, out_dir: str) -> dict | None:
+    """The delete_log row of the live generation (highest seq)."""
+    return max(_log(spark, out_dir), key=lambda r: r["seq"], default=None)
+
+
 def has_deletes(spark: SparkSession, out_dir: str) -> bool:
-    return encode_job._fs_exists(spark, _deletes_path(out_dir))
+    """True once a delete has committed on the store."""
+    return _live(spark, out_dir) is not None
 
 
-def _read_deletes(spark: SparkSession, out_dir: str) -> DataFrame | None:
-    """The raw sidecar rows, or None when the store has no deletes.
-    Read with an EXPLICIT schema: an all-empty delete (predicate hit
-    nothing) leaves a directory parquet schema inference rejects."""
-    if not has_deletes(spark, out_dir):
+def _generation(spark: SparkSession, out_dir: str,
+                live: dict | None) -> DataFrame | None:
+    """DELETE_SCHEMA rows of the partition `live` names, read with the
+    declared schema; None when it deletes no row.  Spark escapes a
+    partition value in its directory name (':' is %3A)."""
+    if live is None or not live["deleted_rows"]:
         return None
-    return spark.read.schema(DELETE_SCHEMA).parquet(_deletes_path(out_dir))
+    name = (spark._jvm.org.apache.spark.sql.catalyst.catalog
+            .ExternalCatalogUtils.escapePathName(live["delete_id"]))
+    return spark.read.schema(DELETE_SCHEMA).parquet(
+        f"{_deletes_path(out_dir)}/delete_id={name}")
 
 
-def merged_masks(spark: SparkSession, out_dir: str,
-                 exclude_delete_id: str | None = None,
-                 check_empty: bool = True) -> DataFrame | None:
-    """(chunk_id, n_rows, n_deleted, mask) with every delete batch
-    OR-merged per chunk; None when no delete rows exist.  The merge is
-    a groupBy on chunk_id over a dataset whose size is bytes-per-
-    affected-chunk — negligible next to any chunk read it guards.
-
-    `check_empty=False` skips the eager zero-row probe (one Spark job
-    per call): a store whose deletes directory exists but holds no rows
-    then returns an EMPTY DataFrame instead of None — equivalent for
-    readers that left-join or aggregate it (NULL masks / zero sums),
-    one job cheaper on every delete-bearing store read."""
-    d = _read_deletes(spark, out_dir)
-    if d is None:
-        return None
-    if exclude_delete_id is not None:
-        d = d.where(F.col("delete_id") != exclude_delete_id)
-    if check_empty and not d.take(1):
-        return None
-
-    def _or(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        acc = np.frombuffer(bytes(pdf["mask"].iloc[0]), np.uint8).copy()
-        for m in pdf["mask"].iloc[1:]:
-            np.bitwise_or(acc, np.frombuffer(bytes(m), np.uint8), out=acc)
-        n_rows = int(pdf["n_rows"].iloc[0])
-        n_del = int(np.unpackbits(acc, count=n_rows).sum())
-        return pd.DataFrame({"chunk_id": [key[0]],
-                             "part_id": [int(pdf["part_id"].iloc[0])],
-                             "n_rows": [n_rows],
-                             "n_deleted": [n_del], "mask": [acc.tobytes()]})
-
-    return (d.select("chunk_id", "part_id", "n_rows", "mask")
-            .groupBy("chunk_id")
-            .applyInPandas(_or, "chunk_id string, part_id int, "
-                                "n_rows long, "
-                                "n_deleted long, mask binary"))
+def live_masks(spark: SparkSession, out_dir: str) -> DataFrame | None:
+    """(chunk_id, part_id, n_rows, n_deleted, keep_mask) of the live
+    generation, one row per chunk with any deleted row (keep_mask: the
+    packed deleted-row bits, `_keep_mask` unpacks them), or None when
+    no row is deleted.  The sidecar's one reader: no merge, no job."""
+    gen = _generation(spark, out_dir, _live(spark, out_dir))
+    return None if gen is None else gen.select(
+        "chunk_id", "part_id", "n_rows", "n_deleted",
+        F.col("mask").alias("keep_mask"))
 
 
 def _keep_mask(mask_bytes: bytes, n_rows: int) -> np.ndarray:
@@ -116,30 +115,43 @@ def _keep_mask(mask_bytes: bytes, n_rows: int) -> np.ndarray:
     return ~dele
 
 
+def _commit(spark: SparkSession, out_dir: str, row: tuple) -> None:
+    """Append one LOG_SCHEMA row, the commit point of a delete.  From
+    pandas it is a local relation, so no Python worker runs."""
+    names = [f.split()[0] for f in LOG_SCHEMA.split(", ")]
+    (spark.createDataFrame(pd.DataFrame([row], columns=names), LOG_SCHEMA)
+        .coalesce(1).write.mode("append").parquet(_log_path(out_dir)))
+
+
 def delete_rows(spark: SparkSession, out_dir: str, leaves: list,
                 delete_id: str,
                 exclude_parts: tuple[int, int] | None = None) -> dict:
-    """Core of every DELETE: the store's pruning front (zone maps and
-    Bloom probes drop chunks before any blob read) and its leaf masks
-    on the surviving chunks (`encoded_table.Leaf`, AND-ed) -> packed-bit
-    sidecar rows, one per chunk that actually lost rows.
-    `exclude_parts` (lo, hi exclusive) leaves that part range alone.
-    Returns the pruned-read stats record plus affected_chunks and
-    rows_deleted."""
+    """Core of every DELETE: the pruning front and the AND-ed leaf
+    masks (`encoded_table.Leaf`) with the live generation as keep mask,
+    so only rows no earlier delete removed are new.  One
+    dynamic-overwrite write of partition `delete_id` holds prior | new
+    for every scanned chunk with either, plus the prior rows of
+    unscanned chunks; one delete_log row commits it.  A logged
+    delete_id writes nothing.  `exclude_parts` (lo, hi exclusive) is
+    left alone.  Returns the pruned-read stats record plus
+    affected_chunks and rows_deleted (the new rows and their chunks)."""
     from ..sources import encoded_table
+    encode_job.require_current(spark, out_dir, "delete_rows")
+    log = _log(spark, out_dir)
+    live = max(log, key=lambda r: r["seq"], default=None)
+    prior = _generation(spark, out_dir, live)
     lo, hi = exclude_parts or (0, 0)
-    # rows other batches already deleted are the scan's keep mask, so
-    # sum(n_deleted) across the sidecar is exact under overlapping
-    # predicates; the CURRENT delete_id is left out of that view so a
-    # retry recomputes the identical result it then overwrites
-    prior = merged_masks(spark, out_dir, exclude_delete_id=delete_id,
-                         check_empty=False)
     cols = list(dict.fromkeys(leaf.col for leaf in leaves))
     front = encoded_table._front(
         spark, out_dir, leaves, cols,
-        None if prior is None
-        else prior.select("chunk_id", F.col("mask").alias("keep_mask")),
+        None if prior is None else prior.withColumnRenamed("mask",
+                                                           "keep_mask"),
         lambda p: not lo <= p < hi)
+    done = [r for r in log if r["delete_id"] == delete_id]
+    if done:
+        return {**encoded_table._stats(*front.counts(), parts=front.parts),
+                "affected_chunks": done[0]["affected_chunks"],
+                "rows_deleted": done[0]["rows_deleted"]}
     paired = front.leaves  # task closures must not capture DataFrames
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -147,34 +159,49 @@ def delete_rows(spark: SparkSession, out_dir: str, leaves: list,
             out = []
             for row in pdf.itertuples(index=False):
                 m = encoded_table._chunk_mask(paired, row)[0]
-                if m is None:
+                if m is None and row.keep_mask is None:
                     continue
                 n = int(row.num_elements)
-                m = m.reshape(-1)[:n]
+                new = (np.zeros(n, dtype=bool) if m is None
+                       else m.reshape(-1)[:n])
+                mask = np.packbits(new)
+                if row.keep_mask is not None:
+                    mask |= np.frombuffer(bytes(row.keep_mask), np.uint8)
                 out.append((delete_id, int(row.part_id),
                             int(row.chunk_seq), row.chunk_id, n,
-                            int(m.sum()), np.packbits(m).tobytes()))
+                            int(np.unpackbits(mask).sum()), mask.tobytes(),
+                            int(new.sum())))
             if out:
                 yield pd.DataFrame(out, columns=[
                     "delete_id", "part_id", "chunk_seq", "chunk_id",
-                    "n_rows", "n_deleted", "mask"])
+                    "n_rows", "n_deleted", "mask", "n_new"])
+
+    # the new-row counts are aggregated as the write runs, with no job
+    # of their own
+    obs = Observation()
+    gen = (front.scan.mapInPandas(fn, DELETE_SCHEMA + ", n_new long")
+           .observe(obs, F.sum("n_new").alias("rows"),
+                    F.count(F.when(F.col("n_new") > 0, 1)).alias("chunks"))
+           .drop("n_new"))
+    if prior is not None:
+        gen = gen.unionByName(
+            prior.join(front.ids, "chunk_id", "left_anti")
+            .withColumn("delete_id", F.lit(delete_id)))
 
     def write():
-        # dynamic partition overwrite: this delete_id's partition is
-        # replaced wholesale (idempotent retry), other batches untouched
-        (front.scan.mapInPandas(fn, DELETE_SCHEMA).write.mode("overwrite")
+        # dynamic partition overwrite: a retry replaces this delete_id's
+        # partition wholesale, other generations untouched
+        (gen.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("delete_id").parquet(_deletes_path(out_dir)))
 
-    # the prune counts and the mask write are independent jobs
+    # the prune counts and the generation write are independent jobs
     (total, zone, scanned), _ = encoded_table._overlap(front.counts, write)
-    written = (_read_deletes(spark, out_dir)
-               .where(F.col("delete_id") == delete_id)
-               .agg(F.count("*").alias("chunks"),
-                    F.sum("n_deleted").alias("rows")).collect()[0])
+    rows, chunks = int(obs.get["rows"] or 0), int(obs.get["chunks"])
+    seq, before = (live["seq"], live["deleted_rows"]) if live else (-1, 0)
+    _commit(spark, out_dir, (delete_id, seq + 1, rows, chunks, before + rows))
     return {**encoded_table._stats(total, zone, scanned, parts=front.parts),
-            "affected_chunks": int(written["chunks"] or 0),
-            "rows_deleted": int(written["rows"] or 0)}
+            "affected_chunks": chunks, "rows_deleted": rows}
 
 
 def delete_where_equals(spark: SparkSession, out_dir: str, column: str,
@@ -234,8 +261,9 @@ def upsert_table(spark: SparkSession, df, out_dir: str, key_col: str,
     existing chunk is rewritten on either step.
 
     Idempotent per batch_id end-to-end: the delete batch is keyed
-    'upsert:<batch_id>' (retry recomputes + replaces its own sidecar
-    partition) and append_table replays into its reserved part range.
+    'upsert:<batch_id>' (a committed delete is not redone, a crashed
+    one recomputes) and append_table replays into its reserved part
+    range.
 
     Contract: the batch must be key-unique (duplicate keys both land,
     like duplicate-match MERGE errors elsewhere); NULL keys never
@@ -243,22 +271,19 @@ def upsert_table(spark: SparkSession, df, out_dir: str, key_col: str,
     same broadcast bound as store_membership's probe set — micro-batch
     ingest scale (millions of keys), not full-table backfill (use a
     re-encode for that)."""
+    from ..sources.snapshot import _log_rows
+    encode_job.require_current(spark, out_dir, "upsert_table")
     keys = [r[0] for r in df.select(key_col).distinct().collect()
             if r[0] is not None]
     # a RETRY finds the batch's own rows already appended in its
     # reserved part range — the delete must not turn the merge into a
     # self-delete, so that range (from the append_log reservation the
     # first attempt committed) is excluded from the matched scan
-    exclude = None
-    log_path = os.path.join(out_dir, "append_log")
-    if encode_job._fs_exists(spark, log_path):
-        mine = (spark.read.parquet(log_path)
-                .where(F.col("batch_id") == batch_id).collect())
-        if mine:
-            off, n = int(mine[0]["part_offset"]), int(mine[0]["n_parts"])
-            exclude = (off, off + n)
+    mine = [(r["part_offset"], r["part_offset"] + r["n_parts"])
+            for r in _log_rows(spark, out_dir) if r["batch_id"] == batch_id]
     dstats = delete_where_in(spark, out_dir, key_col, keys,
-                             f"upsert:{batch_id}", exclude_parts=exclude)
+                             f"upsert:{batch_id}",
+                             exclude_parts=mine[0] if mine else None)
     encode_job.append_table(spark, df, out_dir, batch_id=batch_id,
                             url_col=url_col,
                             num_partitions=num_partitions)
@@ -287,18 +312,16 @@ def delete_where_range(spark: SparkSession, out_dir: str, column: str,
 
 
 def delete_stats(spark: SparkSession, out_dir: str) -> dict:
-    """{total_rows, deleted_rows, live_rows} from part summary +
-    sidecar METADATA alone — no chunk blob is read at any store size,
-    and a store with no deletes runs no Spark job.  Row totals come
-    from the store's position-0 column, which every part carries
-    (schema evolution only ever adds columns)."""
+    """{total_rows, deleted_rows, live_rows} from the part summary and
+    the live delete_log row alone, with no Spark job at any store
+    size.  Row totals come from the store's position-0 column, which
+    every part carries (schema evolution only ever adds columns)."""
     from ..sources.encoded_table import _schema_rows, part_summary
     first_col = _schema_rows(spark, out_dir)[0]["name"]
     total = sum(r["rows"] for (_, c), r in
                 part_summary(spark, out_dir).items() if c == first_col)
-    d = _read_deletes(spark, out_dir)
-    deleted = (0 if d is None
-               else int(d.agg(F.sum("n_deleted")).collect()[0][0] or 0))
+    live = _live(spark, out_dir)
+    deleted = live["deleted_rows"] if live else 0
     return {"total_rows": total, "deleted_rows": deleted,
             "live_rows": total - deleted}
 
@@ -315,16 +338,12 @@ def materialize_deletes(spark: SparkSession, src_dir: str, dst_dir: str,
     from ..sources.encoded_table import stored_schema
     from .compact_job import encoded_manifest_row
 
-    ver = encode_job._store_version(spark, src_dir)
-    if ver != encode_job.STORE_FORMAT_VERSION:
-        raise ValueError(
-            f"materialize_deletes: {src_dir} has store format v{ver}; "
-            f"this build handles v{encode_job.STORE_FORMAT_VERSION} only")
+    encode_job.require_current(spark, src_dir, "materialize_deletes")
     if encode_job._fs_exists(spark, os.path.join(dst_dir, "chunks")):
         raise ValueError(
             f"materialize_deletes: {dst_dir} already has chunks; this "
             "pass writes a fresh store — use a new/empty output dir")
-    masks = merged_masks(spark, src_dir)
+    masks = live_masks(spark, src_dir)
     if masks is None:
         raise ValueError(
             f"materialize_deletes: {src_dir} has no delete rows — "
@@ -334,7 +353,7 @@ def materialize_deletes(spark: SparkSession, src_dir: str, dst_dir: str,
 
     chunks = spark.read.parquet(os.path.join(src_dir, "chunks"))
     joined = chunks.join(
-        masks.select("chunk_id", F.col("mask").alias("del_mask")),
+        masks.select("chunk_id", F.col("keep_mask").alias("del_mask")),
         "chunk_id", "left")
     out_cols = [f.split()[0] for f in encode_job.CHUNK_SCHEMA.split(", ")]
 

@@ -41,7 +41,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..codecs import bloom as bloom_codec
 from ..codecs import chunk as chunk_codec
-from ..sources.encoded_table import chunk_stats_for, float_chunk_stats
+from ..sources.encoded_table import (_small_table, chunk_stats_for,
+                                     float_chunk_stats)
 
 CHUNK_SCHEMA = (
     "part_id int, chunk_seq int, chunk_id string, column string, codec string, "
@@ -81,10 +82,12 @@ PART_SUMMARY_SCHEMA = (
 # bloom (per-chunk Bloom filters on key-like string/binary columns —
 # point-lookup pruning where zone maps can't help, codecs/bloom.py); v6
 # added part_summary (PART_SUMMARY_SCHEMA) and partitions every chunks
-# dataset, streamed ones too, by part_id.
+# dataset, streamed ones too, by part_id; v7 keeps one live deletion
+# vector per chunk, committed by a delete_log row (spark/delete_job.py).
 # Stores written before versioning existed have no store_meta directory
 # and read as None.
-STORE_FORMAT_VERSION = 6
+STORE_FORMAT_VERSION = 7
+APPEND_LOG_SCHEMA = "batch_id string, part_offset int, n_parts int"
 
 _I64 = (1 << 63) - 1
 
@@ -124,12 +127,21 @@ def write_manifest(spark: SparkSession, out_dir: str, chunks_df: DataFrame,
 
 
 def _store_version(spark: SparkSession, out_dir: str) -> int | None:
+    """The store_meta format_version, read with no Spark job."""
     try:
-        row = (spark.read.parquet(os.path.join(out_dir, "store_meta"))
-               .first())
-        return int(row["format_version"]) if row else None
+        rows = _small_table(spark, os.path.join(out_dir, "store_meta"),
+                            "format_version int")
+        return int(rows[0]["format_version"]) if rows else None
     except Exception:
         return None
+
+
+def require_current(spark: SparkSession, out_dir: str, op: str) -> None:
+    """Refuse (ValueError) a store of any other format version."""
+    ver = _store_version(spark, out_dir)
+    if ver != STORE_FORMAT_VERSION:
+        raise ValueError(f"{op}: {out_dir} has store format v{ver}; "
+                         f"this build handles v{STORE_FORMAT_VERSION} only")
 
 
 def _fs_exists(spark: SparkSession, path: str) -> bool:
@@ -475,11 +487,11 @@ def append_table(spark: SparkSession, df: DataFrame, out_dir: str,
         df = df.repartition(num_partitions)
     n_parts = df.rdd.getNumPartitions()
 
+    from ..sources.snapshot import _log_rows
     chunks_path = os.path.join(out_dir, "chunks")
     log_path = os.path.join(out_dir, "append_log")
-    prior = ({r["batch_id"]: (r["part_offset"], r["n_parts"])
-              for r in spark.read.parquet(log_path).collect()}
-             if _fs_exists(spark, log_path) else {})
+    prior = {r["batch_id"]: (r["part_offset"], r["n_parts"])
+             for r in _log_rows(spark, out_dir)}
     if batch_id in prior:
         part_offset, reserved = prior[batch_id]
         if n_parts > reserved:
@@ -502,7 +514,7 @@ def append_table(spark: SparkSession, df: DataFrame, out_dir: str,
         # retry finds its range here instead of colliding past the
         # partial parts
         (spark.createDataFrame([(batch_id, part_offset, n_parts)],
-                               "batch_id string, part_offset int, n_parts int")
+                               APPEND_LOG_SCHEMA)
             .coalesce(1).write.mode("append").parquet(log_path))
 
     enc = df.mapInArrow(
@@ -574,13 +586,8 @@ def store_stats(spark: SparkSession, out_dir: str) -> dict:
     from ..sources import snapshot as snap
     from ..sources.encoded_table import part_summary, stored_schema
     from . import delete_job
-    ver = _store_version(spark, out_dir)
-    if ver != STORE_FORMAT_VERSION:
-        # older manifests lack stats columns this aggregation reads —
-        # refuse cleanly like every sibling operation
-        raise ValueError(
-            f"store_stats: {out_dir} has store format v{ver}; this build "
-            f"handles v{STORE_FORMAT_VERSION} only")
+    # older manifests lack stats columns this aggregation reads
+    require_current(spark, out_dir, "store_stats")
     m = spark.read.parquet(os.path.join(out_dir, "manifest"))
     rows = (m.groupBy("column")
             .agg(F.collect_set("codec").alias("codecs"),
@@ -626,7 +633,7 @@ def store_stats(spark: SparkSession, out_dir: str) -> dict:
     raw = sum(c["raw_bytes"] for c in cols.values())
     enc = sum(c["encoded_bytes"] for c in cols.values())
     return {
-        "format_version": ver,
+        "format_version": STORE_FORMAT_VERSION,
         "columns": cols,
         "raw_bytes": raw, "encoded_bytes": enc,
         "ratio": raw / enc if enc else None,

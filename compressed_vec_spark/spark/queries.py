@@ -2765,12 +2765,13 @@ def _deleted_store(spark: SparkSession, sf_dir: str) -> str:
 def encoded_table_delete_count(spark, sf_dir) -> DataFrame:
     """Row-level DELETE via position deletion vectors (Iceberg-v2
     position-delete semantics on the engine's own format,
-    spark/delete_job.py): no chunk is rewritten — the sidecar holds one
-    packed bitmask per affected chunk, the delete scan reuses the
-    manifest-prune + compressed-code mask kernels, and the decoded read
-    subtracts the masks in-task.  Returns the LIVE row count and a live
-    value aggregate; the count is additionally cross-checked against
-    the metadata-only answer (manifest + sidecar, no blob read)."""
+    spark/delete_job.py): no chunk is rewritten — the live sidecar
+    generation holds one packed bitmask per affected chunk, the delete
+    scan reuses the manifest-prune + compressed-code mask kernels, and
+    the decoded read subtracts the masks in-task.  Returns the LIVE row
+    count and a live value aggregate; the count is additionally
+    cross-checked against the metadata-only answer (part summary +
+    delete log, no Spark job)."""
     from concurrent.futures import ThreadPoolExecutor
     from ..spark import delete_job
     from ..sources import encoded_table
@@ -2824,10 +2825,9 @@ def encoded_table_delete_materialize(spark, sf_dir) -> DataFrame:
 
 def encoded_table_delete_pushdown(spark, sf_dir) -> DataFrame:
     """Pruned fast-path reads over a store with LIVE position deletes
-    (Iceberg-v2 read semantics, sources/encoded_table.py:_keep_mask_df):
-    clean chunks keep their compressed kernels untouched; ONLY the
-    delete-affected chunks fall back to a positional decode ANDed with
-    the keep mask, and manifest-answer shortcuts (covered-chunk sums,
+    (spark/delete_job.py live_masks): every chunk keeps its compressed
+    kernels, a delete-affected chunk AND-ing its live deletion vector
+    in, and manifest-answer shortcuts (covered-chunk sums,
     top-k thresholds) exclude affected chunks whose stats may describe
     deleted rows.  Green only if the dict-code string equality count,
     the section-skip numeric range count, the three-level filtered SUM

@@ -10,6 +10,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from compressed_vec_spark.codecs import chunk as chunk_codec
 from compressed_vec_spark.sources import encoded_table
 from compressed_vec_spark.sources.encoded_table import Leaf
 from compressed_vec_spark.spark import (compact_job, delete_job,
@@ -167,7 +168,7 @@ def test_materialize_then_identity(spark, store, tmp_path):
     src_shas = {r["sha256"] for r in msrc.select("sha256").collect()}
     dst_rows = m.select("chunk_id", "sha256").collect()
     touched = {r["chunk_id"] for r in
-               delete_job.merged_masks(spark, out).select(
+               delete_job.live_masks(spark, out).select(
                    "chunk_id").collect()}
     for r in dst_rows:
         if r["chunk_id"] not in touched:
@@ -274,8 +275,9 @@ def _live2(pdf):
 
 
 def test_pruned_counts_subtract_deletes(spark, store2):
-    """Every pruned fast-path count reflects committed deletes: clean
-    chunks keep the compressed kernel, affected chunks decode + mask."""
+    """Every pruned fast-path count reflects committed deletes: every
+    chunk keeps the compressed kernel, affected chunks AND-ing in their
+    live mask."""
     out, pdf = store2
     live = _live2(pdf)
 
@@ -284,7 +286,10 @@ def test_pruned_counts_subtract_deletes(spark, store2):
 
     hits, stats = count("lang", "string", "in", values=("de",))
     assert hits == int((live["lang"] == "de").sum())
-    assert stats["decoded_chunks"] >= 1  # affected chunks left
+    # affected chunks stay on the compressed path too: lang is
+    # dict-coded in every chunk, and the live mask is AND-ed in
+    assert stats["decoded_chunks"] == 0
+    assert stats["compressed_chunks"] == stats["scanned_chunks"]
     # the dict fast path; clean chunks stayed on it
     assert stats["compressed_chunks"] >= 0
 
@@ -410,7 +415,7 @@ def test_wide_delete_every_chunk_distributed_masks(spark, tmp_path):
 
     manifest = spark.read.parquet(os.path.join(out, "manifest"))
     k_chunks = manifest.where(F.col("column") == "k").count()
-    masks = encoded_table._keep_mask_df(spark, out)
+    masks = delete_job.live_masks(spark, out)
     assert masks is not None and masks.count() == k_chunks  # all wide
 
     live = pdf[(pdf["k"] % 3) != 0]
@@ -424,7 +429,7 @@ def test_wide_delete_every_chunk_distributed_masks(spark, tmp_path):
 
     # masks stay distributed: the reader-side mask plumbing has no
     # driver collect; application is a chunk_id join (left) per scan
-    for fn in (encoded_table._keep_mask_df, encoded_table._join_keep):
+    for fn in (delete_job.live_masks, encoded_table._join_keep):
         assert ".collect()" not in inspect.getsource(fn)
     assert 'join(masks, "chunk_id", "left")' in inspect.getsource(
         encoded_table._join_keep)
@@ -453,7 +458,7 @@ def test_wide_delete_null_count_no_driver_masks(spark, tmp_path, monkeypatch):
     every_third = Leaf("k", "int64", "in", values=tuple(range(0, n, 3)))
     stats = delete_job.delete_rows(spark, out, [every_third], "wdn1")
     assert stats["rows_deleted"] == int(((pdf["k"] % 3) == 0).sum())
-    masks = encoded_table._keep_mask_df(spark, out)
+    masks = delete_job.live_masks(spark, out)
     k_chunks = (spark.read.parquet(os.path.join(out, "manifest"))
                 .where(F.col("column") == "k").count())
     assert masks is not None and masks.count() == k_chunks  # all wide
@@ -477,3 +482,153 @@ def test_wide_delete_null_count_no_driver_masks(spark, tmp_path, monkeypatch):
     assert collected_schemas, "spy never engaged"
     for cols in collected_schemas:
         assert "mask" not in cols and "keep_mask" not in cols, cols
+
+
+def _jobs(spark, fn):
+    """(fn(), number of Spark jobs fn submitted)."""
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    result = fn()
+    return result, len(set(tracker.getJobIdsForGroup(None)) - before)
+
+
+def _masks(spark, out):
+    """{chunk_id: (n_deleted, packed mask)} of the live generation."""
+    rows = delete_job.live_masks(spark, out).collect()
+    got = {r["chunk_id"]: (r["n_deleted"], bytes(r["keep_mask"]))
+           for r in rows}
+    assert len(got) == len(rows)  # one row per chunk
+    return got
+
+
+def _dead_keys(spark, out):
+    """k of every row the live generation deletes, whatever the chunk
+    layout."""
+    masks = {c: m for c, (_, m) in _masks(spark, out).items()}
+    dead = set()
+    for r in (spark.read.parquet(os.path.join(out, "chunks"))
+              .where(F.col("column") == "k")
+              .select("chunk_id", "blob").collect()):
+        if r["chunk_id"] in masks:
+            ks = np.asarray(chunk_codec.decode_column(bytes(r["blob"])))
+            bits = np.unpackbits(np.frombuffer(masks[r["chunk_id"]],
+                                               np.uint8), count=len(ks))
+            dead.update(ks[bits.astype(bool)].tolist())
+    return dead
+
+
+def _files(root):
+    """{path: (size, mtime)} of every file under root."""
+    return {os.path.join(d, f): (os.stat(os.path.join(d, f)).st_size,
+                                 os.stat(os.path.join(d, f)).st_mtime_ns)
+            for d, _, fs in os.walk(root) for f in fs}
+
+
+def test_live_reads_plan_no_mask_merge(spark, store2):
+    """The decoded read and the pruning front's scan read the one live
+    generation as is: no grouped Python stage merges masks."""
+    out, _ = store2
+    front = encoded_table._front(
+        spark, out, [Leaf("lang", "string", "in", values=("de",))],
+        ["lang"], delete_job.live_masks(spark, out))
+    for df in (encoded_table.read_decoded(spark, out), front.scan):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "mask:binary" in plan  # the live generation is read
+        assert "FlatMapGroupsInPandas" not in plan
+
+
+def test_delete_stats_submit_no_jobs(spark, store2):
+    out, pdf = store2
+    (st, rows), jobs = _jobs(spark, lambda: (
+        delete_job.delete_stats(spark, out),
+        encoded_table.manifest_row_count(spark, out)))
+    assert jobs == 0
+    assert st["live_rows"] == rows == len(_live2(pdf))
+    assert st["deleted_rows"] == len(pdf) - len(_live2(pdf))
+
+
+def test_generation_is_or_of_deletes(spark, store2):
+    """After d1 and then d2 the live generation holds one row per
+    affected chunk whose mask is the OR of both deletes' positions,
+    found from the raw rows and the two predicates."""
+    out, _ = store2
+    raw = encoded_table.read_decoded(spark, out,
+                                     apply_deletes=False).toPandas()
+    d1 = (raw["lang"] == "en").fillna(False)
+    d2 = raw["nch"].between(0, 2500)
+    dead = set(raw.loc[d1 | d2, "k"])
+    want = {}
+    for r in (spark.read.parquet(os.path.join(out, "chunks"))
+              .where(F.col("column") == "k")
+              .select("chunk_id", "blob").collect()):
+        ks = np.asarray(chunk_codec.decode_column(bytes(r["blob"])))
+        m = np.isin(ks, list(dead))
+        if m.any():
+            want[r["chunk_id"]] = (int(m.sum()), np.packbits(m).tobytes())
+    assert want and _masks(spark, out) == want
+
+
+def test_crash_before_commit_keeps_parent(spark, store2, tmp_path,
+                                          monkeypatch):
+    """A delete that dies after writing its generation but before its
+    delete_log row leaves the parent generation live; the retry
+    converges to a run with no crash (store2: d1, then d2)."""
+    out, pdf = _lang_sorted_store(spark, str(tmp_path / "crash"))
+    delete_job.delete_where_equals(spark, out, "lang", "en", "d1")
+    parent = delete_job.delete_stats(spark, out)
+    parent_masks = _masks(spark, out)
+
+    def crash(*args):
+        raise RuntimeError("crash before commit")
+
+    monkeypatch.setattr(delete_job, "_commit", crash)
+    with pytest.raises(RuntimeError, match="crash before commit"):
+        delete_job.delete_where_range(spark, out, "nch", 0, 2500, "d2")
+    monkeypatch.undo()
+    assert os.path.isdir(os.path.join(out, "deletes", "delete_id=d2"))
+
+    live1 = _live_pdf(pdf)
+    assert delete_job.delete_stats(spark, out) == parent
+    assert _masks(spark, out) == parent_masks
+    hits, _ = encoded_table.pruned_count(
+        spark, out, [Leaf("nch", "int64", "range", 0, 2500)])
+    assert hits == int(live1["nch"].between(0, 2500).sum())
+    assert encoded_table.read_decoded(spark, out).count() == len(live1)
+
+    st = delete_job.delete_where_range(spark, out, "nch", 0, 2500, "d2")
+    assert st["rows_deleted"] == hits
+    clean, _ = store2
+    assert delete_job.delete_stats(spark, out) == \
+        delete_job.delete_stats(spark, clean)
+    assert _dead_keys(spark, out) == _dead_keys(spark, clean)
+
+
+def test_committed_delete_id_writes_nothing(spark, store2):
+    """Re-issuing d1 after d2 committed returns d1's logged count and
+    leaves the sidecar and the log untouched."""
+    out, pdf = store2
+    before = _files(os.path.join(out, "deletes"))
+    log = _files(os.path.join(out, "delete_log"))
+    stats = delete_job.delete_stats(spark, out)
+    st = delete_job.delete_where_equals(spark, out, "lang", "en", "d1")
+    assert st["rows_deleted"] == int((pdf["lang"] == "en").sum())
+    assert _files(os.path.join(out, "deletes")) == before
+    assert _files(os.path.join(out, "delete_log")) == log
+    assert delete_job.delete_stats(spark, out) == stats
+
+
+def test_pre_v7_sidecar_refused(spark, tmp_path):
+    """A store before format v7 kept one mask per delete batch; its
+    sidecar is refused, never read as a live generation."""
+    out, _ = _lang_sorted_store(spark, str(tmp_path / "v6"))
+    (spark.createDataFrame([(6,)], "format_version int").coalesce(1)
+        .write.mode("overwrite").parquet(os.path.join(out, "store_meta")))
+    (spark.createDataFrame([("d1", 0, 0, "p00000-c00000", 500, 1,
+                             bytes(63))], delete_job.DELETE_SCHEMA)
+        .write.partitionBy("delete_id")
+        .parquet(os.path.join(out, "deletes")))
+    for fn in (delete_job.has_deletes, delete_job.live_masks):
+        with pytest.raises(ValueError, match="format v6"):
+            fn(spark, out)
+    with pytest.raises(ValueError, match="format v6"):
+        delete_job.delete_where_equals(spark, out, "lang", "en", "d2")

@@ -25,6 +25,7 @@ from .. import vector as vec
 from ..codecs import chunk as chunk_codec
 from ..operators import filters
 from ..sections import FIXED_LEN
+from . import layout
 
 
 _I64MAX = (1 << 63) - 1
@@ -447,7 +448,6 @@ def _front(spark: SparkSession, out_dir: str, leaves: list[Leaf],
     manifest aggregate — the census {column: (chunks, dict-coded
     chunks)} in scope, which shows a column schema evolution left out
     of older chunks, and (parts in scope, parts read)."""
-    from ..spark import encode_job
     summ = part_summary(spark, out_dir)
     scope = sorted({p for p, _ in summ if parts is None or parts(p)})
     yes = F.lit(True)
@@ -478,16 +478,15 @@ def _front(spark: SparkSession, out_dir: str, leaves: list[Leaf],
             n, d = census.get(c, (0, 0))
             census[c] = (n + r["chunks"], d + r["dict_chunks"])
 
-    manifest = (spark.read.schema(encode_job.MANIFEST_SCHEMA)
-                .parquet(os.path.join(out_dir, "manifest"))
+    manifest = (layout.read(spark, out_dir, layout.MANIFEST)
                 .where(F.col("part_id").isin(kept)))
-    root = os.path.join(out_dir, "chunks")
-    chunks = spark.read.schema(encode_job.CHUNK_SCHEMA)
-    if kept and encode_job._fs_exists(spark, f"{root}/part_id={kept[0]}"):
-        chunks = chunks.option("basePath", root).parquet(
-            *[f"{root}/part_id={p}" for p in kept])
+    dirs = [f"part_id={p}" for p in kept]
+    if dirs and layout.exists(
+            spark, os.path.join(layout.CHUNKS.path(out_dir), dirs[0])):
+        chunks = layout.read(spark, out_dir, layout.CHUNKS, *dirs)
     else:  # no part survives, or a pre-v6 stream store's flat layout
-        chunks = chunks.parquet(root).where(F.col("part_id").isin(kept))
+        chunks = (layout.read(spark, out_dir, layout.CHUNKS)
+                  .where(F.col("part_id").isin(kept)))
     # per chunk: z passes the zone maps, b the Bloom probes too, a is
     # covered; s / nn are the answer column's manifest sum and rows
     flags = None
@@ -744,7 +743,7 @@ def store_membership(spark: SparkSession, out_dir: str, column: str,
             yield pd.DataFrame({"pid": pdf[id_col].to_numpy(np.int64),
                                 "h": h.view(np.int64)})
 
-    manifest = (spark.read.parquet(os.path.join(out_dir, "manifest"))
+    manifest = (layout.read(spark, out_dir, layout.MANIFEST)
                 .where(F.col("column") == column))
     # probe hashing, the manifest count and the null-probe check are
     # three independent jobs: one overlap wave
@@ -758,15 +757,12 @@ def store_membership(spark: SparkSession, out_dir: str, column: str,
     hashes = hp["h"].to_numpy(np.int64).view(np.uint64)
     n_probes = len(ids)
     bc = spark.sparkContext.broadcast((ids, hashes))
-    has_bloom = "bloom" in manifest.columns
-    man_cols = ["chunk_id"] + (["bloom"] if has_bloom else [])
 
     def probe_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         p_ids, p_hashes = bc.value
         for pdf in batches:
-            blooms = pdf["bloom"] if "bloom" in pdf else [None] * len(pdf)
             chunk_col, id_out = [], []
-            for cid, blm in zip(pdf["chunk_id"], blooms):
+            for cid, blm in zip(pdf["chunk_id"], pdf["bloom"]):
                 m = bloom_codec.contains_many(
                     bytes(blm) if blm is not None else None, p_hashes)
                 sel = p_ids[m]
@@ -781,7 +777,7 @@ def store_membership(spark: SparkSession, out_dir: str, column: str,
     # single consumer now (stats come from the materialized verify
     # verdicts below), so the Bloom pass needs no persist and no
     # separate stats job
-    cand = manifest.select(*man_cols).mapInPandas(
+    cand = manifest.select("chunk_id", "bloom").mapInPandas(
         probe_fn, "chunk_id string, pid long")
 
     # pair each candidate with its probe VALUE (first time values move),
@@ -792,7 +788,7 @@ def store_membership(spark: SparkSession, out_dir: str, column: str,
         F.collect_list(F.struct(F.col("pid"), F.col(value_col).alias("v")))
         .alias("plist"))
     chunks = _join_keep(
-        (spark.read.parquet(os.path.join(out_dir, "chunks"))
+        (layout.read(spark, out_dir, layout.CHUNKS)
          .where(F.col("column") == column)
          .select("chunk_id", "codec", "blob")
          .join(grouped, "chunk_id")),
@@ -871,34 +867,16 @@ def store_membership(spark: SparkSession, out_dir: str, column: str,
         "n_probes": n_probes,
         "pairs_possible": n_probes * total_chunks,
         "candidate_pairs": candidate_pairs,
-        "pairs_bloom_pruned": (n_probes * total_chunks - candidate_pairs
-                               if has_bloom else 0),
+        "pairs_bloom_pruned": n_probes * total_chunks - candidate_pairs,
         "chunks_verified": candidate_chunks,
     }
     return result, stats
 
 
-def _small_table(spark: SparkSession, path: str,
-                 schema: str | None = None) -> list[dict]:
-    """Rows of a store METADATA table (table_schema, part_summary,
-    append_log): a handful of rows per column, part or batch whatever
-    the table size, so the driver reads it directly with pyarrow (the
-    Iceberg-metadata pattern: no Spark job for a KB-sized file).
-    Non-local URIs fall back to a Spark read, which works everywhere."""
-    local = path[7:] if path.startswith("file://") else path
-    if "://" not in local:
-        try:
-            import pyarrow.parquet as pq
-            return pq.read_table(local).to_pylist()
-        except Exception:
-            pass  # racing rewrite / exotic layout: Spark read below
-    reader = spark.read if schema is None else spark.read.schema(schema)
-    return [r.asDict() for r in reader.parquet(path).collect()]
-
-
 def _schema_rows(spark: SparkSession, out_dir: str) -> list[dict]:
-    """Rows of the store's table_schema parquet, position-ordered."""
-    return sorted(_small_table(spark, os.path.join(out_dir, "table_schema")),
+    """Rows of the store's table_schema, position-ordered, read with no
+    Spark job."""
+    return sorted(layout.read_meta(spark, out_dir, layout.TABLE_SCHEMA),
                   key=lambda r: r["position"])
 
 
@@ -924,18 +902,14 @@ def _combine(a: dict, b: dict) -> dict:
 def part_summary(spark: SparkSession, out_dir: str) \
         -> dict[tuple[int, str], dict]:
     """{(part_id, column): row} of the store's part summary
-    (`encode_job.PART_SUMMARY_SCHEMA`), read on the driver with no
-    Spark job (`_small_table`).  A stream store appends rows per
-    micro-batch under the same part ids; they combine here.  A store
-    older than format v6 has no part summary, and its rows come from
-    the manifest (one job)."""
+    (`layout.PART_SUMMARY`), read on the driver with no Spark job.  A
+    stream store appends rows per micro-batch under the same part ids;
+    they combine here.  A store older than format v6 has no part
+    summary, and its rows come from the manifest (one job)."""
     from ..spark import encode_job
-    path = os.path.join(out_dir, "part_summary")
-    if encode_job._fs_exists(spark, path):
-        rows = _small_table(spark, path, encode_job.PART_SUMMARY_SCHEMA)
-    else:
-        rows = [r.asDict() for r in encode_job.summarize_parts(
-            spark.read.parquet(os.path.join(out_dir, "manifest"))).collect()]
+    rows = (layout.read_meta(spark, out_dir, layout.PART_SUMMARY)
+            or [r.asDict() for r in encode_job.summarize_parts(
+                layout.read(spark, out_dir, layout.MANIFEST)).collect()])
     out: dict[tuple[int, str], dict] = {}
     for r in rows:
         key = (r["part_id"], r["column"])
@@ -980,7 +954,7 @@ def pruned_topk(spark: SparkSession, out_dir: str, column: str,
             f"pruned_topk: column {column!r} has dtype "
             f"{dtypes.get(column)!r}; integer columns only")
     from ..spark import delete_job
-    col_man = (spark.read.parquet(os.path.join(out_dir, "manifest"))
+    col_man = (layout.read(spark, out_dir, layout.MANIFEST)
                .where(F.col("column") == column))
     masks = delete_job.live_masks(spark, out_dir)
     # metadata-only job: the k largest chunk maxima.  The threshold is
@@ -1308,12 +1282,11 @@ def read_decoded(spark: SparkSession, out_dir: str, schema: str | None = None,
     file.  The live deletion vectors (`delete_job.live_masks`) are
     subtracted by default — apply_deletes=False reads the raw
     pre-delete rows (the view a snapshot read also sees)."""
-    from ..spark import decode_job, delete_job, encode_job
+    from ..spark import decode_job, delete_job
     if schema is None:
         schema, auto_dtypes = stored_schema(spark, out_dir)
         dtypes = dtypes or auto_dtypes
-    chunks = (spark.read.schema(encode_job.CHUNK_SCHEMA)
-              .parquet(os.path.join(out_dir, "chunks")))
+    chunks = layout.read(spark, out_dir, layout.CHUNKS)
     masks = delete_job.live_masks(spark, out_dir) if apply_deletes else None
     return decode_job.decode_chunks(chunks, schema, dtypes,
                                     delete_masks=masks)
@@ -1369,7 +1342,7 @@ def manifest_null_count(spark: SparkSession, out_dir: str,
                 n, nn = n + own["nulls"], nn + own["rows"] - own["nulls"]
         return n, nn
 
-    m = spark.read.parquet(os.path.join(out_dir, "manifest"))
+    m = layout.read(spark, out_dir, layout.MANIFEST)
     rows = (m.where(F.col("column") == first_col)
             .groupBy("part_id")
             .agg(F.sum("num_elements").alias("part_rows")))
@@ -1387,7 +1360,7 @@ def manifest_null_count(spark: SparkSession, out_dir: str,
                            - F.col("null_count")).alias("nn")))
     # affected chunks of THIS column: decode, null/keep intersect —
     # each task reads only its own chunks' masks via the join
-    aff = (spark.read.parquet(os.path.join(out_dir, "chunks"))
+    aff = (layout.read(spark, out_dir, layout.CHUNKS)
            .where(F.col("column") == column)
            .join(mm.select("chunk_id", "keep_mask"), "chunk_id")
            .select("chunk_id", "blob", "keep_mask"))

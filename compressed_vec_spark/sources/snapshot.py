@@ -28,11 +28,12 @@ the same contract append_table itself states.
 
 from __future__ import annotations
 
-import os
 import warnings
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from . import layout
 
 #: Pseudo batch id naming the original encode_table output (every part
 #: below the first append's reserved range).
@@ -44,17 +45,9 @@ def _log_rows(spark: SparkSession, out_dir: str) -> list[dict]:
     new batch reserves strictly above every earlier reservation).
 
     The log is store METADATA — one row per append batch — so the
-    driver reads it with no Spark job (encoded_table._small_table)."""
-    from ..spark.encode_job import APPEND_LOG_SCHEMA, _fs_exists
-    from .encoded_table import _small_table
-    path = os.path.join(out_dir, "append_log")
-    if not _fs_exists(spark, path):
-        return []
-    return sorted(
-        ({"batch_id": r["batch_id"], "part_offset": int(r["part_offset"]),
-          "n_parts": int(r["n_parts"])}
-         for r in _small_table(spark, path, APPEND_LOG_SCHEMA)),
-        key=lambda d: d["part_offset"])
+    driver reads it with no Spark job (layout.read_meta)."""
+    return sorted(layout.read_meta(spark, out_dir, layout.APPEND_LOG),
+                  key=lambda d: d["part_offset"])
 
 
 def list_snapshots(spark: SparkSession, out_dir: str) -> list[dict]:
@@ -64,7 +57,7 @@ def list_snapshots(spark: SparkSession, out_dir: str) -> list[dict]:
     log = _log_rows(spark, out_dir)
     base_hi = log[0]["part_offset"] if log else None
     if base_hi is None:
-        mx = (spark.read.parquet(os.path.join(out_dir, "chunks"))
+        mx = (layout.read(spark, out_dir, layout.CHUNKS)
               .agg(F.max("part_id")).collect()[0][0])
         base_hi = (int(mx) + 1) if mx is not None else 0
     snaps = [{"batch_id": BASE_SNAPSHOT, "part_lo": 0, "part_hi": base_hi}]
@@ -91,7 +84,7 @@ def snapshot_chunks(spark: SparkSession, out_dir: str,
     current table; the part_id predicate is partition pruning on the
     chunks parquet, so out-of-snapshot chunks are never listed as
     input files, let alone decoded."""
-    chunks = spark.read.parquet(os.path.join(out_dir, "chunks"))
+    chunks = layout.read(spark, out_dir, layout.CHUNKS)
     if as_of is None:
         return chunks
     cutoff = _snapshot_bounds(spark, out_dir, as_of)["part_hi"]
@@ -109,10 +102,6 @@ def read_snapshot(spark: SparkSession, out_dir: str,
         snapshot_chunks(spark, out_dir, as_of), schema, dtypes)
 
 
-def _consumer_path(out_dir: str, consumer_id: str) -> str:
-    return os.path.join(out_dir, "consumers", consumer_id, "cursor")
-
-
 def consumer_position(spark: SparkSession, out_dir: str,
                       consumer_id: str) -> int:
     """The consumer's committed cursor: every part_id below it has been
@@ -122,19 +111,15 @@ def consumer_position(spark: SparkSession, out_dir: str,
     crash mid-commit may leave an empty/partial directory — degrading
     re-delivers earlier batches (at-least-once, safe under the
     idempotent-fn contract) instead of wedging the consumer on a
-    schema-inference error."""
-    from ..spark.encode_job import _fs_exists
-    path = _consumer_path(out_dir, consumer_id)
-    if not _fs_exists(spark, path):
-        return 0
+    schema-inference error.  Read on the driver, with no Spark job."""
     from pyspark.errors import AnalysisException
+    where = layout.consumer_dir(out_dir, consumer_id)
     try:
-        row = (spark.read.schema("batch_id string, part_hi int")
-               .parquet(path).collect())
+        row = layout.read_meta(spark, where, layout.CURSOR)
     except AnalysisException as e:
         # structural: empty/partial cursor dir from a crashed commit —
         # the case the degrade exists for
-        warnings.warn(f"consumer cursor unreadable at {path} ({e}); "
+        warnings.warn(f"consumer cursor unreadable at {where} ({e}); "
                       "degrading to position 0 (full replay)")
         return 0
     # anything else (transient FS fault, permissions, corrupt footer)
@@ -153,19 +138,15 @@ def pending_batches(spark: SparkSession, out_dir: str,
     missing — consuming it would silently drop its rows forever once
     the cursor moves past.  Completeness is a directory-listing check
     (part_id is the partition column), no chunk is opened."""
-    from ..spark.encode_job import _fs_exists
     pos = consumer_position(spark, out_dir, consumer_id)
     pend = [s for s in list_snapshots(spark, out_dir)
             if s["part_hi"] > pos]
     if not pend:
         return []
-    commits_path = os.path.join(out_dir, "append_commits")
-    committed_ids = ({r["batch_id"] for r in
-                      spark.read.schema("batch_id string")
-                      .parquet(commits_path).collect()}
-                     if _fs_exists(spark, commits_path) else set())
+    committed_ids = {r["batch_id"] for r in
+                     layout.read_meta(spark, out_dir, layout.APPEND_COMMITS)}
     present = {int(r["part_id"]) for r in
-               spark.read.parquet(os.path.join(out_dir, "chunks"))
+               layout.read(spark, out_dir, layout.CHUNKS)
                .select("part_id").distinct().collect()}
     out = []
     for s in pend:
@@ -221,10 +202,8 @@ def consume_new_batches(spark: SparkSession, out_dir: str,
     processed = []
     for s in pending_batches(spark, out_dir, consumer_id):
         fn(s["batch_id"], snapshot_diff(spark, out_dir, s["batch_id"]))
-        (spark.createDataFrame([(s["batch_id"], s["part_hi"])],
-                               "batch_id string, part_hi int")
-            .coalesce(1).write.mode("overwrite")
-            .parquet(_consumer_path(out_dir, consumer_id)))
+        layout.write_meta(spark, layout.consumer_dir(out_dir, consumer_id),
+                          layout.CURSOR, [(s["batch_id"], s["part_hi"])])
         processed.append(s["batch_id"])
     return {"processed": processed,
             "position": consumer_position(spark, out_dir, consumer_id)}
@@ -238,7 +217,7 @@ def snapshot_diff(spark: SparkSession, out_dir: str,
     from ..spark import decode_job
     from .encoded_table import stored_schema
     b = _snapshot_bounds(spark, out_dir, batch_id)
-    chunks = (spark.read.parquet(os.path.join(out_dir, "chunks"))
+    chunks = (layout.read(spark, out_dir, layout.CHUNKS)
               .where((F.col("part_id") >= F.lit(b["part_lo"]))
                      & (F.col("part_id") < F.lit(b["part_hi"]))))
     schema, dtypes = stored_schema(spark, out_dir)

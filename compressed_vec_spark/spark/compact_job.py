@@ -31,7 +31,6 @@ Design:
 from __future__ import annotations
 
 import hashlib
-import os
 import re
 import time
 
@@ -40,6 +39,7 @@ from pyspark.sql import SparkSession, functions as F
 
 from ..codecs import bloom as bloom_codec
 from ..codecs import chunk as chunk_codec
+from ..sources import layout
 from ..sources.encoded_table import chunk_stats_for, float_chunk_stats
 from . import encode_job
 
@@ -134,12 +134,12 @@ def compact_store(spark: SparkSession, src_dir: str, dst_dir: str,
     over the larger merged sample).  Returns {'chunks_before',
     'chunks_after', 'merged_groups', 'passthrough_chunks'} per the
     executed plan."""
-    encode_job.require_current(spark, src_dir, "compact_store")
+    layout.require_current(spark, src_dir, "compact_store")
     # compaction has no resume, so dst must be fresh: dynamic partition
     # overwrite only replaces part_ids present in THIS run — stale
     # partitions from previous contents would survive and be re-listed
     # by the manifest rebuild below as if they belonged to this store
-    if encode_job._fs_exists(spark, os.path.join(dst_dir, "chunks")):
+    if layout.exists(spark, layout.CHUNKS.path(dst_dir)):
         raise ValueError(
             f"compact_store: {dst_dir} already has chunks; compaction "
             "writes a fresh store — use a new/empty output dir")
@@ -159,14 +159,14 @@ def compact_store(spark: SparkSession, src_dir: str, dst_dir: str,
     # manifest write leaves committed chunks the manifest doesn't list
     # — encode_job's resume treats them the same way); planning off the
     # manifest would silently drop those rows from the compacted store
-    chunks = spark.read.parquet(os.path.join(src_dir, "chunks"))
+    chunks = layout.read(spark, src_dir, layout.CHUNKS)
     plan_pdf = (chunks.select("part_id", "chunk_id", "num_elements")
                 .distinct().toPandas())
     mapping_pdf = _plan_groups(plan_pdf, target_elements)
     mapping = spark.createDataFrame(
         mapping_pdf, "part_id int, chunk_id string, new_seq int")
     joined = chunks.join(F.broadcast(mapping), ["part_id", "chunk_id"])
-    out_cols = [f.split()[0] for f in encode_job.CHUNK_SCHEMA.split(", ")]
+    out_cols = layout.CHUNKS.columns
 
     def merge(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         part_id, nseq, col = int(key[0]), int(key[1]), str(key[2])
@@ -188,24 +188,15 @@ def compact_store(spark: SparkSession, src_dir: str, dst_dir: str,
         return pd.DataFrame([row])[out_cols]
 
     out = (joined.groupBy("part_id", "new_seq", "column")
-           .applyInPandas(merge, encode_job.CHUNK_SCHEMA))
+           .applyInPandas(merge, layout.CHUNKS.ddl))
 
-    (spark.createDataFrame([(encode_job.STORE_FORMAT_VERSION,)],
-                           "format_version int")
-        .coalesce(1).write.mode("overwrite")
-        .parquet(os.path.join(dst_dir, "store_meta")))
-    (spark.read.parquet(os.path.join(src_dir, "table_schema"))
-        .coalesce(1).write.mode("overwrite")
-        .parquet(os.path.join(dst_dir, "table_schema")))
+    encode_job.start_store(
+        spark, dst_dir, layout.read_meta(spark, src_dir, layout.TABLE_SCHEMA))
     # the append_log's reserved part ranges stay valid verbatim —
     # compaction merges chunks WITHIN parts only — so snapshot history
     # (sources/snapshot.py) carries over to the compacted store
     encode_job.copy_store_history(spark, src_dir, dst_dir)
-    (out.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("part_id").parquet(os.path.join(dst_dir, "chunks")))
-    encode_job.write_manifest(
-        spark, dst_dir, spark.read.parquet(os.path.join(dst_dir, "chunks")))
+    encode_job.commit_chunks(spark, dst_dir, out)
 
     sizes = mapping_pdf.groupby(["part_id", "new_seq"]).size()
     return {
@@ -248,8 +239,8 @@ def cluster_store(spark: SparkSession, src_dir: str, dst_dir: str,
 
     Returns {'rows', 'parts', 'cluster_by'}."""
     import math
-    encode_job.require_current(spark, src_dir, "cluster_store")
-    if encode_job._fs_exists(spark, os.path.join(dst_dir, "chunks")):
+    layout.require_current(spark, src_dir, "cluster_store")
+    if layout.exists(spark, layout.CHUNKS.path(dst_dir)):
         raise ValueError(
             f"cluster_store: {dst_dir} already has chunks; clustering "
             "writes a fresh store — use a new/empty output dir")

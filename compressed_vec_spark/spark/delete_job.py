@@ -2,7 +2,7 @@
 chunk (Iceberg v3's rule, on this engine's own format).
 
 A DELETE never rewrites a chunk.  It writes the next sidecar generation
-and commits it with one log row:
+and commits it with one log row (tables declared in sources/layout.py):
 
   chunks/                          immutable encoded blobs (data of record)
   deletes/delete_id=<id>/*.parquet (chunk_id, n_rows, n_deleted, mask)
@@ -14,14 +14,17 @@ chunk with any deleted row, its packed mask the OR of every delete so
 far.  The highest-seq log row names the live partition, so readers read
 one generation with no merge (`live_masks`, unpacked by `_keep_mask`;
 no other module knows the format) and live counts come from that row
-alone (`delete_stats`).  The reference's vectors are write-once
+alone (`delete_stats`).  After its log row, a delete removes every
+other partition (superseded generations, crashed deletes'), so a
+DataFrame or view built before a delete must be built again after it.
+The reference's vectors are write-once
 (reference src/vector.rs:238-246), so the design follows the public
 Iceberg/Delta deletion-vector model, not a reference operator.
 
 Consistency contract:
   * the log row is the commit point: a delete that crashes before it
-    leaves the parent generation live, and its retry recomputes from
-    that generation, replacing its own partition (dynamic overwrite);
+    leaves the parent generation live and untouched, and its retry
+    recomputes from it, replacing its own partition (dynamic overwrite);
   * a delete_id already in the log writes nothing and returns its
     logged counts;
   * rows_deleted counts only rows no earlier delete removed, so the
@@ -37,7 +40,6 @@ Consistency contract:
 from __future__ import annotations
 
 import math
-import os
 from typing import Iterator
 
 import numpy as np
@@ -45,20 +47,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from ..codecs import chunk as chunk_codec
+from ..sources import layout
 from . import encode_job
-
-DELETE_SCHEMA = ("delete_id string, part_id int, chunk_seq int, "
-                 "chunk_id string, n_rows long, n_deleted long, mask binary")
-LOG_SCHEMA = ("delete_id string, seq int, rows_deleted long, "
-              "affected_chunks long, deleted_rows long")
-
-
-def _deletes_path(out_dir: str) -> str:
-    return os.path.join(out_dir, "deletes")
-
-
-def _log_path(out_dir: str) -> str:
-    return os.path.join(out_dir, "delete_log")
 
 
 def _log(spark: SparkSession, out_dir: str) -> list[dict]:
@@ -66,12 +56,10 @@ def _log(spark: SparkSession, out_dir: str) -> list[dict]:
     with no log is a crashed first delete (nothing committed) or a
     pre-v7 store's per-batch masks, which are refused: ignoring them
     would bring deleted rows back."""
-    from ..sources.encoded_table import _small_table
-    if encode_job._fs_exists(spark, _log_path(out_dir)):
-        return _small_table(spark, _log_path(out_dir), LOG_SCHEMA)
-    if encode_job._fs_exists(spark, _deletes_path(out_dir)):
-        encode_job.require_current(spark, out_dir, "delete sidecar")
-    return []
+    log = layout.read_meta(spark, out_dir, layout.DELETE_LOG)
+    if not log and layout.exists(spark, layout.DELETES.path(out_dir)):
+        layout.require_current(spark, out_dir, "delete sidecar")
+    return log
 
 
 def _live(spark: SparkSession, out_dir: str) -> dict | None:
@@ -84,17 +72,21 @@ def has_deletes(spark: SparkSession, out_dir: str) -> bool:
     return _live(spark, out_dir) is not None
 
 
+def _partition(spark: SparkSession, delete_id: str) -> str:
+    """The partition directory of `delete_id`, Spark-escaped (':' is %3A)."""
+    return f"{layout.DELETES.partition}=" + (
+        spark._jvm.org.apache.spark.sql.catalyst.catalog
+        .ExternalCatalogUtils.escapePathName(delete_id))
+
+
 def _generation(spark: SparkSession, out_dir: str,
                 live: dict | None) -> DataFrame | None:
-    """DELETE_SCHEMA rows of the partition `live` names, read with the
-    declared schema; None when it deletes no row.  Spark escapes a
-    partition value in its directory name (':' is %3A)."""
+    """layout.DELETES rows of the partition `live` names, read with the
+    declared schema; None when it deletes no row."""
     if live is None or not live["deleted_rows"]:
         return None
-    name = (spark._jvm.org.apache.spark.sql.catalyst.catalog
-            .ExternalCatalogUtils.escapePathName(live["delete_id"]))
-    return spark.read.schema(DELETE_SCHEMA).parquet(
-        f"{_deletes_path(out_dir)}/delete_id={name}")
+    return layout.read(spark, out_dir, layout.DELETES,
+                       _partition(spark, live["delete_id"]))
 
 
 def live_masks(spark: SparkSession, out_dir: str) -> DataFrame | None:
@@ -116,11 +108,18 @@ def _keep_mask(mask_bytes: bytes, n_rows: int) -> np.ndarray:
 
 
 def _commit(spark: SparkSession, out_dir: str, row: tuple) -> None:
-    """Append one LOG_SCHEMA row, the commit point of a delete.  From
-    pandas it is a local relation, so no Python worker runs."""
-    names = [f.split()[0] for f in LOG_SCHEMA.split(", ")]
-    (spark.createDataFrame(pd.DataFrame([row], columns=names), LOG_SCHEMA)
-        .coalesce(1).write.mode("append").parquet(_log_path(out_dir)))
+    """Append one layout.DELETE_LOG row, the commit point of a delete."""
+    layout.write_meta(spark, out_dir, layout.DELETE_LOG, [row], "append")
+
+
+def _vacuum(spark: SparkSession, out_dir: str, live_id: str) -> None:
+    """Remove every deletes partition but `live_id`'s, which holds the
+    whole live set: the others are never read again."""
+    root = layout.DELETES.path(out_dir)
+    keep = _partition(spark, live_id)
+    for name in layout.children(spark, root):
+        if name.startswith(f"{layout.DELETES.partition}=") and name != keep:
+            layout.remove(spark, f"{root}/{name}")
 
 
 def delete_rows(spark: SparkSession, out_dir: str, leaves: list,
@@ -136,7 +135,7 @@ def delete_rows(spark: SparkSession, out_dir: str, leaves: list,
     left alone.  Returns the pruned-read stats record plus
     affected_chunks and rows_deleted (the new rows and their chunks)."""
     from ..sources import encoded_table
-    encode_job.require_current(spark, out_dir, "delete_rows")
+    layout.require_current(spark, out_dir, "delete_rows")
     log = _log(spark, out_dir)
     live = max(log, key=lambda r: r["seq"], default=None)
     prior = _generation(spark, out_dir, live)
@@ -179,7 +178,7 @@ def delete_rows(spark: SparkSession, out_dir: str, leaves: list,
     # the new-row counts are aggregated as the write runs, with no job
     # of their own
     obs = Observation()
-    gen = (front.scan.mapInPandas(fn, DELETE_SCHEMA + ", n_new long")
+    gen = (front.scan.mapInPandas(fn, layout.DELETES.ddl + ", n_new long")
            .observe(obs, F.sum("n_new").alias("rows"),
                     F.count(F.when(F.col("n_new") > 0, 1)).alias("chunks"))
            .drop("n_new"))
@@ -193,13 +192,15 @@ def delete_rows(spark: SparkSession, out_dir: str, leaves: list,
         # partition wholesale, other generations untouched
         (gen.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("delete_id").parquet(_deletes_path(out_dir)))
+            .partitionBy(layout.DELETES.partition)
+            .parquet(layout.DELETES.path(out_dir)))
 
     # the prune counts and the generation write are independent jobs
     (total, zone, scanned), _ = encoded_table._overlap(front.counts, write)
     rows, chunks = int(obs.get["rows"] or 0), int(obs.get["chunks"])
     seq, before = (live["seq"], live["deleted_rows"]) if live else (-1, 0)
     _commit(spark, out_dir, (delete_id, seq + 1, rows, chunks, before + rows))
+    _vacuum(spark, out_dir, delete_id)
     return {**encoded_table._stats(total, zone, scanned, parts=front.parts),
             "affected_chunks": chunks, "rows_deleted": rows}
 
@@ -272,7 +273,7 @@ def upsert_table(spark: SparkSession, df, out_dir: str, key_col: str,
     ingest scale (millions of keys), not full-table backfill (use a
     re-encode for that)."""
     from ..sources.snapshot import _log_rows
-    encode_job.require_current(spark, out_dir, "upsert_table")
+    layout.require_current(spark, out_dir, "upsert_table")
     keys = [r[0] for r in df.select(key_col).distinct().collect()
             if r[0] is not None]
     # a RETRY finds the batch's own rows already appended in its
@@ -338,8 +339,8 @@ def materialize_deletes(spark: SparkSession, src_dir: str, dst_dir: str,
     from ..sources.encoded_table import stored_schema
     from .compact_job import encoded_manifest_row
 
-    encode_job.require_current(spark, src_dir, "materialize_deletes")
-    if encode_job._fs_exists(spark, os.path.join(dst_dir, "chunks")):
+    layout.require_current(spark, src_dir, "materialize_deletes")
+    if layout.exists(spark, layout.CHUNKS.path(dst_dir)):
         raise ValueError(
             f"materialize_deletes: {dst_dir} already has chunks; this "
             "pass writes a fresh store — use a new/empty output dir")
@@ -351,11 +352,11 @@ def materialize_deletes(spark: SparkSession, src_dir: str, dst_dir: str,
     _, dtypes = stored_schema(spark, src_dir)
     overrides = codec_overrides or {}
 
-    chunks = spark.read.parquet(os.path.join(src_dir, "chunks"))
+    chunks = layout.read(spark, src_dir, layout.CHUNKS)
     joined = chunks.join(
         masks.select("chunk_id", F.col("keep_mask").alias("del_mask")),
         "chunk_id", "left")
-    out_cols = [f.split()[0] for f in encode_job.CHUNK_SCHEMA.split(", ")]
+    out_cols = layout.CHUNKS.columns
 
     def rewrite(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -378,24 +379,15 @@ def materialize_deletes(spark: SparkSession, src_dir: str, dst_dir: str,
                 yield pd.DataFrame(rows)[out_cols]
 
     out = joined.select(*out_cols, "del_mask").mapInPandas(
-        rewrite, encode_job.CHUNK_SCHEMA)
+        rewrite, layout.CHUNKS.ddl)
 
-    (spark.createDataFrame([(encode_job.STORE_FORMAT_VERSION,)],
-                           "format_version int")
-        .coalesce(1).write.mode("overwrite")
-        .parquet(os.path.join(dst_dir, "store_meta")))
-    (spark.read.parquet(os.path.join(src_dir, "table_schema"))
-        .coalesce(1).write.mode("overwrite")
-        .parquet(os.path.join(dst_dir, "table_schema")))
+    encode_job.start_store(
+        spark, dst_dir, layout.read_meta(spark, src_dir, layout.TABLE_SCHEMA))
     # parts are preserved, so history AND consumer cursors stay valid:
     # dst is documented as a drop-in replacement, and losing a cursor
     # re-delivers the whole history to an exactly-once consumer
     encode_job.copy_store_history(spark, src_dir, dst_dir)
-    (out.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("part_id").parquet(os.path.join(dst_dir, "chunks")))
-    written = spark.read.parquet(os.path.join(dst_dir, "chunks"))
-    encode_job.write_manifest(spark, dst_dir, written)
+    written = encode_job.commit_chunks(spark, dst_dir, out)
 
     n_aff = masks.count()
     return {"affected_chunk_groups": int(n_aff),

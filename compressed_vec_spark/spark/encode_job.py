@@ -30,10 +30,7 @@ deterministic.
 from __future__ import annotations
 
 import hashlib
-import json
-import os
 import time
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
@@ -41,59 +38,15 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..codecs import bloom as bloom_codec
 from ..codecs import chunk as chunk_codec
-from ..sources.encoded_table import (_small_table, chunk_stats_for,
+from ..sources import layout
+from ..sources.encoded_table import (_schema_rows, chunk_stats_for,
                                      float_chunk_stats)
-
-CHUNK_SCHEMA = (
-    "part_id int, chunk_seq int, chunk_id string, column string, codec string, "
-    "num_elements long, raw_bytes long, encoded_bytes long, sha256 string, "
-    "min_val long, max_val long, sum_val long, null_count long, "
-    "min_str string, max_str string, "
-    "min_f64 double, max_f64 double, "
-    "bloom binary, "
-    "encode_sec double, blob binary"
-)
-
-MANIFEST_COLS = ["part_id", "chunk_seq", "chunk_id", "column", "codec",
-                 "num_elements", "raw_bytes", "encoded_bytes", "sha256",
-                 "min_val", "max_val", "sum_val", "null_count",
-                 "min_str", "max_str", "min_f64", "max_f64", "bloom",
-                 "encode_sec"]
-
-MANIFEST_SCHEMA = ", ".join(f for f in CHUNK_SCHEMA.split(", ")
-                            if f.split()[0] in MANIFEST_COLS)
-
-# The part-level zone maps and counts the driver reads with no Spark job
-# (encoded_table.part_summary): each manifest write adds one row per
-# (part_id, column) it wrote (write_manifest).  sum_val is NULL when some
-# chunk's is, or when the total leaves int64.
-PART_SUMMARY_SCHEMA = (
-    "part_id int, column string, chunks long, dict_chunks long, "
-    "rows long, nulls long, min_val long, max_val long, "
-    "min_str string, max_str string, min_f64 double, max_f64 double, "
-    "sum_val long"
-)
-
-# Bumped whenever CHUNK_SCHEMA / MANIFEST_COLS change shape.  v2 added
-# sum_val + null_count; v3 added min_str/max_str (string-column chunk
-# stats enabling string-predicate chunk pruning over the store); v4
-# added min_f64/max_f64 (float-column chunk stats — range predicates
-# over xor_f64/vec_f32 columns prune at the manifest level); v5 added
-# bloom (per-chunk Bloom filters on key-like string/binary columns —
-# point-lookup pruning where zone maps can't help, codecs/bloom.py); v6
-# added part_summary (PART_SUMMARY_SCHEMA) and partitions every chunks
-# dataset, streamed ones too, by part_id; v7 keeps one live deletion
-# vector per chunk, committed by a delete_log row (spark/delete_job.py).
-# Stores written before versioning existed have no store_meta directory
-# and read as None.
-STORE_FORMAT_VERSION = 7
-APPEND_LOG_SCHEMA = "batch_id string, part_offset int, n_parts int"
 
 _I64 = (1 << 63) - 1
 
 
 def summarize_parts(manifest: DataFrame) -> DataFrame:
-    """PART_SUMMARY_SCHEMA rows of a manifest DataFrame: per (part_id,
+    """layout.PART_SUMMARY rows of a manifest DataFrame: per (part_id,
     column) the chunk and dict-chunk counts, rows, nulls, the bounds of
     every zone-map pair and the sum.  The rows are metadata (one per
     chunk and column), so one task folds them: a single partition
@@ -114,43 +67,49 @@ def summarize_parts(manifest: DataFrame) -> DataFrame:
 
 def write_manifest(spark: SparkSession, out_dir: str, chunks_df: DataFrame,
                    mode: str = "overwrite") -> None:
-    """The one manifest writer: `chunks_df`'s manifest rows to
-    {out_dir}/manifest and their per-part summary to
-    {out_dir}/part_summary, both in `mode` ("overwrite" re-derives the
-    whole store's metadata from its chunks; "append" adds a stream
-    micro-batch's, whose part ids repeat earlier batches' — readers
-    combine summary rows per (part_id, column))."""
-    man = chunks_df.select(*MANIFEST_COLS)
-    man.write.mode(mode).parquet(os.path.join(out_dir, "manifest"))
+    """The one manifest writer: `chunks_df`'s manifest rows to the
+    store's manifest and their per-part summary to its part summary,
+    both in `mode` ("overwrite" re-derives the whole store's metadata
+    from its chunks; "append" adds a stream micro-batch's, whose part
+    ids repeat earlier batches' — readers combine summary rows per
+    (part_id, column))."""
+    man = chunks_df.select(*layout.MANIFEST.columns)
+    man.write.mode(mode).parquet(layout.MANIFEST.path(out_dir))
     (summarize_parts(man).write.mode(mode)
-        .parquet(os.path.join(out_dir, "part_summary")))
+        .parquet(layout.PART_SUMMARY.path(out_dir)))
 
 
-def _store_version(spark: SparkSession, out_dir: str) -> int | None:
-    """The store_meta format_version, read with no Spark job."""
-    try:
-        rows = _small_table(spark, os.path.join(out_dir, "store_meta"),
-                            "format_version int")
-        return int(rows[0]["format_version"]) if rows else None
-    except Exception:
-        return None
+def table_rows(df: DataFrame, columns: list[str] | None = None) -> list[tuple]:
+    """layout.TABLE_SCHEMA rows of `df`'s encoded columns — `columns`,
+    or every column not named '__*' — at their positions in df."""
+    return [(i, f.name, f.dataType.simpleString())
+            for i, f in enumerate(df.schema.fields)
+            if (f.name in columns if columns
+                else not f.name.startswith("__"))]
 
 
-def require_current(spark: SparkSession, out_dir: str, op: str) -> None:
-    """Refuse (ValueError) a store of any other format version."""
-    ver = _store_version(spark, out_dir)
-    if ver != STORE_FORMAT_VERSION:
-        raise ValueError(f"{op}: {out_dir} has store format v{ver}; "
-                         f"this build handles v{STORE_FORMAT_VERSION} only")
+def start_store(spark: SparkSession, out_dir: str, schema_rows) -> None:
+    """The version marker, then the column types, BEFORE any chunk: a
+    crash mid-chunks (what resume is for) leaves a store that identifies
+    and describes itself.  Both writes are overwrite-idempotent."""
+    layout.write_meta(spark, out_dir, layout.STORE_META,
+                      [(layout.FORMAT_VERSION,)])
+    layout.write_meta(spark, out_dir, layout.TABLE_SCHEMA, schema_rows)
 
 
-def _fs_exists(spark: SparkSession, path: str) -> bool:
-    """Existence check through Spark's Hadoop FileSystem API — works on
-    HDFS/S3A/GCS paths where a driver-local os.path.exists would not."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(hpath))
+def commit_chunks(spark: SparkSession, out_dir: str,
+                  chunks_df: DataFrame) -> DataFrame:
+    """Write `chunks_df`'s parts, then the manifest of every written
+    chunk; returns the chunks table.  Dynamic partition overwrite: a
+    replayed part REPLACES its directory, idempotent because encode is
+    deterministic."""
+    (chunks_df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(layout.CHUNKS.partition)
+        .parquet(layout.CHUNKS.path(out_dir)))
+    written = layout.read(spark, out_dir, layout.CHUNKS)
+    write_manifest(spark, out_dir, written)
+    return written
 
 
 def _raw_size(series: pd.Series) -> int:
@@ -227,19 +186,6 @@ def _raw_size_arrow(arr) -> int:
     return len(arr) * (t.bit_width // 8)
 
 
-_CHUNK_PA_FIELDS = [
-    ("part_id", "int32"), ("chunk_seq", "int32"), ("chunk_id", "string"),
-    ("column", "string"), ("codec", "string"), ("num_elements", "int64"),
-    ("raw_bytes", "int64"), ("encoded_bytes", "int64"), ("sha256", "string"),
-    ("min_val", "int64"), ("max_val", "int64"), ("sum_val", "int64"),
-    ("null_count", "int64"), ("min_str", "string"), ("max_str", "string"),
-    ("min_f64", "float64"), ("max_f64", "float64"),
-    ("bloom", "binary"),
-    ("encode_sec", "float64"),
-    ("blob", "binary"),
-]
-
-
 def _string_min_max(arr) -> tuple[str | None, str | None]:
     """(min, max) of a pyarrow STRING array, nulls skipped — the chunk
     stats that make string predicates prunable at the manifest level
@@ -267,7 +213,7 @@ def _encode_iter_arrow(columns: list[str], codec_overrides: dict[str, str],
     def fn(batches):
         import pyarrow as pa
         from pyspark import TaskContext
-        out_schema = pa.schema([(n, getattr(pa, t)()) for n, t in _CHUNK_PA_FIELDS])
+        out_schema = layout.CHUNKS.arrow_schema()
         part_id = part_offset + TaskContext.get().partitionId()
         if part_id in skip_parts:
             return
@@ -332,7 +278,8 @@ def encode_table(spark: SparkSession, df: DataFrame, out_dir: str,
     partitioned by part_id for per-partition commit granularity) and the
     manifest at {out_dir}/manifest.
     """
-    columns = columns or [c for c in df.columns if not c.startswith("__")]
+    schema_rows = table_rows(df, columns)
+    columns = columns or [n for _, n, _ in schema_rows]
     codec_overrides = codec_overrides or {}
 
     if url_col and url_col in df.columns:
@@ -341,68 +288,31 @@ def encode_table(spark: SparkSession, df: DataFrame, out_dir: str,
         df = df.repartition(num_partitions)
 
     skip_parts: set[int] = set()
-    chunks_path = os.path.join(out_dir, "chunks")
-    if resume and write and _fs_exists(spark, chunks_path):
-        # a resume APPENDS to the existing chunks dataset, so the
-        # on-disk format must match what this build writes — mixing
-        # schemas (e.g. a pre-v2 store without sum_val/null_count)
-        # would corrupt the dataset for every reader
-        ver = _store_version(spark, out_dir)
-        if ver != STORE_FORMAT_VERSION:
-            # store_meta is written BEFORE the chunks, so any store this
-            # build started — even one that crashed mid-chunks, the exact
-            # scenario resume exists for — carries its version marker.
-            # A missing marker therefore means a pre-versioning build
-            # wrote (or was writing) this store: refuse to mix schemas.
-            raise ValueError(
-                f"store at {out_dir} has format_version={ver}, this build "
-                f"writes v{STORE_FORMAT_VERSION}; rerun with resume=False "
-                "to re-encode, or read the old store with a matching build")
-        # resume state is derived from the CHUNKS directory (the data of
-        # record), not the manifest: a failure between the chunk write
-        # and the manifest write would otherwise leave committed chunks
-        # invisible to resume and re-append duplicates.  part_id is the
-        # partition column, so this reads only the directory listing.
-        try:
-            done = (spark.read.parquet(chunks_path)
-                    .select("part_id").distinct().collect())
-            skip_parts = {r["part_id"] for r in done}
-        except Exception:
-            skip_parts = set()  # empty/partial dir: re-encode everything
+    if resume and write and layout.exists(spark,
+                                          layout.CHUNKS.path(out_dir)):
+        # a resume APPENDS to the existing chunks, so the store must be
+        # in this build's format (mixed schemas corrupt every reader).
+        # store_meta goes down before any chunk, so even a crashed
+        # encode of this build carries it; a missing one means an
+        # older build wrote the store.
+        layout.require_current(spark, out_dir, "encode_table")
+        # the parts on disk come from the chunks (the data of record),
+        # not the manifest: a crash between the two writes must not
+        # hide committed parts from resume and re-append them
+        skip_parts = {r["part_id"] for r in
+                      layout.read(spark, out_dir, layout.CHUNKS)
+                      .select("part_id").distinct().collect()}
 
     enc = df.mapInArrow(_encode_iter_arrow(columns, codec_overrides, skip_parts),
-                        schema=CHUNK_SCHEMA)
+                        schema=layout.CHUNKS.ddl)
     if not write:
         return enc
 
-    # version marker + schema go down BEFORE the long chunks write: a
-    # crash during the chunks stage (the scenario resume exists for)
-    # must leave a store whose format_version identifies it, or the next
-    # resume=True run would refuse it and force a full re-encode.  Both
-    # writes are tiny and overwrite-idempotent.
-    (spark.createDataFrame([(STORE_FORMAT_VERSION,)], "format_version int")
-        .coalesce(1).write.mode("overwrite")
-        .parquet(os.path.join(out_dir, "store_meta")))
-    # self-describing store: persist the source column types so readers
-    # can rebuild the decoded view without being handed a DDL string
-    # (written through Spark => works on any shared FS)
-    schema_rows = [(i, f.name, f.dataType.simpleString())
-                   for i, f in enumerate(df.schema.fields)
-                   if f.name in columns]
-    (spark.createDataFrame(schema_rows, "position int, name string, dtype string")
-        .coalesce(1).write.mode("overwrite")
-        .parquet(os.path.join(out_dir, "table_schema")))
-    # dynamic partition overwrite: a replayed partition REPLACES its
-    # directory instead of appending a duplicate — encode is
-    # deterministic, so replace is idempotent
-    (enc.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("part_id").parquet(chunks_path))
-    # manifest derived from the written chunks (no double encode)
-    write_manifest(spark, out_dir, spark.read.parquet(chunks_path))
+    start_store(spark, out_dir, schema_rows)
+    written = commit_chunks(spark, out_dir, enc)
     from ..sources.snapshot import BASE_SNAPSHOT
     _write_commit_marker(spark, out_dir, BASE_SNAPSHOT)
-    return spark.read.parquet(chunks_path)
+    return written
 
 
 def append_table(spark: SparkSession, df: DataFrame, out_dir: str,
@@ -448,14 +358,8 @@ def append_table(spark: SparkSession, df: DataFrame, out_dir: str,
     schemas corrupts every reader) or a batch whose columns/types don't
     match the store's own table_schema (an appended column the old
     chunks lack would decode as misaligned rows)."""
-    ver = _store_version(spark, out_dir)
-    if ver != STORE_FORMAT_VERSION:
-        raise ValueError(
-            f"append_table: store at {out_dir} has format_version={ver}, "
-            f"this build writes v{STORE_FORMAT_VERSION}; re-encode or "
-            "compact the store with a matching build first")
-    schema_rows = (spark.read.parquet(os.path.join(out_dir, "table_schema"))
-                   .orderBy("position").collect())
+    layout.require_current(spark, out_dir, "append_table")
+    schema_rows = _schema_rows(spark, out_dir)
     store_schema = [(r["name"], r["dtype"]) for r in schema_rows]
     columns = [n for n, _ in store_schema]
     batch_schema = [(f.name, f.dataType.simpleString())
@@ -474,11 +378,10 @@ def append_table(spark: SparkSession, df: DataFrame, out_dir: str,
             "evolve the schema (old parts decode them as NULL)")
     if new_cols:
         next_pos = max(int(r["position"]) for r in schema_rows) + 1
-        (spark.createDataFrame(
+        layout.write_meta(
+            spark, out_dir, layout.TABLE_SCHEMA,
             [(next_pos + i, n, t) for i, (n, t) in enumerate(new_cols)],
-            "position int, name string, dtype string")
-            .coalesce(1).write.mode("append")
-            .parquet(os.path.join(out_dir, "table_schema")))
+            "append")
         columns = columns + [n for n, _ in new_cols]
 
     if url_col and url_col in df.columns:
@@ -488,8 +391,6 @@ def append_table(spark: SparkSession, df: DataFrame, out_dir: str,
     n_parts = df.rdd.getNumPartitions()
 
     from ..sources.snapshot import _log_rows
-    chunks_path = os.path.join(out_dir, "chunks")
-    log_path = os.path.join(out_dir, "append_log")
     prior = {r["batch_id"]: (r["part_offset"], r["n_parts"])
              for r in _log_rows(spark, out_dir)}
     if batch_id in prior:
@@ -505,7 +406,7 @@ def append_table(spark: SparkSession, df: DataFrame, out_dir: str,
         # every RESERVED range (a logged batch that crashed before
         # writing any chunk still owns its range — its retry will fill
         # it)
-        max_part = (spark.read.parquet(chunks_path)
+        max_part = (layout.read(spark, out_dir, layout.CHUNKS)
                     .agg(F.max("part_id")).collect()[0][0])
         part_offset = max(
             [(max_part + 1) if max_part is not None else 0]
@@ -513,19 +414,14 @@ def append_table(spark: SparkSession, df: DataFrame, out_dir: str,
         # intent recorded BEFORE any chunk write: a crashed append's
         # retry finds its range here instead of colliding past the
         # partial parts
-        (spark.createDataFrame([(batch_id, part_offset, n_parts)],
-                               APPEND_LOG_SCHEMA)
-            .coalesce(1).write.mode("append").parquet(log_path))
+        layout.write_meta(spark, out_dir, layout.APPEND_LOG,
+                          [(batch_id, part_offset, n_parts)], "append")
 
     enc = df.mapInArrow(
         _encode_iter_arrow(columns, codec_overrides or {}, set(),
                            part_offset=int(part_offset)),
-        schema=CHUNK_SCHEMA)
-    (enc.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("part_id").parquet(chunks_path))
-    written = spark.read.parquet(chunks_path)
-    write_manifest(spark, out_dir, written)
+        schema=layout.CHUNKS.ddl)
+    written = commit_chunks(spark, out_dir, enc)
     _write_commit_marker(spark, out_dir, batch_id)
     return written
 
@@ -538,9 +434,8 @@ def _write_commit_marker(spark: SparkSession, out_dir: str,
     whose every Spark partition was empty (no part directory at all)
     from an append that crashed before its chunks.  Retries append a
     duplicate row; readers treat the log as a set."""
-    (spark.createDataFrame([(batch_id,)], "batch_id string")
-        .coalesce(1).write.mode("append")
-        .parquet(os.path.join(out_dir, "append_commits")))
+    layout.write_meta(spark, out_dir, layout.APPEND_COMMITS, [(batch_id,)],
+                      "append")
 
 
 def copy_store_history(spark: SparkSession, src_dir: str,
@@ -552,23 +447,15 @@ def copy_store_history(spark: SparkSession, src_dir: str,
     history to an exactly-once consumer; losing the log would erase
     snapshot time travel.  NOT for cluster_store, which moves rows
     across parts and so resets history by design."""
-    for hist in ("append_log", "append_commits"):
-        src_log = os.path.join(src_dir, hist)
-        if _fs_exists(spark, src_log):
-            (spark.read.parquet(src_log).coalesce(1).write
-                .mode("overwrite").parquet(os.path.join(dst_dir, hist)))
-    src_cons = os.path.join(src_dir, "consumers")
-    if _fs_exists(spark, src_cons):
-        jvm = spark._jvm
-        fs = jvm.org.apache.hadoop.fs.Path(src_cons).getFileSystem(
-            spark._jsc.hadoopConfiguration())
-        for st in fs.listStatus(jvm.org.apache.hadoop.fs.Path(src_cons)):
-            cid = st.getPath().getName()
-            (spark.read.schema("batch_id string, part_hi int")
-                .parquet(os.path.join(src_cons, cid, "cursor"))
-                .coalesce(1).write.mode("overwrite")
-                .parquet(os.path.join(dst_dir, "consumers", cid,
-                                      "cursor")))
+    copies = [(src_dir, dst_dir, t)
+              for t in (layout.APPEND_LOG, layout.APPEND_COMMITS)]
+    copies += [(layout.consumer_dir(src_dir, cid),
+                layout.consumer_dir(dst_dir, cid), layout.CURSOR)
+               for cid in layout.consumer_ids(spark, src_dir)]
+    for src, dst, table in copies:
+        rows = layout.read_meta(spark, src, table)
+        if rows:
+            layout.write_meta(spark, dst, table, rows)
 
 
 def store_stats(spark: SparkSession, out_dir: str) -> dict:
@@ -587,8 +474,8 @@ def store_stats(spark: SparkSession, out_dir: str) -> dict:
     from ..sources.encoded_table import part_summary, stored_schema
     from . import delete_job
     # older manifests lack stats columns this aggregation reads
-    require_current(spark, out_dir, "store_stats")
-    m = spark.read.parquet(os.path.join(out_dir, "manifest"))
+    layout.require_current(spark, out_dir, "store_stats")
+    m = layout.read(spark, out_dir, layout.MANIFEST)
     rows = (m.groupBy("column")
             .agg(F.collect_set("codec").alias("codecs"),
                  F.count("*").alias("chunks"),
@@ -633,7 +520,7 @@ def store_stats(spark: SparkSession, out_dir: str) -> dict:
     raw = sum(c["raw_bytes"] for c in cols.values())
     enc = sum(c["encoded_bytes"] for c in cols.values())
     return {
-        "format_version": STORE_FORMAT_VERSION,
+        "format_version": layout.FORMAT_VERSION,
         "columns": cols,
         "raw_bytes": raw, "encoded_bytes": enc,
         "ratio": raw / enc if enc else None,

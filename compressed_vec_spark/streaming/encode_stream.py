@@ -19,6 +19,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..sources import layout
 from ..spark import encode_job
 
 
@@ -26,31 +27,21 @@ def start_encode_stream(spark: SparkSession, source: DataFrame, out_dir: str,
                         trigger_seconds: int = 5,
                         columns: list[str] | None = None):
     """source: a streaming DataFrame with web-table schema.  Returns the
-    StreamingQuery; encoded chunks land under {out_dir}/chunks."""
-    chunks_path = os.path.join(out_dir, "chunks")
-
-    # same guard as the batch resume path: appending this build's chunk
-    # schema onto a store written by a different format version would
-    # mix manifest schemas (parquet infers from one sampled footer —
-    # readers would nondeterministically miss the new stats columns).
-    # A fresh dir gets the version marker BEFORE the first batch, so a
-    # crash mid-stream leaves an identifiable store, like batch encode.
-    ver = encode_job._store_version(spark, out_dir)
-    if ver is not None and ver != encode_job.STORE_FORMAT_VERSION:
+    StreamingQuery; encoded chunks land under the store's chunks, and
+    the store describes itself like a batch-encoded one."""
+    # the batch resume guard: appending onto another format version
+    # would mix schemas.  A fresh dir is started before the first batch,
+    # so a crash mid-stream leaves a self-describing store.
+    if layout.version(spark, out_dir) is not None:
+        layout.require_current(spark, out_dir, "start_encode_stream")
+    elif layout.exists(spark, layout.CHUNKS.path(out_dir)):
         raise ValueError(
-            f"stream target {out_dir} has store format v{ver}; this build "
-            f"writes v{encode_job.STORE_FORMAT_VERSION} — appending would "
-            "mix manifest schemas. Use a new output dir (or re-encode).")
-    if ver is None:
-        if encode_job._fs_exists(spark, chunks_path):
-            raise ValueError(
-                f"stream target {out_dir} has chunks but no store_meta "
-                "(pre-versioning store); appending would mix manifest "
-                "schemas. Use a new output dir.")
-        (spark.createDataFrame([(encode_job.STORE_FORMAT_VERSION,)],
-                               "format_version int")
-            .coalesce(1).write.mode("overwrite")
-            .parquet(os.path.join(out_dir, "store_meta")))
+            f"stream target {out_dir} has chunks but no store_meta "
+            "(pre-versioning store); appending would mix manifest "
+            "schemas. Use a new output dir.")
+    else:
+        encode_job.start_store(spark, out_dir,
+                               encode_job.table_rows(source, columns))
 
     def process_batch(batch_df: DataFrame, batch_id: int):
         encode_micro_batch(spark, batch_df, batch_id, out_dir, columns)
@@ -80,8 +71,8 @@ def encode_micro_batch(spark: SparkSession, batch_df: DataFrame,
         "chunk_id", F.concat(F.lit(f"b{batch_id:08d}-"), F.col("chunk_id"))
     ).persist()
     try:
-        (enc.write.mode("append").partitionBy("part_id")
-            .parquet(os.path.join(out_dir, "chunks")))
+        (enc.write.mode("append").partitionBy(layout.CHUNKS.partition)
+            .parquet(layout.CHUNKS.path(out_dir)))
         encode_job.write_manifest(spark, out_dir, enc, mode="append")
     finally:
         enc.unpersist()

@@ -7,7 +7,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from compressed_vec_spark.sources import encoded_table
+from compressed_vec_spark.sources import encoded_table, layout
 from compressed_vec_spark.sources.encoded_table import Leaf
 from compressed_vec_spark.spark import compact_job, decode_job, encode_job
 from compressed_vec_spark.spark.session import get_spark
@@ -59,7 +59,7 @@ def test_compact_streamed_store_with_colliding_chunk_seq(spark, tmp_path):
     pdf["v"] = pdf["k"] * 7
     df = spark.createDataFrame(pdf).coalesce(1)
     # simulate two micro-batches the way start_encode_stream writes them
-    (spark.createDataFrame([(encode_job.STORE_FORMAT_VERSION,)],
+    (spark.createDataFrame([(layout.FORMAT_VERSION,)],
                            "format_version int")
         .write.parquet(os.path.join(src, "store_meta")))
     schema_rows = [(i, n, "bigint") for i, n in enumerate(["k", "v"])]
@@ -77,7 +77,7 @@ def test_compact_streamed_store_with_colliding_chunk_seq(spark, tmp_path):
             # the second batch's manifest write "crashed": its chunks
             # are committed but unlisted — chunks/ is the data of
             # record, so compaction must still carry those rows
-            (enc.select(*encode_job.MANIFEST_COLS)
+            (enc.select(*layout.MANIFEST.columns)
                 .write.mode("append").parquet(os.path.join(src, "manifest")))
 
     # both batches produced (part_id=0, chunk_seq=0): the collision
@@ -117,8 +117,8 @@ def test_compact_store_end_to_end(spark, tmp_path):
     assert host_codecs == {"dict"}
 
     # same format version, fewer manifest rows, same total elements
-    assert encode_job._store_version(spark, dst) == \
-        encode_job.STORE_FORMAT_VERSION
+    assert layout.version(spark, dst) == \
+        layout.FORMAT_VERSION
     src_m = spark.read.parquet(os.path.join(src, "manifest"))
     dst_m = spark.read.parquet(os.path.join(dst, "manifest"))
     for col in ("k", "host", "v"):

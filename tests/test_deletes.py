@@ -11,7 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from compressed_vec_spark.codecs import chunk as chunk_codec
-from compressed_vec_spark.sources import encoded_table
+from compressed_vec_spark.sources import encoded_table, layout
 from compressed_vec_spark.sources.encoded_table import Leaf
 from compressed_vec_spark.spark import (compact_job, delete_job,
                                         encode_job)
@@ -568,6 +568,41 @@ def test_generation_is_or_of_deletes(spark, store2):
     assert want and _masks(spark, out) == want
 
 
+def test_vacuum_keeps_only_live_generation(spark, tmp_path):
+    """After three deletes `deletes/` holds one partition, the last
+    delete's (its id escaped in the directory name), and it is the OR
+    of the three deletes' positions."""
+    out, _ = _lang_sorted_store(spark, str(tmp_path / "vac"))
+    raw = encoded_table.read_decoded(spark, out,
+                                     apply_deletes=False).toPandas()
+    delete_job.delete_where_equals(spark, out, "lang", "en", "v1")
+    delete_job.delete_where_range(spark, out, "nch", 0, 1000, "v2")
+    delete_job.delete_where_in(spark, out, "lang", ["fr"], "v:3")
+    parts = [n for n in os.listdir(layout.DELETES.path(out))
+             if n.startswith("delete_id=")]
+    assert parts == ["delete_id=v%3A3"]
+
+    d = ((raw["lang"] == "en").fillna(False)
+         | raw["nch"].between(0, 1000)
+         | (raw["lang"] == "fr").fillna(False))
+    dead = set(raw.loc[d, "k"])
+    want = {}
+    for r in (spark.read.parquet(os.path.join(out, "chunks"))
+              .where(F.col("column") == "k")
+              .select("chunk_id", "blob").collect()):
+        ks = np.asarray(chunk_codec.decode_column(bytes(r["blob"])))
+        m = np.isin(ks, list(dead))
+        if m.any():
+            want[r["chunk_id"]] = (int(m.sum()), np.packbits(m).tobytes())
+    assert want and _masks(spark, out) == want
+    st = delete_job.delete_stats(spark, out)
+    assert st["deleted_rows"] == len(dead)
+    assert st["live_rows"] == len(raw) - len(dead)
+    live = encoded_table.read_decoded(spark, out).toPandas()
+    assert len(live) == len(raw) - len(dead)
+    assert set(live["k"]) == set(raw["k"]) - dead
+
+
 def test_crash_before_commit_keeps_parent(spark, store2, tmp_path,
                                           monkeypatch):
     """A delete that dies after writing its generation but before its
@@ -624,7 +659,7 @@ def test_pre_v7_sidecar_refused(spark, tmp_path):
     (spark.createDataFrame([(6,)], "format_version int").coalesce(1)
         .write.mode("overwrite").parquet(os.path.join(out, "store_meta")))
     (spark.createDataFrame([("d1", 0, 0, "p00000-c00000", 500, 1,
-                             bytes(63))], delete_job.DELETE_SCHEMA)
+                             bytes(63))], layout.DELETES.ddl)
         .write.partitionBy("delete_id")
         .parquet(os.path.join(out, "deletes")))
     for fn in (delete_job.has_deletes, delete_job.live_masks):

@@ -93,11 +93,13 @@ def test_unknown_batch_refused(spark, store):
 
 
 def test_snapshots_survive_compaction(spark, store, tmp_path):
-    """Compaction merges small chunks WITHIN parts and now carries the
-    append_log over, so part-range snapshots stay exact on the
-    compacted store."""
+    """Compaction merges small chunks WITHIN parts and carries the
+    append_log and consumer cursors over, so part-range snapshots stay
+    exact on the compacted store and a caught-up consumer stays caught
+    up."""
     out, urls = store
     dst = str(tmp_path / "compacted")
+    snapshot.consume_new_batches(spark, out, "c-compact", lambda b, df: None)
     stats = compact_job.compact_store(spark, out, dst,
                                       target_elements=4096)
     assert stats["chunks_after"] <= stats["chunks_before"]
@@ -107,6 +109,10 @@ def test_snapshots_survive_compaction(spark, store, tmp_path):
     assert _urls(snapshot.read_snapshot(spark, dst, "crawl-b1")) == \
         urls[0] | urls[1]
     assert _urls(snapshot.snapshot_diff(spark, dst, "crawl-b2")) == urls[2]
+    # the consumer's cursor carries over: nothing re-delivers
+    assert (snapshot.consumer_position(spark, dst, "c-compact")
+            == snapshot.consumer_position(spark, out, "c-compact") > 0)
+    assert snapshot.pending_batches(spark, dst, "c-compact") == []
 
 
 def test_pruned_range_count_as_of(spark, tmp_path):

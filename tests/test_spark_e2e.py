@@ -8,6 +8,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from compressed_vec_spark.sources import layout
 from compressed_vec_spark.spark import decode_job, encode_job, webtable
 from compressed_vec_spark.spark.session import get_spark
 
@@ -133,8 +134,8 @@ def test_resume_rejects_foreign_format_version(spark, tmp_path):
         encode_job.encode_table(spark, web, out, num_partitions=2)
     # resume=False re-encodes and heals the version marker
     encode_job.encode_table(spark, web, out, num_partitions=2, resume=False)
-    assert encode_job._store_version(spark, out) \
-        == encode_job.STORE_FORMAT_VERSION
+    assert layout.version(spark, out) \
+        == layout.FORMAT_VERSION
 
 
 def test_resume_after_manifest_write_failure(spark, tmp_path):
@@ -260,7 +261,7 @@ def test_store_stats_metadata_only(spark, tmp_path):
     encode_job.encode_table(spark, df, out, url_col=None,
                             codec_overrides={"s": "dict"})
     st = encode_job.store_stats(spark, out)
-    assert st["format_version"] == encode_job.STORE_FORMAT_VERSION
+    assert st["format_version"] == layout.FORMAT_VERSION
     assert st["parts"] == 2 and st["snapshots"] == 1
     assert st["total_rows"] == 2000 and st["deleted_rows"] == 0
     k = st["columns"]["k"]

@@ -7,6 +7,7 @@ import time
 import pytest
 from pyspark.sql import functions as F
 
+from compressed_vec_spark.sources import encoded_table
 from compressed_vec_spark.spark import decode_job, webtable
 from compressed_vec_spark.spark.session import get_spark
 from compressed_vec_spark.streaming import encode_stream
@@ -64,6 +65,10 @@ def test_stream_encode_file_source(spark, tmp_path):
     decoded = decode_job.decode_chunks(chunks, schema=webtable.SCHEMA,
                                        dtypes={"warc_ts": "timestamp"})
     res = decode_job.verify_bit_identical(web, decoded, key="url")
+    assert all(v == 0 for v in res["mismatches"].values()), res
+    # the stream store describes itself: its own decoded view matches
+    res = decode_job.verify_bit_identical(
+        web, encoded_table.read_decoded(spark, out_dir), key="url")
     assert all(v == 0 for v in res["mismatches"].values()), res
 
 

@@ -41,7 +41,7 @@ SKIP_TIMED = {"minhash_near_dup", "ngram_jaccard_pairs",
 def main() -> None:
     args = sys.argv[1:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
     repeats, plans, warm = 1, None, True
     names = []
     i = 0

@@ -63,15 +63,3 @@ def runs(blob: bytes) -> tuple[np.ndarray, np.ndarray]:
     v = vec.decode_vector(blob[14:14 + vlen], "u64")[:nruns]
     l = vec.decode_vector(blob[14 + vlen:], "u64")[:nruns]
     return v, l
-
-
-def count_in_range(blob: bytes, lo: int, hi: int) -> int:
-    """COUNT(lo <= x <= hi) straight off the runs (no expansion)."""
-    v, l = runs(blob)
-    lo_u = np.uint64(max(lo, 0))
-    hi_u = np.uint64(min(max(hi, 0), (1 << 64) - 1))
-    if hi < 0:
-        return 0
-    sel = (v >= lo_u) & (v <= hi_u)
-    return int(l[sel].sum())
-

@@ -1281,7 +1281,11 @@ def read_decoded(spark: SparkSession, out_dir: str, schema: str | None = None,
     With schema=None the store describes itself via its table_schema
     file.  The live deletion vectors (`delete_job.live_masks`) are
     subtracted by default — apply_deletes=False reads the raw
-    pre-delete rows (the view a snapshot read also sees)."""
+    pre-delete rows (the view a snapshot read also sees).
+
+    The DataFrame keeps the deletion generation live when it was
+    built: after a later delete vacuums that generation, it fails with
+    FILE_NOT_EXIST.  Call read_decoded again after each delete."""
     from ..spark import decode_job, delete_job
     if schema is None:
         schema, auto_dtypes = stored_schema(spark, out_dir)
@@ -1296,7 +1300,11 @@ def register_encoded_table(spark: SparkSession, out_dir: str,
                            name: str) -> DataFrame:
     """Expose an encoded store as a temp view so plain `spark.sql`
     queries run over the decoded rows — the drop-in path for a user
-    switching an existing SQL workload onto this engine's storage."""
+    switching an existing SQL workload onto this engine's storage.
+
+    The view is a `read_decoded` DataFrame, so it keeps the deletion
+    generation live at registration and fails with FILE_NOT_EXIST
+    once a later delete vacuums it: re-register after each delete."""
     df = read_decoded(spark, out_dir)
     df.createOrReplaceTempView(name)
     return df

@@ -295,3 +295,32 @@ def test_membership_antijoin_plan_is_scale_shaped(spark):
     plan = plans.physical_plan(q.store_membership_antijoin(spark, sf))
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
+
+
+def test_generated_fixtures_are_write_once_under_scratch_dir(
+        spark, tmp_path, monkeypatch):
+    """Every generated-fixture entry's oracle reads the version-keyed
+    directory under $CVX_SCRATCH_DIR, and a second run of a query
+    leaves its fixture files untouched (write-once)."""
+    monkeypatch.setenv("CVX_SCRATCH_DIR", str(tmp_path))
+    sql = entrymod.oracle_sql()
+    for name, fixture in [
+            ("encoded_table_null_count", "cvx_nulls_oracle_v1_r2000"),
+            ("media_inventory", "cvx_media_oracle_v4_r300"),
+            ("url_canonical_dedup", "cvx_url_oracle_v1_r600"),
+            ("pii_scrub", "cvx_pii_oracle_v1_r300"),
+            ("c4_line_filter", "cvx_c4_oracle_v1_r240"),
+            ("boilerplate_removal", "cvx_boiler_oracle_v1_r200")]:
+        assert f"'{tmp_path / fixture}/" in sql[name], name
+
+    query = entrymod.queries()["url_canonical_dedup"]
+    fixture = tmp_path / "cvx_url_oracle_v1_r600"
+
+    def mtimes():
+        return {p: p.stat().st_mtime_ns for p in fixture.rglob("*")}
+
+    query(spark, SF_DIR).collect()
+    first = mtimes()
+    assert any(p.name == "_SUCCESS" for p in first), first
+    query(spark, SF_DIR).collect()
+    assert mtimes() == first

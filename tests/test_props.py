@@ -236,7 +236,7 @@ def test_exact_weighted_bincount_2pow40_scale(pairs):
     assert-crash at >= 2^32 is gone): hi/lo split accumulation vs
     Python-int ground truth, including 2^40..2^62-scale values."""
     import numpy as np
-    from compressed_vec_spark.spark.queries import exact_weighted_bincount
+    from compressed_vec_spark.sources.encoded_table import exact_weighted_bincount
     codes = np.array([p[0] for p in pairs], dtype=np.int64)
     vals = np.array([p[1] for p in pairs], dtype=np.int64)
     # keep the true per-group sums inside int64 (SQL overflow is the
@@ -253,7 +253,7 @@ def test_exact_weighted_bincount_2pow40_scale(pairs):
 
 def test_exact_weighted_bincount_nan_is_zero():
     import numpy as np
-    from compressed_vec_spark.spark.queries import exact_weighted_bincount
+    from compressed_vec_spark.sources.encoded_table import exact_weighted_bincount
     codes = np.array([0, 0, 1], dtype=np.int64)
     w = np.array([np.nan, 5.0, float(1 << 40)])
     acc = exact_weighted_bincount(codes, w)

@@ -45,18 +45,6 @@ def _overlap(*thunks):
         return [f.result() for f in futures]
 
 
-def _join_keep(chunks_df: DataFrame, masks: DataFrame | None) -> DataFrame:
-    """Attach the `keep_mask` column of `delete_job.live_masks` to a
-    chunk scan: a left join when the store has live deletes (each task
-    sees only its own chunks' masks; none reach the driver), a NULL
-    literal otherwise, so kernels read one uniform column either way."""
-    if masks is None:
-        return chunks_df.withColumn("keep_mask",
-                                    F.lit(None).cast("binary"))
-    masks = masks.select("chunk_id", "keep_mask")
-    return chunks_df.join(masks, "chunk_id", "left")
-
-
 def chunk_stats_for(series: pd.Series) \
         -> tuple[int | None, int | None, int | None, int]:
     """(min, max, sum, null_count) for numeric/timestamp chunks
@@ -394,9 +382,18 @@ def _stats(total: int, zone: int, kept: int, compressed=None,
     from the manifest and scans the rest.  `parts` is (parts in scope,
     parts whose chunks were read).  sections_skipped sums each
     leaf's sections left unpacked (header-answered, or dead under
-    earlier leaves).  The per-chunk kernel counters are None where the
-    chunk pass is not the terminal's own aggregate (a select's rows
-    are read later; a delete writes them)."""
+    earlier leaves).
+
+    The executor (`_run`) counts compressed, decoded and skipped work
+    per task, but only a scalar terminal (`_tally`: count, sum) ships
+    one row per task that can carry them.  They stay None elsewhere:
+    a select's and a top-k's tasks ship rows, a delete's tasks ship
+    the generation it writes, and membership's verify tasks ship
+    per-pair verdicts, so adding the counters would grow every partial
+    or cost a job of its own.  The group and distinct kernels set
+    compressed_chunks to the chunks they scan (both read dict codes
+    only, never a decode) and leave decoded_chunks and
+    sections_skipped None."""
     st = {"total_chunks": total, "scanned_chunks": kept - (covered or 0),
           "pruned_chunks": total - kept, "bloom_pruned_chunks": zone - kept,
           "compressed_chunks": compressed, "decoded_chunks": decoded,
@@ -431,8 +428,11 @@ def _front(spark: SparkSession, out_dir: str, leaves: list[Leaf],
     Bloom probes (the ids stay distributed and are broadcast into the
     first column's chunk scan, never collected).  The scan pairs each
     candidate's blobs of `cols` (blob b<i>, codec c<i>, with the first
-    column's part_id / chunk_seq / num_elements) and left-joins
-    `masks` as keep_mask.
+    column's part_id / chunk_seq / num_elements) and left-joins the
+    `keep_mask` column of `masks` (`delete_job.live_masks`; each task
+    sees only its own chunks' masks, none reach the driver), a NULL
+    literal when there are none, so `_chunk_mask` reads one uniform
+    column either way.
 
     `answer` names a column whose manifest `sum_val` answers a chunk
     outright when every leaf covers it (`Leaf.covers`), no keep mask
@@ -445,9 +445,11 @@ def _front(spark: SparkSession, out_dir: str, leaves: list[Leaf],
     counts() — (total chunks in scope, zone
     survivors, Bloom survivors; with `answer`, also the answered
     chunks, their summed sum_val and their non-null rows), one
-    manifest aggregate — the census {column: (chunks, dict-coded
-    chunks)} in scope, which shows a column schema evolution left out
-    of older chunks, and (parts in scope, parts read)."""
+    manifest aggregate, or with no leaf and no `answer` the total
+    three times from the part summary with no Spark job — the census
+    {column: (chunks, dict-coded chunks)} in scope, which shows a
+    column schema evolution left out of older chunks, and (parts in
+    scope, parts read)."""
     summ = part_summary(spark, out_dir)
     scope = sorted({p for p, _ in summ if parts is None or parts(p)})
     yes = F.lit(True)
@@ -468,9 +470,9 @@ def _front(spark: SparkSession, out_dir: str, leaves: list[Leaf],
     kept = [p for p in scope
             if all((p, c) in summ for c in need)
             and all(leaf.admits(summ[p, leaf.col]) for leaf in leaves)]
-    # a part's leaf-column chunks: every column a part holds has one
-    # row per chunk of that part
-    total = sum(max((summ[p, c]["chunks"] for c in by_col
+    # a part's chunks over the columns the front reads: every column a
+    # part holds has one row per chunk of that part
+    total = sum(max((summ[p, c]["chunks"] for c in need
                      if (p, c) in summ), default=0) for p in scope)
     census: dict[str, tuple[int, int]] = {}
     for (p, c), r in summ.items():
@@ -535,6 +537,8 @@ def _front(spark: SparkSession, out_dir: str, leaves: list[Leaf],
             scan = scan.join(side, "chunk_id")
 
     def counts() -> tuple[int, ...]:
+        if flags is None:  # no leaf: every chunk read survives
+            return total, total, total
         if not kept:
             return (total, 0, 0) + ((0, 0, 0) if ans else ())
         a = F.col("a")
@@ -545,9 +549,77 @@ def _front(spark: SparkSession, out_dir: str, leaves: list[Leaf],
                F.sum(F.when(a, F.col("nn")))] if ans else [])).collect()[0]
         return (total,) + tuple(int(v or 0) for v in r)
 
+    if masks is None:
+        scan = scan.withColumn("keep_mask", F.lit(None).cast("binary"))
+    else:
+        masks = masks.select("chunk_id", "keep_mask")
+        scan = scan.join(masks, "chunk_id", "left")
     return _Front([(leaf, cols.index(leaf.col)) for leaf in leaves],
-                  _join_keep(scan, masks), ids, counts, census,
-                  (len(scope), len(kept)))
+                  scan, ids, counts, census, (len(scope), len(kept)))
+
+
+def _run(front: _Front, per_chunk: Callable, schema: str,
+         fold: Callable | None = None,
+         value: int | None = None) -> DataFrame:
+    """The one Python-UDF pass over chunk blobs, which every store
+    terminal runs as a `per_chunk` function plus a combine step over
+    this pass's output (the reference's Sink, src/sink.rs:135-145,
+    which its filter chain feeds).  For each row of `front.scan` it
+    calls `_chunk_mask` once, the keep mask folded in, and hands
+    `per_chunk(row, mask)` the chunk's live matching rows as
+    per-section masks, None when no row survives.  It counts, in this
+    one place, the chunks answered compressed and decoded and the
+    sections left unpacked; a chunk with a matching row also counts as
+    decoded when the scan's column `value` (a SUM's) is not vec-coded.
+
+    Without `fold`, each partial per_chunk returns (a pandas frame of
+    `schema`; None adds nothing) leaves the task as it is made.  With
+    `fold`, the task's partials fold once, at its end, into one frame
+    of `schema`: `fold(partials, [compressed, decoded, skipped])`."""
+    paired = front.leaves  # task closures must not capture DataFrames
+
+    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        parts, n = [], [0, 0, 0]
+        for pdf in batches:
+            for row in pdf.itertuples(index=False):
+                m, comp, skipped = _chunk_mask(paired, row)
+                if (m is not None and value is not None
+                        and getattr(row, "c%d" % value) not in _VEC_KIND):
+                    comp = False
+                n = [n[0] + comp, n[1] + (not comp), n[2] + skipped]
+                part = per_chunk(row, m)
+                if part is None:
+                    continue
+                if fold is None:
+                    yield part
+                else:
+                    parts.append(part)
+        if fold is not None:
+            yield fold(parts, n)
+
+    return front.scan.mapInPandas(fn, schema)
+
+
+def _tally(front: _Front, per_chunk: Callable, width: int,
+           value: int | None = None) -> list[int]:
+    """A scalar terminal over `_run`: per_chunk returns `width` ints for
+    a chunk (None adds nothing), each task ships one row of their sums
+    and its counters, and the driver gets the `width` totals followed
+    by the chunks answered compressed, decoded and the sections
+    skipped.  The sums ride as strings and add up in decimal(38,0), so
+    no Python-int partial wraps."""
+    names = ["v%d" % i for i in range(width)]
+
+    def fold(parts: list, n: list) -> pd.DataFrame:
+        return pd.DataFrame([[str(sum(p[i] for p in parts))
+                              for i in range(width)] + n],
+                            columns=names + ["c", "d", "k"])
+
+    r = (_run(front, per_chunk, ", ".join(f"{c} string" for c in names)
+              + ", c long, d long, k long", fold, value)
+         .agg(*[F.sum(F.col(c).cast("decimal(38,0)")) for c in names],
+              *[F.sum(c) for c in "cdk"]).collect()[0])
+    return [int(v or 0) for v in r]
 
 
 def pruned_count(spark: SparkSession, out_dir: str, leaves: list[Leaf],
@@ -568,27 +640,10 @@ def pruned_count(spark: SparkSession, out_dir: str, leaves: list[Leaf],
         parts, masks = (lambda p: p < cutoff), None
     cols = list(dict.fromkeys(leaf.col for leaf in leaves))
     front = _front(spark, out_dir, leaves, cols, masks, parts)
-    paired = front.leaves  # task closures must not capture DataFrames
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        hits = comp = dec = skipped = 0
-        for pdf in batches:
-            for row in pdf.itertuples(index=False):
-                m, compressed, sk = _chunk_mask(paired, row)
-                hits += 0 if m is None else filters.count_hits(m)
-                comp += compressed
-                dec += not compressed
-                skipped += sk
-        yield pd.DataFrame({"h": [hits], "c": [comp], "d": [dec],
-                            "s": [skipped]})
-
-    (total, zone, scanned), agg = _overlap(
-        front.counts,
-        lambda: (front.scan.mapInPandas(fn, "h long, c long, d long, s long")
-                 .agg(*[F.sum(k).alias(k) for k in "hcds"]).collect()[0]))
-    return int(agg["h"] or 0), _stats(
-        total, zone, scanned, int(agg["c"] or 0), int(agg["d"] or 0),
-        int(agg["s"] or 0), parts=front.parts)
+    (total, zone, scanned), (hits, *counters) = _overlap(
+        front.counts, lambda: _tally(front, lambda row, m: (
+            None if m is None else (filters.count_hits(m),)), 1))
+    return hits, _stats(total, zone, scanned, *counters, parts=front.parts)
 
 
 def pruned_select(spark: SparkSession, out_dir: str, leaves: list[Leaf],
@@ -605,35 +660,29 @@ def pruned_select(spark: SparkSession, out_dir: str, leaves: list[Leaf],
     cols = list(dict.fromkeys([leaf.col for leaf in leaves] + list(project)))
     front = _front(spark, out_dir, leaves, cols,
                    delete_job.live_masks(spark, out_dir))
-    paired = front.leaves  # task closures must not capture DataFrames
     census = front.census
     n_chunks = max((n for n, _ in census.values()), default=0)
     if any(census.get(c, (0,))[0] != n_chunks for c in cols):
         return None
-    total, zone, scanned = front.counts()
     out_schema = ", ".join(
         f"{c} {dtypes.get(c, 'string').replace('int64', 'long')}"
         for c in project)
     proj = [(c, cols.index(c)) for c in project]
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for row in pdf.itertuples(index=False):
-                m = _chunk_mask(paired, row)[0]
-                if m is None:
-                    continue
-                out = {}
-                for c, i in proj:
-                    dec = chunk_codec.decode_column(
-                        bytes(getattr(row, "b%d" % i)), dtypes.get(c))
-                    vals = dec[m.reshape(-1)[:len(dec)]]
-                    out[c] = (vals.reset_index(drop=True)
-                              if isinstance(vals, pd.Series)
-                              else pd.Series(vals))
-                yield pd.DataFrame(out)
+    def rows(row, m) -> pd.DataFrame | None:
+        if m is None:
+            return None
+        out = {}
+        for c, i in proj:
+            dec = chunk_codec.decode_column(
+                bytes(getattr(row, "b%d" % i)), dtypes.get(c))
+            vals = dec[m.reshape(-1)[:len(dec)]]
+            out[c] = (vals.reset_index(drop=True)
+                      if isinstance(vals, pd.Series) else pd.Series(vals))
+        return pd.DataFrame(out)
 
-    return (front.scan.mapInPandas(fn, out_schema),
-            _stats(total, zone, scanned, parts=front.parts))
+    return (_run(front, rows, out_schema),
+            _stats(*front.counts(), parts=front.parts))
 
 
 def pruned_sum(spark: SparkSession, out_dir: str, leaves: list[Leaf],
@@ -653,45 +702,23 @@ def pruned_sum(spark: SparkSession, out_dir: str, leaves: list[Leaf],
     cols = list(dict.fromkeys([leaf.col for leaf in leaves] + [col]))
     front = _front(spark, out_dir, leaves, cols,
                    delete_job.live_masks(spark, out_dir), answer=col)
-    paired = front.leaves  # task closures must not capture DataFrames
     j = cols.index(col)
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        total = nn = comp = dec = skipped = 0
-        for pdf in batches:
-            for row in pdf.itertuples(index=False):
-                m, compressed, sk = _chunk_mask(paired, row)
-                skipped += sk
-                if m is not None:
-                    nulls, inner = chunk_codec.split_nulls(
-                        getattr(row, "b%d" % j))
-                    live = m.reshape(-1)[:int(row.num_elements)]
-                    nn += int((live if nulls is None
-                               else live & ~nulls).sum())
-                    kind = _VEC_KIND.get(getattr(row, "c%d" % j))
-                    if kind:
-                        total += filters.masked_sum(inner[4:], kind, m)
-                    else:
-                        compressed = False
-                        total += int(np.asarray(chunk_codec.decode_column(
-                            inner))[live].astype(object).sum())
-                comp += compressed
-                dec += not compressed
-        # the Python-int partial rides as a string; Spark finishes the
-        # total in decimal(38,0)
-        yield pd.DataFrame({"s": [str(total)], "n": [nn], "c": [comp],
-                            "d": [dec], "k": [skipped]})
+    def partial(row, m) -> tuple[int, int] | None:
+        if m is None:
+            return None
+        nulls, inner = chunk_codec.split_nulls(getattr(row, "b%d" % j))
+        live = m.reshape(-1)[:int(row.num_elements)]
+        kind = _VEC_KIND.get(getattr(row, "c%d" % j))
+        return (filters.masked_sum(inner[4:], kind, m) if kind else
+                int(np.asarray(chunk_codec.decode_column(inner))[live]
+                    .astype(object).sum()),
+                int((live if nulls is None else live & ~nulls).sum()))
 
-    (total, zone, kept, covered, m_sum, m_nn), agg = _overlap(
-        front.counts,
-        lambda: (front.scan.mapInPandas(
-            fn, "s string, n long, c long, d long, k long")
-            .agg(F.sum(F.col("s").cast("decimal(38,0)")).alias("s"),
-                 *[F.sum(k).alias(k) for k in "ncdk"]).collect()[0]))
-    found = m_nn + int(agg["n"] or 0)
-    return (m_sum + int(agg["s"] or 0) if found else None), _stats(
-        total, zone, kept, int(agg["c"] or 0), int(agg["d"] or 0),
-        int(agg["k"] or 0), covered=covered, parts=front.parts)
+    (total, zone, kept, covered, m_sum, m_nn), (s, nn, *counters) = _overlap(
+        front.counts, lambda: _tally(front, partial, 2, value=j))
+    return (m_sum + s if m_nn + nn else None), _stats(
+        total, zone, kept, *counters, covered=covered, parts=front.parts)
 
 
 def store_membership(spark: SparkSession, out_dir: str, column: str,
@@ -719,10 +746,19 @@ def store_membership(spark: SparkSession, out_dir: str, column: str,
          case (a genuinely new document) never touches a chunk;
       3. surviving (chunk, probe) candidate pairs — true hits plus
          ~FPR·chunks false positives per probe — verify exactly: pairs
-         join back to their probe values, group per chunk, and each
-         surviving chunk decodes ONCE (dict chunks answer from a
-         dictionary-heap search without decoding).  False positives
-         cost I/O, never wrong answers.
+         join back to their probe values and group per chunk, and the
+         pruning front's scan of `column` (`_front` with no leaf; the
+         live deletes folded in by `_run`) joins those lists, so each
+         surviving chunk decodes ONCE (dict chunks with no live delete
+         answer from a dictionary-heap search without decoding).
+         False positives cost I/O, never wrong answers.
+
+    The stats are the one `_stats` record — total_chunks from the part
+    summary with no Spark job, the chunks no probe's Bloom filter
+    admits as pruned (bloom_pruned_chunks; no zone map applies), the
+    verified chunks as scanned, the per-chunk counters None — plus
+    n_probes, pairs_possible (n_probes x total_chunks),
+    candidate_pairs, pairs_bloom_pruned and chunks_verified.
 
     Pre-v5 stores (no bloom column) degrade to verifying every
     (chunk, probe) pair — correct, with pairs_bloom_pruned = 0.
@@ -730,7 +766,6 @@ def store_membership(spark: SparkSession, out_dir: str, column: str,
     present = false without probing."""
     from ..codecs import bloom as bloom_codec, dictionary
     from ..spark import delete_job
-    keep = delete_job._keep_mask
 
     nn = probes.where(F.col(value_col).isNotNull())
 
@@ -745,12 +780,14 @@ def store_membership(spark: SparkSession, out_dir: str, column: str,
 
     manifest = (layout.read(spark, out_dir, layout.MANIFEST)
                 .where(F.col("column") == column))
-    # probe hashing, the manifest count and the null-probe check are
-    # three independent jobs: one overlap wave
-    hp, total_chunks, has_null_probes = _overlap(
+    front = _front(spark, out_dir, [], [column],
+                   delete_job.live_masks(spark, out_dir))
+    total_chunks = front.counts()[0]  # from the part summary, no job
+    # probe hashing and the null-probe check are independent jobs: one
+    # overlap wave
+    hp, has_null_probes = _overlap(
         lambda: (nn.select(id_col, value_col)
                  .mapInPandas(hash_fn, "pid long, h long").toPandas()),
-        lambda: manifest.count(),
         lambda: bool(probes.where(F.col(value_col).isNull())
                      .limit(1).count()))
     ids = hp["pid"].to_numpy(np.int64)
@@ -787,64 +824,41 @@ def store_membership(spark: SparkSession, out_dir: str, column: str,
     grouped = pairs.groupBy("chunk_id").agg(
         F.collect_list(F.struct(F.col("pid"), F.col(value_col).alias("v")))
         .alias("plist"))
-    chunks = _join_keep(
-        (layout.read(spark, out_dir, layout.CHUNKS)
-         .where(F.col("column") == column)
-         .select("chunk_id", "codec", "blob")
-         .join(grouped, "chunk_id")),
-        delete_job.live_masks(spark, out_dir))
 
-    def verify_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for cid, blob, codec, plist, km in zip(pdf["chunk_id"],
-                                                   pdf["blob"],
-                                                   pdf["codec"],
-                                                   pdf["plist"],
-                                                   pdf["keep_mask"]):
-                pid = np.array([r["pid"] for r in plist], dtype=np.int64)
-                vals = [r["v"] for r in plist]
-                km = None if km is None else bytes(km)
-                if codec == "dict" and km is None:
-                    # every dictionary entry was built from a value the
-                    # chunk actually holds: heap search IS membership
-                    # (a delete-affected chunk loses this shortcut — an
-                    # entry may survive only in deleted rows)
-                    payload = bytes(blob)[4:]
-                    found = np.array(
-                        [bool(dictionary.code_of(payload, v))
-                         for v in vals], dtype=bool)
-                elif codec == "dict":
-                    payload = bytes(blob)[4:]
-                    codes = dictionary.codes(payload)
-                    live = set(codes[keep(km, len(codes))].tolist())
-                    found = np.array(
-                        [(lambda c: bool(c) and c in live)(
-                            dictionary.code_of(payload, v))
-                         for v in vals], dtype=bool)
-                else:
-                    s = pd.Series(
-                        chunk_codec.decode_column(bytes(blob)))
-                    if km is not None:
-                        s = s[keep(km, len(s))]
-                    s = s.dropna()
-                    present = set(s)
-                    if len(s) and isinstance(s.iloc[0], bytes):
-                        vals = [v.encode("utf-8") for v in vals]
-                    found = np.array([v in present for v in vals],
-                                     dtype=bool)
-                yield pd.DataFrame({
-                    "chunk_id": pd.Series([cid] * len(pid), dtype=object),
-                    "pid": pid, "found": found})
+    def verify(row, m) -> pd.DataFrame:
+        pid = np.array([r["pid"] for r in row.plist], dtype=np.int64)
+        vals = [r["v"] for r in row.plist]
+        payload = bytes(row.b0)[4:]
+        if m is None:  # every row of the chunk is deleted
+            found = [False] * len(vals)
+        elif row.c0 == "dict" and row.keep_mask is None:
+            # every dictionary entry was built from a value the chunk
+            # actually holds: heap search IS membership (a
+            # delete-affected chunk loses this shortcut — an entry may
+            # survive only in deleted rows)
+            found = [bool(dictionary.code_of(payload, v)) for v in vals]
+        elif row.c0 == "dict":
+            codes = dictionary.codes(payload)
+            live = set(codes[m.reshape(-1)[:len(codes)]].tolist())
+            found = [(lambda c: bool(c) and c in live)(
+                dictionary.code_of(payload, v)) for v in vals]
+        else:
+            s = pd.Series(chunk_codec.decode_column(bytes(row.b0)))
+            s = s[m.reshape(-1)[:len(s)]].dropna()
+            present = set(s)
+            if len(s) and isinstance(s.iloc[0], bytes):
+                vals = [v.encode("utf-8") for v in vals]
+            found = [v in present for v in vals]
+        return pd.DataFrame({
+            "chunk_id": pd.Series([row.chunk_id] * len(pid), dtype=object),
+            "pid": pid, "found": np.array(found, dtype=bool)})
 
     # materialize the PER-PAIR verdicts NOW — candidate_pairs rows,
     # the same driver bound the broadcast probe hashes already assume —
     # and derive presence AND both stats counts from this single job
-    # (previously a persisted candidate pass fed a separate stats
-    # aggregate plus the verify join)
-    raw_pdf = (chunks.mapInPandas(verify_fn,
-                                  "chunk_id string, pid long, "
-                                  "found boolean")
-               .toPandas())
+    raw_pdf = _run(front._replace(scan=front.scan.join(grouped, "chunk_id")),
+                   verify, "chunk_id string, pid long, found boolean"
+                   ).toPandas()
     candidate_pairs = len(raw_pdf)
     candidate_chunks = int(raw_pdf["chunk_id"].nunique())
     found_pdf = (raw_pdf.groupby("pid", as_index=False)["found"].max()
@@ -862,15 +876,17 @@ def store_membership(spark: SparkSession, out_dir: str, column: str,
         result = result.unionByName(
             probes.where(F.col(value_col).isNull())
             .select(id_col, F.lit(False).alias("present")))
-    stats = {
-        "total_chunks": total_chunks,
+    # no zone map applies; a chunk no probe's Bloom filter admits is
+    # pruned, and every verified chunk is scanned
+    return result, {
+        **_stats(total_chunks, total_chunks, candidate_chunks,
+                 parts=front.parts),
         "n_probes": n_probes,
         "pairs_possible": n_probes * total_chunks,
         "candidate_pairs": candidate_pairs,
         "pairs_bloom_pruned": n_probes * total_chunks - candidate_pairs,
         "chunks_verified": candidate_chunks,
     }
-    return result, stats
 
 
 def _schema_rows(spark: SparkSession, out_dir: str) -> list[dict]:
@@ -974,22 +990,18 @@ def pruned_topk(spark: SparkSession, out_dir: str, column: str,
                    [column], masks)
     if not maxes and masks is None:
         return [], _stats(*front.counts(), parts=front.parts)
-    paired = front.leaves  # task closures must not capture DataFrames
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for row in pdf.itertuples(index=False):
-                m = _chunk_mask(paired, row)[0]
-                if m is None:
-                    continue
-                v = np.asarray(chunk_codec.decode_column(bytes(row.b0)))
-                part = np.sort(v[m.reshape(-1)[:len(v)]].astype(np.int64))
-                yield pd.DataFrame({"v": part[-k:]})  # chunk-local top-k
+    def largest(row, m) -> pd.DataFrame | None:
+        if m is None:
+            return None
+        v = np.asarray(chunk_codec.decode_column(bytes(row.b0)))
+        part = np.sort(v[m.reshape(-1)[:len(v)]].astype(np.int64))
+        return pd.DataFrame({"v": part[-k:]})  # chunk-local top-k
 
     # the prune counts and the data top-k are independent jobs
     counts, top = _overlap(
         front.counts,
-        lambda: (front.scan.mapInPandas(fn, "v long")
+        lambda: (_run(front, largest, "v long")
                  .orderBy(F.desc("v")).limit(k).collect()))
     return [int(r["v"]) for r in top], _stats(*counts, parts=front.parts)
 
@@ -1005,19 +1017,22 @@ def exact_weighted_bincount(codes: np.ndarray, weights) -> np.ndarray:
     and asserts nothing about the VALUES — only the row count, which
     Arrow batch sizing already bounds far below the 2^21 limit."""
     assert len(codes) < (1 << 21), "chunk too large for exact hi/lo sums"
-    if isinstance(weights, pd.Series):  # nullable Int64 from NULM decode
-        iv = weights.fillna(0).to_numpy(dtype=np.int64)
-    else:
-        w = np.asarray(weights)
-        if w.dtype.kind == "f":  # float carrier: NaN = SQL NULL = 0
-            iv = np.nan_to_num(w, copy=True).astype(np.int64)
-        else:  # integer input stays integer end to end — exact at 2^63
-            iv = w.astype(np.int64)
+    iv = _i64(weights)
     lo = (iv & 0xFFFFFFFF).astype(np.float64)
     hi = (iv >> 32).astype(np.float64)
     acc_lo = np.bincount(codes, weights=lo).astype(np.int64)
     acc_hi = np.bincount(codes, weights=hi).astype(np.int64)
     return acc_lo + (acc_hi << 32)
+
+
+def _i64(decoded) -> np.ndarray:
+    """A decoded column's values as int64, NULL (a nullable Int64's NA
+    or a float carrier's NaN) as 0; integer input stays integer end to
+    end, exact at 2^63."""
+    if isinstance(decoded, pd.Series):  # nullable Int64 from NULM decode
+        return decoded.fillna(0).to_numpy(dtype=np.int64)
+    a = np.asarray(decoded)
+    return (np.nan_to_num(a) if a.dtype.kind == "f" else a).astype(np.int64)
 
 
 def _notna_i64(decoded) -> np.ndarray:
@@ -1074,15 +1089,13 @@ def grouped_dict_agg(spark: SparkSession, out_dir: str, group_col: str,
                               + [leaf.col for leaf in where]))
     front = _front(spark, out_dir, where, cols,
                    delete_job.live_masks(spark, out_dir))
-    paired = front.leaves  # task closures must not capture DataFrames
     census = front.census
     n_chunks, n_dict = census.get(group_col, (0, -1))
     if n_dict != n_chunks:
         return None  # absent or mixed/non-dict group encodings: fallback
     if any(census.get(c, (0,))[0] != n_chunks for c in cols):
         return None  # column absent for some chunks (evolution)
-    _, zone, scanned = (front.counts() if where
-                        else (n_chunks, n_chunks, n_chunks))
+    total, zone, scanned = front.counts()
     col_ix = {c: cols.index(c) for c in extra_cols}
 
     # per-agg partial columns: count -> 1 long; count_col -> 1 long;
@@ -1097,88 +1110,68 @@ def grouped_dict_agg(spark: SparkSession, out_dir: str, group_col: str,
         else:
             out_fields.append("c%d long" % i)
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for row in pdf.itertuples(index=False):
-                payload = bytes(row.b0)[4:]  # strip chunk codec tag
-                codes = dictionary.codes(payload).astype(np.int64)
-                vals = dictionary.dictionary(payload)
-                width = len(vals) + 1  # + the code-0 null sentinel
-                m = _chunk_mask(paired, row)[0]
-                if m is None:  # no live row of this chunk matches
-                    continue
-                keep = m.reshape(-1)[:len(codes)]
-                ck = codes[keep]
-                counts = np.bincount(ck, minlength=width)
-                live = np.flatnonzero(counts)
-                if not len(live):
-                    continue
-                decoded = {}
-                for c, i in col_ix.items():
-                    d = chunk_codec.decode_column(
-                        bytes(getattr(row, "b%d" % i)))
-                    decoded[c] = (d[keep] if isinstance(d, np.ndarray)
-                                  else d[keep].reset_index(drop=True))
-                cols = {"g": pd.Series(
-                    [None if code == 0 else vals[code - 1]
-                     for code in live], dtype=object)}
-                for i, a in enumerate(aggs):
-                    fn_name = a["fn"]
-                    if fn_name in ("min", "max"):
-                        d = decoded[a["col"]]
-                        if isinstance(d, pd.Series):
-                            nn_b = d.notna().to_numpy()
-                            dv = d.fillna(0).to_numpy(dtype=np.int64)
-                        else:
-                            arr = np.asarray(d)
-                            if arr.dtype.kind == "f":
-                                nn_b = ~np.isnan(arr)
-                                dv = np.nan_to_num(arr).astype(np.int64)
-                            else:
-                                nn_b = np.ones(len(arr), dtype=bool)
-                                dv = arr.astype(np.int64)
-                        info = np.iinfo(np.int64)
-                        acc = np.full(width, info.max if fn_name == "min"
-                                      else info.min, dtype=np.int64)
-                        ufn = (np.minimum if fn_name == "min"
-                               else np.maximum)
-                        ufn.at(acc, ck[nn_b], dv[nn_b])
-                        nn = np.bincount(ck[nn_b], minlength=width)
-                        s = pd.Series(acc[live], dtype="Int64")
-                        s[nn[live] == 0] = pd.NA
-                        cols["m%d" % i] = s
-                        continue
-                    if fn_name == "count":
-                        part = counts
-                    elif fn_name == "count_col" and a["col"] == group_col:
-                        part = counts.copy()
-                        part[0] = 0  # COUNT(g): NULL g rows don't count
-                    else:
-                        d = decoded[a["col"]]
-                        if fn_name == "count_col":
-                            part = np.bincount(
-                                ck, weights=_notna_i64(d).astype(
-                                    np.float64),
-                                minlength=width).astype(np.int64)
-                        else:
-                            part = exact_weighted_bincount(ck, d)
-                            part = np.pad(part, (0, width - len(part)))
-                            nn = np.bincount(ck, weights=_notna_i64(d)
-                                             .astype(np.float64),
-                                             minlength=width)
-                            cols["nn%d" % i] = pd.Series(
-                                nn[live].astype(np.int64))
-                    if fn_name == "sum":
-                        cols["s%d" % i] = pd.Series(
-                            [str(int(v)) for v in part[live]],
-                            dtype=object)
-                    else:
-                        part = np.pad(part, (0, max(0, width - len(part))))
-                        cols["c%d" % i] = pd.Series(
-                            part[live].astype(np.int64))
-                yield pd.DataFrame(cols)
+    def partials(row, m) -> pd.DataFrame | None:
+        if m is None:  # no live row of this chunk matches
+            return None
+        payload = bytes(row.b0)[4:]  # strip chunk codec tag
+        codes = dictionary.codes(payload).astype(np.int64)
+        vals = dictionary.dictionary(payload)
+        width = len(vals) + 1  # + the code-0 null sentinel
+        keep = m.reshape(-1)[:len(codes)]
+        ck = codes[keep]
+        counts = np.bincount(ck, minlength=width)
+        live = np.flatnonzero(counts)
+        if not len(live):
+            return None
+        decoded = {}
+        for c, i in col_ix.items():
+            d = chunk_codec.decode_column(bytes(getattr(row, "b%d" % i)))
+            decoded[c] = (d[keep] if isinstance(d, np.ndarray)
+                          else d[keep].reset_index(drop=True))
+        out = {"g": pd.Series([None if code == 0 else vals[code - 1]
+                               for code in live], dtype=object)}
+        for i, a in enumerate(aggs):
+            fn_name = a["fn"]
+            if fn_name in ("min", "max"):
+                d = decoded[a["col"]]
+                nn_b, dv = _notna_i64(d).astype(bool), _i64(d)
+                info = np.iinfo(np.int64)
+                acc = np.full(width, info.max if fn_name == "min"
+                              else info.min, dtype=np.int64)
+                ufn = np.minimum if fn_name == "min" else np.maximum
+                ufn.at(acc, ck[nn_b], dv[nn_b])
+                nn = np.bincount(ck[nn_b], minlength=width)
+                s = pd.Series(acc[live], dtype="Int64")
+                s[nn[live] == 0] = pd.NA
+                out["m%d" % i] = s
+                continue
+            if fn_name == "count":
+                part = counts
+            elif fn_name == "count_col" and a["col"] == group_col:
+                part = counts.copy()
+                part[0] = 0  # COUNT(g): NULL g rows don't count
+            else:
+                d = decoded[a["col"]]
+                if fn_name == "count_col":
+                    part = np.bincount(
+                        ck, weights=_notna_i64(d).astype(np.float64),
+                        minlength=width).astype(np.int64)
+                else:
+                    part = exact_weighted_bincount(ck, d)
+                    part = np.pad(part, (0, width - len(part)))
+                    nn = np.bincount(ck, weights=_notna_i64(d)
+                                     .astype(np.float64),
+                                     minlength=width)
+                    out["nn%d" % i] = pd.Series(nn[live].astype(np.int64))
+            if fn_name == "sum":
+                out["s%d" % i] = pd.Series(
+                    [str(int(v)) for v in part[live]], dtype=object)
+            else:
+                part = np.pad(part, (0, max(0, width - len(part))))
+                out["c%d" % i] = pd.Series(part[live].astype(np.int64))
+        return pd.DataFrame(out)
 
-    part = front.scan.mapInPandas(fn, ", ".join(out_fields))
+    part = _run(front, partials, ", ".join(out_fields))
     final = []
     for i, a in enumerate(aggs):
         if a["fn"] in ("min", "max"):
@@ -1198,7 +1191,7 @@ def grouped_dict_agg(spark: SparkSession, out_dir: str, group_col: str,
     res = (part.groupBy("g").agg(*final)
            .withColumnRenamed("g", group_col))
     # the group codes are bincounted compressed in every scanned chunk
-    return res, {**_stats(n_chunks, zone, scanned, compressed=scanned,
+    return res, {**_stats(total, zone, scanned, compressed=scanned,
                           parts=front.parts),
                  "where_specs": len(where), "group_kernel": True}
 
@@ -1218,7 +1211,6 @@ def dict_distinct(spark: SparkSession, out_dir: str,
     is not 100% dict-coded (callers fall back)."""
     from ..codecs import dictionary
     from ..spark import delete_job
-    keep = delete_job._keep_mask
 
     front = _front(spark, out_dir, [], [column],
                    delete_job.live_masks(spark, out_dir))
@@ -1226,31 +1218,30 @@ def dict_distinct(spark: SparkSession, out_dir: str,
     if n_chunks == 0 or n_dict != n_chunks:
         return None
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        vals: set[str] = set()
-        for pdf in batches:
-            for row in pdf.itertuples(index=False):
-                payload = bytes(row.b0)[4:]  # strip chunk codec tag
-                heap = dictionary.dictionary(payload)
-                km = row.keep_mask
-                if km is None:
-                    vals.update(heap)
-                    continue
-                codes = dictionary.codes(payload)
-                kb = keep(bytes(km), len(codes))
-                counts = np.bincount(codes[kb].astype(np.int64),
-                                     minlength=len(heap) + 1)
-                vals.update(v for c, v in enumerate(heap, 1)
-                            if counts[c] > 0)
-        yield pd.DataFrame({"v": pd.Series(sorted(vals), dtype=object)})
+    def values(row, m) -> list[str] | None:
+        payload = bytes(row.b0)[4:]  # strip chunk codec tag
+        heap = dictionary.dictionary(payload)
+        if row.keep_mask is None:
+            return heap
+        if m is None:  # every row of the chunk is deleted
+            return None
+        codes = dictionary.codes(payload)
+        counts = np.bincount(codes[m.reshape(-1)[:len(codes)]]
+                             .astype(np.int64), minlength=len(heap) + 1)
+        return [v for c, v in enumerate(heap, 1) if counts[c] > 0]
 
-    df = (front.scan.mapInPandas(fn, "v string").distinct()
+    def union(sets: list, _) -> pd.DataFrame:
+        return pd.DataFrame({"v": pd.Series(sorted(set().union(*sets)),
+                                            dtype=object)})
+
+    df = (_run(front, values, "v string", union).distinct()
           .withColumnRenamed("v", column))
     nulls, _ = manifest_null_count(spark, out_dir, column)
     if nulls > 0:
         df = df.unionAll(spark.range(0, 1, 1, 1).select(
             F.lit(None).cast("string").alias(column)))
-    return df, {**_stats(n_chunks, n_chunks, n_chunks, compressed=n_chunks,
+    total = front.counts()[0]  # no leaf: from the part summary, no job
+    return df, {**_stats(total, total, total, compressed=total,
                          parts=front.parts),
                 "distinct_kernel": True}
 
@@ -1360,42 +1351,31 @@ def manifest_null_count(spark: SparkSession, out_dir: str,
     # reader uses): the former driver-side mask collect put
     # O(affected_chunks x rows/8) bytes on the driver and in every task
     # closure — a corpus-wide delete at 10^12 rows is ~125 GB
-    mask_ids = mm.select("chunk_id")
     # clean chunks: manifest stats are live
-    clean_df = (col_man.join(mask_ids, "chunk_id", "left_anti")
+    clean_df = (col_man.join(mm.select("chunk_id"), "chunk_id", "left_anti")
                 .agg(F.sum("null_count").alias("n"),
                      F.sum(F.col("num_elements")
                            - F.col("null_count")).alias("nn")))
-    # affected chunks of THIS column: decode, null/keep intersect —
-    # each task reads only its own chunks' masks via the join
-    aff = (layout.read(spark, out_dir, layout.CHUNKS)
-           .where(F.col("column") == column)
-           .join(mm.select("chunk_id", "keep_mask"), "chunk_id")
-           .select("chunk_id", "blob", "keep_mask"))
+    # affected chunks of THIS column: decode, null/live intersect
+    front = _front(spark, out_dir, [], [column], mm)
+    aff = front._replace(scan=front.scan.where(F.col("keep_mask").isNotNull()))
 
-    keep = delete_job._keep_mask
-
-    def live_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            a = b = 0
-            for blob, mask in zip(pdf["blob"], pdf["keep_mask"]):
-                s = pd.Series(chunk_codec.decode_column(bytes(blob)))
-                kb = keep(bytes(mask), len(s))
-                isna = s.isna().to_numpy(dtype=bool)
-                a += int((isna & kb).sum())
-                b += int((~isna & kb).sum())
-            yield pd.DataFrame({"n": [a], "nn": [b]})
+    def live(row, keep) -> tuple[int, int] | None:
+        if keep is None:  # every row of the chunk is deleted
+            return None
+        s = pd.Series(chunk_codec.decode_column(bytes(row.b0)))
+        isna = s.isna().to_numpy(dtype=bool)
+        keep = keep.reshape(-1)[:len(s)]
+        return int((isna & keep).sum()), int((~isna & keep).sum())
 
     # the clean-chunk aggregate, the affected-chunk scan and the
     # evolved-part correction are three independent jobs: overlap them.
     # Evolved parts (no manifest rows for the column): all live rows
     # are virtual NULLs — the part's deleted count comes off the top,
     # aggregated store-side (no driver loop over parts)
-    clean, la, virt = _overlap(
+    clean, (ln, lnn, *_), virt = _overlap(
         lambda: clean_df.collect()[0],
-        lambda: (aff.mapInPandas(live_fn, "n long, nn long")
-                 .agg(F.sum("n").alias("n"),
-                      F.sum("nn").alias("nn")).collect()[0]),
+        lambda: _tally(aff, live, 2),
         lambda: (rows.join(col_man.select("part_id").distinct(),
                            "part_id", "left_anti")
                  .join(mm.groupBy("part_id")
@@ -1404,6 +1384,5 @@ def manifest_null_count(spark: SparkSession, out_dir: str,
                  .agg(F.sum(F.col("part_rows")
                             - F.coalesce(F.col("nd"), F.lit(0))).alias("v"))
                  .collect()[0]))
-    n = int(clean["n"] or 0) + int(la["n"] or 0) + int(virt["v"] or 0)
-    nn = int(clean["nn"] or 0) + int(la["nn"] or 0)
-    return n, nn
+    n = int(clean["n"] or 0) + ln + int(virt["v"] or 0)
+    return n, int(clean["nn"] or 0) + lnn

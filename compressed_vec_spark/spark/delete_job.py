@@ -151,34 +151,30 @@ def delete_rows(spark: SparkSession, out_dir: str, leaves: list,
         return {**encoded_table._stats(*front.counts(), parts=front.parts),
                 "affected_chunks": done[0]["affected_chunks"],
                 "rows_deleted": done[0]["rows_deleted"]}
-    paired = front.leaves  # task closures must not capture DataFrames
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                m = encoded_table._chunk_mask(paired, row)[0]
-                if m is None and row.keep_mask is None:
-                    continue
-                n = int(row.num_elements)
-                new = (np.zeros(n, dtype=bool) if m is None
-                       else m.reshape(-1)[:n])
-                mask = np.packbits(new)
-                if row.keep_mask is not None:
-                    mask |= np.frombuffer(bytes(row.keep_mask), np.uint8)
-                out.append((delete_id, int(row.part_id),
-                            int(row.chunk_seq), row.chunk_id, n,
-                            int(np.unpackbits(mask).sum()), mask.tobytes(),
-                            int(new.sum())))
-            if out:
-                yield pd.DataFrame(out, columns=[
-                    "delete_id", "part_id", "chunk_seq", "chunk_id",
-                    "n_rows", "n_deleted", "mask", "n_new"])
+    def generation(row, new) -> tuple | None:
+        # `new`: the live rows the leaves match, this delete's own
+        if new is None and row.keep_mask is None:
+            return None
+        n = int(row.num_elements)
+        new = np.zeros(n, dtype=bool) if new is None else new.reshape(-1)[:n]
+        mask = np.packbits(new)
+        if row.keep_mask is not None:
+            mask |= np.frombuffer(bytes(row.keep_mask), np.uint8)
+        return (delete_id, int(row.part_id), int(row.chunk_seq),
+                row.chunk_id, n, int(np.unpackbits(mask).sum()),
+                mask.tobytes(), int(new.sum()))
+
+    def rows(parts: list, _) -> pd.DataFrame:
+        return pd.DataFrame(parts, columns=[
+            "delete_id", "part_id", "chunk_seq", "chunk_id", "n_rows",
+            "n_deleted", "mask", "n_new"])
 
     # the new-row counts are aggregated as the write runs, with no job
     # of their own
     obs = Observation()
-    gen = (front.scan.mapInPandas(fn, layout.DELETES.ddl + ", n_new long")
+    gen = (encoded_table._run(front, generation,
+                              layout.DELETES.ddl + ", n_new long", rows)
            .observe(obs, F.sum("n_new").alias("rows"),
                     F.count(F.when(F.col("n_new") > 0, 1)).alias("chunks"))
            .drop("n_new"))

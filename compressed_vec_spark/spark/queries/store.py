@@ -394,6 +394,16 @@ def encoded_table_group_count(spark, sf_dir) -> DataFrame:
     return df.where(F.col("source").isNotNull())
 
 
+def _dim(spark, name: str, n: int) -> DataFrame:
+    """The (source, tier) dimension: source `name % i` for i < n, tier
+    even or odd, built from pandas (a local relation, no Python
+    worker)."""
+    return spark.createDataFrame(pd.DataFrame({
+        "source": [name % i for i in range(n)],
+        "tier": ["even" if i % 2 == 0 else "odd" for i in range(n)]}),
+        "source string, tier string")
+
+
 def encoded_table_dim_join_count(spark, sf_dir) -> DataFrame:
     """Dimension join over the compressed store with the aggregate
     pushed BELOW the join: the per-chunk bincount over dict codes
@@ -407,9 +417,7 @@ def encoded_table_dim_join_count(spark, sf_dir) -> DataFrame:
     per_source = encoded_table_group_count(spark, sf_dir)
     # static lookup dimension (superset of the source domain), the
     # table a warehouse would broadcast-join against the fact scan
-    dim = spark.createDataFrame(
-        [("src%02d" % i, "even" if i % 2 == 0 else "odd")
-         for i in range(100)], "source string, tier string")
+    dim = _dim(spark, "src%02d", 100)
     return (per_source.join(F.broadcast(dim), "source")
             .groupBy("tier")
             .agg(F.sum("doc_count").cast("long").alias("docs"))
@@ -649,10 +657,7 @@ def encoded_table_sql_join(spark, sf_dir) -> DataFrame:
     100 TB the join input is the key domain, not N rows.  Exact for
     1:N dimensions (partials duplicated per match IS inner-join
     multiplicity).  In-query asserts prove the rewrite ran."""
-    spark.createDataFrame(
-        [("src%d" % i, "even" if i % 2 == 0 else "odd")
-         for i in range(30)], "source string, tier string") \
-        .createOrReplaceTempView("cvx_sqlj_dim")
+    _dim(spark, "src%d", 30).createOrReplaceTempView("cvx_sqlj_dim")
     df, st = _routed_docs(
         spark, sf_dir, "cvx_sqlj_docs",
         "SELECT d.tier, count(*) AS doc_count,"

@@ -24,24 +24,15 @@ sys.path.insert(0, REPO)
 
 import numpy as np  # noqa: E402
 
-
-def probe() -> float:
-    """Pure-CPU contention probe: ~0.10 s on a quiet host."""
-    a = np.zeros(50_000_000, dtype=np.uint8)
-    best = 1e9
-    for _ in range(3):
-        t0 = time.perf_counter()
-        np.bincount(a, minlength=256)
-        best = min(best, time.perf_counter() - t0)
-    return best
+from perfbench.run import contention_probe  # noqa: E402
 
 
 def wait_quiet(budget_sec: float, threshold: float = 0.30) -> float:
     t_end = time.time() + budget_sec
-    p = probe()
+    p = contention_probe([None])[0]
     while p > threshold and time.time() < t_end:
         time.sleep(30)
-        p = probe()
+        p = contention_probe([None])[0]
     return p
 
 
@@ -71,7 +62,7 @@ def filters_main(wait: float) -> None:
         "u32_sparse99_clustered_eq": (clustered, "u32", 500),
         "f32_xor_60pct_eq": (f32, "f32", float(f32[f32 != 0][0])),
     }
-    p = wait_quiet(wait) if wait else probe()
+    p = wait_quiet(wait) if wait else contention_probe([None])[0]
     out = {"probe_sec": round(p, 3), "elements": n, "melem_s": {}}
     for name, (vals, kind, pv) in cases.items():
         buf = vec.encode_vector(vals, kind=kind)
@@ -130,7 +121,7 @@ def filters_main(wait: float) -> None:
         bl.contains_many(blm, hashes)
         best = min(best, time.perf_counter() - t0)
     out["bloom_probe_mprobe_s"] = round(10000 / best / 1e6, 2)
-    out["probe_after_sec"] = round(probe(), 3)
+    out["probe_after_sec"] = round(contention_probe([None])[0], 3)
     print(json.dumps(out))
 
 
@@ -156,7 +147,7 @@ def main() -> None:
     pdf = webtable.webpages(spark, rows, partitions=8).toPandas()
     spark.stop()
 
-    p = wait_quiet(wait) if wait else probe()
+    p = wait_quiet(wait) if wait else contention_probe([None])[0]
     out = {"probe_sec": round(p, 3), "rows": rows, "columns": {}}
     tot_raw = tot_enc = tot_t = tot_dt = 0.0
     for col in ("text", "url", "html", "lang", "warc_ts"):
@@ -205,7 +196,7 @@ def main() -> None:
         "enc_mb_s": round(tot_raw / 1e6 / tot_t, 1),
         "dec_mb_s": round(tot_raw / 1e6 / tot_dt, 1),
     }
-    out["probe_after_sec"] = round(probe(), 3)
+    out["probe_after_sec"] = round(contention_probe([None])[0], 3)
     print(json.dumps(out))
 
 

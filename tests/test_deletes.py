@@ -393,13 +393,18 @@ def test_materialize_preserves_consumer_cursor(spark, tmp_path):
     assert res["processed"] == []  # nothing re-delivered
 
 
-def test_wide_delete_every_chunk_distributed_masks(spark, tmp_path):
+def test_wide_delete_every_chunk_distributed_masks(spark, tmp_path,
+                                                   monkeypatch):
     """Corpus-wide DELETE: the mask sidecar covers EVERY chunk, and the
     pruned readers must still be exact — with the masks applied via a
     distributed chunk_id join, never a driver-side collect (the old
     dict put O(affected_chunks x rows/8) on the driver; a corpus-wide
     delete at 10^12 rows would be ~125 GB there)."""
     import inspect
+    try:  # Spark 4: concrete class lives in sql.classic
+        import pyspark.sql.classic.dataframe as df_mod
+    except ImportError:  # pragma: no cover - Spark 3.x fallback
+        import pyspark.sql.dataframe as df_mod
 
     out = str(tmp_path / "widedel")
     n = 3000
@@ -429,10 +434,24 @@ def test_wide_delete_every_chunk_distributed_masks(spark, tmp_path):
 
     # masks stay distributed: the reader-side mask plumbing has no
     # driver collect; application is a chunk_id join (left) per scan
-    for fn in (delete_job.live_masks, encoded_table._join_keep):
-        assert ".collect()" not in inspect.getsource(fn)
+    assert ".collect()" not in inspect.getsource(delete_job.live_masks)
     assert 'join(masks, "chunk_id", "left")' in inspect.getsource(
-        encoded_table._join_keep)
+        encoded_table._front)
+    # and no collect the pruned count makes carries a mask
+    collected = []
+    orig_collect = df_mod.DataFrame.collect
+
+    def spy(self):
+        collected.append([f.name for f in self.schema.fields])
+        return orig_collect(self)
+
+    monkeypatch.setattr(df_mod.DataFrame, "collect", spy)
+    hits, _ = encoded_table.pruned_count(
+        spark, out, [Leaf("k", "int64", "range", 0, n)])
+    monkeypatch.undo()
+    assert hits == len(live) and collected
+    for cols in collected:
+        assert "mask" not in cols and "keep_mask" not in cols, cols
 
 
 def test_wide_delete_null_count_no_driver_masks(spark, tmp_path, monkeypatch):

@@ -294,3 +294,69 @@ def test_summary_sum_is_null_past_int64(spark, tmp_path):
     summary = encoded_table.part_summary(spark, out)
     assert summary[0, "v"]["sum_val"] is None
     assert summary[0, "k"]["sum_val"] == sum(range(4096))
+
+
+def test_no_leaf_counts_come_from_the_summary(spark, store):
+    """A front with no leaf reads every chunk of its column: counts()
+    is that chunk total three times, from the part summary with no
+    Spark job."""
+    out, _ = store
+    chunks = (spark.read.parquet(os.path.join(out, "manifest"))
+              .where(F.col("column") == "g").count())
+    front = encoded_table._front(spark, out, [], ["g"], None)
+    counts, jobs = _jobs(spark, front.counts)
+    assert counts == (chunks, chunks, chunks)
+    assert jobs == 0
+
+
+TERMINALS = ("pruned_count", "pruned_sum", "pruned_select", "pruned_topk",
+             "grouped_dict_agg", "dict_distinct", "delete_rows",
+             "store_membership")
+
+
+@pytest.mark.parametrize("terminal", TERMINALS)
+def test_terminal_returns_the_stats_record(spark, store, tmp_path, terminal):
+    """Every store terminal returns each key of the one stats record,
+    and its chunk counts add up: a chunk in scope is pruned, scanned or
+    answered from the manifest (covered), and no more parts are read
+    than are in scope."""
+    out, pdf = store
+    lo, hi = int(pdf["k"].iloc[5000]), int(pdf["k"].iloc[9000])
+    where = [Leaf("k", "int64", "range", lo, hi)]
+
+    def delete():
+        dst = str(tmp_path / "store")
+        shutil.copytree(out, dst)
+        return delete_job.delete_rows(spark, dst, where, "stats-d1")
+
+    def membership():
+        probes = spark.createDataFrame(pd.DataFrame(
+            {"pid": [1, 2], "v": ["g1", "absent"]}))
+        res, st = encoded_table.store_membership(spark, out, "g", probes,
+                                                 "v", "pid")
+        assert sorted(map(tuple, res.collect())) == [(1, True), (2, False)]
+        return st
+
+    run = {
+        "pruned_count": lambda: encoded_table.pruned_count(
+            spark, out, where)[1],
+        "pruned_sum": lambda: encoded_table.pruned_sum(
+            spark, out, where, "k")[1],
+        "pruned_select": lambda: encoded_table.pruned_select(
+            spark, out, where, ["k", "g"])[1],
+        "pruned_topk": lambda: encoded_table.pruned_topk(
+            spark, out, "k", 5)[1],
+        "grouped_dict_agg": lambda: encoded_table.grouped_dict_agg(
+            spark, out, "g", [{"fn": "count", "alias": "c"}], where)[1],
+        "dict_distinct": lambda: encoded_table.dict_distinct(
+            spark, out, "g")[1],
+        "delete_rows": delete,
+        "store_membership": membership,
+    }
+    st = run[terminal]()
+    base = encoded_table._stats(0, 0, 0, parts=(0, 0))
+    assert set(base) <= set(st), (terminal, st)
+    assert st["total_chunks"] > 0
+    assert (st["pruned_chunks"] + st["scanned_chunks"]
+            + st.get("covered_chunks", 0) == st["total_chunks"]), st
+    assert 0 <= st["scanned_parts"] <= st["total_parts"], st

@@ -7,8 +7,8 @@ join -> exact-Jaccard verification of candidates only.  At 10^12 docs
 the band join is the only shuffle and its key space (band_idx, band
 hash) is uniform by construction — no skew handling needed beyond AQE.
 
-SimHash gives a complementary near-dup signal: 64-bit signatures whose
-Hamming distance bounds cosine similarity of token sets.
+SimHash gives a complementary near-dup signal: 31-bit signatures whose
+Hamming distance bounds cosine similarity of byte-shingle sets.
 """
 
 from __future__ import annotations
@@ -352,27 +352,6 @@ def simhash32(texts: pa.Array) -> np.ndarray:
             s = (cs[ends_ne] - cs[starts_ne]).astype(np.int64)
             set_bits |= (2 * s > cnts).astype(np.int64) << bit
         out[nonempty] = set_bits
-    return out
-
-
-def simhash64(texts: pa.Array, k: int = 4) -> np.ndarray:
-    """64-bit SimHash, vectorized: the features are the same k-byte
-    rolling shingle hashes used by doc_fingerprint / MinHash (robust,
-    language-free); each feature votes ±1 per bit, the sign of the vote
-    sum sets the signature bit.  Shingle-less docs (len < k) get
-    signature 0."""
-    h, bounds = _shingle_hashes(texts, k=k)
-    n_docs = len(bounds) - 1
-    sig = np.zeros((n_docs, 64), dtype=np.int64)
-    nonempty = np.diff(bounds) > 0
-    starts_ne = bounds[:-1][nonempty]
-    if len(h) and len(starts_ne):
-        for bit in range(64):
-            bits = ((h >> np.uint64(bit)) & np.uint64(1)).astype(np.int64) * 2 - 1
-            sig[nonempty, bit] = np.add.reduceat(bits, starts_ne)
-    out = np.zeros(n_docs, dtype=np.uint64)
-    for bit in range(64):
-        out |= (sig[:, bit] > 0).astype(np.uint64) << np.uint64(bit)
     return out
 
 

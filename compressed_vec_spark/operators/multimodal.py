@@ -3,9 +3,8 @@
 Image, audio AND video are REAL end to end in this environment:
 payloads are real container formats (P6 PPM / zlib PNG / baseline
 JPEG images, RIFF/WAVE PCM16 audio, uncompressed RGB24 AVI video)
-written and parsed with numpy — decode, resize (stride subsample),
-feature extraction, windowed RMS and frame sampling all operate on
-actual pixel/sample data; JPEG is a full T.81 baseline Huffman+DCT
+written and parsed with numpy, and every decode operates on actual
+pixel/sample data; JPEG is a full T.81 baseline Huffman+DCT
 pair (codecs/jpeg.py), PNG a full zlib+scanline-filter pair.  Only
 formats whose decoders genuinely need external libs absent here
 (opus, h264, exotic JPEG profiles) stay import-gated behind
@@ -26,14 +25,13 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 MEDIA_SCHEMA = (
     "media_id long, kind string, payload binary, "
     "width int, height int, sample_rate int, duration_ms int, codec string"
 )
 
-FEATURE_DIM = 64
 AUDIO_SR = 8000
 
 
@@ -385,96 +383,3 @@ def decode_image(payload: bytes, codec: str = "ppm") -> np.ndarray:
             "natively") from e
     return np.asarray(Image.open(io.BytesIO(payload)).convert("RGB"))
 
-
-def image_features(df: DataFrame, max_side: int = 32) -> DataFrame:
-    """decode -> resize (stride subsample) -> channel-mean + red-channel
-    histogram feature vector, Arrow-batched; only image rows are decoded
-    (filter pushed before the UDF).  Real pixels end to end for PPM."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = []
-            for payload, codec in zip(pdf["payload"], pdf["codec"]):
-                img = decode_image(bytes(payload), str(codec))
-                sy = max(img.shape[0] // max_side, 1)
-                sx = max(img.shape[1] // max_side, 1)
-                small = img[::sy, ::sx].astype(np.float32)
-                cells = small.reshape(-1, 3).mean(axis=0)
-                hist = np.histogram(small[..., 0], bins=FEATURE_DIM - 3,
-                                    range=(0, 256))[0].astype(np.float32)
-                feats.append(np.concatenate([cells, hist / max(hist.sum(), 1)]))
-            yield pd.DataFrame({
-                "media_id": pdf["media_id"].to_numpy(),
-                "feature": [f.tolist() for f in feats],
-            })
-
-    return (df.where(F.col("kind") == "image")
-              .select("media_id", "payload", "codec")
-              .mapInPandas(fn, "media_id long, feature array<float>"))
-
-
-def frame_sample_plan(df: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Video frame-sampling plan: one output row per sampled timestamp
-    (posexplode of a JVM-side sequence — no Python in the planning
-    path).  `video_frame_features` consumes the same sampling semantics
-    against real RGB24 AVI payloads; for codec-compressed video the
-    plan would drive an external ffmpeg seek/decode instead."""
-    return (df.where(F.col("kind") == "video")
-            .select("media_id", "duration_ms",
-                    F.posexplode(F.sequence(
-                        F.lit(0), F.col("duration_ms") - 1, F.lit(every_ms)))
-                    .alias("frame_idx", "ts_ms")))
-
-
-def video_frame_features(df: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """REAL video frame sampling: decode the RGB24 AVI payload, take
-    the frame at each sampled timestamp (same cadence as
-    frame_sample_plan), emit per-frame mean RGB — Arrow-batched, only
-    video rows decoded, one output row per sampled frame."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                frames, fps = decode_avi(bytes(payload))
-                dur_ms = len(frames) * 1000 // max(fps, 1)
-                for k, ts in enumerate(range(0, max(dur_ms, 1), every_ms)):
-                    fi = min(ts * fps // 1000, len(frames) - 1)
-                    if fi < 0:
-                        continue
-                    mean = frames[fi].reshape(-1, 3).mean(axis=0)
-                    rows.append((int(mid), k, ts,
-                                 float(mean[0]), float(mean[1]),
-                                 float(mean[2])))
-            yield pd.DataFrame(rows, columns=[
-                "media_id", "frame_idx", "ts_ms", "r_mean", "g_mean",
-                "b_mean"])
-
-    return (df.where(F.col("kind") == "video")
-            .select("media_id", "payload")
-            .mapInPandas(fn, "media_id long, frame_idx int, ts_ms int, "
-                             "r_mean double, g_mean double, b_mean double"))
-
-
-def audio_window_stats(df: DataFrame, window_ms: int = 250) -> DataFrame:
-    """Windowed RMS over REAL PCM samples (decode_wav), normalized to
-    [0, 1] by int16 full scale; zero-padded final window."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                samples, sr = decode_wav(bytes(payload))
-                win = max(sr * window_ms // 1000, 1)
-                n_windows = max((len(samples) + win - 1) // win, 1)
-                padded = np.zeros(n_windows * win, dtype=np.float64)
-                padded[:len(samples)] = samples.astype(np.float64) / 32768.0
-                rms = np.sqrt((padded.reshape(n_windows, win) ** 2).mean(axis=1))
-                rows.append((int(mid), int(n_windows),
-                             float(rms.mean()), float(rms.max())))
-            yield pd.DataFrame(rows, columns=["media_id", "n_windows",
-                                              "rms_mean", "rms_max"])
-
-    return (df.where(F.col("kind") == "audio")
-            .select("media_id", "payload")
-            .mapInPandas(fn, "media_id long, n_windows int, rms_mean double, rms_max double"))

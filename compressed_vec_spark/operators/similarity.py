@@ -3,9 +3,9 @@
 Brute-force cosine top-k is the exact baseline: one matrix multiply per
 Arrow batch (numpy BLAS), partial top-k per partition, global top-k at
 the driver — O(n·d) flops, no shuffle of the embeddings themselves.
-The scale path is LSH bucketing (random hyperplanes): vectors shuffle
-once by bucket key; queries probe only their bucket — the same
-band-join pattern as MinHash dedup.
+Near-duplicate pairs use LSH bucketing (random hyperplanes): vectors
+shuffle once by bucket key and each bucket verifies its own pairs — the
+same band-join pattern as MinHash dedup.
 """
 
 from __future__ import annotations
@@ -230,31 +230,3 @@ def cosine_near_dup_lsh(df: DataFrame, id_col: str, vec_col: str,
     return (grouped.groupBy("table", "bhi")
             .applyInPandas(verify_fn, "v1 long, v2 long")
             .distinct())
-
-
-def lsh_bucket_topk(df: DataFrame, id_col: str, vec_col: str,
-                    query_vec: np.ndarray, k: int = 10, n_planes: int = 12,
-                    seed: int = 42, exclude_ids: tuple = ()) -> DataFrame:
-    """ANN: random-hyperplane LSH — probe only the query's bucket.
-    At 10^12 rows the bucketing is a one-time shuffle; a probe touches
-    ~n/2^n_planes vectors.  Recall < 1 by construction (report as ANN)."""
-    rng = np.random.default_rng(seed)
-    dim = len(query_vec)
-    planes = rng.standard_normal((n_planes, dim))
-    q = np.asarray(query_vec, dtype=np.float64)
-    q_bucket = int((planes @ q > 0).astype(np.uint64)
-                   @ (1 << np.arange(n_planes, dtype=np.uint64)))
-
-    def bucket_fn(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            m = _mat(pdf[vec_col])
-            bits = (m @ planes.T > 0).astype(np.uint64)
-            buckets = bits @ (1 << np.arange(n_planes, dtype=np.uint64))
-            sel = buckets == q_bucket
-            yield pdf[[id_col, vec_col]][sel]
-
-    candidates = df.select(id_col, vec_col).mapInPandas(
-        bucket_fn, df.select(id_col, vec_col).schema)
-    return cosine_topk(candidates, id_col, vec_col, query_vec, k, exclude_ids)

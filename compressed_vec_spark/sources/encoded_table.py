@@ -13,7 +13,6 @@ only the matching chunks' blobs.
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass
 from typing import Callable, Iterator, NamedTuple
 
@@ -482,11 +481,10 @@ def _front(spark: SparkSession, out_dir: str, leaves: list[Leaf],
 
     manifest = (layout.read(spark, out_dir, layout.MANIFEST)
                 .where(F.col("part_id").isin(kept)))
-    dirs = [f"part_id={p}" for p in kept]
-    if dirs and layout.exists(
-            spark, os.path.join(layout.CHUNKS.path(out_dir), dirs[0])):
-        chunks = layout.read(spark, out_dir, layout.CHUNKS, *dirs)
-    else:  # no part survives, or a pre-v6 stream store's flat layout
+    if kept:
+        chunks = layout.read(spark, out_dir, layout.CHUNKS,
+                             *[f"part_id={p}" for p in kept])
+    else:  # no part survives
         chunks = (layout.read(spark, out_dir, layout.CHUNKS)
                   .where(F.col("part_id").isin(kept)))
     # per chunk: z passes the zone maps, b the Bloom probes too, a is
@@ -902,35 +900,17 @@ def _pick(fn, a, b):
     return a if b is None else b if a is None else fn(a, b, key=_order)
 
 
-def _combine(a: dict, b: dict) -> dict:
-    """Two part summary rows of one (part_id, column) as one row."""
-    out = {**a, **{k: a[k] + b[k]
-                   for k in ("chunks", "dict_chunks", "rows", "nulls")}}
-    for k in ("min_val", "max_val", "min_str", "max_str",
-              "min_f64", "max_f64"):
-        out[k] = _pick(min if k.startswith("min") else max, a[k], b[k])
-    sm = (None if None in (a["sum_val"], b["sum_val"])
-          else a["sum_val"] + b["sum_val"])
-    out["sum_val"] = sm if sm is None or _I64MIN <= sm <= _I64MAX else None
-    return out
-
-
 def part_summary(spark: SparkSession, out_dir: str) \
         -> dict[tuple[int, str], dict]:
     """{(part_id, column): row} of the store's part summary
     (`layout.PART_SUMMARY`), read on the driver with no Spark job.  A
-    stream store appends rows per micro-batch under the same part ids;
-    they combine here.  A store older than format v6 has no part
-    summary, and its rows come from the manifest (one job)."""
+    store older than format v6 has no part summary, and its rows come
+    from the manifest (one job)."""
     from ..spark import encode_job
     rows = (layout.read_meta(spark, out_dir, layout.PART_SUMMARY)
             or [r.asDict() for r in encode_job.summarize_parts(
                 layout.read(spark, out_dir, layout.MANIFEST)).collect()])
-    out: dict[tuple[int, str], dict] = {}
-    for r in rows:
-        key = (r["part_id"], r["column"])
-        out[key] = r if key not in out else _combine(out[key], r)
-    return out
+    return {(r["part_id"], r["column"]): r for r in rows}
 
 
 def stored_schema(spark: SparkSession, out_dir: str) -> tuple[str, dict]:

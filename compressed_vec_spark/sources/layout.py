@@ -18,11 +18,10 @@ from pyspark.sql import DataFrame, SparkSession
 # xor_f64/vec_f32 columns prune at the manifest level); v5 added bloom
 # (per-chunk Bloom filters on key-like string/binary columns —
 # point-lookup pruning where zone maps can't help, codecs/bloom.py); v6
-# added part_summary and partitions every chunks dataset, streamed ones
-# too, by part_id; v7 keeps one live deletion vector per chunk,
-# committed by a delete_log row (spark/delete_job.py).  Stores written
-# before versioning existed have no store_meta directory and read as
-# None.
+# added part_summary and partitions every chunks dataset by part_id; v7
+# keeps one live deletion vector per chunk, committed by a delete_log
+# row (spark/delete_job.py).  Stores written before versioning existed
+# have no store_meta directory and read as None.
 FORMAT_VERSION = 7
 
 _ARROW = {"int": "int32", "long": "int64", "string": "string",
@@ -66,8 +65,7 @@ _MANIFEST_FIELDS = (
 CHUNKS = Table("chunks", _MANIFEST_FIELDS + (("blob", "binary"),),
                partition="part_id")
 MANIFEST = Table("manifest", _MANIFEST_FIELDS)
-# one row per (part_id, column) a manifest write wrote; a stream store
-# appends rows per micro-batch under the same part ids
+# one row per (part_id, column), derived from the manifest
 PART_SUMMARY = Table("part_summary", (
     ("part_id", "int"), ("column", "string"), ("chunks", "long"),
     ("dict_chunks", "long"), ("rows", "long"), ("nulls", "long"),

@@ -1,6 +1,6 @@
 """Store compaction: merge runs of adjacent small chunks into
 target-sized ones — the maintenance pass every chunked store needs at
-scale (streaming ingest and fine-grained encode partitions both leave
+scale (small appends and fine-grained encode partitions both leave
 many tiny chunks, and per-chunk overheads — manifest rows, codec
 headers, dictionary heaps, task scheduling — are amortized by chunk
 size).  The reference is a single-process library and has no storage
@@ -31,7 +31,6 @@ Design:
 from __future__ import annotations
 
 import hashlib
-import re
 import time
 
 import pandas as pd
@@ -44,27 +43,14 @@ from ..sources.encoded_table import chunk_stats_for, float_chunk_stats
 from . import encode_job
 
 
-def _id_order_key(chunk_id: str) -> tuple:
-    """Row-order sort key for a chunk id: the tuple of its embedded
-    integers ('b00000001-p00000-c00012' -> (1, 0, 12)).  Numeric, not
-    lexicographic — a zero-padded field that overflows its width
-    ('c100000' after 'c99999') would otherwise sort BEFORE its
-    predecessor and silently reorder rows."""
-    return tuple(int(x) for x in re.findall(r"\d+", chunk_id))
-
-
 def _plan_groups(plan_pdf: pd.DataFrame, target_elements: int) -> pd.DataFrame:
-    """Assign each (part_id, chunk_id) a new_seq: walk chunk ids in
-    row order (the embedded-integer order — batch prefix first for
-    streamed stores, then seq; a streamed store's chunk_seq values
-    COLLIDE across micro-batches, so chunk_id, not chunk_seq, is the
-    row-group key), closing a group once it holds >= target_elements."""
+    """Assign each (part_id, chunk_id) a new_seq: walk a part's chunks
+    in row order (chunk_seq, which identifies a chunk within its part),
+    closing a group once it holds >= target_elements."""
     rows = []
     for part_id, grp in plan_pdf.groupby("part_id"):
         acc = seq = 0
-        ordered = sorted(grp.itertuples(),
-                         key=lambda r: _id_order_key(str(r.chunk_id)))
-        for r in ordered:
+        for r in grp.sort_values("chunk_seq").itertuples():
             if acc >= target_elements:
                 seq += 1
                 acc = 0
@@ -160,7 +146,8 @@ def compact_store(spark: SparkSession, src_dir: str, dst_dir: str,
     # — encode_job's resume treats them the same way); planning off the
     # manifest would silently drop those rows from the compacted store
     chunks = layout.read(spark, src_dir, layout.CHUNKS)
-    plan_pdf = (chunks.select("part_id", "chunk_id", "num_elements")
+    plan_pdf = (chunks.select("part_id", "chunk_seq", "chunk_id",
+                              "num_elements")
                 .distinct().toPandas())
     mapping_pdf = _plan_groups(plan_pdf, target_elements)
     mapping = spark.createDataFrame(
@@ -170,9 +157,7 @@ def compact_store(spark: SparkSession, src_dir: str, dst_dir: str,
 
     def merge(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         part_id, nseq, col = int(key[0]), int(key[1]), str(key[2])
-        pdf = pdf.iloc[sorted(
-            range(len(pdf)),
-            key=lambda ix: _id_order_key(str(pdf["chunk_id"].iloc[ix])))]
+        pdf = pdf.sort_values("chunk_seq")
         chunk_id = f"p{part_id:05d}-c{nseq:05d}"
         if len(pdf) == 1:
             row = {c: pdf.iloc[0][c] for c in out_cols}

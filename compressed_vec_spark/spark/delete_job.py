@@ -265,7 +265,7 @@ def upsert_table(spark: SparkSession, df, out_dir: str, key_col: str,
     Contract: the batch must be key-unique (duplicate keys both land,
     like duplicate-match MERGE errors elsewhere); NULL keys never
     match and simply append.  The key list rides to executors via the
-    same broadcast bound as store_membership's probe set — micro-batch
+    same broadcast bound as store_membership's probe set — crawl-batch
     ingest scale (millions of keys), not full-table backfill (use a
     re-encode for that)."""
     from ..sources.snapshot import _log_rows

@@ -65,17 +65,14 @@ def summarize_parts(manifest: DataFrame) -> DataFrame:
                total.cast("long")).alias("sum_val"))
 
 
-def write_manifest(spark: SparkSession, out_dir: str, chunks_df: DataFrame,
-                   mode: str = "overwrite") -> None:
-    """The one manifest writer: `chunks_df`'s manifest rows to the
-    store's manifest and their per-part summary to its part summary,
-    both in `mode` ("overwrite" re-derives the whole store's metadata
-    from its chunks; "append" adds a stream micro-batch's, whose part
-    ids repeat earlier batches' — readers combine summary rows per
-    (part_id, column))."""
+def write_manifest(spark: SparkSession, out_dir: str,
+                   chunks_df: DataFrame) -> None:
+    """The one manifest writer: `chunks_df`'s manifest rows overwrite
+    the store's manifest and their per-part summary its part summary,
+    so both are re-derived from the whole store's chunks."""
     man = chunks_df.select(*layout.MANIFEST.columns)
-    man.write.mode(mode).parquet(layout.MANIFEST.path(out_dir))
-    (summarize_parts(man).write.mode(mode)
+    man.write.mode("overwrite").parquet(layout.MANIFEST.path(out_dir))
+    (summarize_parts(man).write.mode("overwrite")
         .parquet(layout.PART_SUMMARY.path(out_dir)))
 
 

@@ -208,7 +208,7 @@ def encoded_table_upsert_count(spark, sf_dir) -> DataFrame:
     — high-cardinality and unsorted, the case zone maps can't carry),
     the batch appends into fresh parts, and the live view shows
     replaced values for matched keys plus the inserted rows.  The
-    micro-batch ingest-with-corrections loop a living corpus runs."""
+    batch ingest-with-corrections loop a living corpus runs."""
     def build(out: str) -> None:
         from .. import delete_job, encode_job
         docs = _read(spark, sf_dir, "documents")

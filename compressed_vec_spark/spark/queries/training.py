@@ -187,9 +187,8 @@ def doc_fingerprint(spark, sf_dir) -> DataFrame:
 
 
 def events_windowed_stats(spark, sf_dir) -> DataFrame:
-    """Tumbling-window event stats (the batch twin of
-    streaming.windowed_stats): hourly counts + integer-cent value sums
-    per event type — pure built-ins, whole-stage codegen end to end."""
+    """Tumbling-window event stats: hourly counts + integer-cent value
+    sums per event type — pure built-ins, whole-stage codegen end to end."""
     df = _read(spark, sf_dir, "events")
     return (df.groupBy(F.date_trunc("hour", F.col("ts")).alias("hr"),
                        F.col("event_type"))

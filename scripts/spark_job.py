@@ -25,7 +25,8 @@ def main(argv: list[str] | None = None) -> int:
     sub = p.add_subparsers(dest="cmd", required=True)
 
     enc = sub.add_parser("encode", help="encode a web-page table into compressed chunks")
-    enc.add_argument("--input", help="input parquet path (web-table schema)")
+    enc.add_argument("--input",
+                     help="Iceberg table name or parquet path (web-table schema)")
     enc.add_argument("--synthetic", type=int, default=0,
                      help="generate N deterministic synthetic pages instead of --input")
     enc.add_argument("--output", required=True)
@@ -37,7 +38,9 @@ def main(argv: list[str] | None = None) -> int:
         "append", help="append a new batch to an existing store "
                        "(idempotent per --batch-id; existing chunks "
                        "untouched)")
-    app.add_argument("--input", help="batch parquet path (store schema)")
+    app.add_argument("--input",
+                     help="Iceberg table name or parquet path of the batch "
+                          "(store schema)")
     app.add_argument("--synthetic", type=int, default=0,
                      help="generate N deterministic synthetic pages instead of --input")
     app.add_argument("--output", required=True, help="existing store dir")
@@ -179,13 +182,14 @@ def main(argv: list[str] | None = None) -> int:
     spark = SparkSession.builder.appName(f"cvx-{args.cmd}").getOrCreate()
     spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
 
+    from compressed_vec_spark.sources.input import read_webpages
     from compressed_vec_spark.spark import decode_job, encode_job, webtable
 
     if args.cmd == "encode":
         if args.synthetic:
             df = webtable.webpages(spark, args.synthetic)
         else:
-            df = spark.read.parquet(args.input)
+            df = read_webpages(spark, args.input)
         encode_job.encode_table(spark, df, args.output,
                                 url_col=args.url_col,
                                 num_partitions=args.partitions,
@@ -195,7 +199,7 @@ def main(argv: list[str] | None = None) -> int:
         if args.synthetic:
             df = webtable.webpages(spark, args.synthetic)
         else:
-            df = spark.read.parquet(args.input)
+            df = read_webpages(spark, args.input)
         encode_job.append_table(spark, df, args.output,
                                 batch_id=args.batch_id,
                                 url_col=args.url_col,

@@ -1,9 +1,9 @@
-"""Plan-inspection helpers: assert the physical plans we rely on at
-scale actually materialize (pushdown, pruning, codegen, broadcast).
+"""Plan-inspection helpers for tests: assert the physical plans we rely
+on at scale actually materialize (pushdown, pruning, codegen, broadcast).
 
-No custom Catalyst rules live here — the engine deliberately keeps all
-data-dependent logic in UDFs and lets Catalyst own the plan
-(SURVEY.md §4.3); these helpers just make plan regressions test-visible.
+The engine keeps all data-dependent logic in UDFs and lets Catalyst own
+the plan (SURVEY.md §4.3); these helpers make plan regressions
+test-visible.
 """
 
 from __future__ import annotations

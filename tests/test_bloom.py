@@ -233,3 +233,17 @@ def test_build_from_series_mixed_str_bytes():
     blm = bloom.build_from_series(mixed)
     assert blm == bloom.build(pa.array(vals, type=pa.large_utf8()))
     assert all(bloom.might_contain(blm, v) for v in vals)
+
+
+def test_contains_many_agrees_with_might_contain():
+    vals = _rand_strings(800, seed=4)
+    blm = bloom.build(pa.array(vals, type=pa.large_utf8()))
+    probes = vals[:200] + _rand_strings(400, seed=5)
+    got = bloom.contains_many(
+        blm, bloom.hash_values(pa.array(probes, type=pa.large_utf8())))
+    assert got.tolist() == [bloom.might_contain(blm, v) for v in probes]
+    assert got[:200].all()
+    # no filter, or a corrupt one, answers "maybe" for every probe
+    hashes = np.arange(5, dtype=np.uint64)
+    assert bloom.contains_many(None, hashes).all()
+    assert bloom.contains_many(blm[:-1], hashes).all()

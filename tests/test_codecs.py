@@ -245,3 +245,89 @@ def test_fsst_pos_dtype_degrades_not_aborts():
     src = inspect.getsource(fsst)
     assert src.count("_pos_dtype(N)") == 2  # word + pair paths
     assert "chunk too large" not in src     # the old assert is gone
+
+
+def test_rle_runs_expand_to_decode():
+    vals = np.repeat(np.array([5, 9, 9, 0, 2**63 + 1], dtype=np.uint64),
+                     [3, 1, 4, 7, 2])
+    blob = rle.encode(vals)
+    run_vals, run_lens = rle.runs(blob)
+    # adjacent equal values are one run
+    assert run_vals.tolist() == [5, 9, 0, 2**63 + 1]
+    assert run_lens.tolist() == [3, 5, 7, 2]
+    assert len(run_vals) == rle.num_runs(blob)
+    assert (np.repeat(run_vals, run_lens.astype(np.int64))
+            == rle.decode(blob)).all()
+
+
+def test_dict_prefix_range_matches_startswith():
+    words = ["app", "apple", "applet", "apply", "apricot", "banana",
+             "band", "ban", "b", "été", "étude", "z"]
+    blob = dictionary.encode(pd.Series(words * 3))
+    entries = dictionary.dictionary(blob)
+    for prefix in ["ap", "app", "apple", "b", "ban", "é", "ét", "zz",
+                   "a", "c", ""]:
+        lo, hi = dictionary.prefix_range(blob, prefix)
+        got = {entries[c - 1] for c in range(lo, hi + 1)}
+        assert got == {w for w in words if w.startswith(prefix)}, prefix
+
+
+def test_split_nulls_inverts_wrap_nulls():
+    inner = chunk.encode_column(pd.Series(np.arange(37, dtype=np.int64)),
+                                "vec_u64")[1]
+    for n in (1, 8, 9, 37):
+        mask = np.arange(n) % 3 == 1
+        got_mask, got_inner = chunk.split_nulls(
+            chunk.wrap_nulls(mask, inner))
+        assert got_mask.tolist() == mask.tolist() and got_inner == inner
+    # a blob with no NULM wrapper has no mask and comes back whole
+    assert chunk.split_nulls(inner) == (None, inner)
+
+
+def test_arrow_to_pandas_sparklike_keeps_int_nulls_exact():
+    big = 2**53 + 1              # not representable as float64
+    s = chunk.arrow_to_pandas_sparklike(pa.array([big, None, -3],
+                                                 type=pa.int64()))
+    assert str(s.dtype) == "Int64"
+    assert s.isna().tolist() == [False, True, False]
+    assert int(s[0]) == big and int(s[2]) == -3
+    # tz-aware timestamps become naive wall clock in the array's zone
+    ts = pa.array([0], type=pa.timestamp("us", tz="America/New_York"))
+    got = chunk.arrow_to_pandas_sparklike(ts)
+    assert got.dt.tz is None
+    assert got[0] == pd.Timestamp("1969-12-31 19:00:00")
+
+
+@pytest.mark.parametrize("codec", ["fsst", "dict"])
+def test_arrow_column_path_matches_pandas_path(codec):
+    vals = [f"page {i % 40} of {i % 7}" if i % 9 else None
+            for i in range(700)]
+    arr = pa.array(vals, type=pa.large_utf8())
+    a_codec, a_blob, _ = chunk.encode_column_arrow(arr, codec)
+    p_codec, p_blob, _ = chunk.encode_column(pd.Series(vals, dtype=object),
+                                             codec)
+    assert (a_codec, a_blob) == (p_codec, p_blob)
+    out = chunk.decode_column_arrow(a_blob, pa.string())
+    assert out.type == pa.string() and out.to_pylist() == vals
+
+
+def test_stats_of_is_deterministic_and_sampled():
+    n = selector.SAMPLE * 3 + 11
+    s = pd.Series(np.repeat(np.arange(n // 10 + 1), 10)[:n])
+    st = selector.stats_of(s)
+    assert st == selector.stats_of(s.copy())
+    assert st["n"] == n and st["sample_n"] == selector.SAMPLE
+    assert st["sorted"] is True
+    shuffled = selector.stats_of(
+        pd.Series(np.random.default_rng(0).permutation(s.to_numpy())))
+    assert shuffled["sorted"] is False
+    assert shuffled["avg_run_len"] < st["avg_run_len"]
+
+
+def test_zstd_decompress_reads_zstd_codec_frames():
+    payload = b"the zstd entropy back end " * 400
+    codec = fsst.zstd_codec(3)
+    assert codec is not None
+    frame = bytes(codec.compress(payload))
+    assert len(frame) < len(payload)
+    assert fsst.zstd_decompress(frame, len(payload)) == payload

@@ -35,10 +35,12 @@ def test_plan_groups_shapes():
     ids1 = [f"p00001-c{i:05d}" for i in range(2)]
     plan = pd.DataFrame({
         "part_id": [0] * 4 + [1] * 2,
+        "chunk_seq": [0, 1, 2, 3, 0, 1],
         "chunk_id": ids0 + ids1,
         "num_elements": [500, 500, 500, 500, 2000, 100],
     })
-    m = compact_job._plan_groups(plan, target_elements=1000)
+    # rows arrive in any order; a part's chunks are walked by chunk_seq
+    m = compact_job._plan_groups(plan.iloc[::-1], target_elements=1000)
     got = {(r.part_id, r.chunk_id): r.new_seq for r in m.itertuples()}
     # part 0: 500+500 close a group, next 500+500 the second
     assert got[(0, ids0[0])] == 0 and got[(0, ids0[1])] == 0
@@ -48,54 +50,55 @@ def test_plan_groups_shapes():
     assert got[(1, ids1[0])] == 0 and got[(1, ids1[1])] == 1
 
 
-def test_compact_streamed_store_with_colliding_chunk_seq(spark, tmp_path):
-    """A streamed store's chunk_seq values collide across micro-batches
-    (each batch restarts at 0; only the b-prefixed chunk_id is unique).
-    Compaction must key row groups on chunk_id — and the zero-padded
-    batch prefix sorts in arrival order, so row order is preserved."""
-    src = str(tmp_path / "src_stream")
-    chunks_path = os.path.join(src, "chunks")
-    pdf = pd.DataFrame({"k": range(2000)})
+def test_plan_groups_walk_chunk_seq_in_numeric_order():
+    """Past 99999 chunks a part's zero-padded chunk ids no longer sort
+    in row order ("c100000" < "c99999"); the walk follows the integer
+    chunk_seq."""
+    seqs = [99_997, 99_998, 99_999, 100_000, 100_001, 100_002]
+    ids = [f"p00003-c{s:05d}" for s in seqs]
+    assert sorted(ids) != ids
+    plan = pd.DataFrame({"part_id": [3] * 6, "chunk_seq": seqs,
+                         "chunk_id": ids, "num_elements": [400] * 6})
+    m = compact_job._plan_groups(plan.sample(frac=1, random_state=1),
+                                 target_elements=1000)
+    got = dict(zip(m["chunk_id"], m["new_seq"]))
+    # 400-row chunks close a group every third chunk, in chunk_seq order
+    assert [got[i] for i in ids] == [0, 0, 0, 1, 1, 1]
+
+
+def test_compact_keeps_chunks_the_manifest_misses(spark, tmp_path):
+    """chunks/ is the data of record: a crash between the chunks write
+    and the manifest write leaves committed chunks the manifest does
+    not list, and compaction must still carry their rows."""
+    src = str(tmp_path / "src_crash")
+    pdf = pd.DataFrame({"k": range(4000)})
     pdf["v"] = pdf["k"] * 7
-    df = spark.createDataFrame(pdf).coalesce(1)
-    # simulate two micro-batches the way start_encode_stream writes them
-    (spark.createDataFrame([(layout.FORMAT_VERSION,)],
-                           "format_version int")
-        .write.parquet(os.path.join(src, "store_meta")))
-    schema_rows = [(i, n, "bigint") for i, n in enumerate(["k", "v"])]
-    (spark.createDataFrame(schema_rows,
-                           "position int, name string, dtype string")
-        .write.parquet(os.path.join(src, "table_schema")))
-    for batch_id, pred in ((0, F.col("k") < 1000), (1, F.col("k") >= 1000)):
-        enc = encode_job.encode_table(spark, df.where(pred), out_dir="",
-                                      write=False, url_col=None)
-        enc = enc.withColumn(
-            "chunk_id",
-            F.concat(F.lit(f"b{batch_id:08d}-"), F.col("chunk_id")))
-        enc.write.mode("append").parquet(chunks_path)
-        if batch_id == 0:
-            # the second batch's manifest write "crashed": its chunks
-            # are committed but unlisted — chunks/ is the data of
-            # record, so compaction must still carry those rows
-            (enc.select(*layout.MANIFEST.columns)
-                .write.mode("append").parquet(os.path.join(src, "manifest")))
+    df = (spark.createDataFrame(pdf)
+          .repartitionByRange(4, "k").sortWithinPartitions("k"))
+    encode_job.encode_table(spark, df, src, url_col=None)
 
-    # both batches produced (part_id=0, chunk_seq=0): the collision
-    c = spark.read.parquet(chunks_path)
-    seqs = c.select("part_id", "chunk_seq").distinct().count()
-    rows = c.select("chunk_id").distinct().count()
-    assert rows > seqs
+    def listed(out):
+        return sum(r["num_elements"]
+                   for r in layout.read_meta(spark, out, layout.MANIFEST)
+                   if r["column"] == "k")
 
-    dst = str(tmp_path / "dst_stream")
+    manifest = layout.read_meta(spark, src, layout.MANIFEST)
+    lost = max(r["part_id"] for r in manifest)
+    layout.write_meta(spark, src, layout.MANIFEST,
+                      [r for r in manifest if r["part_id"] != lost])
+    assert listed(src) < 4000
+
+    dst = str(tmp_path / "dst_crash")
     stats = compact_job.compact_store(spark, src, dst,
                                       target_elements=10**6)
     assert stats["merged_groups"] > 0
+    assert listed(dst) == 4000
     ddl, _ = encoded_table.stored_schema(spark, dst)
     got = decode_job.decode_chunks(
         spark.read.parquet(os.path.join(dst, "chunks")), ddl) \
         .toPandas().sort_values("k").reset_index(drop=True)
-    assert got["k"].tolist() == list(range(2000))
-    assert got["v"].tolist() == [7 * k for k in range(2000)]
+    assert got["k"].tolist() == list(range(4000))
+    assert got["v"].tolist() == [7 * k for k in range(4000)]
 
 
 def test_compact_store_end_to_end(spark, tmp_path):
@@ -167,16 +170,6 @@ def test_compact_passthrough_is_byte_identical(spark, tmp_path):
                for r in spark.read.parquet(os.path.join(dst, "manifest"))
                .collect()}
     assert src_sha == dst_sha  # blobs untouched, ids stable
-
-
-def test_id_order_key_is_numeric_not_lexicographic():
-    ids = ["p00000-c100000", "p00000-c99999", "b00000002-p00000-c00000",
-           "b00000010-p00000-c00000"]
-    ordered = sorted(ids, key=compact_job._id_order_key)
-    # c99999 < c100000 numerically (lexicographic would invert them);
-    # batch 2 < batch 10 (same)
-    assert ordered == ["p00000-c99999", "p00000-c100000",
-                       "b00000002-p00000-c00000", "b00000010-p00000-c00000"]
 
 
 def test_compact_keeps_string_stats_on_binary_codec_chunks(spark, tmp_path):

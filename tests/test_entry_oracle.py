@@ -268,7 +268,7 @@ def test_new_query_plans_are_scale_shaped(spark):
     shapes: the as-of join is a single window (no join operator at
     all), decontamination joins doc grams against a BROADCAST eval
     set, and neither plan contains a cartesian/BNLJ."""
-    from compressed_vec_spark import plans
+    import plan_helpers as plans
     from compressed_vec_spark.spark import queries as q
 
     sf = "/root/testdata/sf0.001"
@@ -288,7 +288,7 @@ def test_membership_antijoin_plan_is_scale_shaped(spark):
     """The membership anti-join's final result must not carry a
     cartesian or nested-loop join anywhere; candidate pairs meet their
     probe values through hash joins only."""
-    from compressed_vec_spark import plans
+    import plan_helpers as plans
     from compressed_vec_spark.spark import queries as q
 
     sf = "/root/testdata/sf0.001"

@@ -2,13 +2,11 @@
 rely on (pushdown, pruning, codegen, broadcast) must be visible in the
 physical plan."""
 
-import math
-
 import pytest
 from pyspark.sql import functions as F
 
+import plan_helpers as plans
 from compressed_vec_spark import functions as cvf
-from compressed_vec_spark import plans
 from compressed_vec_spark.spark.session import get_spark
 
 SF_DIR = "/root/testdata/sf0.01"
@@ -19,19 +17,6 @@ def spark():
     s = get_spark("cvx-plans-tests", cores=4)
     yield s
     s.stop()
-
-
-def test_url_host(spark):
-    df = spark.createDataFrame([("https://a.example.com/x/y",)], ["url"])
-    assert df.select(cvf.url_host("url").alias("h")).first()["h"] == "a.example.com"
-
-
-def test_cosine_similarity_column(spark):
-    df = spark.createDataFrame([([1.0, 0.0], [1.0, 0.0]), ([1.0, 0.0], [0.0, 1.0])],
-                               ["a", "b"])
-    got = [r["c"] for r in df.select(cvf.cosine_similarity(F.col("a"), F.col("b"))
-                                     .alias("c")).collect()]
-    assert math.isclose(got[0], 1.0) and math.isclose(got[1], 0.0)
 
 
 def test_char_shingles(spark):
@@ -82,3 +67,27 @@ def test_duplicate_span_gram_pass_is_pipelined_and_deterministic(spark):
     a = sorted(map(tuple, df.collect()))
     b = sorted(map(tuple, q.duplicate_span_removal(spark, SF_DIR).collect()))
     assert a == b and len(a) > 0
+
+
+def test_quality_metrics_and_fingerprint(spark):
+    from compressed_vec_spark.operators import text_analysis as ta
+    texts = ["the cat is on the mat", "Spark encodes vectors", "a", "  ",
+             ""]
+    df = spark.createDataFrame(list(enumerate(texts)), "id int, text string")
+    got = {r["id"]: r.asDict() for r in
+           ta.quality_metrics(df, "id", "text").collect()}
+    want = {  # (n_chars, n_tokens, space_ratio_ppm, stopword_ppm, lang)
+        0: (21, 6, 5_000_000 // 21, 4_000_000 // 6, "en"),
+        1: (21, 3, 2_000_000 // 21, 0, "other"),
+        2: (1, 1, 0, 1_000_000, "en"),
+        3: (2, 0, 1_000_000, 0, "other"),
+        4: (0, 0, 0, 0, "other"),
+    }
+    for i, w in want.items():
+        g = got[i]
+        assert (g["n_chars"], g["n_tokens"], g["space_ratio_ppm"],
+                g["stopword_ppm"], g["lang_guess"]) == w, (i, g)
+    fp = [r["fp"] for r in df.orderBy("id").select(
+        ta.rolling_fingerprint("text").alias("fp")).collect()]
+    assert fp == [sum(ord(c) * 31 ** (i % 8) for i, c in enumerate(t))
+                  % (1 << 31) for t in texts]

@@ -235,3 +235,15 @@ def test_class_explosion_uses_ragged_fallback():
     decoded, sizes2 = npk.unpack_groups(out, offs)
     assert (sizes == sizes2).all()
     assert (decoded == vals).all()
+
+
+def test_group_sizes_walks_packed_groups():
+    rng = np.random.default_rng(3)
+    vals = rng.integers(0, 2**40, size=(64, 8), dtype=np.uint64)
+    vals[rng.random((64, 8)) < 0.4] = 0
+    vals[::7] = 0                      # all-zero groups are one byte
+    out, sizes = npk.pack_groups(vals)
+    offs = np.concatenate(([0], np.cumsum(sizes)[:-1]))
+    got = npk.group_sizes(out, offs)
+    assert got.tolist() == sizes.tolist()
+    assert (got[::7] == 1).all()

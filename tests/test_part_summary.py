@@ -10,11 +10,10 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from compressed_vec_spark.sources import encoded_table, sql_router
+from compressed_vec_spark.sources import encoded_table, layout, sql_router
 from compressed_vec_spark.sources.encoded_table import Leaf
 from compressed_vec_spark.spark import compact_job, delete_job, encode_job
 from compressed_vec_spark.spark.session import get_spark
-from compressed_vec_spark.streaming import encode_stream
 
 PARTS = 16
 ROWS = 24_000
@@ -224,33 +223,6 @@ def test_schema_evolved_store_metadata(spark, tmp_path):
     assert pst["total_chunks"] == summary[PARTS, "extra"]["chunks"]
 
 
-def test_stream_store_combines_repeated_part_ids(spark, tmp_path):
-    """Each micro-batch restarts part ids at 0, so the summary holds one
-    row per (batch, part, column); readers combine them.  Keeping only
-    one batch's bounds would prune the other batch's matches."""
-    out = str(tmp_path / "stream")
-    pdf = _frame(6000)
-    for batch_id, part in enumerate((pdf.iloc[:3000], pdf.iloc[3000:])):
-        encode_stream.encode_micro_batch(
-            spark, _df(spark, part), batch_id, out)
-    raw = spark.read.parquet(os.path.join(out, "part_summary"))
-    assert raw.count() > raw.select("part_id", "column").distinct().count()
-    _assert_summary_matches_manifest(spark, out)
-    for i in (10, 2999, 3000, 5990):
-        key = int(pdf["k"].iloc[i])
-        hits, _ = encoded_table.pruned_count(
-            spark, out, [Leaf("k", "int64", "in", values=(key,))])
-        assert hits == 1, key
-    lo, hi = int(pdf["k"].iloc[2900]), int(pdf["k"].iloc[3100])
-    hits, _ = encoded_table.pruned_count(
-        spark, out, [Leaf("k", "int64", "range", lo, hi)])
-    assert hits == 201
-    total, _ = encoded_table.pruned_sum(spark, out, [], "k")
-    assert total == int(pdf["k"].sum())
-    assert encoded_table.manifest_min_max(spark, out, "k") == \
-        (int(pdf["k"].min()), int(pdf["k"].max()))
-
-
 def test_summary_matches_manifest_after_every_write(spark, tmp_path):
     out = str(tmp_path / "w")
     _sorted_store(spark, out, _frame(6000))
@@ -278,6 +250,51 @@ def test_summary_matches_manifest_after_every_write(spark, tmp_path):
     before = encoded_table.part_summary(spark, materialized)
     shutil.rmtree(os.path.join(materialized, "part_summary"))
     assert encoded_table.part_summary(spark, materialized) == before
+
+
+def test_appends_commit_fresh_part_ids(spark, tmp_path):
+    """Each commit takes part ids no earlier commit holds: the part
+    summary keeps one row per (part_id, column), and every chunk id is
+    the p<part>-c<seq> of its own manifest row."""
+    out = str(tmp_path / "fresh")
+    _sorted_store(spark, out, _frame(3000))
+    for i, start in enumerate((3000, 4000)):
+        encode_job.append_table(
+            spark, _df(spark, _frame(1000, start=start)).coalesce(2),
+            out, batch_id=f"b{i}", url_col=None)
+    log = sorted((r["part_offset"], r["n_parts"])
+                 for r in layout.read_meta(spark, out, layout.APPEND_LOG))
+    assert log == [(PARTS, 2), (PARTS + 2, 2)]
+
+    man = layout.read_meta(spark, out, layout.MANIFEST)
+    assert {r["part_id"] for r in man} == set(range(PARTS + 4))
+    assert all(r["chunk_id"] == f"p{r['part_id']:05d}-c{r['chunk_seq']:05d}"
+               for r in man)
+    keys = [(r["part_id"], r["column"])
+            for r in layout.read_meta(spark, out, layout.PART_SUMMARY)]
+    assert len(keys) == len(set(keys))
+    assert set(keys) == {(r["part_id"], r["column"]) for r in man}
+    _assert_summary_matches_manifest(spark, out)
+
+
+def test_write_manifest_overwrites_manifest_and_summary(spark, tmp_path):
+    out = str(tmp_path / "rewrite")
+    _sorted_store(spark, out, _frame(3000))
+    chunks = layout.read(spark, out, layout.CHUNKS)
+
+    def parts():
+        man = {r["part_id"]
+               for r in layout.read_meta(spark, out, layout.MANIFEST)}
+        summary = {p for p, _ in encoded_table.part_summary(spark, out)}
+        assert man == summary
+        return man
+
+    encode_job.write_manifest(spark, out, chunks.where(F.col("part_id") < 3))
+    assert parts() == {0, 1, 2}
+    _assert_summary_matches_manifest(spark, out)
+    encode_job.write_manifest(spark, out, chunks)
+    assert parts() == set(range(PARTS))
+    _assert_summary_matches_manifest(spark, out)
 
 
 def test_summary_sum_is_null_past_int64(spark, tmp_path):

@@ -146,3 +146,26 @@ def test_tail_padding_affects_stats_like_reference():
     _, buf = roundtrip_int(data)
     st = vec.vector_stats(buf, "u64")
     assert st["sect_types_histogram"] == {"NibblePackedMedium": 1}
+
+
+@pytest.mark.parametrize("width", [4, 8])
+def test_walk_sections_finds_encoder_offsets(width):
+    # one section of each integer type: Null, Const, NibblePack, Delta
+    values = np.concatenate([np.zeros(256), np.full(256, 23000),
+                             np.arange(256), np.arange(256) + 100_000,
+                             np.arange(100) * 3]).astype(np.uint64)
+    body, offs = sect.encode_sections_int(values, width)
+    assert set(sect.section_stats(body, offs)) == {
+        "Null", "Constant", "NibblePackedMedium", "DeltaNPMedium"}
+    got = sect.walk_sections(body, len(offs) - 1, width)
+    assert got.tolist() == offs.tolist()
+
+
+def test_walk_sections_finds_f32_offsets():
+    values = np.concatenate([np.zeros(256), np.full(256, 1.5),
+                             np.linspace(-1, 1, 300)]).astype(np.float32)
+    body, offs = sect.encode_sections_f32(values)
+    got = sect.walk_sections(body, len(offs) - 1, 4)
+    assert got.tolist() == offs.tolist()
+    assert (sect.decode_sections_f32(body, got)[:len(values)]
+            == values).all()

@@ -117,24 +117,6 @@ def test_cosine_lsh_bucket_cap_bounds_degenerate_corpus(spark):
     assert all(p == (2001, 2002) for p in got)
 
 
-def test_lsh_topk_returns_subset_of_corpus(emb):
-    q = qvec(emb)
-    rows = similarity.lsh_bucket_topk(emb, "vec_id", "embedding", q, k=10,
-                                      n_planes=6, exclude_ids=(0,)).collect()
-    assert 0 < len(rows) <= 10
-    assert all(r["sim"] <= 1.000001 for r in rows)
-
-
-def test_simhash_near_duplicates_close():
-    texts = ["the quick brown fox jumps over the lazy dog " * 5,
-             "the quick brown fox jumps over the lazy dogs " * 5,  # near-dup
-             "completely different content about spark and parquet " * 5]
-    sigs = dedup.simhash64(pa.array(texts, type=pa.large_utf8()))
-    ham = lambda a, b: bin(int(a) ^ int(b)).count("1")
-    assert ham(sigs[0], sigs[1]) < ham(sigs[0], sigs[2])
-    assert ham(sigs[0], sigs[1]) < 16
-
-
 def test_simhash32_properties():
     texts = ["the quick brown fox jumps over the lazy dog " * 5,
              "the quick brown fox jumps over the lazy dogs " * 5,  # near-dup
@@ -168,7 +150,7 @@ def test_cosine_near_dup_lsh_finds_planted_pairs(spark):
     # verify must return exactly the >= threshold pairs, with no
     # nested-loop/cartesian join anywhere in the plan
     import pandas as pd
-    from compressed_vec_spark import plans
+    import plan_helpers as plans
     rng = np.random.default_rng(7)
     base = rng.standard_normal((40, 32))
     base /= np.linalg.norm(base, axis=1, keepdims=True)
@@ -200,7 +182,7 @@ def test_minhash_verify_plan_broadcasts_candidates(spark):
     candidate side — never a shuffle of the corpus text column — and
     contain no per-pair Python loop (the Jaccard kernel is one
     vectorized mapInPandas)."""
-    from compressed_vec_spark import plans
+    import plan_helpers as plans
     df = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     out = dedup.minhash_near_dups(df, "doc_id", "text")
     plan = plans.physical_plan(out)
@@ -393,3 +375,36 @@ def test_minhash_candidate_broadcast_gate(spark, monkeypatch):
     # gate must not change the verified pair set
     assert ({(r["d1"], r["d2"]) for r in over.collect()}
             == {(r["d1"], r["d2"]) for r in under.collect()})
+
+
+def test_band_hashes_key_each_band_of_rows():
+    rng = np.random.default_rng(7)
+    sigs = rng.integers(0, 2**32, size=(3, 16), dtype=np.uint64)
+    sigs[1] = sigs[0]
+    sigs[1, 5] += 1                   # differs from row 0 in band 2 only
+    keys = dedup.band_hashes(sigs, rows_per_band=2)
+    assert keys.shape == (3, 8) and keys.dtype == np.int64
+    assert (keys >= 0).all()
+    same = keys[0] == keys[1]
+    assert same.tolist() == [b != 2 for b in range(8)]
+    assert not (keys[0] == keys[2]).any()
+    # a band key depends on the order of its rows
+    swapped = sigs[:1, [1, 0] + list(range(2, 16))]
+    assert dedup.band_hashes(swapped)[0, 0] != keys[0, 0]
+
+
+def test_token_gram_hashes_match_per_doc_grams():
+    docs = ["a b c a b c", "x y", "b c a", "", "one", "a b c d"]
+    doc, pos, h = dedup.token_gram_hashes(
+        pa.array(docs, type=pa.large_utf8()), 3)
+    want = [(d, i + 1, " ".join(toks[i:i + 3]))
+            for d, t in enumerate(docs) for toks in [t.split(" ")]
+            for i in range(len(toks) - 2)]
+    assert list(zip(doc.tolist(), pos.tolist())) == \
+        [(d, p) for d, p, _ in want]
+    # equal grams hash equal, different grams apart, across docs too
+    by_gram = {}
+    for (_, _, g), v in zip(want, h.tolist()):
+        by_gram.setdefault(g, set()).add(v)
+    assert all(len(v) == 1 for v in by_gram.values())
+    assert len(set().union(*by_gram.values())) == len(by_gram)

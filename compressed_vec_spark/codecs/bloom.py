@@ -167,30 +167,6 @@ def build(arr: pa.Array) -> bytes | None:
     return (_MAGIC + bytes([K_HASHES, log2m, 0, 0]) + bits.tobytes())
 
 
-def build_from_series(s) -> bytes | None:
-    """build() for a decoded pandas object Series (compaction path,
-    where merged chunks exist as pandas, not Arrow).  Values may be str
-    or bytes depending on each member chunk's codec — a merged string
-    column can even MIX the two (one member fsst -> str, another
-    deflate -> utf-8 bytes); both hash identically to their UTF-8
-    bytes, so a filter built from any form answers probes for the same
-    logical string."""
-    if s.dtype != object:
-        return None
-    v = s.dropna()
-    if not len(v):
-        return None
-    typ = (pa.large_binary()
-           if isinstance(v.iloc[0], (bytes, bytearray)) else pa.large_utf8())
-    try:
-        return build(pa.array(v, type=typ))
-    except (pa.lib.ArrowInvalid, pa.lib.ArrowTypeError):
-        # mixed str/bytes merge: normalize to the common UTF-8 bytes
-        return build(pa.array(
-            [x.encode("utf-8") if isinstance(x, str) else bytes(x)
-             for x in v], type=pa.large_binary()))
-
-
 def contains_many(bloom: bytes | None, hashes: np.ndarray) -> np.ndarray:
     """Vectorized membership probe: one bool per precomputed
     `hash_values` entry, False only where the chunk DEFINITELY lacks

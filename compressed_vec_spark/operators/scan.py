@@ -135,7 +135,7 @@ def global_cumsum(df: DataFrame, order_cols: list[str], value_col: str,
     out_schema = ", ".join(f"{f.name} {f.dataType.simpleString()}"
                            for f in df.schema.fields) + f", {out_col} long"
 
-    def fn(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def fn(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(order_cols, kind="mergesort").drop(columns="__bucket")
         pdf[out_col] = pdf[value_col].to_numpy(np.int64).cumsum() + offsets[key[0]]
         return pdf

@@ -196,7 +196,7 @@ def cosine_near_dup_lsh(df: DataFrame, id_col: str, vec_col: str,
     banded = df.select(id_col, vec_col).mapInPandas(
         band_fn, f"{id_col} long, table int, bucket long, vecb binary")
 
-    def verify_fn(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def verify_fn(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         ids_all = pdf[id_col].to_numpy()
         buckets = pdf["bucket"].to_numpy()
         order = np.argsort(buckets, kind="stable")

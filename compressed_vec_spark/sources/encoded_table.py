@@ -27,10 +27,6 @@ from ..sections import FIXED_LEN
 from . import layout
 
 
-_I64MAX = (1 << 63) - 1
-_I64MIN = -(1 << 63)
-
-
 def _overlap(*thunks):
     """Run independent read-only Spark actions concurrently and return
     their results in call order (guide §2.6: overlap independent jobs).
@@ -42,56 +38,6 @@ def _overlap(*thunks):
     with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
         futures = [pool.submit(t) for t in thunks]
         return [f.result() for f in futures]
-
-
-def chunk_stats_for(series: pd.Series) \
-        -> tuple[int | None, int | None, int | None, int]:
-    """(min, max, sum, null_count) for numeric/timestamp chunks
-    ((None, None, None, nulls) otherwise).  The sum enables manifest-only
-    aggregation pushdown (`pruned_sum`): a chunk fully covered
-    by the predicate contributes its manifest sum with zero blob reads —
-    the storage-layer analog of the reference's header-only section
-    short-circuits (reference src/filter.rs:53-107).  Sum is over
-    non-null values (SQL SUM semantics); None if it exceeds int64."""
-    nulls = int(series.isna().sum())
-    if series.dtype.kind == "M":
-        v = series.dropna().astype("datetime64[us]").to_numpy().view(np.int64)
-    elif series.dtype.kind in "iu":
-        v = series.dropna().to_numpy()
-    else:
-        return None, None, None, nulls
-    if not len(v):
-        return None, None, None, nulls
-    # exact overflow-free sum: elements split into hi/lo 32-bit halves
-    # (v == (v >> 32) * 2^32 + (v & 0xFFFFFFFF) for arithmetic shift),
-    # each partial sum fits its 64-bit dtype for any chunk <= 2^31
-    # elements; recombined in Python ints
-    if v.dtype.kind == "u":
-        vv = v.astype(np.uint64)
-        total = (int((vv & np.uint64(0xFFFFFFFF)).sum(dtype=np.uint64))
-                 + (int((vv >> np.uint64(32)).sum(dtype=np.uint64)) << 32))
-    else:
-        vv = v.astype(np.int64)
-        total = (int((vv & 0xFFFFFFFF).sum(dtype=np.int64))
-                 + (int((vv >> 32).sum(dtype=np.int64)) << 32))
-    if not (_I64MIN <= total <= _I64MAX):
-        total = None
-    return int(v.min()), int(v.max()), total, nulls
-
-
-def float_chunk_stats(series: pd.Series) -> tuple[float | None, float | None]:
-    """(min, max) for FLOAT chunks, (None, None) otherwise — the
-    manifest stats that make float range predicates prunable at the
-    chunk level.  Nulls and NaN payloads are excluded (SQL comparison
-    semantics: NaN matches no range predicate, so it cannot tighten or
-    poison the bounds)."""
-    if series.dtype.kind != "f":
-        return None, None
-    v = series.dropna().to_numpy(dtype=np.float64)
-    v = v[~np.isnan(v)]
-    if not len(v):
-        return None, None
-    return float(v.min()), float(v.max())
 
 
 _U64MAX = (1 << 64) - 1
@@ -992,7 +938,8 @@ def exact_weighted_bincount(codes: np.ndarray, weights) -> np.ndarray:
     for arithmetic shift), two float64-weighted bincounts accumulate the
     halves exactly (|half| < 2^32 and <= 2^21 rows/chunk keep every
     partial under float64's 2^53 exact range), and the halves recombine
-    in int64 — the same exact-accumulation scheme as chunk_stats_for.
+    in int64 — the same exact-accumulation scheme as
+    encode_job.chunk_stats_for.
     NaN weights count as 0 (SQL SUM null semantics).  Degrades nothing
     and asserts nothing about the VALUES — only the row count, which
     Arrow batch sizing already bounds far below the 2^21 limit."""
@@ -1245,7 +1192,6 @@ def manifest_min_max(spark: SparkSession, out_dir: str,
 
 
 def read_decoded(spark: SparkSession, out_dir: str, schema: str | None = None,
-                 dtypes: dict[str, str] | None = None,
                  apply_deletes: bool = True) -> DataFrame:
     """Full decoded view of an encoded table (see decode_job for the
     chunk-zip mechanics), its chunks read with the declared schema.
@@ -1259,12 +1205,10 @@ def read_decoded(spark: SparkSession, out_dir: str, schema: str | None = None,
     FILE_NOT_EXIST.  Call read_decoded again after each delete."""
     from ..spark import decode_job, delete_job
     if schema is None:
-        schema, auto_dtypes = stored_schema(spark, out_dir)
-        dtypes = dtypes or auto_dtypes
+        schema, _ = stored_schema(spark, out_dir)
     chunks = layout.read(spark, out_dir, layout.CHUNKS)
     masks = delete_job.live_masks(spark, out_dir) if apply_deletes else None
-    return decode_job.decode_chunks(chunks, schema, dtypes,
-                                    delete_masks=masks)
+    return decode_job.decode_chunks(chunks, schema, delete_masks=masks)
 
 
 def register_encoded_table(spark: SparkSession, out_dir: str,

@@ -97,9 +97,9 @@ def read_snapshot(spark: SparkSession, out_dir: str,
     BASE_SNAPSHOT = the original encode before any append)."""
     from ..spark import decode_job
     from .encoded_table import stored_schema
-    schema, dtypes = stored_schema(spark, out_dir)
+    schema, _ = stored_schema(spark, out_dir)
     return decode_job.decode_chunks(
-        snapshot_chunks(spark, out_dir, as_of), schema, dtypes)
+        snapshot_chunks(spark, out_dir, as_of), schema)
 
 
 def consumer_position(spark: SparkSession, out_dir: str,
@@ -220,5 +220,5 @@ def snapshot_diff(spark: SparkSession, out_dir: str,
     chunks = (layout.read(spark, out_dir, layout.CHUNKS)
               .where((F.col("part_id") >= F.lit(b["part_lo"]))
                      & (F.col("part_id") < F.lit(b["part_hi"]))))
-    schema, dtypes = stored_schema(spark, out_dir)
-    return decode_job.decode_chunks(chunks, schema, dtypes)
+    schema, _ = stored_schema(spark, out_dir)
+    return decode_job.decode_chunks(chunks, schema)

@@ -15,11 +15,12 @@ Design:
   * Groups with a single member PASS THROUGH byte-identical — an
     already-large chunk is never decoded, so compacting a mostly-good
     store touches only the tail of small chunks.
-  * Multi-member groups decode in chunk_seq order, concatenate, and
-    re-encode through the SAME stats-driven codec selection as the
-    original encode (a merged chunk may legitimately pick a different
-    codec — e.g. dict over more values, or RLE once runs get long
-    enough); all manifest stats are recomputed from the merged values.
+  * Multi-member groups decode to arrow (typed by the store's own
+    schema) in chunk_seq order, concatenate, and re-encode through the
+    encode worker's own chunk builder (`encode_job.chunk_row`): the
+    merged chunk gets exactly the blob and manifest row a fresh encode
+    of its rows would get (it may legitimately pick a different codec —
+    e.g. dict over more values, or RLE once runs get long enough).
   * Parts stay independent (they are the parallelism and resume unit),
     so compaction never moves rows across parts and the (part_id,
     new_seq) order preserves row order exactly.
@@ -30,17 +31,12 @@ Design:
 
 from __future__ import annotations
 
-import hashlib
-import time
-
 import pandas as pd
 from pyspark.sql import SparkSession, functions as F
 
-from ..codecs import bloom as bloom_codec
 from ..codecs import chunk as chunk_codec
 from ..sources import layout
-from ..sources.encoded_table import chunk_stats_for, float_chunk_stats
-from . import encode_job
+from . import decode_job, encode_job
 
 
 def _plan_groups(plan_pdf: pd.DataFrame, target_elements: int) -> pd.DataFrame:
@@ -57,57 +53,6 @@ def _plan_groups(plan_pdf: pd.DataFrame, target_elements: int) -> pd.DataFrame:
             rows.append((int(part_id), str(r.chunk_id), int(seq)))
             acc += int(r.num_elements)
     return pd.DataFrame(rows, columns=["part_id", "chunk_id", "new_seq"])
-
-
-def _string_series_min_max(s: pd.Series, logical_dtype: str | None) \
-        -> tuple[str | None, str | None]:
-    """Manifest [min_str, max_str] for a decoded object column.  A
-    STRING column may decode to bytes when its chunks carry a binary
-    codec (deflate / binary_fsst overrides) — those bytes are the
-    exact UTF-8 of the source strings, and bytewise order equals
-    code-point order, so the min/max decode back losslessly; dropping
-    the stats instead would NULL-prune the merged chunks out of every
-    string predicate (silent wrong counts).  True binary columns
-    (logical_dtype != 'string') stay (None, None): their bytes need
-    not be valid UTF-8 for the parquet string manifest column."""
-    if s.dtype != object or logical_dtype != "string":
-        return None, None
-    v = s.dropna()
-    if not len(v):
-        return None, None
-    if isinstance(v.iloc[0], bytes):
-        return (bytes(v.min()).decode("utf-8"),
-                bytes(v.max()).decode("utf-8"))
-    return str(v.min()), str(v.max())
-
-
-def encoded_manifest_row(part_id: int, chunk_seq: int, chunk_id: str,
-                         column: str, series: pd.Series,
-                         logical_dtype: str | None,
-                         override: str | None) -> dict:
-    """Encode `series` as one chunk and build its full manifest row —
-    the single definition of what a (re)written chunk's metadata means,
-    shared by compaction merges and delete materialization so stats
-    (zone maps, blooms, null counts) can never drift between the two
-    rewrite paths."""
-    t0 = time.perf_counter()
-    codec, blob, _ = chunk_codec.encode_column(series, override)
-    dt_sec = time.perf_counter() - t0
-    mn, mx, sm, nulls = chunk_stats_for(series)
-    mn_f, mx_f = float_chunk_stats(series)
-    mn_s, mx_s = _string_series_min_max(series, logical_dtype)
-    return {
-        "part_id": part_id, "chunk_seq": chunk_seq, "chunk_id": chunk_id,
-        "column": column, "codec": codec, "num_elements": len(series),
-        "raw_bytes": encode_job._raw_size(series),
-        "encoded_bytes": len(blob),
-        "sha256": hashlib.sha256(blob).hexdigest(),
-        "min_val": mn, "max_val": mx, "sum_val": sm,
-        "null_count": nulls, "min_str": mn_s, "max_str": mx_s,
-        "min_f64": mn_f, "max_f64": mx_f,
-        "bloom": bloom_codec.build_from_series(series),
-        "encode_sec": dt_sec, "blob": blob,
-    }
 
 
 def compact_store(spark: SparkSession, src_dir: str, dst_dir: str,
@@ -138,7 +83,8 @@ def compact_store(spark: SparkSession, src_dir: str, dst_dir: str,
             "delete_job.materialize_deletes first (it rewrites only the "
             "affected chunks), then compact the materialized store")
     from ..sources.encoded_table import stored_schema
-    _, dtypes = stored_schema(spark, src_dir)
+    types = dict(decode_job.arrow_fields(stored_schema(spark, src_dir)[0]))
+    overrides = codec_overrides or {}
 
     # plan from the CHUNKS data itself, not the manifest: chunks/ is
     # the data of record (a crash between the chunks write and the
@@ -156,6 +102,7 @@ def compact_store(spark: SparkSession, src_dir: str, dst_dir: str,
     out_cols = layout.CHUNKS.columns
 
     def merge(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+        import pyarrow as pa
         part_id, nseq, col = int(key[0]), int(key[1]), str(key[2])
         pdf = pdf.sort_values("chunk_seq")
         chunk_id = f"p{part_id:05d}-c{nseq:05d}"
@@ -163,13 +110,14 @@ def compact_store(spark: SparkSession, src_dir: str, dst_dir: str,
             row = {c: pdf.iloc[0][c] for c in out_cols}
             row["chunk_seq"] = nseq
             row["chunk_id"] = chunk_id
-            return pd.DataFrame([row])[out_cols]
-        dt = dtypes.get(col)
-        series = pd.concat(
-            [pd.Series(chunk_codec.decode_column(bytes(b), dt))
-             for b in pdf["blob"]], ignore_index=True)
-        row = encoded_manifest_row(part_id, nseq, chunk_id, col, series,
-                                   dt, (codec_overrides or {}).get(col))
+        else:
+            # no session zone: a timestamp's stored wall-clock µs pass
+            # through the UTC decode and re-encode unchanged
+            arr = pa.concat_arrays(
+                [chunk_codec.decode_column_arrow(bytes(b), types[col])
+                 for b in pdf["blob"]])
+            row = encode_job.chunk_row(part_id, nseq, chunk_id, col, arr,
+                                       overrides.get(col))
         return pd.DataFrame([row])[out_cols]
 
     out = (joined.groupBy("part_id", "new_seq", "column")

@@ -18,8 +18,17 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..codecs import chunk as chunk_codec
 
 
+def arrow_fields(schema: str) -> list[tuple]:
+    """(name, arrow type) of each column of a DDL schema string — the
+    types every chunk blob decodes to (`chunk_codec.decode_column_arrow`).
+    Needs the active Spark session (the DDL parser runs in the JVM)."""
+    from pyspark.sql.types import StructType
+    from pyspark.sql.pandas.types import to_arrow_type
+    return [(f.name, to_arrow_type(f.dataType))
+            for f in StructType.fromDDL(schema).fields]
+
+
 def decode_chunks(chunks: DataFrame, schema: str,
-                  dtypes: dict[str, str] | None = None,
                   delete_masks: DataFrame | None = None) -> DataFrame:
     """Reassemble rows from per-column chunk blobs.
 
@@ -27,8 +36,7 @@ def decode_chunks(chunks: DataFrame, schema: str,
     chunk back together — chunks are independent, so this parallelizes
     per chunk with one narrow shuffle of the (already compressed) blobs.
     Decoded strings go out as arrow buffers (no per-row Python objects);
-    `dtypes` is kept for API compatibility but the arrow schema is the
-    single source of decode types now.
+    the arrow schema of `schema` is the single source of decode types.
 
     Schema-evolved stores (append_table allow_new_columns): chunks
     predating a column decode it as NULL.  Caveat: a projection that
@@ -37,13 +45,9 @@ def decode_chunks(chunks: DataFrame, schema: str,
     column to keep full row coverage.
     """
     import pyarrow as pa
-    from pyspark.sql.types import StructType
-    from pyspark.sql.pandas.types import to_arrow_type
 
-    spark = chunks.sparkSession
-    session_tz = spark.conf.get("spark.sql.session.timeZone")
-    struct = StructType.fromDDL(schema)
-    fields = [(f.name, to_arrow_type(f.dataType)) for f in struct.fields]
+    session_tz = chunks.sparkSession.conf.get("spark.sql.session.timeZone")
+    fields = arrow_fields(schema)
     out_schema = pa.schema(fields)
 
     # column pruning at the STORE level: only the requested columns'

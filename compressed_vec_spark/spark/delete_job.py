@@ -31,7 +31,8 @@ Consistency contract:
     log's deleted_rows is exact under overlapping predicates;
   * deletes apply to the CURRENT table — snapshot (time-travel) reads
     predate them; materialize_deletes() rewrites only the affected
-    chunks when a clean store is needed, and compact_store refuses a
+    chunks when a clean store is needed (through the encode worker's
+    chunk builder, `encode_job.chunk_row`), and compact_store refuses a
     store with live deletes (merged chunk ids would orphan the masks);
   * sidecars of stores before format v7 (one mask per delete batch)
     are refused, not read.
@@ -308,15 +309,21 @@ def delete_where_range(spark: SparkSession, out_dir: str, column: str,
                        delete_id)
 
 
+def _position0(spark: SparkSession, out_dir: str) -> list[dict]:
+    """Part-summary rows of the store's position-0 column, read with no
+    Spark job: every part carries that column (schema evolution only
+    ever adds columns), so its rows count the store's rows and chunks."""
+    from ..sources.encoded_table import _schema_rows, part_summary
+    first_col = _schema_rows(spark, out_dir)[0]["name"]
+    return [r for (_, c), r in part_summary(spark, out_dir).items()
+            if c == first_col]
+
+
 def delete_stats(spark: SparkSession, out_dir: str) -> dict:
     """{total_rows, deleted_rows, live_rows} from the part summary and
     the live delete_log row alone, with no Spark job at any store
-    size.  Row totals come from the store's position-0 column, which
-    every part carries (schema evolution only ever adds columns)."""
-    from ..sources.encoded_table import _schema_rows, part_summary
-    first_col = _schema_rows(spark, out_dir)[0]["name"]
-    total = sum(r["rows"] for (_, c), r in
-                part_summary(spark, out_dir).items() if c == first_col)
+    size."""
+    total = sum(r["rows"] for r in _position0(spark, out_dir))
     live = _live(spark, out_dir)
     deleted = live["deleted_rows"] if live else 0
     return {"total_rows": total, "deleted_rows": deleted,
@@ -327,13 +334,18 @@ def materialize_deletes(spark: SparkSession, src_dir: str, dst_dir: str,
                         codec_overrides: dict[str, str] | None = None) -> dict:
     """Rewrite ONLY the delete-affected chunks of src into a fresh dst
     store with the deleted rows physically removed; untouched chunks
-    pass through byte-identical (never decoded).  Chunk ids, parts and
-    the append log carry over, so the dst is a drop-in replacement —
-    with history rewritten: a snapshot read of dst shows post-delete
-    rows for pre-delete batches (documented Iceberg rewrite semantics).
-    """
+    pass through byte-identical (never decoded).  An affected chunk
+    decodes to arrow (typed by the store's own schema), keeps its live
+    rows and re-encodes through the encode worker's chunk builder
+    (`encode_job.chunk_row`), so it gets the row a fresh encode of
+    those rows would get.  Chunk ids, parts and the append log carry
+    over, so the dst is a drop-in replacement — with history
+    rewritten: a snapshot read of dst shows post-delete rows for
+    pre-delete batches (documented Iceberg rewrite semantics).
+    dst_chunks counts dst's chunks (not chunk-column rows) from its
+    part summary."""
     from ..sources.encoded_table import stored_schema
-    from .compact_job import encoded_manifest_row
+    from .decode_job import arrow_fields
 
     layout.require_current(spark, src_dir, "materialize_deletes")
     if layout.exists(spark, layout.CHUNKS.path(dst_dir)):
@@ -345,7 +357,7 @@ def materialize_deletes(spark: SparkSession, src_dir: str, dst_dir: str,
         raise ValueError(
             f"materialize_deletes: {src_dir} has no delete rows — "
             "nothing to materialize")
-    _, dtypes = stored_schema(spark, src_dir)
+    types = dict(arrow_fields(stored_schema(spark, src_dir)[0]))
     overrides = codec_overrides or {}
 
     chunks = layout.read(spark, src_dir, layout.CHUNKS)
@@ -355,22 +367,22 @@ def materialize_deletes(spark: SparkSession, src_dir: str, dst_dir: str,
     out_cols = layout.CHUNKS.columns
 
     def rewrite(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        import pyarrow as pa
         for pdf in batches:
             rows = []
             for row in pdf.itertuples(index=False):
                 if row.del_mask is None:  # untouched: byte-identical
                     rows.append({c: getattr(row, c) for c in out_cols})
                     continue
-                n = int(row.num_elements)
-                keep = _keep_mask(bytes(row.del_mask), n)
+                keep = _keep_mask(bytes(row.del_mask), int(row.num_elements))
                 if not keep.any():  # fully deleted chunk: drop it
                     continue
-                dt = dtypes.get(row.column)
-                s = pd.Series(chunk_codec.decode_column(bytes(row.blob), dt))
-                s = s[keep].reset_index(drop=True)
-                rows.append(encoded_manifest_row(
+                # no session zone: stored timestamp µs pass through
+                arr = chunk_codec.decode_column_arrow(
+                    bytes(row.blob), types[row.column]).filter(pa.array(keep))
+                rows.append(encode_job.chunk_row(
                     int(row.part_id), int(row.chunk_seq), row.chunk_id,
-                    row.column, s, dt, overrides.get(row.column)))
+                    row.column, arr, overrides.get(row.column)))
             if rows:
                 yield pd.DataFrame(rows)[out_cols]
 
@@ -383,8 +395,7 @@ def materialize_deletes(spark: SparkSession, src_dir: str, dst_dir: str,
     # dst is documented as a drop-in replacement, and losing a cursor
     # re-delivers the whole history to an exactly-once consumer
     encode_job.copy_store_history(spark, src_dir, dst_dir)
-    written = encode_job.commit_chunks(spark, dst_dir, out)
+    encode_job.commit_chunks(spark, dst_dir, out)
 
-    n_aff = masks.count()
-    return {"affected_chunk_groups": int(n_aff),
-            "dst_chunks": int(written.count())}
+    return {"affected_chunk_groups": int(masks.count()),
+            "dst_chunks": sum(r["chunks"] for r in _position0(spark, dst_dir))}

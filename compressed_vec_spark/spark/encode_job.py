@@ -38,9 +38,9 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..codecs import bloom as bloom_codec
 from ..codecs import chunk as chunk_codec
+from ..codecs.fsst import _string_buffers
 from ..sources import layout
-from ..sources.encoded_table import (_schema_rows, chunk_stats_for,
-                                     float_chunk_stats)
+from ..sources.encoded_table import _schema_rows
 
 _I64 = (1 << 63) - 1
 
@@ -109,24 +109,6 @@ def commit_chunks(spark: SparkSession, out_dir: str,
     return written
 
 
-def _raw_size(series: pd.Series) -> int:
-    k = series.dtype.kind
-    if k in "iufM":
-        return len(series) * (8 if k == "M" else series.dtype.itemsize)
-    if len(series) == 0:
-        return 0
-    import pyarrow as pa
-    nonnull = series.dropna()
-    typ = (pa.large_binary()
-           if isinstance(nonnull.iloc[0] if len(nonnull) else "", (bytes, bytearray))
-           else pa.large_utf8())
-    arr = pa.array(series.where(series.notna(), b"" if typ == pa.large_binary() else ""),
-                   type=typ).cast(pa.large_binary())
-    offs = np.frombuffer(arr.buffers()[1], dtype=np.int64, count=len(arr) + 1,
-                         offset=arr.offset * 8)
-    return int(offs[-1] - offs[0])
-
-
 def with_salted_partitioning(df: DataFrame, url_col: str = "url",
                              num_partitions: int | None = None,
                              salt_buckets: int = 16,
@@ -167,20 +149,54 @@ def with_salted_partitioning(df: DataFrame, url_col: str = "url",
                   ["warc_ts"] if "warc_ts" in df.columns else [])))
 
 
-def _raw_size_arrow(arr) -> int:
-    """Raw byte size of an arrow column: value-buffer bytes for
-    strings/binary (matches _raw_size's utf-8 accounting), width*n for
-    fixed-size types (timestamps count as 8, like the pandas path)."""
-    import pyarrow as pa
-    t = arr.type
-    if pa.types.is_string(t) or pa.types.is_binary(t) \
-            or pa.types.is_large_string(t) or pa.types.is_large_binary(t):
-        from ..codecs.fsst import _string_buffers
-        data, _ = _string_buffers(arr)
-        return int(len(data))
-    if pa.types.is_timestamp(t):
-        return len(arr) * 8
-    return len(arr) * (t.bit_width // 8)
+def chunk_stats_for(series: pd.Series) \
+        -> tuple[int | None, int | None, int | None, int]:
+    """(min, max, sum, null_count) for numeric/timestamp chunks
+    ((None, None, None, nulls) otherwise).  The sum enables manifest-only
+    aggregation pushdown (`pruned_sum`): a chunk fully covered
+    by the predicate contributes its manifest sum with zero blob reads —
+    the storage-layer analog of the reference's header-only section
+    short-circuits (reference src/filter.rs:53-107).  Sum is over
+    non-null values (SQL SUM semantics); None if it exceeds int64."""
+    nulls = int(series.isna().sum())
+    if series.dtype.kind == "M":
+        v = series.dropna().astype("datetime64[us]").to_numpy().view(np.int64)
+    elif series.dtype.kind in "iu":
+        v = series.dropna().to_numpy()
+    else:
+        return None, None, None, nulls
+    if not len(v):
+        return None, None, None, nulls
+    # exact overflow-free sum: elements split into hi/lo 32-bit halves
+    # (v == (v >> 32) * 2^32 + (v & 0xFFFFFFFF) for arithmetic shift),
+    # each partial sum fits its 64-bit dtype for any chunk <= 2^31
+    # elements; recombined in Python ints
+    if v.dtype.kind == "u":
+        vv = v.astype(np.uint64)
+        total = (int((vv & np.uint64(0xFFFFFFFF)).sum(dtype=np.uint64))
+                 + (int((vv >> np.uint64(32)).sum(dtype=np.uint64)) << 32))
+    else:
+        vv = v.astype(np.int64)
+        total = (int((vv & 0xFFFFFFFF).sum(dtype=np.int64))
+                 + (int((vv >> 32).sum(dtype=np.int64)) << 32))
+    if not (-_I64 - 1 <= total <= _I64):
+        total = None
+    return int(v.min()), int(v.max()), total, nulls
+
+
+def float_chunk_stats(series: pd.Series) -> tuple[float | None, float | None]:
+    """(min, max) for FLOAT chunks, (None, None) otherwise — the
+    manifest stats that make float range predicates prunable at the
+    chunk level.  Nulls and NaN payloads are excluded (SQL comparison
+    semantics: NaN matches no range predicate, so it cannot tighten or
+    poison the bounds)."""
+    if series.dtype.kind != "f":
+        return None, None
+    v = series.dropna().to_numpy(dtype=np.float64)
+    v = v[~np.isnan(v)]
+    if not len(v):
+        return None, None
+    return float(v.min()), float(v.max())
 
 
 def _string_min_max(arr) -> tuple[str | None, str | None]:
@@ -200,13 +216,62 @@ def _string_min_max(arr) -> tuple[str | None, str | None]:
     return mm["min"].as_py(), mm["max"].as_py()
 
 
+def chunk_row(part_id: int, chunk_seq: int, chunk_id: str, column: str,
+              arr, override: str | None) -> dict:
+    """The one builder of a layout.CHUNKS row: the arrow array `arr`
+    encoded as one chunk (codec `override`, or the stats-driven
+    selection), with its blob, byte counts, sha256, zone maps, sum,
+    null count, Bloom filter and encode seconds.  The encode worker,
+    compaction merges and delete materialization all call it, so a
+    rewritten chunk gets exactly the row a fresh encode of its rows
+    would get.  String/binary codecs run straight on the arrow buffers
+    (zero per-row Python); numeric/dict columns take one cheap pandas
+    conversion."""
+    import pyarrow as pa
+    t0 = time.perf_counter()
+    str_like = (pa.types.is_string(arr.type) or pa.types.is_binary(arr.type)
+                or pa.types.is_large_string(arr.type)
+                or pa.types.is_large_binary(arr.type))
+    if str_like:
+        codec, blob, _ = chunk_codec.encode_column_arrow(arr, override)
+        mn = mx = sm = None
+        mn_s, mx_s = _string_min_max(arr)
+        mn_f = mx_f = None
+        blm = bloom_codec.build(arr)
+        nulls = arr.null_count
+        raw = len(_string_buffers(arr)[0])   # the UTF-8/binary value bytes
+    else:
+        series = chunk_codec.arrow_to_pandas_sparklike(arr)
+        codec, blob, _ = chunk_codec.encode_column(series, override)
+        mn, mx, sm, nulls = chunk_stats_for(series)
+        mn_s = mx_s = None
+        mn_f, mx_f = float_chunk_stats(series)
+        blm = None
+        raw = len(series) * (8 if series.dtype.kind == "M"
+                             else series.dtype.itemsize)
+    dt = time.perf_counter() - t0
+    return {
+        "part_id": part_id, "chunk_seq": chunk_seq, "chunk_id": chunk_id,
+        "column": column, "codec": codec,
+        "num_elements": len(arr),
+        "raw_bytes": raw,
+        "encoded_bytes": len(blob),
+        "sha256": hashlib.sha256(blob).hexdigest(),
+        "min_val": mn, "max_val": mx,
+        "sum_val": sm, "null_count": nulls,
+        "min_str": mn_s, "max_str": mx_s,
+        "min_f64": mn_f, "max_f64": mx_f,
+        "bloom": blm,
+        "encode_sec": dt, "blob": blob,
+    }
+
+
 def _encode_iter_arrow(columns: list[str], codec_overrides: dict[str, str],
                        skip_parts: set[int], part_offset: int = 0):
-    """mapInArrow encode worker: one arrow RecordBatch = one chunk.
-    String/binary codecs run straight on the arrow buffers (zero per-row
-    Python); numeric/dict columns take one cheap pandas conversion.
-    `part_offset` shifts part ids past an existing store's parts so an
-    append lands in fresh partition directories (append_table)."""
+    """mapInArrow encode worker: one arrow RecordBatch = one chunk, one
+    `chunk_row` per column.  `part_offset` shifts part ids past an
+    existing store's parts so an append lands in fresh partition
+    directories (append_table)."""
     def fn(batches):
         import pyarrow as pa
         from pyspark import TaskContext
@@ -214,50 +279,12 @@ def _encode_iter_arrow(columns: list[str], codec_overrides: dict[str, str],
         part_id = part_offset + TaskContext.get().partitionId()
         if part_id in skip_parts:
             return
-        seq = 0
-        for batch in batches:
-            rows = []
+        for seq, batch in enumerate(batches):
             chunk_id = f"p{part_id:05d}-c{seq:05d}"
-            for col in columns:
-                arr = batch.column(batch.schema.get_field_index(col))
-                t0 = time.perf_counter()
-                str_like = (pa.types.is_string(arr.type) or pa.types.is_binary(arr.type)
-                            or pa.types.is_large_string(arr.type)
-                            or pa.types.is_large_binary(arr.type))
-                if str_like:
-                    codec, blob, _meta = chunk_codec.encode_column_arrow(
-                        arr, codec_overrides.get(col))
-                    mn = mx = sm = None
-                    mn_s, mx_s = _string_min_max(arr)
-                    mn_f = mx_f = None
-                    blm = bloom_codec.build(arr)
-                    nulls = arr.null_count
-                    raw = _raw_size_arrow(arr)
-                else:
-                    series = chunk_codec.arrow_to_pandas_sparklike(arr)
-                    codec, blob, _meta = chunk_codec.encode_column(
-                        series, codec_overrides.get(col))
-                    mn, mx, sm, nulls = chunk_stats_for(series)
-                    mn_s = mx_s = None
-                    mn_f, mx_f = float_chunk_stats(series)
-                    blm = None
-                    raw = _raw_size(series)
-                dt = time.perf_counter() - t0
-                rows.append({
-                    "part_id": part_id, "chunk_seq": seq, "chunk_id": chunk_id,
-                    "column": col, "codec": codec,
-                    "num_elements": batch.num_rows,
-                    "raw_bytes": raw,
-                    "encoded_bytes": len(blob),
-                    "sha256": hashlib.sha256(blob).hexdigest(),
-                    "min_val": mn, "max_val": mx,
-                    "sum_val": sm, "null_count": nulls,
-                    "min_str": mn_s, "max_str": mx_s,
-                    "min_f64": mn_f, "max_f64": mx_f,
-                    "bloom": blm,
-                    "encode_sec": dt, "blob": blob,
-                })
-            seq += 1
+            rows = [chunk_row(part_id, seq, chunk_id, col,
+                              batch.column(batch.schema.get_field_index(col)),
+                              codec_overrides.get(col))
+                    for col in columns]
             yield pa.RecordBatch.from_pylist(rows, schema=out_schema)
     return fn
 

@@ -127,7 +127,7 @@ def match_positions_query(spark, sf_dir) -> DataFrame:
     d = df.withColumn("__bucket", bucket)
     offsets, _ = _bucket_offsets(d, F.count("*"))
 
-    def fn(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def fn(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(["o_orderkey"], kind="mergesort")
         blob = dictionary.encode(pdf["o_orderstatus"])
         code = dictionary.code_of(blob, "F")
@@ -175,7 +175,7 @@ def delta_cumsum_query(spark, sf_dir) -> DataFrame:
          .withColumn("__bucket", bucket))
     offsets, _ = _bucket_offsets(d, F.sum("q"))
 
-    def fn(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def fn(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(["l_orderkey", "l_linenumber", "__mid"],
                               kind="mergesort")
         buf = vec.encode_vector(pdf["q"].to_numpy(np.uint64), "u64")
@@ -235,7 +235,7 @@ def codec_histogram(spark, sf_dir) -> DataFrame:
          .withColumn("__bucket", bucket))
     offsets, total_rows = _bucket_offsets(d, F.count("*"))
 
-    def fn(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def fn(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(["l_orderkey", "l_linenumber", "__mid"],
                               kind="mergesort")
         vals = pdf["l_partkey"].to_numpy(np.uint64)
@@ -273,7 +273,7 @@ def codec_histogram(spark, sf_dir) -> DataFrame:
              .select("codec", "sections"))
     frags = out.where(F.col("codec").isNull()).select("pos", "v")
 
-    def frag_fn(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def frag_fn(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("pos", kind="mergesort")
         buf = vec.encode_vector(pdf["v"].to_numpy(np.uint64), "u64")
         hist = vec.vector_stats(buf, "u64")["sect_types_histogram"]
@@ -313,7 +313,7 @@ def rle_run_count(spark, sf_dir) -> DataFrame:
                                                  "o_orderkey"))
     d = df.withColumn("__bucket", bucket)
 
-    def fn(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def fn(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("o_orderkey", kind="mergesort")
         arr = pdf["o_custkey"].to_numpy(np.uint64)
         blob = rle.encode(arr)

@@ -10,8 +10,9 @@ from pyspark.sql import functions as F
 from compressed_vec_spark import vector as vec
 from compressed_vec_spark.operators import filters
 from compressed_vec_spark.sources import encoded_table
-from compressed_vec_spark.sources.encoded_table import Leaf, chunk_stats_for
+from compressed_vec_spark.sources.encoded_table import Leaf
 from compressed_vec_spark.spark import encode_job
+from compressed_vec_spark.spark.encode_job import chunk_stats_for
 from compressed_vec_spark.spark.session import get_spark
 
 

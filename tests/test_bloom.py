@@ -77,19 +77,6 @@ def test_might_contain_degrades_to_maybe():
     assert bloom.might_contain(blm[:10], "a") is True  # truncated
 
 
-def test_build_from_series_matches_arrow():
-    vals = _rand_strings(500, seed=4)
-    blm_a = bloom.build(pa.array(vals, type=pa.large_utf8()))
-    blm_p = bloom.build_from_series(pd.Series(vals, dtype=object))
-    assert blm_a == blm_p
-    blm_bytes = bloom.build_from_series(
-        pd.Series([v.encode() for v in vals], dtype=object))
-    assert blm_bytes == blm_a
-    assert bloom.build_from_series(pd.Series([1.0, 2.0])) is None
-    assert bloom.build_from_series(
-        pd.Series([None], dtype=object)) is None
-
-
 @pytest.fixture(scope="module")
 def spark():
     s = get_spark("cvx-bloom-tests", cores=4, chunk_rows=1024)
@@ -221,18 +208,6 @@ def test_pruned_string_in_count(spark, tmp_path):
         "s", "string", "in", values=("\x01absent-a", "\x01absent-b"))])
     assert count == 0
     assert st["scanned_chunks"] == 0, st
-
-
-def test_build_from_series_mixed_str_bytes():
-    """A compacted merge can concatenate an fsst member (str values)
-    with a deflate member (utf-8 bytes): the filter must build and
-    answer probes for both forms."""
-    vals = _rand_strings(300, seed=31)
-    mixed = pd.Series(vals[:150] + [v.encode() for v in vals[150:]],
-                      dtype=object)
-    blm = bloom.build_from_series(mixed)
-    assert blm == bloom.build(pa.array(vals, type=pa.large_utf8()))
-    assert all(bloom.might_contain(blm, v) for v in vals)
 
 
 def test_contains_many_agrees_with_might_contain():

@@ -4,12 +4,16 @@ equality, recomputed stats, and prune behavior on the compacted copy."""
 import os
 
 import pandas as pd
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
+from compressed_vec_spark.codecs import bloom
+from compressed_vec_spark.codecs import chunk as chunk_codec
 from compressed_vec_spark.sources import encoded_table, layout
 from compressed_vec_spark.sources.encoded_table import Leaf
-from compressed_vec_spark.spark import compact_job, decode_job, encode_job
+from compressed_vec_spark.spark import (compact_job, decode_job,
+                                        delete_job, encode_job)
 from compressed_vec_spark.spark.session import get_spark
 
 
@@ -174,10 +178,10 @@ def test_compact_passthrough_is_byte_identical(spark, tmp_path):
 
 def test_compact_keeps_string_stats_on_binary_codec_chunks(spark, tmp_path):
     """A string column stored under a binary codec (deflate override)
-    decodes to bytes in the merge; its min_str/max_str must still be
-    recomputed (decoded back from the UTF-8 bytes) or string predicates
-    on the compacted store NULL-prune the merged chunks and silently
-    return 0."""
+    must keep its string stats through a merge: min_str/max_str (or
+    string predicates on the compacted store NULL-prune the merged
+    chunks and silently return 0) and a Bloom filter that admits every
+    value of its chunk."""
     src = str(tmp_path / "src_sb")
     dst = str(tmp_path / "dst_sb")
     df = spark.range(0, 3000, 1, 2).select(
@@ -197,6 +201,110 @@ def test_compact_keeps_string_stats_on_binary_codec_chunks(spark, tmp_path):
     cnt, st = encoded_table.pruned_count(
         spark, dst, [Leaf("s", "string", "in", values=("val-01",))])
     assert cnt == 1000, st
+
+    merged = (layout.read(spark, dst, layout.CHUNKS)
+              .where(F.col("column") == "s").collect())
+    assert len(merged) == len(s_rows) and {r["codec"] for r in merged} \
+        == {"deflate"}
+    for r in merged:
+        assert r["bloom"] is not None, r["chunk_id"]
+        vals = set(chunk_codec.decode_column_arrow(
+            bytes(r["blob"]), pa.string()).to_pylist())
+        assert all(bloom.might_contain(bytes(r["bloom"]), v) for v in vals)
+    cnt, st = encoded_table.pruned_count(
+        spark, dst, [Leaf("s", "string", "in", values=("val-01-absent",))])
+    assert cnt == 0 and st["scanned_chunks"] == 0, st
+
+
+def _typed_df(spark, n=3000):
+    """A two-part store with one column per stored type: int32; int64
+    with nulls, without, and with negatives; timestamp, double and
+    float32, each with and without nulls; dict- and FSST-coded strings;
+    deflate-coded strings with and without nulls; binary."""
+    i = F.col("id")
+    null = i % 23 == 4
+
+    def nullable(c):
+        return F.when(null, None).otherwise(c)
+
+    ts = F.timestamp_seconds(1_700_000_000 + i * 37)
+    url = F.concat(F.lit("https://example.org/p/"),
+                   F.sha2(i.cast("string"), 256))
+    html = F.concat(F.lit("<p>row "), i.cast("string"), F.lit("</p>"))
+    return spark.range(0, n, 1, 2).select(
+        i.alias("k"), (i * 7 % 1000).cast("int").alias("i32"),
+        nullable(i * 3).alias("i64_null"), (i * 1000003).alias("i64"),
+        (i - n // 2).alias("i64_neg"),
+        ts.alias("ts"), nullable(ts).alias("ts_null"),
+        (i / 8.0).alias("f64"), nullable(i / 3.0).alias("f64_null"),
+        (i / 4.0).cast("float").alias("f32"),
+        nullable((i / 4.0).cast("float")).alias("f32_null"),
+        F.concat(F.lit("lang-"), (i % 5).cast("string")).alias("s_dict"),
+        url.alias("s_fsst"), html.alias("s_defl"),
+        nullable(html).alias("s_defl_null"),
+        F.sha2(i.cast("string"), 224).cast("binary").alias("bin"))
+
+
+def test_chunk_row_reproduces_every_encoded_chunk(spark, tmp_path):
+    """The one chunk builder is a pure function of a chunk's values:
+    over the blob decoded with the store's own types (no session zone),
+    it rebuilds every stored row but encode_sec, blob byte for byte —
+    so a compaction merge or a delete rewrite gets the row a fresh
+    encode of its rows would get."""
+    out = str(tmp_path / "typed")
+    overrides = {"s_defl": "deflate", "s_defl_null": "deflate"}
+    encode_job.encode_table(spark, _typed_df(spark), out, url_col=None,
+                            codec_overrides=overrides)
+    ddl, _ = encoded_table.stored_schema(spark, out)
+    types = dict(decode_job.arrow_fields(ddl))
+    rows = layout.read(spark, out, layout.CHUNKS).collect()
+    assert {r["column"] for r in rows} == set(types)
+    assert {"dict", "fsst", "deflate", "vec_f32", "xor_f64"} \
+        <= {r["codec"] for r in rows}
+    for r in rows:
+        arr = chunk_codec.decode_column_arrow(bytes(r["blob"]),
+                                              types[r["column"]])
+        got = encode_job.chunk_row(r["part_id"], r["chunk_seq"],
+                                   r["chunk_id"], r["column"], arr,
+                                   overrides.get(r["column"]))
+        for f in layout.CHUNKS.columns:
+            if f != "encode_sec":
+                assert got[f] == r[f], (r["chunk_id"], r["column"], f)
+
+
+def test_rewrites_keep_int32_bytes_and_float32_codec(spark, tmp_path):
+    """Compaction and delete materialization re-encode an int32 and a
+    nullable float32 column as the encode worker does: an int32 value
+    counts 4 raw bytes and a float32 chunk stays vec_f32."""
+    src = str(tmp_path / "src_i32")
+    i = F.col("id")
+    df = spark.range(0, 4000, 1, 4).select(
+        (i * 7 % 1000).cast("int").alias("i32"),
+        F.when(i % 23 == 4, None)
+        .otherwise((i / 4.0).cast("float")).alias("f32"))
+    encode_job.encode_table(spark, df, src, url_col=None)
+    before = encode_job.store_stats(spark, src)["columns"]
+    assert before["i32"]["raw_bytes"] == 4 * 4000
+    assert before["f32"]["codecs"] == ["vec_f32"]
+
+    dst = str(tmp_path / "dst_i32")
+    assert compact_job.compact_store(
+        spark, src, dst, target_elements=10**6)["merged_groups"] > 0
+    after = encode_job.store_stats(spark, dst)["columns"]
+    for c in ("i32", "f32"):
+        assert after[c]["chunks"] < before[c]["chunks"]
+        assert after[c]["raw_bytes"] == before[c]["raw_bytes"], c
+        assert after[c]["codecs"] == before[c]["codecs"], c
+
+    # 100..199 holds 10% of every chunk's i32 values
+    d = delete_job.delete_where_range(spark, src, "i32", 100, 199, "d1")
+    assert d["rows_deleted"] == 400, d
+    mat = str(tmp_path / "mat_i32")
+    delete_job.materialize_deletes(spark, src, mat)
+    live = delete_job.delete_stats(spark, src)["live_rows"]
+    cols = encode_job.store_stats(spark, mat)["columns"]
+    assert cols["i32"]["raw_bytes"] == 4 * live
+    assert cols["f32"]["codecs"] == ["vec_f32"]
 
 
 def test_compact_refuses_nonempty_dst(spark, tmp_path):

@@ -162,6 +162,8 @@ def test_materialize_then_identity(spark, store, tmp_path):
     first = (m.where(F.col("column") == "k")
              .agg(F.sum("num_elements")).collect()[0][0])
     assert int(first) == len(live_src)
+    # dst_chunks counts chunks, not (chunk, column) manifest rows
+    assert res["dst_chunks"] == m.select("chunk_id").distinct().count()
     # untouched chunks passed through byte-identical: every dst sha
     # for never-affected chunks appears in src manifest verbatim
     msrc = spark.read.parquet(os.path.join(out, "manifest"))

@@ -42,8 +42,7 @@ def test_encode_decode_bit_identical(spark, tmp_path):
 
     decoded = decode_job.decode_chunks(
         spark.read.parquet(os.path.join(out, "chunks")),
-        schema=webtable.SCHEMA,
-        dtypes={"warc_ts": "timestamp"})
+        schema=webtable.SCHEMA)
     res = decode_job.verify_bit_identical(web, decoded, key="url")
     assert res["rows"] == 3000
     assert all(v == 0 for v in res["mismatches"].values()), res
@@ -108,8 +107,7 @@ def test_resume_completes_after_partial_failure(spark, tmp_path):
     merged = survivors.merge(again, on=["chunk_id", "column"], how="left")
     assert (merged["sha256_x"] == merged["sha256_y"]).all()
     # and the whole table still decodes bit-identical
-    decoded = decode_job.decode_chunks(after, schema=webtable.SCHEMA,
-                                       dtypes={"warc_ts": "timestamp"})
+    decoded = decode_job.decode_chunks(after, schema=webtable.SCHEMA)
     res = decode_job.verify_bit_identical(web, decoded, key="url")
     assert all(v == 0 for v in res["mismatches"].values()), res
 
